@@ -5,17 +5,14 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from varint_simd_spark.codecs import (
-    INT_CODECS,
-    STR_CODECS,
-    choose_codec,
-    decode_column,
-    encode_column,
-)
+from varint_simd_spark.codecs import INT_CODECS, STR_CODECS
+from varint_simd_spark.codecs.base import decode_column_arrow, encode_column_arrow
+from varint_simd_spark.codecs.choose import choose_codec_arrow
 from varint_simd_spark.codecs.container import pack_sections, unpack_sections
 
 rng = np.random.default_rng(42)
@@ -136,38 +133,39 @@ SERIES_FIXTURES = {
 @pytest.mark.parametrize("name", list(SERIES_FIXTURES))
 def test_encode_decode_column_auto(name):
     s = SERIES_FIXTURES[name]
-    codec, reason, _ = choose_codec(s)
-    tag, payload, params = encode_column(s, codec)
-    out = decode_column(tag, codec, payload, params, len(s))
+    arr = pa.Array.from_pandas(s)
+    codec, reason, _ = choose_codec_arrow(arr)
+    tag, payload, params = encode_column_arrow(arr, codec)
+    out = decode_column_arrow(tag, codec, payload, params, len(s))
     if name == "f64":
         # bit-identical incl. NaN / -0.0
         a = s.to_numpy(dtype=np.float64).view(np.int64)
-        b = out.to_numpy(dtype=np.float64).view(np.int64)
+        b = out.to_numpy(zero_copy_only=False).astype(np.float64).view(np.int64)
         np.testing.assert_array_equal(a, b)
     elif name == "str":
-        assert list(out) == list(s)
+        assert out.to_pylist() == list(s)
     else:
-        assert list(out) == list(s), f"codec={codec} reason={reason}"
+        assert out.to_pylist() == list(s), f"codec={codec} reason={reason}"
 
 
 def test_nulls_roundtrip_int():
     s = pd.Series([1, None, 3, None, 5], dtype="float64").astype(object)
     s = pd.Series([1, None, 3, None, 5], dtype=object).astype("object")
     s = pd.Series([1.0, None, 3.0], dtype=np.float64)
-    tag, payload, params = encode_column(s, "raw64")
-    out = decode_column(tag, "raw64", payload, params, len(s))
-    assert out.isna().tolist() == s.isna().tolist()
+    tag, payload, params = encode_column_arrow(pa.Array.from_pandas(s), "raw64")
+    out = decode_column_arrow(tag, "raw64", payload, params, len(s))
+    assert out.is_null().to_pylist() == s.isna().tolist()
 
 
 def test_choose_picks_sensible():
     ts = pd.Series(np.cumsum(rng.integers(0, 120, 5000)).astype("datetime64[us]"))
-    codec, _, _ = choose_codec(ts)
+    codec, _, _ = choose_codec_arrow(pa.Array.from_pandas(ts))
     assert codec in ("delta_zz_varint", "delta_zz_bitpack", "for_bitpack")
     lang = pd.Series(["en"] * 900 + ["de"] * 100, dtype=object)
-    codec, _, _ = choose_codec(lang)
+    codec, _, _ = choose_codec_arrow(pa.Array.from_pandas(lang))
     assert codec in ("rle_str", "dict_str")
     ids = pd.Series(rng.integers(0, 100, 5000).astype(np.int64))
-    codec, _, _ = choose_codec(ids)
+    codec, _, _ = choose_codec_arrow(pa.Array.from_pandas(ids))
     assert codec in ("for_bitpack", "varint")
 
 

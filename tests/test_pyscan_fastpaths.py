@@ -61,8 +61,10 @@ def test_xxh64_matches_spark_strings(spark):
 def test_decode_colocated_pyscan_equivalence(spark, tmp_path):
     from varint_simd_spark.operators import (
         column_meta,
+        decode_table,
         decode_table_colocated,
         encode_table,
+        encode_table_bucketed,
     )
     from varint_simd_spark.operators.encode import decode_aggregate
 
@@ -85,6 +87,21 @@ def test_decode_colocated_pyscan_equivalence(spark, tmp_path):
     os.environ["VSS_PYSCAN"] = "1"
     b = _rows(decode_aggregate(st, use_stats=False))
     assert a == b and a
+
+    # bucketed encode: the python-scan bucket hash (numpy XXH64) must put
+    # every row in the bucket Spark's xxhash64 picks, and decode the same
+    def bucketed():
+        enc = encode_table_bucketed(df, key="doc_id", n_buckets=4)
+        sizes = _rows(
+            enc.filter(F.col("col_idx") == 0).groupBy("bucket").agg(F.sum("n_values"))
+        )
+        return sizes, _rows(decode_table(enc).drop("__chunk"))
+
+    os.environ["VSS_PYSCAN"] = "0"
+    a = bucketed()
+    os.environ["VSS_PYSCAN"] = "1"
+    b = bucketed()
+    assert a == b and all(a)
 
 
 def test_agg_analytic_rows_match_decode(spark, tmp_path):

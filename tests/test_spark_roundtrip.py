@@ -4,6 +4,8 @@ encoded size must be <= the reference encoder's output."""
 
 from __future__ import annotations
 
+import itertools
+
 import numpy as np
 import pandas as pd
 import pytest
@@ -214,6 +216,15 @@ def test_payload_corruption_detected(spark, tmp_path):
     with pytest.raises(Exception, match="corruption|PythonException") as ei2:
         decode_table_colocated(spark.read.parquet(store)).count()
     assert "payload corruption" in str(ei2.value)
+
+    # so do both decode-path aggregates, including partials computed from
+    # the payload structure without a decode
+    from varint_simd_spark.operators.encode import decode_aggregate
+
+    for kw in ({}, {"group_by": "lang"}):
+        with pytest.raises(Exception, match="corruption|PythonException") as ei3:
+            decode_aggregate(corrupted, use_stats=False, **kw).collect()
+        assert "payload corruption" in str(ei3.value), kw
 
 
 def test_zone_map_prunes_chunks_and_stays_exact(spark):
@@ -572,12 +583,15 @@ def test_verify_roundtrip_detects_mismatch(spark):
 
 
 def test_filtered_decode_matches_native_filter_with_nulls(spark):
-    """decode_table(where=...) must agree with Spark's own filter on a
-    NULLABLE predicate column — SQL three-valued logic drops NULL
-    comparisons on both sides (the Arrow mask's nulls are filled False
-    before filtering), including across the selected-decode path for
-    non-predicate columns."""
+    """decode_table(where=...) and decode_table_colocated(where=...) must
+    agree with Spark's own filter on a NULLABLE predicate column — SQL
+    three-valued logic drops NULL comparisons on both sides (the Arrow
+    mask's nulls are filled False before filtering), including across the
+    selected-decode path for non-predicate columns.  An empty projection
+    (``columns=[]``) must still emit one row per MATCHING row."""
     from pyspark.sql import functions as F
+
+    from varint_simd_spark.operators import decode_table_colocated
 
     ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet").select(
         "event_id",
@@ -586,24 +600,31 @@ def test_filtered_decode_matches_native_filter_with_nulls(spark):
         "props",
     )
     enc = encode_table(ev, key="event_id", n_chunks=4)
-    for where, native in [
+    colocated = enc.repartition("chunk_id")
+    decoders = [
+        ("decode_table", lambda **kw: decode_table(enc, **kw)),
+        ("decode_table_colocated", lambda **kw: decode_table_colocated(colocated, **kw)),
+    ]
+    for (where, native), (name, decode) in itertools.product([
         ([("v_nullable", ">=", 0.5)], F.col("v_nullable") >= 0.5),
         ([("v_nullable", "<", 50.0), ("event_type", "==", "click")],
          (F.col("v_nullable") < 50.0) & (F.col("event_type") == "click")),
         ([("v_nullable", "between", (1.0, 80.0))], F.col("v_nullable").between(1.0, 80.0)),
         ([("event_type", "in", ["click", "view"])], F.col("event_type").isin("click", "view")),
-    ]:
+    ], decoders):
         got = sorted(
             tuple(r)
-            for r in decode_table(enc, columns=["event_id", "props"], where=where)
+            for r in decode(columns=["event_id", "props"], where=where)
             .drop("__chunk")
             .collect()
         )
         want = sorted(
             tuple(r) for r in ev.filter(native).select("event_id", "props").collect()
         )
-        assert got == want, (where, len(got), len(want))
+        assert got == want, (name, where, len(got), len(want))
         assert len(got) > 0, where  # predicate must actually select rows
+        n_empty = decode(columns=[], where=where).count()
+        assert n_empty == len(want), (name, where, n_empty, len(want))
 
 
 def test_decode_aggregate_grouped_adversarial_keys(spark):

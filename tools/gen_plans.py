@@ -3,8 +3,10 @@ plans/r06/<query>_{before,after}.txt.  Run from the repo whose code should
 produce the plans: `python tools/gen_plans.py <suffix> <outdir>`."""
 
 import os
+import shutil
 import sys
 import tempfile
+from urllib.parse import urlparse
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
@@ -31,7 +33,10 @@ def main():
 
     spark = get_spark(app_name="plans", master="local[8]", shuffle_partitions=64)
     spark.sparkContext.setLogLevel("ERROR")
-    tmp = tempfile.mkdtemp(prefix="vss_plans_")
+    # a fixed work dir keeps the scan locations in the plans comparable
+    # between two checkouts
+    tmp = os.path.join(tempfile.gettempdir(), "vss_plans")
+    shutil.rmtree(tmp, ignore_errors=True)
     wp = generate_web_pages(spark, 50_000, seed=42)
     wp.write.option("maxRecordsPerFile", 10_000).parquet(f"{tmp}/wp")
     wp = spark.read.parquet(f"{tmp}/wp")
@@ -48,9 +53,14 @@ def main():
     cap("encode_web_pages", encode_table(wp, key="url", n_chunks=64))
     cap("encode_lineitem", encode_table(li, key="l_orderkey", n_chunks=64))
     # sf1.0 lineitem (6 row groups): the shape where the fragment-merge
-    # topology engages (integer-dominated + parallelizable python scan)
-    li1 = spark.read.parquet("/root/testdata/sf1.0/lineitem.parquet")
-    cap("encode_lineitem_sf1", encode_table(li1, key="l_orderkey", n_chunks=64))
+    # topology engages (integer-dominated + parallelizable python scan).
+    # It sits beside sf0.1 in the test-data tree; skip it when absent.
+    li1 = urlparse(li.inputFiles()[0]).path.replace("/sf0.1/", "/sf1.0/")
+    if os.path.exists(li1):
+        cap("encode_lineitem_sf1",
+            encode_table(spark.read.parquet(li1), key="l_orderkey", n_chunks=64))
+    else:
+        print("skipped encode_lineitem_sf1:", li1, "not found")
     spark.conf.set("spark.sql.files.maxPartitionBytes", str(8 << 20))
     cap("encode_web_pages_per_split", encode_table_per_split(wp, key="url"))
     cap("encode_web_pages_bucketed",
@@ -76,7 +86,6 @@ def main():
     cap("decode_agg_grouped_decode_path",
         decode_aggregate(enc, columns=["url", "text"], group_by="lang",
                          use_stats=False))
-    import shutil
     shutil.rmtree(tmp, ignore_errors=True)
     spark.stop()
 

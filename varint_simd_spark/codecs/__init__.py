@@ -1,15 +1,9 @@
 """Chunk-level codec framework: per-column encode/decode + auto-selection."""
 
-from .base import decode_column, dtype_tag, encode_column
-from .choose import choose_codec
 from .integer import INT_CODECS
 from .strings import STR_CODECS
 
 __all__ = [
     "INT_CODECS",
     "STR_CODECS",
-    "choose_codec",
-    "decode_column",
-    "dtype_tag",
-    "encode_column",
 ]

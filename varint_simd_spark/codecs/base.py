@@ -19,7 +19,6 @@ bitmap section is prepended when nulls exist; null slots encode as 0/empty.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
 
@@ -183,43 +182,3 @@ def decode_column_arrow_selected(
         out = pc.if_else(pa.array(null_mask), pa.nulls(len(idx), type=out.type), out)
     return out
 
-
-# --------------------------------------------------------------------------
-# pandas-facing wrappers (tests / small callers)
-
-
-def dtype_tag(s: pd.Series) -> str:
-    return arrow_tag(pa.Array.from_pandas(s).type)
-
-
-def to_int64(s: pd.Series, tag: str) -> np.ndarray:
-    arr = pa.Array.from_pandas(s)
-    if arr.null_count:
-        arr = pc.fill_null(arr, 0)
-    return arrow_to_int64(arr, tag)
-
-
-def to_bytes_list(s: pd.Series, tag: str) -> list[bytes]:
-    from .strings import bo_to_list
-
-    typ = pa.large_binary() if tag == "bin" else pa.large_string()
-    arr = pa.Array.from_pandas(s, type=typ)
-    if arr.null_count:
-        arr = pc.fill_null(arr, b"" if tag == "bin" else "")
-    bo = arrow_to_bo(arr)
-    if tag == "str":
-        return bo_to_list(bo)
-    return bo_to_list(bo)
-
-
-def encode_column(s: pd.Series, codec: str) -> tuple[str, bytes, dict]:
-    arr = pa.Array.from_pandas(s)
-    return encode_column_arrow(arr, codec)
-
-
-def decode_column(tag: str, codec: str, payload: bytes, params: dict, n: int) -> pd.Series:
-    out = decode_column_arrow(tag, codec, payload, params, n)
-    s = out.to_pandas()
-    if tag == "bin":
-        s = s.map(lambda v: bytes(v) if v is not None else None)
-    return s

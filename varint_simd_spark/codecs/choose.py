@@ -15,7 +15,6 @@ Returns (codec_name, reason, stats) so the lineage table records *why*.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
 
@@ -136,7 +135,3 @@ def choose_codec_arrow(arr: pa.Array) -> tuple[str, str, dict]:
         return choose_str_codec_bo(blob, offs)
     return choose_int_codec(arrow_to_int64(arr, tag))
 
-
-def choose_codec(s: pd.Series) -> tuple[str, str, dict]:
-    """pandas-facing wrapper (tests / small callers)."""
-    return choose_codec_arrow(pa.Array.from_pandas(s))

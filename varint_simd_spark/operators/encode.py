@@ -1,27 +1,40 @@
 """encode_table / decode_table — the engine's main Spark operators.
 
-Lifecycle (SURVEY.md §3.4): scan -> bucket (ONE shuffle, url-hash) ->
-``applyInArrow`` per bucket -> one encoded row per (chunk, column).
-Arrow end to end: Spark ships record batches over Arrow IPC, the codec
-layer reads the Arrow buffers directly (zero-copy for string columns), and
-every kernel is whole-column numpy — no per-row Python anywhere
-(input_hint requirement).
+Every encode writes one encoded row per (chunk, column), built by the one
+row-contract implementation :func:`_encode_columns_to_rows`.  Three encode
+topologies feed it:
 
-Scale notes (designed for ~100 TB / 1000 executors, tested on local[32]):
-* chunk membership is ``pmod(xxhash64(key), n_chunks)`` — deterministic in
-  data only, so resume/verify work identically at any parallelism;
-* the groupBy shuffle is the ONLY shuffle in the encode path; AQE coalesces
-  small post-shuffle partitions and splits skewed ones;
-* size ``n_chunks`` so a chunk's Arrow materialization fits an executor
-  core's memory (target ~32-64 MB of raw column data per chunk);
-* decode is a single groupBy on chunk_id — at scale the encoded table is
-  written bucketed by chunk_id, making this a shuffle-free local sort.
+* hash-chunk (:func:`encode_table`): chunk id ``pmod(xxhash64(key),
+  n_chunks)``, deterministic in data only, so resume/verify work
+  identically at any parallelism.  One shuffle: raw rows through a
+  ``groupBy`` for string-heavy inputs, compressed fragments re-encoded per
+  chunk for integer-dominated bare parquet scans
+  (:func:`_encode_table_fragment_merge`);
+* per-split (:func:`encode_table_per_split`): each scan partition packs
+  and encodes its own chunks — zero exchanges, layout-deterministic ids;
+* bucketed (:func:`encode_table_bucketed`): per-split fragments tagged
+  with a ``pmod(xxhash64(key), n_buckets)`` bucket, so the caller's
+  ``repartition("bucket")`` moves compressed bytes only.
+
+Decode has one core: :func:`_iter_enc_rows` reads encoded rows (CRC check,
+params and stats parse) and :class:`_ChunkDecoder` turns one chunk's rows
+into a RecordBatch (projection plus the three-tier ``where``).
+:func:`decode_table` feeds it one ``groupBy("chunk_id")`` group per chunk;
+:func:`decode_table_colocated` feeds it chunk-colocated scan partitions
+through ``mapInArrow`` with no exchange.  The fragment merge and the
+decode-path aggregates read through the same reader.
+
+Arrow end to end: Spark ships record batches over Arrow IPC, the codec
+layer reads the Arrow buffers directly, and every kernel is whole-column
+numpy — no per-row Python.  Size ``n_chunks`` so a chunk's Arrow
+materialization fits an executor core's memory (~32-64 MB raw per chunk).
 """
 
 from __future__ import annotations
 
 import json
 import zlib
+from typing import NamedTuple
 
 import numpy as np
 import pyarrow as pa
@@ -29,6 +42,7 @@ import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from ..codecs.base import (
     STR_TAGS,
@@ -481,6 +495,60 @@ def _check_stats_group_by(stats_group_by: str | None, columns: list[str]) -> Non
         )
 
 
+def _encode_args(
+    df: DataFrame,
+    columns: list[str] | None,
+    codecs: dict[str, str] | None,
+    stats_group_by: str | None,
+) -> tuple[list[str], dict[str, str]]:
+    """Argument check shared by the encode entry points, before any job:
+    defaults ``columns`` to every column, rejects codecs for columns that
+    are not encoded and a ``stats_group_by`` outside ``columns``."""
+    columns = columns or df.columns
+    codecs = codecs or {}
+    unknown = set(codecs) - set(columns)
+    if unknown:
+        raise ValueError(f"codecs for unknown columns: {sorted(unknown)}")
+    _check_stats_group_by(stats_group_by, columns)
+    return columns, codecs
+
+
+def _chunk_magics(spark, n_chunks: int) -> list[int]:
+    """:func:`_chunk_key_remap` sized to the session's shuffle partitions."""
+    try:
+        n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    except Exception:
+        n_part = n_chunks
+    return _chunk_key_remap(n_chunks, max(n_part, 1))
+
+
+def _spark_xxhash64(karr: pa.Array) -> np.ndarray:
+    """Spark's ``xxhash64`` of a key column, from the bit-exact numpy XXH64
+    kernels (kernels/xxh64.py): integers hash as 8-byte longs,
+    string/binary as their bytes, NULL as the seed."""
+    from ..kernels.xxh64 import xxh64_bytes_bo, xxh64_int64
+
+    nulls = None
+    if karr.null_count:
+        nulls = pc.is_null(karr).to_numpy(zero_copy_only=False)
+        karr = pc.fill_null(
+            karr,
+            "" if pa.types.is_string(karr.type)
+            or pa.types.is_large_string(karr.type)
+            else b"" if pa.types.is_binary(karr.type)
+            or pa.types.is_large_binary(karr.type)
+            else 0,
+        )
+    if pa.types.is_integer(karr.type):
+        h = xxh64_int64(karr.cast(pa.int64()).to_numpy(zero_copy_only=False))
+    else:
+        blob, offs = arrow_to_bo(karr)
+        h = xxh64_bytes_bo(blob, offs)
+    if nulls is not None:
+        h[nulls] = 42  # xxhash64(NULL) = the seed, per Spark
+    return h
+
+
 FRAG_SCHEMA = T.StructType(
     ENCODED_SCHEMA.fields
     + [T.StructField("__gkey", T.LongType()), T.StructField("__frag", T.LongType())]
@@ -558,15 +626,10 @@ def _encode_table_fragment_merge(
     transpose+shuffle — i.e. integer-dominated tables; the caller gates
     on the parquet footers' BYTE_ARRAY byte fraction."""
     spark = df.sparkSession
-    try:
-        n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    except Exception:
-        n_part = n_chunks
-    magics = _chunk_key_remap(n_chunks, max(n_part, 1))
+    magics = _chunk_magics(spark, n_chunks)
     frag_columns = list(columns) + ([key] if key not in columns else [])
 
     from ..kernels.xxh64 import pmod as _pmod
-    from ..kernels.xxh64 import xxh64_bytes_bo, xxh64_int64
 
     def frag_fn(batches):
         from pyspark import TaskContext
@@ -577,26 +640,7 @@ def _encode_table_fragment_merge(
         if not batches:
             return
         table = pa.Table.from_batches(batches)
-        karr = table[key].combine_chunks()
-        nulls = None
-        if karr.null_count:
-            nulls = pc.is_null(karr).to_numpy(zero_copy_only=False)
-            karr = pc.fill_null(
-                karr,
-                "" if pa.types.is_string(karr.type)
-                or pa.types.is_large_string(karr.type)
-                else b"" if pa.types.is_binary(karr.type)
-                or pa.types.is_large_binary(karr.type)
-                else 0,
-            )
-        if pa.types.is_integer(karr.type):
-            h = xxh64_int64(karr.cast(pa.int64()).to_numpy(zero_copy_only=False))
-        else:
-            blob, offs = arrow_to_bo(karr)
-            h = xxh64_bytes_bo(blob, offs)
-        if nulls is not None:
-            h[nulls] = 42  # xxhash64(NULL) = the seed, per Spark
-        code = _pmod(h, n_chunks)
+        code = _pmod(_spark_xxhash64(table[key].combine_chunks()), n_chunks)
         order = np.argsort(code, kind="stable")
         table = table.take(pa.array(order))
         cv = code[order]
@@ -629,20 +673,10 @@ def _encode_table_fragment_merge(
                 table, [("__frag", "ascending"), ("col_idx", "ascending")]
             )
         )
-        dtypes = {
-            table["column"][i].as_py(): table["dtype"][i].as_py()
-            for i in range(table.num_rows)
-        }
         parts: dict[str, list] = {}
-        for name, codec, payload, params, crc, cid, nv in _iter_enc_rows(table):
-            if crc is not None and zlib.crc32(payload) != crc:
-                raise IOError(
-                    f"fragment corruption: chunk {cid} column {name!r} crc mismatch"
-                )
-            arr = decode_column_arrow(
-                dtypes[name], codec, payload, json.loads(params), nv
-            )
-            parts.setdefault(name, []).append(arr.cast(tag_to_arrow(dtypes[name])))
+        for r in _iter_enc_rows(table):
+            arr = decode_column_arrow(r.dtype, r.codec, r.payload, r.params, r.n_values)
+            parts.setdefault(r.column, []).append(arr.cast(tag_to_arrow(r.dtype)))
         tbl = pa.table({c: pa.concat_arrays(parts[c]) for c in frag_columns})
         if sort_within_chunk:
             tbl = tbl.take(pc.sort_indices(tbl[key]))
@@ -673,12 +707,7 @@ def encode_table(
     per-chunk per-group partials ride the stats JSON — enables
     ``decode_aggregate(group_by=...)`` to run O(chunks) from metadata.
     """
-    columns = columns or df.columns
-    codecs = codecs or {}
-    unknown = set(codecs) - set(columns)
-    if unknown:
-        raise ValueError(f"codecs for unknown columns: {sorted(unknown)}")
-    _check_stats_group_by(stats_group_by, columns)
+    columns, codecs = _encode_args(df, columns, codecs, stats_group_by)
     # fragment-merge fast path: integer-dominated bare parquet scans skip
     # the raw-row shuffle AND the JVM row->Arrow transpose (see
     # _encode_table_fragment_merge).  String-heavy tables stay on the
@@ -714,11 +743,7 @@ def encode_table(
     # id — n_chunks ids hashed into ~n_chunks partitions would idle ~1/e
     # of the cores and pile 3-4 chunks on the slowest task.  The encoder
     # maps the magic back to the logical id, so output rows are unchanged.
-    try:
-        n_part = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    except Exception:
-        n_part = n_chunks
-    magics = _chunk_key_remap(n_chunks, max(n_part, 1))
+    magics = _chunk_magics(df.sparkSession, n_chunks)
     chunk = F.element_at(
         F.array(*[F.lit(m).cast("long") for m in magics]), (logical + 1).cast("int")
     ).alias("__chunk")
@@ -769,12 +794,7 @@ def encode_table_per_split(
 
     from pyspark import TaskContext
 
-    columns = columns or df.columns
-    codecs = codecs or {}
-    unknown = set(codecs) - set(columns)
-    if unknown:
-        raise ValueError(f"codecs for unknown columns: {sorted(unknown)}")
-    _check_stats_group_by(stats_group_by, columns)
+    columns, codecs = _encode_args(df, columns, codecs, stats_group_by)
     select_cols = list(columns) + ([key] if key not in columns else [])
 
     def fn(batches):
@@ -860,12 +880,7 @@ def encode_table_bucketed(
     ONLY (fragments ride as rows; a two-level
     ``partitionBy("bucket", "chunk_id")`` creates P x B directories,
     measured 10x slower at small scale from filesystem metadata alone)."""
-    columns = columns or df.columns
-    codecs = codecs or {}
-    unknown = set(codecs) - set(columns)
-    if unknown:
-        raise ValueError(f"codecs for unknown columns: {sorted(unknown)}")
-    _check_stats_group_by(stats_group_by, columns)
+    columns, codecs = _encode_args(df, columns, codecs, stats_group_by)
     select_cols = list(columns) + ([key] if key not in columns else [])
     bucket_col = F.pmod(F.xxhash64(F.col(key)), F.lit(n_buckets)).alias("__bucket")
 
@@ -936,34 +951,12 @@ def encode_table_bucketed(
     key_type = dict(df.dtypes).get(key)
     if scan is not None and key_type in ("string", "binary", "bigint"):
         from ..kernels.xxh64 import pmod as _pmod
-        from ..kernels.xxh64 import xxh64_bytes_bo, xxh64_int64
 
         def fn_with_bucket(batches):
             def gen():
                 for b in batches:
                     t = pa.Table.from_batches([b])
-                    karr = t[key].combine_chunks()
-                    nulls = None
-                    if karr.null_count:
-                        nulls = pc.is_null(karr).to_numpy(zero_copy_only=False)
-                        karr = pc.fill_null(
-                            karr,
-                            "" if pa.types.is_string(karr.type)
-                            or pa.types.is_large_string(karr.type)
-                            else b"" if pa.types.is_binary(karr.type)
-                            or pa.types.is_large_binary(karr.type)
-                            else 0,
-                        )
-                    if pa.types.is_integer(karr.type):
-                        h = xxh64_int64(
-                            karr.cast(pa.int64()).to_numpy(zero_copy_only=False)
-                        )
-                    else:
-                        blob, offs = arrow_to_bo(karr)
-                        h = xxh64_bytes_bo(blob, offs)
-                    if nulls is not None:
-                        h[nulls] = 42  # xxhash64(NULL) = the seed, per Spark
-                    bucket = _pmod(h, n_buckets)
+                    bucket = _pmod(_spark_xxhash64(t[key].combine_chunks()), n_buckets)
                     t = t.append_column("__bucket", pa.array(bucket, pa.int64()))
                     yield from t.to_batches()
 
@@ -984,58 +977,49 @@ def column_meta(enc: DataFrame) -> list:
     )
 
 
-def _prune(enc: DataFrame, meta: list, columns: list[str] | None):
-    """Column pruning through the codec layer: the encoded table is one row
-    per (chunk, column), so selecting a column subset is a plain filter on
-    ``column`` — which Catalyst pushes down to the encoded-store parquet
-    scan (PushedFilters: In(column, ...)), skipping the pruned columns'
-    payload bytes entirely.  At 100 TB this is the difference between
-    reading 5 columns and reading the 1 the query needs."""
-    if columns is None:
-        return enc, meta
-    known = {r["column"] for r in meta}
-    missing = set(columns) - known
-    if missing:
-        raise ValueError(f"unknown columns: {sorted(missing)}")
-    meta = [r for r in meta if r["column"] in set(columns)]
-    return enc.filter(F.col("column").isin(list(columns))), meta
+class _EncRow(NamedTuple):
+    """One encoded-chunk row as the decode paths see it."""
+
+    column: str
+    dtype: str | None  # None when the batch does not carry the field
+    codec: str
+    payload: memoryview
+    params: dict
+    chunk_id: int
+    n_values: int
+    stats: dict | None  # parsed only on request
 
 
 def _iter_enc_rows(batch, with_stats: bool = False):
-    """Iterate encoded-chunk rows of an Arrow batch/table WITHOUT
-    materializing payload bytes into Python: payloads come out as zero-copy
-    memoryviews over the Arrow buffer (every decode kernel reads them via
-    ``np.frombuffer``).  Yields (column, codec, payload, params_json,
-    crc_or_None, chunk_id, n_values[, stats_json])."""
-    cols = batch.column("column")
-    codecs_a = batch.column("codec")
-    payloads = batch.column("payload")
-    params_a = batch.column("params")
+    """The one reader of encoded-chunk rows (an Arrow batch or table):
+    yields :class:`_EncRow` with every payload checked against its stored
+    CRC (rows of stores that predate the crc32 field skip the check).
+    Payloads come out as zero-copy memoryviews over the Arrow buffer —
+    every decode kernel reads them via ``np.frombuffer``; ``params`` is
+    parsed, ``stats`` only when ``with_stats``."""
     names = set(batch.schema.names)
-    crcs = batch.column("crc32") if "crc32" in names else None
-    cids = batch.column("chunk_id")
-    nvals = batch.column("n_values")
-    stats = batch.column("stats") if with_stats and "stats" in names else None
-    if isinstance(batch, pa.Table):
-        cols, codecs_a, payloads, params_a, cids, nvals = (
-            a.combine_chunks() for a in (cols, codecs_a, payloads, params_a, cids, nvals)
+
+    def pylist(name: str, want: bool = True) -> list:
+        if want and name in names:
+            return batch.column(name).to_pylist()
+        return [None] * batch.num_rows
+
+    payloads = batch.column("payload")
+    fields = zip(
+        *map(pylist, ("column", "dtype", "codec", "params", "chunk_id", "n_values", "crc32")),
+        pylist("stats", with_stats),
+    )
+    for i, (name, dtype, codec, params, cid, nv, crc, st) in enumerate(fields):
+        payload = memoryview(payloads[i].as_buffer())
+        if crc is not None and zlib.crc32(payload) != crc:
+            raise IOError(
+                f"payload corruption: chunk {cid} column {name!r} "
+                f"crc mismatch (stored {crc})"
+            )
+        yield _EncRow(
+            name, dtype, codec, payload, json.loads(params), cid, nv,
+            json.loads(st) if st else None,
         )
-        crcs = crcs.combine_chunks() if crcs is not None else None
-        stats = stats.combine_chunks() if stats is not None else None
-    for i in range(len(cols)):
-        crc = crcs[i].as_py() if crcs is not None else None
-        row = (
-            cols[i].as_py(),
-            codecs_a[i].as_py(),
-            memoryview(payloads[i].as_buffer()),
-            params_a[i].as_py(),
-            crc,
-            cids[i].as_py(),
-            nvals[i].as_py(),
-        )
-        if with_stats:
-            row = row + ((stats[i].as_py() if stats is not None else None),)
-        yield row
 
 
 _PRED_OPS = {
@@ -1114,6 +1098,126 @@ def _apply_where(decoded: dict, conds: list[tuple]):
     return mask
 
 
+def _spark_arrow_type(tag: str) -> pa.DataType:
+    """Spark-facing arrow type of a dtype tag: 32-bit-offset string/binary,
+    UTC timestamps."""
+    if tag == "str":
+        return pa.string()
+    if tag == "bin":
+        return pa.binary()
+    if tag == "ts_us":
+        return pa.timestamp("us", tz="UTC")
+    return tag_to_arrow(tag)
+
+
+class _ChunkDecoder:
+    """The one chunk-decode core behind :func:`decode_table` and
+    :func:`decode_table_colocated`, built once per call and shipped to the
+    executors.
+
+    ``read`` is the column subset to fetch (None = all): the requested
+    ``columns`` plus predicate-only columns, which are decoded for the mask
+    and dropped from the output.  :meth:`decode` evaluates ``where`` three
+    tiers deep:
+
+    1. zone-map chunk skip: a chunk whose min/max stats provably exclude
+       the predicate decodes NOTHING (no payload bytes touched);
+    2. predicate-first decode: only the predicate columns decode first,
+       and the chunk bails before the rest when no row matches; the
+       remaining columns then decode the SELECTED rows only;
+    3. row filter: only matching rows cross Arrow IPC — at 100 TB the
+       IPC-out volume is the selectivity, not the table."""
+
+    def __init__(self, meta: list, columns: list[str] | None, where):
+        self.conds = _normalize_where(where)
+        self.read = columns
+        if columns is not None and self.conds:
+            pred_only = {c for c, _, _ in self.conds} - set(columns)
+            self.read = list(columns) + sorted(pred_only)
+        if self.read is not None:
+            missing = set(self.read) - {r["column"] for r in meta}
+            if missing:
+                raise ValueError(f"unknown columns: {sorted(missing)}")
+            meta = [r for r in meta if r["column"] in set(self.read)]
+        self.columns = [r["column"] for r in meta]
+        self.tags = {r["column"]: r["dtype"] for r in meta}
+        self.out_cols = [c for c in self.columns if columns is None or c in set(columns)]
+        self.pred_cols = list(dict.fromkeys(c for c, _, _ in self.conds))
+        unknown_pred = set(self.pred_cols) - set(self.columns)
+        if unknown_pred:
+            raise ValueError(f"where references unknown columns: {sorted(unknown_pred)}")
+        self.spark_schema = T.StructType(
+            [T.StructField("__chunk", T.LongType())]
+            + [T.StructField(c, _TAG_TO_SPARK[self.tags[c]]) for c in self.out_cols]
+        )
+        self.arrow_schema = pa.schema(
+            [("__chunk", pa.int64())]
+            + [(c, _spark_arrow_type(self.tags[c])) for c in self.out_cols]
+        )
+
+    def prune(self, enc: DataFrame) -> DataFrame:
+        """Column pruning through the codec layer: the encoded table is one
+        row per (chunk, column), so selecting a column subset is a plain
+        filter on ``column`` — which Catalyst pushes down to the
+        encoded-store parquet scan (PushedFilters: In(column, ...)),
+        skipping the pruned columns' payload bytes entirely."""
+        if self.read is None:
+            return enc
+        return enc.filter(F.col("column").isin(list(self.read)))
+
+    def rows(self, batch):
+        """:func:`_iter_enc_rows` with the stats this decoder needs."""
+        return _iter_enc_rows(batch, with_stats=bool(self.conds))
+
+    def decode(self, rows: dict[str, _EncRow]) -> pa.RecordBatch | None:
+        """One chunk's rows (column -> row, every ``self.columns`` entry)
+        -> its output batch, or None when no row survives ``where``."""
+        first = next(iter(rows.values()))
+        n, chunk_id = first.n_values, first.chunk_id
+        conds = self.conds
+        if conds and _stats_exclude(
+            conds, {c: r.stats for c, r in rows.items() if r.stats}
+        ):
+            return None
+        out_set = set(self.out_cols)
+        decoded: dict[str, pa.Array] = {}
+
+        def get(c):
+            if c not in decoded:
+                r = rows[c]
+                arr = decode_column_arrow(self.tags[c], r.codec, r.payload, r.params, n)
+                if c in out_set:
+                    arr = arr.cast(self.arrow_schema.field(c).type)
+                decoded[c] = arr
+            return decoded[c]
+
+        mask = sel = None
+        if conds:
+            for c in self.pred_cols:
+                get(c)
+            mask = pc.fill_null(_apply_where(decoded, conds), False)
+            sel = np.flatnonzero(mask.to_numpy(zero_copy_only=False))
+            if sel.size == 0:
+                return None
+        out = []
+        for c in self.out_cols:
+            if sel is not None and c not in decoded:
+                r = rows[c]
+                out.append(
+                    decode_column_arrow_selected(
+                        self.tags[c], r.codec, r.payload, r.params, n, sel
+                    ).cast(self.arrow_schema.field(c).type)
+                )
+            else:
+                arr = get(c)
+                out.append(pc.filter(arr, mask) if mask is not None else arr)
+        m = n if sel is None else sel.size
+        return pa.RecordBatch.from_arrays(
+            [pa.array(np.full(m, chunk_id, dtype=np.int64))] + out,
+            schema=self.arrow_schema,
+        )
+
+
 def decode_table(
     enc: DataFrame,
     meta: list | None = None,
@@ -1126,101 +1230,24 @@ def decode_table(
     ``meta``: precomputed :func:`column_meta` (skips the planning job).
     ``columns``: decode only this subset (projection pushdown — pruned
     columns' payloads are never read, decoded, or shipped over Arrow).
-    ``where``: filter pushdown — same three-tier semantics as
-    :func:`decode_table_colocated` (zone-map chunk skip, predicate-first
-    decode, in-UDF row filter)."""
-    conds = _normalize_where(where)
-    out_columns = columns
-    if columns is not None and conds:
-        pred_only = [c for c, _, _ in conds if c not in columns]
-        columns = list(columns) + sorted(set(pred_only))
+    ``where``: filter pushdown — a conjunction of ``(column, op,
+    literal)`` conditions (see :func:`_normalize_where`) evaluated inside
+    the decode UDF, three tiers deep (:class:`_ChunkDecoder`): zone-map
+    chunk skip, predicate-first decode, row filter.  Predicate columns need
+    not be in ``columns``; they are decoded for the mask and dropped."""
     if meta is None:
         meta = column_meta(enc)
-    enc, meta = _prune(enc, meta, columns)
-    columns = [r["column"] for r in meta]
-    tags = {r["column"]: r["dtype"] for r in meta}
-    out_cols = [c for c in columns if out_columns is None or c in set(out_columns)]
-    pred_cols = list(dict.fromkeys(c for c, _, _ in conds))
-    unknown_pred = set(pred_cols) - set(columns)
-    if unknown_pred:
-        raise ValueError(f"where references unknown columns: {sorted(unknown_pred)}")
-    out_schema = T.StructType(
-        [T.StructField("__chunk", T.LongType())]
-        + [T.StructField(c, _TAG_TO_SPARK[tags[c]]) for c in out_cols]
-    )
-    # Spark-facing arrow types: 32-bit-offset string/binary, UTC timestamps
-    def spark_arrow_type(tag: str) -> pa.DataType:
-        if tag == "str":
-            return pa.string()
-        if tag == "bin":
-            return pa.binary()
-        if tag == "ts_us":
-            return pa.timestamp("us", tz="UTC")
-        return tag_to_arrow(tag)
-
-    arrow_out = pa.schema(
-        [("__chunk", pa.int64())]
-        + [(c, spark_arrow_type(tags[c])) for c in out_cols]
-    )
+    dec = _ChunkDecoder(meta, columns, where)
 
     def decode_chunk(table: pa.Table) -> pa.Table:
-        n = int(table["n_values"][0].as_py())
-        chunk_id = int(table["chunk_id"][0].as_py())
-        by_col, stats_by_col = {}, {}
-        for name, codec, payload, params, crc, _cid, _nv, st in _iter_enc_rows(
-            table, with_stats=True
-        ):
-            if crc is not None and zlib.crc32(payload) != crc:
-                raise IOError(
-                    f"payload corruption: chunk {chunk_id} column {name!r} "
-                    f"crc mismatch (stored {crc})"
-                )
-            by_col[name] = (codec, payload, json.loads(params))
-            if st and conds:
-                stats_by_col[name] = json.loads(st)
-        empty = pa.table(
-            {f.name: pa.array([], type=f.type) for f in arrow_out}, schema=arrow_out
-        )
-        if conds and _stats_exclude(conds, stats_by_col):
-            return empty  # zone-map chunk skip: no payload decode at all
-        decoded = {}
-        out_set = set(out_cols)
+        got = dec.decode({r.column: r for r in dec.rows(table)})
+        if got is None:
+            return dec.arrow_schema.empty_table()
+        return pa.Table.from_batches([got])
 
-        def get(c):
-            if c not in decoded:
-                codec, payload, params = by_col[c]
-                arr = decode_column_arrow(tags[c], codec, payload, params, n)
-                if c in out_set:
-                    arr = arr.cast(arrow_out.field(c).type)
-                decoded[c] = arr
-            return decoded[c]
-
-        mask = None
-        sel = None
-        if conds:
-            for c in pred_cols:
-                get(c)
-            mask = pc.fill_null(_apply_where(decoded, conds), False)
-            sel = np.flatnonzero(mask.to_numpy(zero_copy_only=False))
-            if sel.size == 0:
-                return empty
-        out = {}
-        for col in out_cols:
-            if sel is not None and col not in decoded:
-                codec, payload, params = by_col[col]
-                out[col] = decode_column_arrow_selected(
-                    tags[col], codec, payload, params, n, sel
-                ).cast(arrow_out.field(col).type)
-            else:
-                arr = get(col)
-                out[col] = pc.filter(arr, mask) if mask is not None else arr
-        m = len(out[out_cols[0]]) if out_cols else n
-        return pa.table(
-            {"__chunk": pa.array(np.full(m, chunk_id, dtype=np.int64)), **out},
-            schema=arrow_out,
-        )
-
-    return enc.groupBy("chunk_id").applyInArrow(decode_chunk, schema=out_schema)
+    return dec.prune(enc).groupBy("chunk_id").applyInArrow(
+        decode_chunk, schema=dec.spark_schema
+    )
 
 
 def decode_table_colocated(
@@ -1246,26 +1273,8 @@ def decode_table_colocated(
     mid-job.  The executor-side hard error remains as the last-resort
     guard against silent data loss when the check is skipped.
 
-    ``columns``: projection pushdown (see :func:`decode_table`).
-
-    ``where``: FILTER pushdown through the codec layer — a conjunction of
-    ``(column, op, literal)`` conditions (ops >= > <= < == !=) evaluated
-    INSIDE the decode UDF, three tiers deep:
-
-    1. zone-map chunk skip: a chunk whose min/max stats provably exclude
-       the predicate decodes NOTHING (no payload bytes touched);
-    2. predicate-first decode: surviving chunks decode only the predicate
-       columns, and bail before the remaining columns when no row matches;
-    3. row filter: only matching rows are shipped back over Arrow IPC —
-       at 100 TB the IPC-out volume is the selectivity, not the table.
-
-    Predicate columns need not be in ``columns``; they are decoded for
-    the mask and dropped from the output."""
-    conds = _normalize_where(where)
-    out_columns = columns
-    if columns is not None and conds:
-        pred_only = [c for c, _, _ in conds if c not in columns]
-        columns = list(columns) + sorted(set(pred_only))
+    ``columns`` / ``where``: projection and filter pushdown, exactly as in
+    :func:`decode_table` (same :class:`_ChunkDecoder`)."""
     # python-side scan fast path (pyscan.py): a bare parquet store scan is
     # executed inside the Python task (pyarrow reader, one task per
     # partition directory), skipping both the JVM row->Arrow transpose and
@@ -1278,7 +1287,7 @@ def decode_table_colocated(
     #   the transpose saving below ~4 MB per directory group;
     # * a store whose files all share one directory would serialize into a
     #   single task — JVM scan.
-    scan = parquet_scan_info(enc) if out_columns is None else None
+    scan = parquet_scan_info(enc) if columns is None else None
     if scan is not None:
         from .pyscan import _group_by_dir, _total_bytes
 
@@ -1303,107 +1312,19 @@ def decode_table_colocated(
                 "encoded table is not chunk-colocated (a chunk spans scan "
                 "partitions); falling back to the one-shuffle decode_table()"
             )
-            return decode_table(enc, meta, out_columns, where=where)
+            return decode_table(enc, meta, columns, where=where)
     if meta is None:
         meta = column_meta(enc)
-    enc, meta = _prune(enc, meta, columns)
-    columns = [r["column"] for r in meta]
-    tags = {r["column"]: r["dtype"] for r in meta}
-    out_cols = [c for c in columns if out_columns is None or c in set(out_columns)]
-    pred_cols = list(dict.fromkeys(c for c, _, _ in conds))
-    unknown_pred = set(pred_cols) - set(columns)
-    if unknown_pred:
-        raise ValueError(f"where references unknown columns: {sorted(unknown_pred)}")
-
-    def spark_arrow_type(tag: str) -> pa.DataType:
-        if tag == "str":
-            return pa.string()
-        if tag == "bin":
-            return pa.binary()
-        if tag == "ts_us":
-            return pa.timestamp("us", tz="UTC")
-        return tag_to_arrow(tag)
-
-    out_schema = T.StructType(
-        [T.StructField("__chunk", T.LongType())]
-        + [T.StructField(c, _TAG_TO_SPARK[tags[c]]) for c in out_cols]
-    )
-    arrow_out = pa.schema(
-        [("__chunk", pa.int64())] + [(c, spark_arrow_type(tags[c])) for c in out_cols]
-    )
+    dec = _ChunkDecoder(meta, columns, where)
 
     def fn(batches):
         pending: dict[int, dict] = {}
-        counts: dict[int, int] = {}
-        stats_acc: dict[int, dict] = {}
-
-        def flush(chunk_id: int):
-            cols = pending.pop(chunk_id)
-            n = counts.pop(chunk_id)
-            st = stats_acc.pop(chunk_id, {})
-            # tier 1: zone-map chunk skip — provably-excluded chunks decode
-            # nothing (their payload bytes are never touched)
-            if conds and _stats_exclude(conds, st):
-                return None
-
-            decoded: dict[str, pa.Array] = {}
-
-            out_set = set(out_cols)
-
-            def get(c):
-                if c not in decoded:
-                    codec, payload, params = cols[c]
-                    arr = decode_column_arrow(tags[c], codec, payload, params, n)
-                    if c in out_set:
-                        arr = arr.cast(arrow_out.field(c).type)
-                    decoded[c] = arr
-                return decoded[c]
-
-            mask = None
-            sel = None
-            if conds:
-                # tier 2: predicate-first decode — bail before the
-                # non-predicate columns when nothing matches
-                for c in pred_cols:
-                    get(c)
-                mask = pc.fill_null(_apply_where(decoded, conds), False)
-                sel = np.flatnonzero(mask.to_numpy(zero_copy_only=False))
-                if sel.size == 0:
-                    return None
-            out = {}
-            for c in out_cols:
-                if sel is not None and c not in decoded:
-                    # tier 2b: random-access decode of the SELECTED rows
-                    # only — non-predicate columns never decode bytes the
-                    # filter already dropped
-                    codec, payload, params = cols[c]
-                    out[c] = decode_column_arrow_selected(
-                        tags[c], codec, payload, params, n, sel
-                    ).cast(arrow_out.field(c).type)
-                else:
-                    arr = get(c)
-                    # tier 3: only surviving rows cross Arrow IPC
-                    out[c] = pc.filter(arr, mask) if mask is not None else arr
-            m = len(out[out_cols[0]]) if out_cols else (sel.size if sel is not None else n)
-            chunk_arr = pa.array(np.full(m, chunk_id, dtype=np.int64))
-            return pa.RecordBatch.from_arrays(
-                [chunk_arr] + [out[c] for c in out_cols], schema=arrow_out
-            )
-
         for batch in batches:
-            for name, codec, payload, params, crc, cid, nv, st in _iter_enc_rows(
-                batch, with_stats=True
-            ):
-                if crc is not None and zlib.crc32(payload) != crc:
-                    raise IOError(
-                        f"payload corruption: chunk {cid} column {name!r} crc mismatch"
-                    )
-                pending.setdefault(cid, {})[name] = (codec, payload, json.loads(params))
-                counts[cid] = nv
-                if st and conds:
-                    stats_acc.setdefault(cid, {})[name] = json.loads(st)
-                if len(pending[cid]) == len(columns):
-                    got = flush(cid)
+            for r in dec.rows(batch):
+                rows = pending.setdefault(r.chunk_id, {})
+                rows[r.column] = r
+                if len(rows) == len(dec.columns):
+                    got = dec.decode(pending.pop(r.chunk_id))
                     if got is not None:
                         yield got
         # chunks missing columns at end-of-partition indicate a layout that
@@ -1417,12 +1338,12 @@ def decode_table_colocated(
 
     if scan is not None:
         need = ["chunk_id", "column", "codec", "payload", "params",
-                "n_values", "crc32"] + (["stats"] if conds else [])
+                "n_values", "crc32"] + (["stats"] if dec.conds else [])
         return pyscan_map_in_arrow(
-            enc.sparkSession, scan, fn, out_schema,
-            columns=need, column_filter=list(columns), group="dir",
+            enc.sparkSession, scan, fn, dec.spark_schema,
+            columns=need, column_filter=list(dec.columns), group="dir",
         )
-    return enc.mapInArrow(fn, schema=out_schema)
+    return dec.prune(enc).mapInArrow(fn, schema=dec.spark_schema)
 
 
 _AGG_SCHEMA = T.StructType(
@@ -1647,188 +1568,62 @@ def _agg_row_analytic(tag: str, codec: str, payload, params: dict, nv: int):
     return None
 
 
+def _combine_partials(partials: DataFrame, *keys: str) -> DataFrame:
+    """One native groupBy combining decode-path partials exactly (decimal
+    sums, long min/max)."""
+    return partials.groupBy(*keys).agg(
+        F.sum("n_rows").alias("n_rows"),
+        F.sum("n_nulls").alias("n_nulls"),
+        F.sum(F.col("sum_exact").cast("decimal(38,0)")).cast("string").alias("sum_exact"),
+        F.min(F.col("min_exact").cast("long")).cast("string").alias("min_exact"),
+        F.max(F.col("max_exact").cast("long")).cast("string").alias("max_exact"),
+        F.sum("sum_bytes").alias("sum_bytes"),
+    )
+
+
 def _agg_decode_path(enc: DataFrame) -> DataFrame:
     """Decode-path aggregation: per-(chunk, column) partials are computed
     INSIDE the decode UDF, so no decoded rows ever cross the Python->JVM
     boundary — the UDF output is one tiny row per encoded chunk row.
     Chunks whose (dtype, codec) admits it are aggregated straight from the
     payload structure (:func:`_agg_row_analytic`) without materializing
-    the decoded column at all."""
+    the decoded column at all; the rest decode and reuse the encode-side
+    exact statistics (:func:`_zone_map_dict`)."""
 
     def fn(batches):
         for batch in batches:
             out = {k.name: [] for k in _AGG_SCHEMA.fields}
-            tags = batch.column("dtype")  # mapInArrow always feeds RecordBatches
-            for i, (name, codec, payload, params, _crc, _cid, nv) in enumerate(
-                _iter_enc_rows(batch)
-            ):
-                tag = tags[i].as_py()
-                got = _agg_row_analytic(tag, codec, payload, json.loads(params), nv)
-                if got is not None:
-                    out["column"].append(name)
-                    out["n_rows"].append(int(nv))
-                    out["n_nulls"].append(got[0])
-                    out["sum_exact"].append(got[1])
-                    out["min_exact"].append(got[2])
-                    out["max_exact"].append(got[3])
-                    out["sum_bytes"].append(got[4])
-                    continue
-                arr = decode_column_arrow(
-                    tag, codec, payload, json.loads(params), nv
-                )
-                n_nulls = arr.null_count
-                sum_exact = None
-                min_exact = None
-                max_exact = None
-                sum_bytes = None
-                t = arr.type
-                if pa.types.is_string(t) or pa.types.is_large_string(t) or pa.types.is_binary(t) or pa.types.is_large_binary(t):
-                    sum_bytes = int(pc.sum(pc.binary_length(arr)).as_py() or 0)
-                elif pa.types.is_floating(t):
-                    pass  # fp sums are order-dependent; not exposed exactly
-                else:
-                    if pa.types.is_timestamp(t):
-                        v = arr.cast(pa.int64())
-                    elif pa.types.is_date(t):
-                        v = arr.cast(pa.int32()).cast(pa.int64())
-                    elif pa.types.is_boolean(t):
-                        v = arr.cast(pa.int64())
-                    else:
-                        v = arr.cast(pa.int64())
-                    # Arrow sums in an int64 accumulator, which WRAPS for
-                    # realistic inputs (e.g. 400k epoch-micros ≈ 7e20).
-                    # Exact fast path: shift by the chunk min so the Arrow
-                    # sum runs over the (small) in-chunk range, then add
-                    # n*min back with Python-int arithmetic — epoch-micros
-                    # chunks stay vectorized instead of object-summing
-                    mm = pc.min_max(v)
-                    lo_, hi_ = mm["min"].as_py(), mm["max"].as_py()
-                    min_exact = str(lo_) if lo_ is not None else None
-                    max_exact = str(hi_) if hi_ is not None else None
-                    n_nonnull = int(nv) - int(n_nulls)
-                    if lo_ is None:
-                        sum_exact = "0"
-                    elif (hi_ - lo_) * max(n_nonnull, 1) < (1 << 62):
-                        shifted = pc.subtract(v, pa.scalar(lo_, pa.int64()))
-                        s = int(pc.sum(shifted, min_count=0).as_py() or 0)
-                        sum_exact = str(s + lo_ * n_nonnull)
-                    else:
-                        vv = v.drop_null().to_numpy(zero_copy_only=False)
-                        sum_exact = str(int(vv.astype(object).sum()) if vv.size else 0)
-                out["column"].append(name)
-                out["n_rows"].append(int(nv))
-                out["n_nulls"].append(int(n_nulls))
-                out["sum_exact"].append(sum_exact)
-                out["min_exact"].append(min_exact)
-                out["max_exact"].append(max_exact)
-                out["sum_bytes"].append(sum_bytes)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(out["column"], type=pa.string()),
-                    pa.array(out["n_rows"], type=pa.int64()),
-                    pa.array(out["n_nulls"], type=pa.int64()),
-                    pa.array(out["sum_exact"], type=pa.string()),
-                    pa.array(out["min_exact"], type=pa.string()),
-                    pa.array(out["max_exact"], type=pa.string()),
-                    pa.array(out["sum_bytes"], type=pa.int64()),
-                ],
-                names=[f.name for f in _AGG_SCHEMA.fields],
-            )
+            for r in _iter_enc_rows(batch):
+                got = _agg_row_analytic(r.dtype, r.codec, r.payload, r.params, r.n_values)
+                if got is None:
+                    # only integer-family chunks get here (every string
+                    # codec and f64 has an analytic answer)
+                    st = _zone_map_dict(
+                        decode_column_arrow(r.dtype, r.codec, r.payload, r.params, r.n_values),
+                        r.dtype,
+                    )
+                    lo, hi = st.get("min"), st.get("max")
+                    got = (
+                        st["n_nulls"], st["sum"],
+                        None if lo is None else str(lo),
+                        None if hi is None else str(hi),
+                        None,
+                    )
+                for k, v in zip(out, (r.column, r.n_values) + tuple(got)):
+                    out[k].append(v)
+            yield from pa.table(out, schema=to_arrow_schema(_AGG_SCHEMA)).to_batches()
 
     scan = parquet_scan_info(enc)
     if scan is not None:
         partials = pyscan_map_in_arrow(
             enc.sparkSession, scan, fn, _AGG_SCHEMA,
             columns=["chunk_id", "column", "dtype", "codec", "payload",
-                     "params", "n_values"],
+                     "params", "n_values", "crc32"],
             group="dir",
         )
     else:
         partials = enc.mapInArrow(fn, schema=_AGG_SCHEMA)
-    return partials.groupBy("column").agg(
-        F.sum("n_rows").alias("n_rows"),
-        F.sum("n_nulls").alias("n_nulls"),
-        F.sum(F.col("sum_exact").cast("decimal(38,0)")).cast("string").alias("sum_exact"),
-        F.min(F.col("min_exact").cast("long")).cast("string").alias("min_exact"),
-        F.max(F.col("max_exact").cast("long")).cast("string").alias("max_exact"),
-        F.sum("sum_bytes").alias("sum_bytes"),
-    )
-
-
-def _agg_decode_path_grouped(
-    enc: DataFrame, group_by: str, out_columns: list[str]
-) -> DataFrame:
-    """Grouped decode-path aggregation: one applyInArrow per chunk decodes
-    the group column plus the selected columns and emits exact per-group
-    partials (same arbitrary-precision sum guard as the encode-side
-    stats), combined by one native groupBy.  Handles any group
-    cardinality — it is both the ``use_stats=False`` path and the
-    fallback for chunks whose grouped stats are absent."""
-    sub = enc.filter(F.col("column").isin(sorted(set(out_columns) | {group_by})))
-
-    def agg_chunk(table: pa.Table) -> pa.Table:
-        n = int(table["n_values"][0].as_py())
-        dt = {
-            table["column"][i].as_py(): table["dtype"][i].as_py()
-            for i in range(table.num_rows)
-        }
-        if group_by not in dt:
-            raise ValueError(
-                f"group column {group_by!r} is not in the encoded table "
-                f"(chunk {int(table['chunk_id'][0].as_py())})"
-            )
-        by_col = {}
-        for name, codec, payload, params, crc, cid, _nv in _iter_enc_rows(table):
-            if crc is not None and zlib.crc32(payload) != crc:
-                raise IOError(
-                    f"payload corruption: chunk {cid} column {name!r} crc mismatch"
-                )
-            by_col[name] = (codec, payload, json.loads(params))
-        gcodec, gpayload, gparams = by_col[group_by]
-        garr = decode_column_arrow(dt[group_by], gcodec, gpayload, gparams, n)
-        codes, keys = _group_codes(garr, max_groups=None)
-        out = {k.name: [] for k in _GAGG_SCHEMA.fields}
-        for col in out_columns:
-            if col not in by_col:
-                continue  # pruned upstream
-            arr = (
-                garr
-                if col == group_by
-                else decode_column_arrow(dt[col], *by_col[col][:2], by_col[col][2], n)
-            )
-            for key, p in zip(keys, _group_partials(arr, dt[col], codes, len(keys))):
-                if p is None:
-                    continue
-                out["group"].append(key)
-                out["column"].append(col)
-                out["n_rows"].append(p["n"])
-                out["n_nulls"].append(p["nn"])
-                out["sum_exact"].append(p.get("sum"))
-                out["min_exact"].append(None if p.get("min") is None else str(p["min"]))
-                out["max_exact"].append(None if p.get("max") is None else str(p["max"]))
-                out["sum_bytes"].append(p.get("bytes"))
-        return pa.table(
-            {
-                "group": pa.array(out["group"], pa.string()),
-                "column": pa.array(out["column"], pa.string()),
-                "n_rows": pa.array(out["n_rows"], pa.int64()),
-                "n_nulls": pa.array(out["n_nulls"], pa.int64()),
-                "sum_exact": pa.array(out["sum_exact"], pa.string()),
-                "min_exact": pa.array(out["min_exact"], pa.string()),
-                "max_exact": pa.array(out["max_exact"], pa.string()),
-                "sum_bytes": pa.array(out["sum_bytes"], pa.int64()),
-            }
-        )
-
-    partials = sub.groupBy("chunk_id").applyInArrow(agg_chunk, schema=_GAGG_SCHEMA)
-    return partials.groupBy("group", "column").agg(
-        F.sum("n_rows").alias("n_rows"),
-        F.sum("n_nulls").alias("n_nulls"),
-        F.sum(F.col("sum_exact").cast("decimal(38,0)")).cast("string").alias("sum_exact"),
-        F.min(F.col("min_exact").cast("long")).cast("string").alias("min_exact"),
-        F.max(F.col("max_exact").cast("long")).cast("string").alias("max_exact"),
-        F.sum("sum_bytes").alias("sum_bytes"),
-    )
+    return _combine_partials(partials, "column")
 
 
 def _degroup_null_key(df: DataFrame) -> DataFrame:
@@ -1841,6 +1636,57 @@ def _degroup_null_key(df: DataFrame) -> DataFrame:
         .when(g.startswith(NULL_GROUP_KEY), F.substring("group", 2, 2147483646))
         .otherwise(g),
     )
+
+
+def _agg_decode_path_grouped(
+    enc: DataFrame, group_by: str, out_columns: list[str]
+) -> DataFrame:
+    """Grouped decode-path aggregation: one applyInArrow per chunk decodes
+    the group column plus the selected columns and emits exact per-group
+    partials (same arbitrary-precision sum guard as the encode-side
+    stats), combined by one native groupBy.  Handles any group
+    cardinality — it is both the ``use_stats=False`` path and the
+    fallback for chunks whose grouped stats are absent.  Returns exactly
+    the ``out_columns`` rows, with real SQL NULL groups."""
+    sub = enc.filter(F.col("column").isin(sorted(set(out_columns) | {group_by})))
+
+    def agg_chunk(table: pa.Table) -> pa.Table:
+        by_col = {r.column: r for r in _iter_enc_rows(table)}
+        if group_by not in by_col:
+            raise ValueError(
+                f"group column {group_by!r} is not in the encoded table "
+                f"(chunk {int(table['chunk_id'][0].as_py())})"
+            )
+        g = by_col[group_by]
+        garr = decode_column_arrow(g.dtype, g.codec, g.payload, g.params, g.n_values)
+        codes, keys = _group_codes(garr, max_groups=None)
+        out = {k.name: [] for k in _GAGG_SCHEMA.fields}
+        for col in out_columns:
+            r = by_col.get(col)
+            if r is None:
+                continue  # pruned upstream
+            arr = (
+                garr
+                if col == group_by
+                else decode_column_arrow(r.dtype, r.codec, r.payload, r.params, r.n_values)
+            )
+            for key, p in zip(keys, _group_partials(arr, r.dtype, codes, len(keys))):
+                if p is None:
+                    continue
+                out["group"].append(key)
+                out["column"].append(col)
+                out["n_rows"].append(p["n"])
+                out["n_nulls"].append(p["nn"])
+                out["sum_exact"].append(p.get("sum"))
+                out["min_exact"].append(None if p.get("min") is None else str(p["min"]))
+                out["max_exact"].append(None if p.get("max") is None else str(p["max"]))
+                out["sum_bytes"].append(p.get("bytes"))
+        return pa.table(out, schema=to_arrow_schema(_GAGG_SCHEMA))
+
+    partials = sub.groupBy("chunk_id").applyInArrow(agg_chunk, schema=_GAGG_SCHEMA)
+    return _degroup_null_key(
+        _combine_partials(partials, "group", "column")
+    ).filter(F.col("column").isin(out_columns))
 
 
 def decode_aggregate(
@@ -1890,9 +1736,9 @@ def decode_aggregate(
         if out_columns is None:
             out_columns = [r["column"] for r in column_meta(enc)]
         if not use_stats:
-            return _degroup_null_key(
-                _agg_decode_path_grouped(enc, group_by, out_columns)
-            ).filter(F.col("column").isin(out_columns)).orderBy("group", "column")
+            return _agg_decode_path_grouped(enc, group_by, out_columns).orderBy(
+                "group", "column"
+            )
         # MAX_STAT_GROUPS bounds cardinality per CHUNK only; a sort-key-
         # correlated group column can stay under the per-chunk cap while
         # global groups grow with chunk count — cap what the driver ever
@@ -1907,9 +1753,9 @@ def decode_aggregate(
             .collect()
         )
         if len(rows) > max_rows:
-            return _degroup_null_key(
-                _agg_decode_path_grouped(enc, group_by, out_columns)
-            ).filter(F.col("column").isin(out_columns)).orderBy("group", "column")
+            return _agg_decode_path_grouped(enc, group_by, out_columns).orderBy(
+                "group", "column"
+            )
         bad = sorted({r["column"] for r in rows if r["__ok"] != 1})
         good_rows = sorted(
             (
@@ -1931,9 +1777,7 @@ def decode_aggregate(
         spark = enc.sparkSession
         good_df = spark.createDataFrame(good_rows, schema=_GAGG_SCHEMA)
         if bad:
-            fb = _degroup_null_key(
-                _agg_decode_path_grouped(enc, group_by, bad)
-            ).filter(F.col("column").isin(bad))
+            fb = _agg_decode_path_grouped(enc, group_by, bad)
             good_df = good_df.unionByName(fb).orderBy("group", "column")
         return good_df
 

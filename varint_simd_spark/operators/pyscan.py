@@ -3,9 +3,10 @@
 The engine's operators are ``mapInArrow`` functions over parquet scans.  On
 the JVM path every scanned byte is decoded from parquet into Spark's
 internal rows, transposed into Arrow batches, and streamed to the Python
-worker — measured at ~4.7 s for a 4.9 GB scan on local[32] (bench_extra
-``scan_ipc_in`` vs ``scan_only_native``), i.e. the row->Arrow transpose
-costs several times the scan itself.  When the operator's input is exactly
+worker — measured at ~4.7 s for a 4.9 GB scan on local[32] (noop-sink
+scans with and without Arrow IPC; ``perfbench/`` records each operator's
+scan path and per-stage time), i.e. the row->Arrow transpose costs
+several times the scan itself.  When the operator's input is exactly
 a **bare parquet file scan** (the shape ``spark.read.parquet(path)``
 produces — no filters, projections or joins), the scan can instead be
 executed *inside* the Python task: ship the file list (a few KB), and let
