@@ -261,6 +261,36 @@ def test_ingest_layout_guard(web_pages, spark, tmp_path):
                         target_chunk_bytes=1 << 20)
 
 
+def test_ingest_layout_guard_parallelism_and_packing(web_pages, spark, tmp_path):
+    """The layout lock records the core count and the split packer: a
+    stored lock from another parallelism, or one written before the
+    balanced packer (no ``split_packing``), re-keys every per-split chunk,
+    so the re-ingest must fail fast."""
+    import json
+
+    from varint_simd_spark.sources.checkpoint import ingest_to_store
+
+    inp = str(tmp_path / "wp_lock_in")
+    web_pages.limit(500).write.mode("overwrite").parquet(inp)
+    df = spark.read.parquet(inp)
+    store = EncodedStore(spark, str(tmp_path / "lock_store"))
+    ingest_to_store(store, df, key="url", target_chunk_bytes=1 << 20)
+
+    conf_path = f"{store.root}/_ingest_conf.json"
+    with open(conf_path) as f:
+        lock = json.load(f)
+    assert lock["defaultParallelism"] == spark.sparkContext.defaultParallelism
+    assert lock["split_packing"] == "balanced"
+    other_cores = dict(lock, defaultParallelism=lock["defaultParallelism"] + 4)
+    old_packer = {k: v for k, v in lock.items()
+                  if k not in ("defaultParallelism", "split_packing")}
+    for stored in (other_cores, old_packer):
+        with open(conf_path, "w") as f:
+            json.dump(stored, f)
+        with pytest.raises(ValueError, match="ingest layout differs"):
+            ingest_to_store(store, df, key="url", target_chunk_bytes=1 << 20)
+
+
 def test_ingest_to_store_roundtrip(web_pages, spark, tmp_path):
     """Per-split ingest into the store: zero-exchange encode, committed
     manifest, bit-identical decode through the manifest-gated read."""

@@ -180,3 +180,146 @@ def test_encode_table_remap_preserves_chunk_ids(spark):
         for r in df.select(F.pmod(F.xxhash64("doc_id"), F.lit(8))).distinct().collect()
     )
     assert got == exp
+
+
+def _units(groups):
+    """(path, row group or None) in group order — the packer's output
+    flattened."""
+    return [
+        (p, rg) for g in groups for p, rgs in g
+        for rg in (rgs if rgs is not None else [None])
+    ]
+
+
+def test_group_by_size_balanced_waves(tmp_path):
+    """Split packing fills the cores in whole waves: equal files pack
+    evenly into ``parallelism`` groups, a table larger than
+    ``parallelism x maxPartitionBytes`` into a multiple of it, and every
+    file lands exactly once, in path order."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from varint_simd_spark.operators.pyscan import _group_by_size
+
+    t = pa.table({"x": np.arange(1000, dtype=np.int64)})
+    paths = []
+    for i in range(17):
+        paths.append(str(tmp_path / f"f{i:02d}.parquet"))
+        pq.write_table(t, paths[-1])
+    sixteen = paths[:16]
+    groups = _group_by_size(sixteen, 128 << 20, 4)
+    assert [len(g) for g in groups] == [4, 4, 4, 4]
+    assert _units(groups) == [(p, None) for p in sixteen]
+    # one file more must not open a one-task second wave
+    groups = _group_by_size(paths, 128 << 20, 4)
+    assert sorted(len(g) for g in groups) == [4, 4, 4, 5]
+    assert _units(groups) == [(p, None) for p in paths]
+
+    # each file counts size + 4 MB open cost: 16 files over 4 x 8 MB
+    small = _group_by_size(sixteen, 8 << 20, 4)
+    assert len(small) % 4 == 0 and len(small) > 4
+    assert _units(small) == [(p, None) for p in sixteen]
+
+
+def test_group_by_size_row_group_splits(tmp_path):
+    """A multi-row-group file splits at row-group boundaries into at most
+    ``parallelism`` groups; a single-row-group file stays one group, so the
+    fragment-merge gate (>= 4 scan groups) keeps the row path there."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from varint_simd_spark.operators.pyscan import _group_by_size
+
+    # ~8 MB of incompressible longs: above the 4 MB split floor
+    p = str(tmp_path / "multi.parquet")
+    x = np.random.default_rng(0).integers(0, 2**62, 1_000_000, dtype=np.int64)
+    pq.write_table(pa.table({"x": x}), p, row_group_size=100_000,
+                   compression="none")
+    groups = _group_by_size([p], 128 << 20, 4)
+    assert 1 < len(groups) <= 4
+    assert _units(groups) == [(p, rg) for rg in range(10)]
+    assert all(len(g) == 1 for g in groups)  # one entry per file per group
+
+    one = f"{SF_DIR}/lineitem.parquet"
+    assert pq.ParquetFile(one).metadata.num_row_groups == 1
+    assert len(_group_by_size([one], 128 << 20, 4)) == 1
+
+
+def test_encode_shuffle_sized_to_cores(spark, tmp_path):
+    """Both encode_table topologies run ONE exchange pinned to
+    n = min(n_chunks, defaultParallelism) partitions (not coalesced by
+    AQE), and the anti-collision keys spread the chunks evenly over it."""
+    import re
+
+    from varint_simd_spark.operators import encode_table
+
+    li = spark.read.parquet(f"{SF_DIR}/lineitem.parquet")
+    li.repartition(6).write.option("maxRecordsPerFile", 1000).parquet(
+        str(tmp_path / "li")
+    )
+    cases = [
+        (spark.read.parquet(f"{SF_DIR}/documents.parquet"), "doc_id", "__chunk"),
+        (spark.read.parquet(str(tmp_path / "li")), "l_orderkey", "__gkey"),
+    ]
+    par = spark.sparkContext.defaultParallelism
+    for src, key, gkey in cases:
+        for n_chunks in (8, 3):
+            n = min(n_chunks, par)
+            q = encode_table(src, key=key, n_chunks=n_chunks).select(
+                "chunk_id", F.spark_partition_id().alias("pid")
+            )
+            rows = q.collect()
+            plan = q._jdf.queryExecution().executedPlan().executedPlan().toString()
+            exchanges = re.findall(r"Exchange (.*), \[plan_id", plan)
+            assert len(exchanges) == 1, plan
+            assert re.fullmatch(
+                rf"hashpartitioning\({gkey}#\d+L, {n}\), REPARTITION_BY_NUM",
+                exchanges[0],
+            ), plan
+            assert "AQEShuffleRead" not in plan
+            per_part: dict[int, set] = {}
+            for r in rows:
+                per_part.setdefault(r["pid"], set()).add(r["chunk_id"])
+            assert {c for s in per_part.values() for c in s} == set(range(n_chunks))
+            assert {len(s) for s in per_part.values()} <= {
+                n_chunks // n, -(-n_chunks // n)
+            }
+            assert len(per_part) == n
+
+
+def test_agg_decode_one_dir_store_parallel(spark, tmp_path):
+    """A store written as several files in ONE directory: the decode-path
+    aggregate's partials run one task per size-packed split (not one per
+    directory), with the same answer as the JVM scan."""
+    import glob
+
+    from varint_simd_spark.operators import encode_table
+    from varint_simd_spark.operators.encode import decode_aggregate
+
+    df = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+    encode_table(df, key="doc_id", n_chunks=8).repartition(4).write.parquet(
+        str(tmp_path / "flat")
+    )
+    n_files = len(glob.glob(str(tmp_path / "flat" / "*.parquet")))
+    assert n_files >= 4
+    st = spark.read.parquet(str(tmp_path / "flat"))
+    sc = spark.sparkContext
+    got = {}
+    tasks = {}
+    for flag in ("0", "1"):
+        os.environ["VSS_PYSCAN"] = flag
+        sc.setJobGroup(f"agg_decode_{flag}", "one-dir decode aggregate")
+        try:
+            got[flag] = _rows(decode_aggregate(st, use_stats=False))
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            os.environ["VSS_PYSCAN"] = "1"
+        tr = sc.statusTracker()
+        stage_ids = [
+            s for j in tr.getJobIdsForGroup(f"agg_decode_{flag}")
+            for s in tr.getJobInfo(j).stageIds
+        ]
+        # the partials stage is the job group's first stage
+        tasks[flag] = tr.getStageInfo(min(stage_ids)).numTasks
+    assert got["0"] == got["1"] and got["1"]
+    assert tasks["1"] == min(sc.defaultParallelism, n_files)

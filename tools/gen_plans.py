@@ -1,6 +1,7 @@
 """Capture .explain('formatted') for every bench query shape into
-plans/r06/<query>_{before,after}.txt.  Run from the repo whose code should
-produce the plans: `python tools/gen_plans.py <suffix> <outdir>`."""
+<outdir>/<query>_<suffix>.txt (e.g. plans/r07/<query>_after.txt).  Run from
+the repo whose code should produce the plans:
+`python tools/gen_plans.py <suffix> <outdir>`."""
 
 import os
 import shutil
@@ -61,6 +62,10 @@ def main():
             encode_table(spark.read.parquet(li1), key="l_orderkey", n_chunks=64))
     else:
         print("skipped encode_lineitem_sf1:", li1, "not found")
+    # sf0.1 lineitem as 16 files: the fragment-merge shape without sf1.0
+    li.repartition(16).write.parquet(f"{tmp}/li16")
+    cap("encode_lineitem_files",
+        encode_table(spark.read.parquet(f"{tmp}/li16"), key="l_orderkey", n_chunks=64))
     spark.conf.set("spark.sql.files.maxPartitionBytes", str(8 << 20))
     cap("encode_web_pages_per_split", encode_table_per_split(wp, key="url"))
     cap("encode_web_pages_bucketed",

@@ -513,13 +513,11 @@ def _encode_args(
     return columns, codecs
 
 
-def _chunk_magics(spark, n_chunks: int) -> list[int]:
-    """:func:`_chunk_key_remap` sized to the session's shuffle partitions."""
-    try:
-        n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    except Exception:
-        n_part = n_chunks
-    return _chunk_key_remap(n_chunks, max(n_part, 1))
+def _chunk_magics(spark, n_chunks: int) -> tuple[int, list[int]]:
+    """The encode shuffle's partition count ``n = min(n_chunks,
+    defaultParallelism)`` and :func:`_chunk_key_remap` sized to it."""
+    n = max(1, min(n_chunks, spark.sparkContext.defaultParallelism))
+    return n, _chunk_key_remap(n_chunks, n)
 
 
 def _spark_xxhash64(karr: pa.Array) -> np.ndarray:
@@ -626,7 +624,7 @@ def _encode_table_fragment_merge(
     transpose+shuffle — i.e. integer-dominated tables; the caller gates
     on the parquet footers' BYTE_ARRAY byte fraction."""
     spark = df.sparkSession
-    magics = _chunk_magics(spark, n_chunks)
+    n_part, magics = _chunk_magics(spark, n_chunks)
     frag_columns = list(columns) + ([key] if key not in columns else [])
 
     from ..kernels.xxh64 import pmod as _pmod
@@ -684,7 +682,11 @@ def _encode_table_fragment_merge(
             tbl, columns, codecs, logical, stats_group_by=stats_group_by
         )
 
-    return frags.groupBy("__gkey").applyInArrow(merge_fn, schema=ENCODED_SCHEMA)
+    return (
+        frags.repartition(n_part, "__gkey")
+        .groupBy("__gkey")
+        .applyInArrow(merge_fn, schema=ENCODED_SCHEMA)
+    )
 
 
 def encode_table(
@@ -738,12 +740,17 @@ def encode_table(
                 sort_within_chunk, stats_group_by,
             )
     logical = F.pmod(F.xxhash64(F.col(key)), F.lit(n_chunks))
-    # anti-collision grouping key (guide §2.5): group on a magic long per
-    # chunk whose hash partition is unique/even instead of the raw chunk
-    # id — n_chunks ids hashed into ~n_chunks partitions would idle ~1/e
-    # of the cores and pile 3-4 chunks on the slowest task.  The encoder
-    # maps the magic back to the logical id, so output rows are unchanged.
-    magics = _chunk_magics(df.sparkSession, n_chunks)
+    # the one exchange is sized to the cores: n = min(n_chunks,
+    # defaultParallelism) partitions, pinned with repartition(n) — AQE
+    # sizes partitions by bytes, but this stage is CPU-bound with a fixed
+    # per-task cost, and it never coalesces a REPARTITION_BY_NUM exchange.
+    # Anti-collision grouping key: group on a magic long per
+    # chunk whose hash partition is (logical id mod n) instead of the raw
+    # chunk id, so each partition holds floor or ceil(n_chunks / n) chunks
+    # — raw ids hashed into n partitions would idle some cores and pile
+    # chunks on the slowest task.  The encoder maps the magic back to the
+    # logical id, so output rows are unchanged.
+    n_part, magics = _chunk_magics(df.sparkSession, n_chunks)
     chunk = F.element_at(
         F.array(*[F.lit(m).cast("long") for m in magics]), (logical + 1).cast("int")
     ).alias("__chunk")
@@ -757,6 +764,7 @@ def encode_table(
     select_cols = list(columns) + ([key] if sort_within_chunk and key not in columns else [])
     return (
         df.select(*select_cols, chunk)
+        .repartition(n_part, "__chunk")
         .groupBy("__chunk")
         .applyInArrow(fn, schema=ENCODED_SCHEMA)
     )
@@ -1588,7 +1596,9 @@ def _agg_decode_path(enc: DataFrame) -> DataFrame:
     Chunks whose (dtype, codec) admits it are aggregated straight from the
     payload structure (:func:`_agg_row_analytic`) without materializing
     the decoded column at all; the rest decode and reuse the encode-side
-    exact statistics (:func:`_zone_map_dict`)."""
+    exact statistics (:func:`_zone_map_dict`).  Partials need no chunk
+    colocation, so the python-side scan packs files by size (one wave of
+    tasks), not by chunk directory."""
 
     def fn(batches):
         for batch in batches:
@@ -1619,7 +1629,7 @@ def _agg_decode_path(enc: DataFrame) -> DataFrame:
             enc.sparkSession, scan, fn, _AGG_SCHEMA,
             columns=["chunk_id", "column", "dtype", "codec", "payload",
                      "params", "n_values", "crc32"],
-            group="dir",
+            group="split",
         )
     else:
         partials = enc.mapInArrow(fn, schema=_AGG_SCHEMA)

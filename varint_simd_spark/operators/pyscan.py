@@ -23,10 +23,11 @@ integer-typed partition columns); anything else — filters, limits, manifest
 gates, non-local files — falls back to the JVM scan unchanged.  Disable
 globally with ``VSS_PYSCAN=0``.
 
-Layout note for decoders: files are grouped per parent directory (one task
-reads a whole ``chunk_id=…``/``bucket=…`` directory), so chunk colocation
-is guaranteed *structurally* — strictly stronger than the colocation probe
-the JVM path needs.
+Layout note for decoders: the colocated decode groups files per parent
+directory (one task reads a whole ``chunk_id=…``/``bucket=…`` directory),
+so chunk colocation is guaranteed *structurally* — strictly stronger than
+the colocation probe the JVM path needs.  Encoders and the decode-path
+aggregate need no colocation and pack files by size instead.
 """
 
 from __future__ import annotations
@@ -128,15 +129,19 @@ def _group_by_dir(paths: list[str]) -> list[list]:
 def _group_by_size(
     paths: list[str], max_partition_bytes: int, parallelism: int
 ) -> list[list]:
-    """Sequential first-fit packing mirroring Spark's split sizing:
-    ``maxSplitBytes = min(maxPartitionBytes, max(openCost,
-    (totalBytes + files*openCost) / defaultParallelism))`` — without the
-    parallelism term a small table would pack into one or two oversized
-    python tasks and idle the other cores.
+    """Contiguous balanced packing into ``k * parallelism`` groups, with
+    ``k = ceil(total / (parallelism * max_partition_bytes))``: every
+    python task carries a fixed start-up cost and the stages are
+    CPU-bound, so the groups are sized to fill the cores in whole waves
+    (no one-task tail wave) while no group exceeds about
+    ``max_partition_bytes``.  Sizes count ``_OPEN_COST`` per file.
 
-    A file larger than the target is split at ROW-GROUP granularity
-    (``[path, [rg, ...]]`` units), mirroring Spark's byte-range file
-    splits — a single-file table must not serialize into one task."""
+    A file larger than 1.5x the group size (at least ``_OPEN_COST``, as in
+    Spark's ``maxSplitBytes``) is split at ROW-GROUP granularity
+    (``[path, [rg, ...]]`` units) — a single-file table must not
+    serialize into one task.  Each unit joins the group its
+    cumulative-size midpoint falls in, so groups are contiguous runs of
+    the input in path order; empty groups are dropped."""
     sizes = []
     for p in paths:
         try:
@@ -144,10 +149,9 @@ def _group_by_size(
         except OSError:
             sizes.append(max_partition_bytes)
     total = sum(sizes)
-    target = min(
-        max_partition_bytes,
-        max(_OPEN_COST, -(-total // max(parallelism, 1))),
-    )
+    par = max(parallelism, 1)
+    n_groups = par * max(1, -(-total // (par * max_partition_bytes)))
+    target = max(_OPEN_COST, total / n_groups)
     units: list[tuple] = []  # (path, rg_list_or_None, size)
     for p, sz in zip(paths, sizes):
         if sz > target * 1.5:
@@ -165,22 +169,18 @@ def _group_by_size(
             except Exception:
                 pass
         units.append((p, None, sz))
-    groups: list[list] = []
-    cur: list = []
+    total = sum(sz for _, _, sz in units)
+    groups: list[list] = [[] for _ in range(n_groups)]
     acc = 0
     for p, rgs, sz in units:
-        if cur and acc + sz > target:
-            groups.append(cur)
-            cur, acc = [], 0
-        # merge adjacent row-group units of the same file into one entry
-        if rgs is not None and cur and cur[-1][0] == p and cur[-1][1] is not None:
-            cur[-1][1].extend(rgs)
-        else:
-            cur.append([p, rgs])
+        g = groups[min(int((acc + sz / 2) * n_groups / max(total, 1)), n_groups - 1)]
         acc += sz
-    if cur:
-        groups.append(cur)
-    return groups
+        # merge adjacent row-group units of the same file into one entry
+        if rgs is not None and g and g[-1][0] == p and g[-1][1] is not None:
+            g[-1][1].extend(rgs)
+        else:
+            g.append([p, rgs])
+    return [g for g in groups if g]
 
 
 def _part_values(path: str, part_cols: list[tuple[str, str]]) -> list[int]:
@@ -278,8 +278,9 @@ def pyscan_map_in_arrow(
     reads its group with pyarrow and feeds the batches to ``fn``.
 
     ``group``: 'dir' (one task per partition directory — chunk colocation
-    guaranteed) or 'split' (packed to spark.sql.files.maxPartitionBytes,
-    mirroring scan-split sizing for encode inputs)."""
+    guaranteed) or 'split' (balanced packing into whole waves of
+    ``defaultParallelism`` tasks, each at most about
+    spark.sql.files.maxPartitionBytes; see :func:`_group_by_size`)."""
     paths, part_cols = scan
     if group == "dir":
         groups = _group_by_dir(paths)

@@ -185,15 +185,22 @@ def _check_ingest_conf(store: EncodedStore, df: DataFrame, layout: dict) -> None
     """Lock the layout-determining ingest params (and the scan-split knobs
     plus the input file list) to the store.  Per-split chunk ids hash
     (partitionId, ordinal, first_key, n_rows), so a recovery re-run with a
-    different parallelism, maxPartitionBytes, or input set would re-key
-    every chunk and silently duplicate all rows; fail fast instead."""
+    different parallelism, maxPartitionBytes, split packing or input set
+    would re-key every chunk and silently duplicate all rows; fail fast
+    instead.  Both the python-side scan and Spark's ``maxSplitBytes`` pack
+    splits by ``defaultParallelism``; ``split_packing`` names the packer
+    (a lock written before the balanced python-side packer has none)."""
     import hashlib
     import json
     import os
 
+    from ..operators.pyscan import parquet_scan_info
+
     layout = dict(layout)
     for k in ("spark.sql.files.maxPartitionBytes", "spark.sql.files.openCostInBytes"):
         layout[k] = store.spark.conf.get(k)  # both have built-in defaults
+    layout["defaultParallelism"] = store.spark.sparkContext.defaultParallelism
+    layout["split_packing"] = "balanced" if parquet_scan_info(df) is not None else "spark"
     files = sorted(df.inputFiles())
     layout["input_files_sha"] = hashlib.sha256("\n".join(files).encode()).hexdigest()
     layout["n_input_files"] = len(files)

@@ -3,7 +3,12 @@
 Arrow is mandatory (all codec kernels cross the JVM<->Python boundary as
 Arrow record batches — the column-chunk analog of the reference's 16-byte
 SIMD window); AQE handles post-shuffle coalescing and skew splitting at
-scale (SURVEY.md §3.4 stage 3).
+scale (SURVEY.md §3.4 stage 3) for the JVM shuffles.  The Python encode
+shuffles of ``encode_table`` pin their partition count instead
+(``repartition(n)``, ``n = min(n_chunks, defaultParallelism)``, which AQE
+does not coalesce): AQE sizes partitions by bytes, while those stages are
+CPU-bound and every Python task pays a fixed start-up cost, so they run
+one wave of core-sized tasks.
 """
 
 from __future__ import annotations
