@@ -323,3 +323,30 @@ def test_agg_decode_one_dir_store_parallel(spark, tmp_path):
         tasks[flag] = tr.getStageInfo(min(stage_ids)).numTasks
     assert got["0"] == got["1"] and got["1"]
     assert tasks["1"] == min(sc.defaultParallelism, n_files)
+
+
+def test_null_int_partition_falls_back_to_jvm_scan(spark, tmp_path):
+    """A ``partitionBy`` table with a null int partition value has a
+    ``part=__HIVE_DEFAULT_PARTITION__`` directory: the python-side scan
+    gate rejects it at plan time, and the per-split encode round-trips it
+    through the JVM scan."""
+    from varint_simd_spark.operators import decode_table_colocated
+    from varint_simd_spark.operators.encode import encode_table_per_split
+    from varint_simd_spark.operators.pyscan import parquet_scan_info
+
+    rows = [(i, None if i % 5 == 0 else i % 3, f"v{i}") for i in range(200)]
+    spark.createDataFrame(rows, "k long, part int, s string").write.partitionBy(
+        "part"
+    ).parquet(str(tmp_path / "src"))
+    assert (tmp_path / "src" / "part=__HIVE_DEFAULT_PARTITION__").is_dir()
+    src = spark.read.parquet(str(tmp_path / "src"))
+    assert parquet_scan_info(src) is None
+
+    enc = encode_table_per_split(src, key="k")
+    enc.write.partitionBy("chunk_id").parquet(str(tmp_path / "store"))
+    st = spark.read.parquet(str(tmp_path / "store"))
+    got = sorted(
+        (r["k"], r["part"], r["s"])
+        for r in decode_table_colocated(st).select("k", "part", "s").collect()
+    )
+    assert got == sorted(rows)

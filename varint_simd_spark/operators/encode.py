@@ -1291,8 +1291,11 @@ def decode_table_colocated(
     # * column-subset reads stay on the JVM scan — Spark's parquet reader
     #   skips non-matching payload PAGES via the column index, which a
     #   whole-file pyarrow read cannot (pruned decode 1.3x slower there);
-    # * small stores stay on the JVM scan — per-Python-task overhead beats
-    #   the transpose saving below ~4 MB per directory group;
+    # * small stores stay on the JVM scan — per-Python-task overhead beat
+    #   the transpose saving below ~4 MB per directory group (measured
+    #   while every Python task re-read its zip directories, about 0.2 s;
+    #   the local-master worker daemon, _worker_daemon.py, removed that
+    #   cost, and the threshold has not been re-measured since);
     # * a store whose files all share one directory would serialize into a
     #   single task — JVM scan.
     scan = parquet_scan_info(enc) if columns is None else None

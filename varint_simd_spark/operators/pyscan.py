@@ -19,8 +19,9 @@ what is computed.
 Safety: the fast path engages ONLY when :func:`parquet_scan_info` can prove
 the input is a bare local-file parquet relation (analyzed plan is a single
 ``LogicalRelation`` over ``HadoopFsRelation``/``ParquetFileFormat`` with
-integer-typed partition columns); anything else — filters, limits, manifest
-gates, non-local files — falls back to the JVM scan unchanged.  Disable
+integer-typed partition columns, and an integer value for each in every
+path); anything else — filters, limits, manifest gates, non-local files,
+null partitions — falls back to the JVM scan unchanged.  Disable
 globally with ``VSS_PYSCAN=0``.
 
 Layout note for decoders: the colocated decode groups files per parent
@@ -53,7 +54,8 @@ def _enabled() -> bool:
 
 def parquet_scan_info(df) -> tuple[list[str], list[tuple[str, str]]] | None:
     """(local file paths sorted, [(partition col, spark type)]) when ``df``
-    is provably a bare parquet scan of local files; else None."""
+    is provably a bare parquet scan of local files whose every path holds
+    an integer value for each partition column; else None."""
     if not _enabled():
         return None
     try:
@@ -80,6 +82,10 @@ def parquet_scan_info(df) -> tuple[list[str], list[tuple[str, str]]] | None:
             if p.scheme not in ("file", ""):
                 return None
             paths.append(unquote(p.path))
+            # parse every path's partition values now: a null partition
+            # (``__HIVE_DEFAULT_PARTITION__``) must fall back to the JVM
+            # scan here, not fail in the task
+            _part_values(paths[-1], part)
         return paths, part
     except Exception:
         return None
@@ -130,11 +136,13 @@ def _group_by_size(
     paths: list[str], max_partition_bytes: int, parallelism: int
 ) -> list[list]:
     """Contiguous balanced packing into ``k * parallelism`` groups, with
-    ``k = ceil(total / (parallelism * max_partition_bytes))``: every
-    python task carries a fixed start-up cost and the stages are
-    CPU-bound, so the groups are sized to fill the cores in whole waves
-    (no one-task tail wave) while no group exceeds about
-    ``max_partition_bytes``.  Sizes count ``_OPEN_COST`` per file.
+    ``k = ceil(total / (parallelism * max_partition_bytes))``: the
+    stages are CPU-bound, so the groups are sized to fill the cores in
+    whole waves (no one-task tail wave) while no group exceeds about
+    ``max_partition_bytes``.  The packing was tuned while each Python
+    task also paid about 0.2 s re-reading zip directories, a cost the
+    worker daemon (``varint_simd_spark._worker_daemon``) has since
+    removed on local masters.  Sizes count ``_OPEN_COST`` per file.
 
     A file larger than 1.5x the group size (at least ``_OPEN_COST``, as in
     Spark's ``maxSplitBytes``) is split at ROW-GROUP granularity

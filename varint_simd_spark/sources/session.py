@@ -7,8 +7,20 @@ scale (SURVEY.md §3.4 stage 3) for the JVM shuffles.  The Python encode
 shuffles of ``encode_table`` pin their partition count instead
 (``repartition(n)``, ``n = min(n_chunks, defaultParallelism)``, which AQE
 does not coalesce): AQE sizes partitions by bytes, while those stages are
-CPU-bound and every Python task pays a fixed start-up cost, so they run
-one wave of core-sized tasks.
+CPU-bound, so they run one wave of core-sized tasks.
+
+On local masters (``local``, ``local[...]``, ``local-cluster[...]``) the
+Python workers fork from ``varint_simd_spark._worker_daemon``
+(``spark.python.daemon.module``) instead of ``pyspark.daemon``: the stock
+worker re-reads the central directory of pyspark.zip, the py4j zip and
+the spark-core jar before every task on CPython 3.11, about 0.2 s per
+task (see that module).  There the daemon starts with the driver's
+working directory and ``PYTHONPATH``, so it imports the package whenever
+the engine's UDFs can, since their closures import ``varint_simd_spark``
+by reference.  Other masters keep the stock daemon: with the package
+shipped through ``spark.submit.pyFiles``, the daemon would start before
+the package is on its path.  An ``extra_conf`` entry for
+``spark.python.daemon.module`` overrides the choice.
 """
 
 from __future__ import annotations
@@ -46,6 +58,8 @@ def get_spark(
     # shuffle volumes of a real cluster); override with SPARK_LOCAL_DIRS
     if os.path.isdir("/dev/shm") and "SPARK_LOCAL_DIRS" not in os.environ:
         b = b.config("spark.local.dir", "/dev/shm/vss-spark-local")
+    if master.startswith("local"):
+        b = b.config("spark.python.daemon.module", "varint_simd_spark._worker_daemon")
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
     return b.getOrCreate()
