@@ -337,3 +337,189 @@ def test_fsst_emit_offset_dtype_guard():
     offs = np.array([0, 10], dtype=np.int64)
     out, lens = codec._emit(blob, offs, code, small)
     assert lens.dtype == np.int64 and int(lens[0]) == 20  # all escapes: 2B each
+
+
+# --------------------------------------------------------------------------
+# FSST encode: pinned output bytes
+
+_WORDS = (
+    b"the of and to in is for on that with as by this from at be are was "
+    b"or an it not have which can will more all about new home page search "
+    b"news privacy contact terms data results information services products"
+).split()
+
+
+def _fsst_corpus():
+    """Seeded FSST inputs as a list of columns (lists of bytes).
+
+    Column 0: web-like html/text pages, larger than ``FsstStr.TILE_BYTES``
+    (so the encode walks several tiles).  Column 1: edge values — empties,
+    0xFF runs, lengths ``WINDOW`` +-1, random bytes and one value longer
+    than the default match block (``1 << 16`` bytes).  Column 2: 3000
+    short values of 0-300 bytes."""
+    from varint_simd_spark.codecs.strings import FsstStr
+
+    w = FsstStr.WINDOW
+    r = np.random.default_rng(20240611)
+    words = np.array(_WORDS, dtype=object)
+
+    def text(n_words):
+        return b" ".join(words[r.integers(0, len(words), n_words)])
+
+    pages = []
+    total = 0
+    while total <= FsstStr.TILE_BYTES + (1 << 16):
+        host = b"host%d.example.%s" % (r.integers(0, 40), [b"com", b"org", b"net"][r.integers(0, 3)])
+        body = b"".join(
+            b"<p class=\"c%d\">%s</p>\n" % (r.integers(0, 5), text(int(r.integers(3, 40))))
+            for _ in range(int(r.integers(1, 6)))
+        )
+        page = (
+            b"<!DOCTYPE html><html><head><title>" + text(4) + b"</title>"
+            b"<link href=\"https://" + host + b"/style.css\"></head><body>\n"
+            + body + b"<a href=\"https://" + host + b"/p/%d\">more</a></body></html>" % r.integers(0, 10**6)
+        )
+        pages.append(page)
+        total += len(page)
+    edges = [
+        b"", b"", b"\xff", b"\xff" * (w - 1), b"\xff" * w, b"\xff" * (w + 1),
+        text(60)[: w - 1], text(60)[:w], text(60)[: w + 1],
+        r.integers(0, 256, 3 * w + 7, dtype=np.uint8).tobytes(), b"",
+        b"".join(b"%s <b>%d</b> " % (text(5), i) for i in range(6000))[: (1 << 16) + 4099],
+        b"x\xff" * (w // 2 + 3), text(200), b"",
+    ]
+    tokens = [text(int(r.integers(0, 12)))[: int(r.integers(0, 300))] for _ in range(3000)]
+    return [pages, edges, tokens]
+
+
+def test_fsst_payload_digest_pinned():
+    """The FSST encoder's output bytes are pinned: any kernel rewrite must
+    keep payloads and params byte-identical on this seeded corpus."""
+    import hashlib
+
+    from varint_simd_spark.codecs.strings import FsstStr, bo_to_list, list_to_bo
+
+    cols = _fsst_corpus()
+    assert sum(map(len, cols[0])) > FsstStr.TILE_BYTES
+    impl = FsstStr()
+    h = hashlib.sha256()
+    for vals in cols:
+        payload, params = impl.encode_bo(list_to_bo(vals))
+        assert bo_to_list(impl.decode_bo(payload, params, len(vals))) == vals
+        h.update(payload)
+        h.update(repr(sorted(params.items())).encode())
+    assert h.hexdigest() == "5a40493207b7969e910010b7ab333e67eda67ee462d51e6323c122ad4071ea9c"
+
+
+def test_fsst_payload_independent_of_block_and_tile_size(monkeypatch):
+    """Match blocks and tiles are a memory layout only: payloads are the
+    same for any MATCH_BLOCK/TILE_BYTES, including blocks small enough that
+    many values (and 8-byte windows) straddle a block edge."""
+    from varint_simd_spark.codecs.strings import FsstStr, list_to_bo
+
+    cols = _fsst_corpus()
+    # values of 1000-1100 bytes straddle 1 KiB block edges at every offset
+    r = np.random.default_rng(7)
+    cols.append([b"".join(cols[0][i : i + 3])[: int(r.integers(1000, 1100))] for i in range(200)])
+    assert sum(map(len, cols[-1])) > 2 * (1 << 12)
+    ref = [FsstStr().encode_bo(list_to_bo(v)) for v in cols]
+    # 1000: block starts that are not multiples of 256
+    for block in (1000, 1 << 10, FsstStr.MATCH_BLOCK, 1 << 24):
+        for tile in (1 << 12, FsstStr.TILE_BYTES):
+            monkeypatch.setattr(FsstStr, "MATCH_BLOCK", block)
+            monkeypatch.setattr(FsstStr, "TILE_BYTES", tile)
+            got = [FsstStr().encode_bo(list_to_bo(v)) for v in cols]
+            assert got == ref, (block, tile)
+
+
+def _symbol_table_loop(cand_vals, cand_lens, gains):
+    """Reference build: the sequential greedy loop over candidates in
+    descending gain order -> (n, vals, lens, hmeta, two, one)."""
+    hbits = 12
+    hlen = np.full(1 << hbits, 255, dtype=np.uint8)
+    hcode = np.zeros(1 << hbits, dtype=np.uint8)
+    two = np.full(65536, 0xFF, dtype=np.uint8)
+    one = np.full(256, 0xFF, dtype=np.uint8)
+    lens = np.ones(256, dtype=np.uint8)
+    vals = np.zeros(256, dtype=np.uint64)
+    ncodes = 0
+    for i in np.argsort(gains)[::-1][:4096]:
+        L, v = int(cand_lens[i]), int(cand_vals[i])
+        if L >= 3:
+            h = ((v & 0xFFFFFF) * 2654435761 & 0xFFFFFFFF) >> (32 - hbits)
+            if hlen[h] != 255:
+                continue
+            hlen[h] = L
+            hcode[h] = ncodes
+        elif L == 2:
+            two[v] = ncodes
+        else:
+            one[v] = ncodes
+        vals[ncodes] = v
+        lens[ncodes] = L
+        ncodes += 1
+        if ncodes == 255:
+            break
+    hmeta = hlen.astype(np.uint16) | (hcode.astype(np.uint16) << 8)
+    return ncodes, vals, lens, hmeta, two, one
+
+
+def _candidates(r, lens, vals=None):
+    """Distinct (len, val) candidates in (len, val) order with random
+    gains, the shape training hands to _SymbolTable."""
+    from varint_simd_spark.codecs.strings import _LEN_MASK
+
+    lens = np.asarray(lens, dtype=np.uint8)
+    if vals is None:
+        vals = r.integers(0, 2**64, lens.size, dtype=np.uint64)
+    vals = np.asarray(vals, dtype=np.uint64) & _LEN_MASK[lens]
+    key = np.unique(np.stack([lens.astype(np.uint64), vals], axis=1), axis=0)
+    cl, cv = key[:, 0].astype(np.uint8), key[:, 1]
+    return cv, cl, r.integers(1, 50, cl.size) * cl
+
+
+@pytest.mark.parametrize("case", ["many", "one_slot", "over_255", "ties", "empty"])
+def test_symbol_table_matches_reference_loop(case):
+    """The vectorized _SymbolTable build accepts exactly the symbols, in
+    exactly the code order, of the sequential greedy loop.  The table
+    keeps the 2-byte LUT only inside the combined 2-/1-byte LUT, so the
+    loop's ``two`` and ``one`` are compared through it."""
+    from varint_simd_spark.codecs.strings import _SymbolTable
+
+    r = np.random.default_rng(11)
+    if case == "many":  # more than 4096 candidates of every length
+        cv, cl, g = _candidates(r, r.integers(1, 9, 20000))
+    elif case == "one_slot":
+        # >4096 3-8-byte candidates in 4 hash slots outrank every 1-byte
+        # one, so only 4 symbols come from the top 4096
+        k = 6000
+        prefix = r.integers(0, 4, k, dtype=np.uint64) * np.uint64(0x010203)
+        suffix = r.integers(0, 2**40, k, dtype=np.uint64) << np.uint64(24)
+        cv, cl, g = _candidates(
+            r,
+            np.concatenate([r.integers(3, 9, k), np.ones(200, np.uint8)]),
+            np.concatenate([prefix | suffix, r.integers(0, 256, 200, dtype=np.uint64)]),
+        )
+        g = np.where(cl >= 3, g + 1000, g)
+    elif case == "over_255":  # more than 255 acceptable symbols
+        cv, cl, g = _candidates(r, r.integers(1, 3, 2000))
+    elif case == "ties":  # few distinct gains: argsort's tie order decides
+        cv, cl, _ = _candidates(r, r.integers(1, 9, 6000))
+        g = 7 + (cl >= 5).astype(np.int64)
+    else:
+        cv, cl, g = np.zeros(0, np.uint64), np.zeros(0, np.uint8), np.zeros(0, np.int64)
+    n, vals, lens, hmeta, two, one = _symbol_table_loop(cv, cl, g)
+    assert n == {"one_slot": 4, "over_255": 255, "empty": 0}.get(case, n)
+    t = _SymbolTable(cv, cl, g)
+    assert t.n == n
+    np.testing.assert_array_equal(t.vals, vals)
+    np.testing.assert_array_equal(t.lens, lens)
+    np.testing.assert_array_equal(t.hmeta, hmeta)
+    np.testing.assert_array_equal(t.one, one)
+    key = np.arange(65536)
+    lut21 = np.where(
+        two != 0xFF,
+        (two.astype(np.uint16) << 8) | 2,
+        (one[key & 0xFF].astype(np.uint16) << 8) | 1,
+    )
+    np.testing.assert_array_equal(t.lut21, lut21)

@@ -169,6 +169,18 @@ def test_fragment_merge_equivalence(spark, tmp_path):
     assert _rows(decode_table(enc_fm).drop("__chunk")) == dec_jvm
 
 
+def test_frag_ids_unique_across_tasks():
+    """Fragment tags stay unique and (task, ordinal)-ordered when one task
+    emits 2**20 or more fragments (the old ``pid << 20 | ordinal`` tag
+    overlapped the next task's ids there)."""
+    from varint_simd_spark.operators.encode import _frag_id
+
+    n_chunks = (1 << 20) + 1
+    ordinal = np.arange(n_chunks, dtype=np.int64)
+    ids = np.concatenate([_frag_id(pid, ordinal, n_chunks) for pid in range(3)])
+    assert np.all(np.diff(ids) > 0)
+
+
 def test_encode_table_remap_preserves_chunk_ids(spark):
     from varint_simd_spark.operators import encode_table
 

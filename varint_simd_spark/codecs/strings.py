@@ -221,151 +221,110 @@ class RleStr:
 
 
 _HBITS = 12  # 4096 hash slots for the len>=3 symbol map (255 symbols max)
-_HMUL32 = np.uint32(2654435761)  # Knuth multiplicative hash
-# byte-length -> low-bits mask for an LE-packed uint64 symbol value; padded
-# to 256 entries so the empty-slot length sentinel (255) indexes safely
-_LEN_MASK = np.zeros(256, dtype=np.uint64)
-_LEN_MASK[1:8] = [(1 << (8 * L)) - 1 for L in range(1, 8)]
-_LEN_MASK[8] = 0xFFFFFFFFFFFFFFFF
+_HMUL = np.uint64(2654435761)  # Knuth multiplicative hash (uint32 constant)
+# byte-length -> low-bits mask for an LE-packed uint64 symbol value
+_LEN_MASK = np.array([(1 << (8 * L)) - 1 for L in range(9)], dtype=np.uint64)
 
 
 def _hash3(prefix3: np.ndarray) -> np.ndarray:
-    """Hash the first-3-bytes prefix into a table slot index (uint32
-    wrap-around multiply, then top bits)."""
-    return (prefix3.astype(np.uint32) * _HMUL32) >> np.uint32(32 - _HBITS)
-
-
-def _words8(blob: np.ndarray) -> np.ndarray:
-    """Little-endian uint64 sliding window: w[i] = blob[i:i+8] zero-padded.
-
-    One unaligned strided copy instead of 8 shift-OR passes (the box is
-    little-endian x86; the wire format stores symbol bytes, not words, so
-    this is an in-memory detail only)."""
-    n = blob.size
-    pad = np.zeros(-(-(n + 8) // 8) * 8, dtype=np.uint8)
-    pad[:n] = blob
-    return np.lib.stride_tricks.as_strided(
-        pad.view(np.uint64), shape=(n,), strides=(1,)
-    ).copy()
+    """Hash the first-3-bytes prefix (uint64, overwritten) into a table
+    slot index (an intp view of it): the top _HBITS bits of the uint32
+    wrap-around product ``prefix3 * _HMUL``.  The product fits in 56 bits,
+    so those are bits 20-31 of the uint64 product — no cast needed."""
+    prefix3 *= _HMUL
+    prefix3 >>= np.uint64(32 - _HBITS)
+    prefix3 &= np.uint64((1 << _HBITS) - 1)
+    return prefix3.view(np.intp)
 
 
 class _SymbolTable:
     """Up to 255 symbols of 1-8 bytes (code 255 = escape), with the three
     matching structures real FSST uses: a one-slot hash map keyed on the
     first 3 bytes for len>=3 symbols (build-time collision resolution by
-    gain), a 64K LUT for 2-byte symbols, a 256 LUT for 1-byte symbols."""
+    gain), a 64K LUT for 2-byte symbols, a 256 LUT for 1-byte symbols.
+    The last two are stored combined, as one 64K LUT keyed on the 2-byte
+    prefix (``lut21``), next to the 1-byte LUT (``one``)."""
 
-    __slots__ = ("n", "lens", "vals", "hval", "hlen", "hcode", "hmeta", "hvs", "two", "one")
+    __slots__ = ("n", "lens", "vals", "hmeta", "hshift", "hvs", "one", "lut21")
 
     def __init__(self, cand_vals: np.ndarray, cand_lens: np.ndarray, gains: np.ndarray):
-        # empty slots: hlen=255 can never satisfy avail>=hlen (avail is
-        # capped by WINDOW < 255), so no separate occupancy test is needed
-        # at match time
-        self.hval = np.zeros(1 << _HBITS, dtype=np.uint64)
-        self.hlen = np.full(1 << _HBITS, 255, dtype=np.uint8)
-        self.hcode = np.zeros(1 << _HBITS, dtype=np.uint8)
-        self.two = np.full(65536, 0xFF, dtype=np.uint8)
-        self.one = np.full(256, 0xFF, dtype=np.uint8)
-        self.lens = np.ones(256, dtype=np.uint8)
-        self.vals = np.zeros(256, dtype=np.uint64)
+        # greedy acceptance in descending gain over the top 4096
+        # candidates: a 1-2-byte symbol is always accepted, a 3-8-byte one
+        # only if no higher-gain 3-8-byte candidate took its hash slot; the
+        # first 255 accepted get codes 0..254 in that order
         order = np.argsort(gains)[::-1][:4096]
-        ncodes = 0
-        for i in order:
-            L, v = int(cand_lens[i]), int(cand_vals[i])
-            if L >= 3:
-                h = ((v & 0xFFFFFF) * 2654435761 & 0xFFFFFFFF) >> (32 - _HBITS)
-                if self.hlen[h] != 255:  # slot taken by a higher-gain symbol
-                    continue
-                self.hval[h] = v
-                self.hlen[h] = L
-                self.hcode[h] = ncodes
-            elif L == 2:
-                self.two[v] = ncodes
-            else:
-                self.one[v] = ncodes
-            self.vals[ncodes] = v
-            self.lens[ncodes] = L
-            ncodes += 1
-            if ncodes == 255:
-                break
-        self.n = ncodes
-        # packed (len | code<<8) per hash slot: one uint16 gather at match
-        # time replaces separate hlen/hcode gathers
-        self.hmeta = (self.hlen.astype(np.uint16) | (self.hcode.astype(np.uint16) << 8))
-        # pre-shifted slot values: (w << 8*(8-len)) == hvs replaces the
-        # mask-gather-and-compare ((w & LEN_MASK[len]) == hval) — one fewer
-        # LUT gather and one fewer uint64 pass per position.  Empty slots
-        # shift 0 and hold 0; they are rejected by the avail>=len test.
-        sh8 = (np.uint8(8) - np.minimum(self.hlen, np.uint8(8))).astype(np.uint64) * np.uint64(8)
-        self.hvs = self.hval << sh8
+        lens, vals = cand_lens[order], cand_vals[order]
+        long_ = np.flatnonzero(lens >= 3)
+        # uint16 slots: np.unique's stable argsort is a radix sort on them
+        slot = _hash3(vals[long_] & np.uint64(0xFFFFFF)).astype(np.uint16)
+        keep = lens < 3
+        keep[long_[np.unique(slot, return_index=True)[1]]] = True
+        acc = np.flatnonzero(keep)[:255]
+        lens, vals = lens[acc], vals[acc]
+        self.n = n = acc.size
+        codes = np.arange(n, dtype=np.uint8)
+        self.lens = np.ones(256, dtype=np.uint8)
+        self.lens[:n] = lens
+        self.vals = np.zeros(256, dtype=np.uint64)
+        self.vals[:n] = vals
+        is1, is2, isl = lens == 1, lens == 2, lens >= 3
+        self.one = np.full(256, 0xFF, dtype=np.uint8)
+        self.one[vals[is1]] = codes[is1]
+        # the 2- and 1-byte lookups folded into one 64K LUT keyed on the
+        # 2-byte prefix: (len | code<<8) of the 2-byte symbol if there is
+        # one, else of the 1-byte symbol (or escape) for the first byte
+        self.lut21 = np.tile(self.one.astype(np.uint16) << np.uint16(8) | np.uint16(1), 256)
+        self.lut21[vals[is2]] = codes[is2].astype(np.uint16) << np.uint16(8) | np.uint16(2)
+        hslot = _hash3(vals[isl] & np.uint64(0xFFFFFF))
+        # packed (len | code<<8) per hash slot, one uint16 gather at match
+        # time.  Empty slots hold len 255, which no avail (capped by
+        # WINDOW < 255) reaches, so no separate occupancy test is needed.
+        self.hmeta = np.full(1 << _HBITS, 255, dtype=np.uint16)
+        self.hmeta[hslot] = lens[isl] | (codes[isl].astype(np.uint16) << np.uint16(8))
+        # per-slot left shift that drops a word's bytes past the symbol,
+        # and the slot's symbol pre-shifted to match: (w << hshift) == hvs
+        # replaces a mask gather and an AND per position.  Empty slots
+        # shift 0 and hold 0; the avail test rejects them.
+        self.hshift = np.zeros(1 << _HBITS, dtype=np.uint64)
+        self.hshift[hslot] = (8 - lens[isl].astype(np.uint64)) * np.uint64(8)
+        self.hvs = np.zeros(1 << _HBITS, dtype=np.uint64)
+        self.hvs[hslot] = vals[isl] << self.hshift[hslot]
 
-    def match_at(self, blob: np.ndarray, words: np.ndarray, pos: np.ndarray, avail: np.ndarray):
-        """Longest match at the given positions -> (code uint8 (0xFF=escape),
-        mlen uint8), arrays aligned with ``pos``.
+    def match_all(self, words: np.ndarray, avail: np.ndarray) -> np.ndarray:
+        """Longest match at every position of a block -> packed
+        ``mlen | code << 8`` (uint16; code 0xFF = escape, mlen 1).
 
-        Mirrors the reference FSST matcher: one hash probe for 3-8 byte
-        symbols (at most one candidate per position), then the 2-byte LUT,
-        then the 1-byte LUT, else escape."""
-        w = words[pos]
-        h = _hash3(w & np.uint64(0xFFFFFF))
-        slen = self.hlen[h]
-        hit = avail >= slen  # empty slots have hlen=255: always false
-        hit &= (w & _LEN_MASK[slen]) == self.hval[h]
-        code = np.where(hit, self.hcode[h], np.uint8(0xFF))
-        mlen = np.where(hit, slen, np.uint8(1))
-        rem = np.flatnonzero(~hit & (avail >= 2))
-        c2 = self.two[(w[rem] & np.uint64(0xFFFF)).astype(np.int32)]
-        got2 = c2 != 0xFF
-        i2 = rem[got2]
-        code[i2] = c2[got2]
-        mlen[i2] = 2
-        rem1 = np.flatnonzero(code == 0xFF)
-        c1 = self.one[blob[pos[rem1]]]
-        got1 = c1 != 0xFF
-        code[rem1[got1]] = c1[got1]
-        return code, mlen
+        ``words[i]`` is the little-endian 8-byte window starting at block
+        position i (uint64, contiguous; overwritten here), ``avail[i]`` the
+        bytes left in i's parse window (uint8, 1..WINDOW).  One hash probe
+        on the first 3 bytes finds the only 3-8-byte symbol that can match:
+        the slot's packed length/code, its per-slot shift and its
+        pre-shifted value.  One take from the combined 2-/1-byte LUT gives
+        the fallback, and a hash hit wins.  The LUT assumes a second byte,
+        so the sparse avail == 1 positions (window ends) are redone from
+        the 1-byte LUT alone.
 
-    def match_all(self, blob: np.ndarray, words: np.ndarray, avail: np.ndarray):
-        """Longest match at EVERY byte position -> (code uint8 (0xFF=escape),
-        mlen uint8), full-length arrays.
-
-        Same cascade as :meth:`match_at` but with no position gathers: every
-        operand is a contiguous pass over the whole blob, and the three
-        matching structures (4K hash slots / 64K two-byte LUT / 256 one-byte
-        LUT) are L1/L2-resident, so the unconditional gathers stay cheap.
-        The encoder's greedy walk then just reads the precomputed (code,
-        mlen) at the ~1/avg_symbol_len positions it actually visits — the
-        redundant match work at skipped positions is outweighed by dropping
-        the per-round numpy-call overhead and subset gathers of the lazy
-        variant (measured ~2.5x encode throughput on the web corpus).
-
-        Dtype discipline matters here: selection is branchless uint8
-        arithmetic blending ``x ^= (x ^ y) & mask`` (np.where and
-        np.copyto(where=) were both measured ~10x slower — promotion
-        temporaries / scalar masked stores); every LUT access is
-        ``np.take(..., mode='clip')`` on a shared intp index (measured 3.6x
-        faster than fancy indexing, which re-casts + bounds-checks per
-        call); the hash prefix and the 2-byte LUT key are strided uint32/
-        uint16 views of the LE word array (no widening cast temps)."""
-        # low 3 bytes of each LE word via the uint32 view (one 4B-read pass)
-        h = _hash3(words.view(np.uint32)[::2] & np.uint32(0xFFFFFF))
-        hi = h.astype(np.intp)  # one cast, shared by the slot gathers
+        Every operand is a contiguous pass over the block and the tables
+        (4K slots, 64K LUT) stay cache-resident, so the unconditional
+        gathers are cheap; the caller sizes blocks so the per-position
+        temporaries stay in L2.  The hash and the LUT key are computed in
+        uint64, so they index the tables without a cast; selection is
+        branchless uint16 blending ``x ^= (x ^ y) & mask`` (np.where
+        measured ~10x slower); every LUT access is ``np.take(...,
+        mode='clip')`` (3.6x faster than fancy indexing)."""
+        key = words & np.uint64(0xFFFF)
+        cm = np.take(self.lut21, key.view(np.intp), mode="clip")
+        end = np.flatnonzero(avail == 1)
+        if end.size:
+            first = np.take(self.one, words.view(np.uint8)[::8][end])
+            cm[end] = first.astype(np.uint16) << np.uint16(8) | np.uint16(1)
+        hi = _hash3(np.bitwise_and(words, np.uint64(0xFFFFFF), out=key))
         meta = np.take(self.hmeta, hi, mode="clip")
-        slen = (meta & np.uint16(0xFF)).astype(np.uint8)
-        hit = avail >= slen  # empty slots: slen=255 > any avail
-        sh = (np.uint8(8) - np.minimum(slen, np.uint8(8))) << np.uint8(3)
-        hit &= np.left_shift(words, sh) == np.take(self.hvs, hi, mode="clip")
-        # low 16 bits of each LE uint64 word, viewed in place
-        c2 = np.take(self.two, words.view(np.uint16)[::4], mode="clip")
-        hit2 = (avail >= np.uint8(2)) & (c2 != np.uint8(0xFF))
-        code = np.take(self.one, blob)  # 0xFF where uncovered = escape
-        m2 = np.negative(hit2.view(np.uint8))  # 0xFF where hit2
-        mlen = hit2.view(np.uint8) + np.uint8(1)  # 2 where hit2, else 1
-        code ^= (code ^ c2) & m2
-        m3 = np.negative(hit.view(np.uint8))  # 0xFF where hash hit (wins)
-        code ^= (code ^ (meta >> np.uint16(8)).astype(np.uint8)) & m3
-        mlen ^= (mlen ^ slen) & m3
-        return code, mlen
+        words <<= np.take(self.hshift, hi, mode="clip")
+        hit = words == np.take(self.hvs, hi, mode="clip")
+        hit &= avail >= meta.view(np.uint8)[::2]
+        cm ^= (cm ^ meta) & np.negative(hit.view(np.uint8), dtype=np.uint16)
+        return cm
 
 
 class FsstStr:
@@ -378,7 +337,16 @@ class FsstStr:
     or value boundary, so all windows advance in parallel, <=WINDOW rounds
     over a geometrically shrinking live set).
     Decode is one table-driven scatter.  Compressed per-value lengths keep
-    random access.  Replaces the round-2 digram-stacking approximation."""
+    random access.  Replaces the round-2 digram-stacking approximation.
+
+    Encode works at two sizes.  A tile (``TILE_BYTES``, whole values)
+    bounds the memory of the walk and the emit and the number of walk
+    rounds per numpy call.  Inside a tile, the match pass runs over blocks
+    of ``MATCH_BLOCK`` bytes: it makes ~20 passes over 1-8-byte-per-position
+    temporaries, and at 64 KB per block they stay in a 2 MB L2.  On a
+    Sapphire Rapids-class Xeon core (2 MB L2) the match pass over a 512 KB
+    web-html tile costs 21 ns/byte in one piece and 9.6 ns/byte in 64 KB
+    blocks."""
 
     name = "fsst"
 
@@ -398,14 +366,20 @@ class FsstStr:
     # decodes identically; 128 measured best on the synthetic web corpus
     # (ratio 0.28 vs 0.36 at window 16; larger also = fewer truncated
     # matches = fewer tokens = faster; 240 measured best with the match-all
-    # parse).  Must stay < 255: the window bound doubles as the uint8 avail
-    # cap that match_at compares against the empty-slot length sentinel.
+    # parse).  Must stay < 255: match_all keeps avail in uint8 and relies
+    # on the empty-slot length sentinel (255) exceeding every avail.
     WINDOW = 240
-    # cache blocking: ~L2-sized tiles keep multi-core scaling off the
-    # shared memory bus (same sizing rationale as round 2's digram codec);
-    # 2^19 measured best for encode with the match-all parse (fewer
-    # per-tile fixed costs), within noise for decode
+    # Tile: whole values, bounds walk/emit memory and rounds.  ~L2-sized
+    # tiles keep multi-core scaling off the shared memory bus (same sizing
+    # rationale as round 2's digram codec); 2^19 measured best for encode
+    # with the match-all parse (fewer per-tile fixed costs), within noise
+    # for decode.
     TILE_BYTES = 1 << 19
+    # Match block: the slice of a tile one match_all call covers.  Its
+    # uint64 temporaries (8 B/position, three live at once) fit a 2 MB L2
+    # at 2^16.  Single-core FSST encode of the web corpus: 2^14-2^17
+    # within noise of each other, one block per tile (2^19) 1.4x slower.
+    MATCH_BLOCK = 1 << 16
 
     # ---- vectorized longest-match compression ---------------------------
 
@@ -424,23 +398,37 @@ class FsstStr:
         wend = np.minimum(wstart + self.WINDOW, np.repeat(offs[1:][nz], nwz))
         return wstart, wend
 
-    def _parse_match(self, blob, words, wstart, wend, table: _SymbolTable, n: int):
+    def _parse_match(self, blob, wstart, wend, table: _SymbolTable, n: int):
         """Lockstep greedy parse: the longest match is precomputed at EVERY
-        byte position in one contiguous vectorized pass (match_all), then
-        every window walks its own chain of matches simultaneously — the
-        walk itself is 4 cheap ops per round over a compacted live set,
+        byte position (match_all, one MATCH_BLOCK at a time), then every
+        window walks its own chain of matches simultaneously — the walk
+        itself is 4 cheap ops per round over a compacted live set,
         collecting the visited positions per round (one final sort beats a
         bool scatter + flatnonzero).  -> (pos int[*] ascending token starts,
         code uint8[n], mlen uint8[n]), the latter two read at ``pos`` only."""
         if n == 0 or wstart.size == 0:
             return np.empty(0, np.int64), np.empty(0, np.uint8), np.empty(0, np.uint8)
-        # int32 cursors halve walk/avail bandwidth (a tile is always < 2 GiB)
+        # int32 cursors halve walk bandwidth (a tile is always < 2 GiB)
         it = np.int32 if n < (1 << 31) else np.int64
         cur = wstart.astype(it)
         end = wend.astype(it)
-        # windows tile the values exactly, so repeat(wend, wlen) is per-byte
-        avail = (np.repeat(end, end - cur) - np.arange(n, dtype=it)).astype(np.uint8)
-        codearr, mlenarr = table.match_all(blob, words, avail)
+        # avail = window end - position, computed mod 256 (exact: it is
+        # 1..WINDOW) from each byte's window end (windows tile the values
+        # exactly) and a ramp of positions mod 256
+        end8 = np.repeat(end.astype(np.uint8), end - cur)
+        ramp = np.arange(min(n, self.MATCH_BLOCK) + 256).astype(np.uint8)
+        # one zero-padded copy of the tile; each block's 8-byte windows are
+        # a strided little-endian uint64 view of it (an in-memory detail:
+        # the wire format stores symbol bytes, not words)
+        pad = np.zeros(-(-(n + 8) // 8) * 8, dtype=np.uint8)
+        pad[:n] = blob
+        win = np.lib.stride_tricks.as_strided(pad.view(np.uint64), shape=(n,), strides=(1,))
+        cm = np.empty(n, dtype=np.uint16)
+        for a in range(0, n, self.MATCH_BLOCK):
+            b = min(a + self.MATCH_BLOCK, n)
+            avail = end8[a:b] - ramp[a & 255 : (a & 255) + b - a]
+            cm[a:b] = table.match_all(win[a:b].copy(), avail)
+        codearr, mlenarr = cm.view(np.uint8)[1::2], cm.view(np.uint8)[::2]
         rounds = []
         while cur.size:
             rounds.append(cur)
@@ -453,7 +441,7 @@ class FsstStr:
 
     def _emit(self, blob, offs, code, pos) -> BO:
         c = code[pos]
-        esc = c == 0xFF
+        esc = c == _ESCAPE
         # 1 output byte per token, 2 for escapes.  int32 offsets for any
         # normal tile; a single value can exceed the tile budget (tiles
         # never split values), so guard the >=1 GiB-value case back to
@@ -463,11 +451,11 @@ class FsstStr:
         ocum[0] = 0
         np.cumsum(esc.view(np.uint8) + np.uint8(1), dtype=ot, out=ocum[1:])
         out = np.empty(int(ocum[-1]), dtype=np.uint8)
-        st = ocum[:-1]
-        out[st[~esc]] = c[~esc]
-        e0 = st[esc]
-        out[e0] = _ESCAPE
-        out[e0 + 1] = blob[pos[esc]]
+        # every token's code (an escape's code is the escape byte itself),
+        # then each escape's literal right after it
+        out[ocum[:-1]] = c
+        e = np.flatnonzero(esc)
+        out[ocum[e] + 1] = blob[pos[e]]
         k = np.searchsorted(pos, offs)
         comp_lens = ocum[k[1:]] - ocum[k[:-1]]
         return out, comp_lens.astype(np.int64)
@@ -476,7 +464,7 @@ class FsstStr:
         if blob.size == 0:
             return np.zeros(0, np.uint8), np.zeros(offs.size - 1, np.int64)
         wstart, wend = self._window_bounds(offs)
-        pos, codearr, _ = self._parse_match(blob, _words8(blob), wstart, wend, table, blob.size)
+        pos, codearr, _ = self._parse_match(blob, wstart, wend, table, blob.size)
         return self._emit(blob, offs, codearr, pos)
 
     # ---- training (iterative gain-maximization over a sample) -----------
@@ -491,43 +479,45 @@ class FsstStr:
         table = _SymbolTable(*empty)
         if sblob.size == 0:
             return table
-        words = _words8(sblob)
         vid = np.repeat(np.arange(soffs.size - 1), np.diff(soffs))
         for it in range(self.TRAIN_ITERS):
             # growing sample: whole values covering the first TRAIN_INIT<<it
-            # bytes (prefix slices stay contiguous, so the strided views in
-            # match_all remain valid)
+            # bytes
             lim = min(sblob.size, self.TRAIN_INIT << it)
             e = min(max(1, int(np.searchsorted(soffs, lim))), soffs.size - 1)
             po = soffs[: e + 1]
             ni = int(po[-1])
-            wstart, wend = self._window_bounds(po)
-            pos, codearr, mlenarr = self._parse_match(
-                sblob[:ni], words[:ni], wstart, wend, table, ni
-            )
-            c = codearr[pos]
-            esc = c == 0xFF
-            tlen = np.where(esc, np.uint8(1), mlenarr[pos])
-            tval = np.where(esc, sblob[pos].astype(np.uint64), table.vals[c])
+            if table.n == 0:
+                # nothing to match: every byte is an escape token
+                pos = np.arange(ni)
+                tlen = np.ones(ni, dtype=np.uint8)
+                tval = sblob[:ni].astype(np.uint64)
+            else:
+                wstart, wend = self._window_bounds(po)
+                pos, codearr, mlenarr = self._parse_match(sblob[:ni], wstart, wend, table, ni)
+                c = codearr[pos]
+                esc = c == _ESCAPE
+                tlen = np.where(esc, np.uint8(1), mlenarr[pos])
+                tval = np.where(esc, sblob[pos].astype(np.uint64), table.vals[c])
             # candidate pool: every emitted token + concatenations of
             # adjacent tokens within the same value, truncated to 8 bytes
-            same = vid[pos[1:]] == vid[pos[:-1]] if pos.size > 1 else np.zeros(0, bool)
-            l1, l2 = tlen[:-1][same], tlen[1:][same]
-            v1, v2 = tval[:-1][same], tval[1:][same]
-            ok = l1 < 8
-            nlen = np.minimum(l1[ok].astype(np.int64) + l2[ok], 8).astype(np.uint8)
-            nval = (v1[ok] | (v2[ok] << (np.uint64(8) * l1[ok].astype(np.uint64)))) & _LEN_MASK[nlen]
+            pv = vid[pos]
+            pair = np.flatnonzero((pv[1:] == pv[:-1]) & (tlen[:-1] < 8))
+            l1 = tlen[pair]
+            nlen = np.minimum(l1 + tlen[pair + 1], np.uint8(8))
+            nval = (tval[pair] | (tval[pair + 1] << (np.uint64(8) * l1))) & _LEN_MASK[nlen]
             cvals = np.concatenate([tval, nval])
             clens = np.concatenate([tlen, nlen])
-            order = np.lexsort((cvals, clens))
-            sv, sl = cvals[order], clens[order]
-            newgrp = np.empty(sv.size, dtype=bool)
-            newgrp[0] = True
-            newgrp[1:] = (sv[1:] != sv[:-1]) | (sl[1:] != sl[:-1])
-            starts = np.flatnonzero(newgrp)
-            counts = np.diff(np.concatenate([starts, [sv.size]]))
-            gains = counts.astype(np.int64) * sl[starts]
-            table = _SymbolTable(sv[starts], sl[starts], gains)
+            # distinct (len, val) in (len, val) order with their counts: one
+            # uint64 key len<<56 | val for 1-7 bytes, 8-byte symbols after
+            short = clens < 8
+            keys = (clens[short].astype(np.uint64) << np.uint64(56)) | cvals[short]
+            ks, kc = np.unique(keys, return_counts=True)
+            vs8, vc8 = np.unique(cvals[~short], return_counts=True)
+            sl = np.concatenate([(ks >> np.uint64(56)).astype(np.uint8), np.full(vs8.size, 8, np.uint8)])
+            sv = np.concatenate([ks & np.uint64((1 << 56) - 1), vs8])
+            gains = np.concatenate([kc, vc8]) * sl
+            table = _SymbolTable(sv, sl, gains)
         return table
 
     # ---- wire format -----------------------------------------------------

@@ -588,6 +588,13 @@ def _encode_fragment_rows(
     return pa.table(cols, schema=_ENC_ARROW)
 
 
+def _frag_id(pid, ordinal, n_chunks: int):
+    """A fragment's ``__frag`` tag: unique across the scan's tasks and
+    ordered by (task, ordinal), which the merge's sort relies on.  A task
+    emits at most one fragment per chunk, so ``ordinal < n_chunks``."""
+    return pid * n_chunks + ordinal
+
+
 def _encode_table_fragment_merge(
     df: DataFrame,
     scan,
@@ -655,7 +662,7 @@ def _encode_table_fragment_merge(
             )
             enc = enc.append_column(
                 "__frag",
-                pa.array(np.full(k, (pid << 20) | ordinal, np.int64)),
+                pa.array(np.full(k, _frag_id(pid, ordinal, n_chunks), np.int64)),
             )
             yield from enc.to_batches()
 
