@@ -25,6 +25,32 @@ def web_pages(spark):
     return df
 
 
+def _spark_lineage(spark, enc, expected_chunks=None):
+    """The manifest rows of a commit of ``enc`` as a Spark lineage job
+    computes them (sorted, without snapshot_id / committed_at)."""
+    lineage = enc.groupBy("chunk_id").agg(
+        F.sum("n_values").alias("n_values"),
+        F.sum("raw_bytes").alias("raw_bytes"),
+        F.sum("enc_bytes").alias("enc_bytes"),
+        F.count("*").alias("n_columns"),
+    )
+    if expected_chunks is not None:
+        planned = spark.createDataFrame([(int(c),) for c in expected_chunks], "chunk_id long")
+        lineage = planned.join(lineage, "chunk_id", "left").fillna(
+            0, subset=["n_values", "raw_bytes", "enc_bytes", "n_columns"]
+        )
+    return sorted(tuple(r) for r in lineage.collect())
+
+
+def _manifest_rows(store, snapshot_id):
+    cols = ["chunk_id", "n_values", "raw_bytes", "enc_bytes", "n_columns"]
+    m = store.manifest()
+    assert m.dtypes == [(c, "bigint") for c in cols] + [
+        ("snapshot_id", "string"), ("committed_at", "double")]
+    rows = m.filter(F.col("snapshot_id") == snapshot_id).select(*cols).collect()
+    return sorted(tuple(r) for r in rows)
+
+
 def test_salt_plan_detects_hot_hosts(web_pages):
     plan = plan_salts(web_pages, target_rows_per_chunk=200).toPandas()
     top = skew_report(web_pages).toPandas()
@@ -167,10 +193,12 @@ def test_commit_lineage_covers_only_this_run(web_pages, spark, tmp_path):
     snap1 = store.commit(enc1)
     m1 = store.manifest().toPandas()
     assert len(m1) == 4 and set(m1["snapshot_id"]) == {snap1}
+    assert _manifest_rows(store, snap1) == _spark_lineage(spark, enc1)
 
     # commit 2: re-encode ONLY chunk 2 (public commit(), no expected_chunks)
     enc2 = encode_table(web_pages, key="url", n_chunks=4).filter(F.col("chunk_id") == 2)
     snap2 = store.commit(enc2)
+    assert _manifest_rows(store, snap2) == _spark_lineage(spark, enc2)
     m2 = store.manifest().toPandas()
     # exactly ONE new row, attributed to snap2, for chunk 2 only — no
     # re-attribution of untouched chunks to the new snapshot
@@ -206,10 +234,14 @@ def test_empty_chunks_commit_liveness(spark, tmp_path):
 
     tiny = generate_web_pages(spark, 100, seed=42).limit(3)
     store = EncodedStore(spark, str(tmp_path / "store5"))
-    _, n1 = encode_resumable(store, tiny, key="url", n_chunks=8)
+    snap, n1 = encode_resumable(store, tiny, key="url", n_chunks=8)
     _, n2 = encode_resumable(store, tiny, key="url", n_chunks=8)
     assert n1 == 8 and n2 == 0
     assert decode_table(store.read_encoded()).count() == 3
+    # one row per planned chunk, zeros for the empty ones
+    rows = _manifest_rows(store, snap)
+    assert rows == _spark_lineage(spark, spark.read.parquet(store.enc_path), range(8))
+    assert len(rows) == 8 and sum(r[4] == 0 for r in rows) >= 5
 
 
 def test_corrupt_manifest_raises_not_empty(web_pages, spark, tmp_path):
@@ -221,6 +253,10 @@ def test_corrupt_manifest_raises_not_empty(web_pages, spark, tmp_path):
 
     encode_resumable(store, web_pages, key="url", n_chunks=2)
     assert store.committed_chunks().count() == 2
+    # a ``_`` leftover (a manifest record cut before its rename) is skipped
+    with open(f"{store.manifest_path}/_tmp-crashed.parquet", "wb") as f:
+        f.write(b"PAR1 truncated")
+    assert sorted(r["chunk_id"] for r in store.committed_chunks().collect()) == [0, 1]
 
     # corrupt every manifest parquet file in place
     import pathlib
@@ -314,3 +350,40 @@ def test_ingest_to_store_roundtrip(web_pages, spark, tmp_path):
     m = store.manifest().toPandas()
     n_chunks = store.read_encoded().select("chunk_id").distinct().count()
     assert len(m) == n_chunks and m["chunk_id"].is_unique
+    assert _manifest_rows(store, snap) == _spark_lineage(
+        spark, spark.read.parquet(store.enc_path))
+
+
+def _sql_status(spark):
+    """The SQL status store, once every posted event has reached it."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty(60_000)
+    return spark._jsparkSession.sharedState().statusStore()
+
+
+def test_commit_is_one_job_without_exchange_or_cache(web_pages, spark, tmp_path):
+    """A commit is one Spark job, the data write itself: no exchange, no
+    cached payload, nothing left cached; the lineage comes from the same
+    job and the manifest is written by the driver."""
+    from varint_simd_spark.operators.encode import encode_table_per_split
+
+    inp = str(tmp_path / "one_job_in")
+    web_pages.write.mode("overwrite").parquet(inp)
+    enc = encode_table_per_split(spark.read.parquet(inp), key="url",
+                                 target_chunk_bytes=1 << 20)
+    store = EncodedStore(spark, str(tmp_path / "one_job_store"))
+    sc = spark.sparkContext
+    since = int(_sql_status(spark).executionsCount())
+    n_cached = sc._jsc.getPersistentRDDs().size()
+    sc.setJobGroup("one_job_commit", "store commit")
+    try:
+        snap = store.commit(enc)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup("one_job_commit")) == 1
+    sql = _sql_status(spark)
+    execs = sql.executionsList(since, int(sql.executionsCount()) - since)
+    plans = [execs.apply(i).physicalPlanDescription() for i in range(execs.length())]
+    assert plans and not any("Exchange" in p or "InMemoryTableScan" in p for p in plans)
+    assert sc._jsc.getPersistentRDDs().size() == n_cached
+    assert _manifest_rows(store, snap) == _spark_lineage(
+        spark, spark.read.parquet(store.enc_path))

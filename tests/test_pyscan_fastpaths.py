@@ -362,3 +362,51 @@ def test_null_int_partition_falls_back_to_jvm_scan(spark, tmp_path):
         for r in decode_table_colocated(st).select("k", "part", "s").collect()
     )
     assert got == sorted(rows)
+
+
+def test_pyscan_null_fills_schema_evolved_files(spark, tmp_path):
+    """A requested column that one input file lacks reads as typed nulls on
+    the python-side scan, as on Spark's scan: a per-split encode and a
+    store read give the same rows with and without the python-side scan."""
+    import pyarrow.parquet as pq
+
+    from varint_simd_spark.operators import decode_table, encode_table
+    from varint_simd_spark.operators.encode import decode_aggregate, encode_table_per_split
+    from varint_simd_spark.operators.pyscan import parquet_scan_info
+
+    full = spark.createDataFrame(
+        [(i, f"s{i}", i * 1.5) for i in range(400)], "k long, s string, x double"
+    )
+    src = str(tmp_path / "evolved")
+    full.filter("k < 200").select("k", "s").coalesce(1).write.parquet(src)
+    full.filter("k >= 200").coalesce(1).write.mode("append").parquet(src)
+    df = spark.read.schema(full.schema).parquet(src)
+    assert parquet_scan_info(df) is not None
+
+    def encoded_rows():
+        return _rows(decode_table(encode_table_per_split(df, key="k")).drop("__chunk"))
+
+    os.environ["VSS_PYSCAN"] = "0"
+    try:
+        a = encoded_rows()
+    finally:
+        os.environ["VSS_PYSCAN"] = "1"
+    b = encoded_rows()
+    assert a == b and len(a) == 400
+    assert sum(r[2] == "None" for r in b) == 200
+
+    # a store whose one chunk file predates the crc32 field
+    store = str(tmp_path / "evolved_store")
+    encode_table(full, key="k", n_chunks=4).write.partitionBy("chunk_id").parquet(store)
+    old = sorted(p for p in (tmp_path / "evolved_store").rglob("*.parquet"))[0]
+    pq.write_table(pq.read_table(old).drop(["crc32"]), old)
+    (old.parent / f".{old.name}.crc").unlink()  # Hadoop's checksum sidecar
+    st = spark.read.option("mergeSchema", "true").parquet(store)
+    assert "crc32" in st.columns and parquet_scan_info(st) is not None
+    os.environ["VSS_PYSCAN"] = "0"
+    try:
+        a = _rows(decode_aggregate(st, use_stats=False))
+    finally:
+        os.environ["VSS_PYSCAN"] = "1"
+    b = _rows(decode_aggregate(st, use_stats=False))
+    assert a == b and a

@@ -691,3 +691,35 @@ def test_decode_aggregate_grouped_timestamp_group(spark):
     }
     got = {r[0]: (r[2], r[4]) for r in fast}
     assert got == exp
+
+
+def test_small_results_collect_without_a_job(spark):
+    """The driver-built answers of the stats aggregates (plain and grouped)
+    and of verify_roundtrip are local relations: collecting them runs no
+    Spark job, and they equal the distributed answers."""
+    from varint_simd_spark.operators.encode import decode_aggregate
+    from varint_simd_spark.operators.verify import verify_roundtrip
+
+    wp = generate_web_pages(spark, 3000, seed=13)
+    enc = encode_table(wp, key="url", n_chunks=4, stats_group_by="lang")
+    cols = ["warc_ts", "text"]
+    results = {
+        "stats": decode_aggregate(enc),
+        "grouped": decode_aggregate(enc, columns=cols, group_by="lang"),
+        "verify": verify_roundtrip(wp, decode_table(enc).drop("__chunk"), key="url"),
+    }
+    sc = spark.sparkContext
+    got = {}
+    for name, df in results.items():
+        sc.setJobGroup(f"local_{name}", name)
+        try:
+            got[name] = [tuple(r) for r in df.collect()]
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert sc.statusTracker().getJobIdsForGroup(f"local_{name}") == [], name
+    assert got["stats"] == [
+        tuple(r) for r in decode_aggregate(enc, use_stats=False).collect()]
+    assert got["grouped"] == [tuple(r) for r in decode_aggregate(
+        enc, columns=cols, group_by="lang", use_stats=False).collect()]
+    assert [r[0] for r in got["verify"]] == sorted(c for c in wp.columns if c != "url")
+    assert all(r[1] == r[2] == 3000 and r[3] for r in got["verify"])

@@ -143,3 +143,33 @@ def test_extra_conf_overrides_daemon_module():
     )
     assert out.returncode == 0, out.stderr[-2000:]
     assert "RESULT pyspark.daemon invalidate_caches" in out.stdout
+
+
+def test_package_only_on_driver_sys_path_keeps_stock_daemon(tmp_path):
+    """A driver that reaches the package only through ``sys.path`` (not
+    the working directory, a site directory or ``PYTHONPATH``) gets the
+    stock daemon, so its Python tasks run; the engine daemon would fail
+    to import in the workers and fail every task."""
+    script = textwrap.dedent(
+        """
+        import sys
+        sys.path.insert(0, sys.argv[1])
+        from varint_simd_spark.sources.session import get_spark
+
+        spark = get_spark(app_name="daemon_sys_path", master="local[1]")
+
+        def passthrough(batches):
+            yield from batches
+
+        n = spark.range(3, numPartitions=1).mapInArrow(passthrough, "id long").count()
+        print("RESULT", spark.conf.get("spark.python.daemon.module", "unset"), n)
+        spark.stop()
+        """
+    )
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    out = subprocess.run(
+        [sys.executable, "-c", script, str(REPO)],
+        cwd=tmp_path, env=env, capture_output=True, text=True, timeout=300,
+    )
+    assert out.returncode == 0, out.stderr[-2000:]
+    assert "RESULT unset 3" in out.stdout

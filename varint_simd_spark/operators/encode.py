@@ -1390,6 +1390,16 @@ _GAGG_SCHEMA = T.StructType(
 )
 
 
+def _local_frame(spark, rows: list[tuple], schema: T.StructType) -> DataFrame:
+    """Driver-side result rows as a DataFrame over a LocalRelation.  Built
+    from Arrow, its ``collect()`` runs no Spark job; built from a list of
+    rows, it would be a Python RDD that runs a Python task per action."""
+    table = pa.Table.from_pylist(
+        [dict(zip(schema.names, r)) for r in rows], schema=to_arrow_schema(schema)
+    )
+    return spark.createDataFrame(table, schema=schema)
+
+
 def _stats_aggregate(enc: DataFrame) -> DataFrame:
     """The single metadata job of the stats fast path: per-column exact
     aggregates from the per-chunk stats JSON, plus a ``__ok`` flag (1 iff
@@ -1794,8 +1804,7 @@ def decode_aggregate(
             # pure scheduling for 13 rows)
             key=lambda t: (t[0] is not None, t[0] or "", t[1]),
         )
-        spark = enc.sparkSession
-        good_df = spark.createDataFrame(good_rows, schema=_GAGG_SCHEMA)
+        good_df = _local_frame(enc.sparkSession, good_rows, _GAGG_SCHEMA)
         if bad:
             fb = _agg_decode_path_grouped(enc, group_by, bad)
             good_df = good_df.unionByName(fb).orderBy("group", "column")
@@ -1812,8 +1821,7 @@ def decode_aggregate(
     good_rows = sorted(
         (tuple(r)[:-1] for r in rows if r["__ok"] == 1), key=lambda t: t[0]
     )
-    spark = enc.sparkSession
-    good_df = spark.createDataFrame(good_rows, schema=_AGG_SCHEMA)
+    good_df = _local_frame(enc.sparkSession, good_rows, _AGG_SCHEMA)
     if bad:
         good_df = good_df.unionByName(
             _agg_decode_path(enc.filter(F.col("column").isin(bad)))

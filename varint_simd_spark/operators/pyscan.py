@@ -39,6 +39,7 @@ from urllib.parse import unquote, urlparse
 
 import numpy as np
 import pyarrow as pa
+from pyspark.sql.pandas.types import to_arrow_schema
 
 __all__ = ["parquet_scan_info", "pyscan_map_in_arrow"]
 
@@ -52,10 +53,14 @@ def _enabled() -> bool:
     return os.environ.get("VSS_PYSCAN", "1") != "0"
 
 
-def parquet_scan_info(df) -> tuple[list[str], list[tuple[str, str]]] | None:
-    """(local file paths sorted, [(partition col, spark type)]) when ``df``
-    is provably a bare parquet scan of local files whose every path holds
-    an integer value for each partition column; else None."""
+def parquet_scan_info(
+    df,
+) -> tuple[list[str], list[tuple[str, str]], pa.Schema] | None:
+    """(local file paths sorted, [(partition col, spark type)], ``df``'s
+    schema in Arrow) when ``df`` is provably a bare parquet scan of local
+    files whose every path holds an integer value for each partition
+    column; else None.  The schema types the nulls that fill a column a
+    file lacks (see :func:`_read_tables`)."""
     if not _enabled():
         return None
     try:
@@ -86,7 +91,7 @@ def parquet_scan_info(df) -> tuple[list[str], list[tuple[str, str]]] | None:
             # (``__HIVE_DEFAULT_PARTITION__``) must fall back to the JVM
             # scan here, not fail in the task
             _part_values(paths[-1], part)
-        return paths, part
+        return paths, part, to_arrow_schema(df.schema)
     except Exception:
         return None
 
@@ -218,13 +223,16 @@ def _read_tables(
     group: list[str],
     columns: list[str] | None,
     part_cols: list[tuple[str, str]],
+    schema: pa.Schema,
     column_filter: list[str] | None,
     canonical_ts: bool,
 ):
     """Yield one Arrow table per file: parquet read (pruned to ``columns``
-    present in the file), partition columns re-attached from the path, the
-    optional row filter on the ``column`` field applied, timestamps
-    canonicalized to naive us (the codec layer's domain)."""
+    present in the file), partition columns re-attached from the path, a
+    requested column of ``schema`` that the file lacks filled with typed
+    nulls (as Spark's scan does for schema-evolved files), the optional row
+    filter on the ``column`` field applied, timestamps canonicalized to
+    naive us (the codec layer's domain)."""
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
@@ -249,6 +257,9 @@ def _read_tables(
                 )
                 t = t.append_column(name, arr)
         if columns is not None:
+            for c in columns:
+                if c not in t.column_names and schema.get_field_index(c) >= 0:
+                    t = t.append_column(c, pa.nulls(t.num_rows, schema.field(c).type))
             t = t.select([c for c in columns if c in t.column_names])
         if column_filter is not None:
             mask = pc.is_in(
@@ -289,7 +300,7 @@ def pyscan_map_in_arrow(
     guaranteed) or 'split' (balanced packing into whole waves of
     ``defaultParallelism`` tasks, each at most about
     spark.sql.files.maxPartitionBytes; see :func:`_group_by_size`)."""
-    paths, part_cols = scan
+    paths, part_cols, schema = scan
     if group == "dir":
         groups = _group_by_dir(paths)
     else:
@@ -312,7 +323,7 @@ def pyscan_map_in_arrow(
 
         def gen():
             for t in _read_tables(
-                groups[pid], columns, part_cols, cf, canonical_ts
+                groups[pid], columns, part_cols, schema, cf, canonical_ts
             ):
                 yield from t.to_batches()
 

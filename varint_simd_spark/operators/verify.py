@@ -16,6 +16,18 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from .encode import _local_frame
+
+_VERIFY_SCHEMA = T.StructType(
+    [
+        T.StructField("column", T.StringType()),
+        T.StructField("n_rows", T.LongType()),
+        T.StructField("n_match", T.LongType()),
+        T.StructField("identical", T.BooleanType()),
+    ]
+)
 
 
 def verify_roundtrip(
@@ -54,11 +66,8 @@ def verify_roundtrip(
             ).alias(f"__m_{c}")
         )
     row = joined.agg(F.count("*").alias("__n"), *aggs).collect()[0]
-    spark = src.sparkSession
     out = [
         (c, int(n_src), int(row[f"__m_{c}"]), bool(row[f"__m_{c}"] == n_src == row["__n"]))
-        for c in columns
+        for c in sorted(columns)
     ]
-    return spark.createDataFrame(
-        out, "column string, n_rows long, n_match long, identical boolean"
-    ).orderBy("column")
+    return _local_frame(src.sparkSession, out, _VERIFY_SCHEMA)

@@ -14,22 +14,37 @@ Python workers fork from ``varint_simd_spark._worker_daemon``
 (``spark.python.daemon.module``) instead of ``pyspark.daemon``: the stock
 worker re-reads the central directory of pyspark.zip, the py4j zip and
 the spark-core jar before every task on CPython 3.11, about 0.2 s per
-task (see that module).  There the daemon starts with the driver's
-working directory and ``PYTHONPATH``, so it imports the package whenever
-the engine's UDFs can, since their closures import ``varint_simd_spark``
-by reference.  Other masters keep the stock daemon: with the package
-shipped through ``spark.submit.pyFiles``, the daemon would start before
-the package is on its path.  An ``extra_conf`` entry for
-``spark.python.daemon.module`` overrides the choice.
+task (see that module).  The daemon starts with the driver's working
+directory and ``PYTHONPATH``, before any ``pyFiles`` are shipped, so it is
+chosen only when the package's parent directory is on that import path: a
+site directory, a ``PYTHONPATH`` entry or the working directory
+(:func:`_package_on_worker_path`).  A driver that reaches the package only
+through its own ``sys.path`` keeps the stock daemon, as do other masters:
+a daemon module the workers cannot import fails every Python task of the
+session.  An ``extra_conf`` entry for ``spark.python.daemon.module``
+overrides the choice.
 """
 
 from __future__ import annotations
 
 import os
+import site
 
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = 32
+
+
+def _package_on_worker_path() -> bool:
+    """True when a Python worker started with the driver's working
+    directory and ``PYTHONPATH`` can import this package: its parent
+    directory is a site directory, a ``PYTHONPATH`` entry or the working
+    directory."""
+    parent = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+    dirs = site.getsitepackages() + [site.getusersitepackages(), os.getcwd()]
+    dirs += [p for p in os.environ.get("PYTHONPATH", "").split(os.pathsep) if p]
+    real = os.path.realpath(parent)
+    return any(os.path.realpath(d) == real for d in dirs)
 
 
 def get_spark(
@@ -58,7 +73,7 @@ def get_spark(
     # shuffle volumes of a real cluster); override with SPARK_LOCAL_DIRS
     if os.path.isdir("/dev/shm") and "SPARK_LOCAL_DIRS" not in os.environ:
         b = b.config("spark.local.dir", "/dev/shm/vss-spark-local")
-    if master.startswith("local"):
+    if master.startswith("local") and _package_on_worker_path():
         b = b.config("spark.python.daemon.module", "varint_simd_spark._worker_daemon")
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
