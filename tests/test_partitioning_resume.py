@@ -387,3 +387,30 @@ def test_commit_is_one_job_without_exchange_or_cache(web_pages, spark, tmp_path)
     assert sc._jsc.getPersistentRDDs().size() == n_cached
     assert _manifest_rows(store, snap) == _spark_lineage(
         spark, spark.read.parquet(store.enc_path))
+
+
+@pytest.mark.parametrize("n_chunks", [0, -3, 2**31])
+@pytest.mark.parametrize("entry", ["encode_table", "encode_table_salted", "encode_resumable"])
+def test_bad_n_chunks_rejected_on_driver(spark, tmp_path, entry, n_chunks):
+    """Chunk ids are int partition ids: an n_chunks outside [1, 2**31 - 1]
+    is a ValueError before any Spark job runs (not an executor-side
+    REMAINDER_BY_ZERO or array-index error)."""
+    from varint_simd_spark.operators import encode_table
+
+    df = spark.createDataFrame([("https://a.example.com/p/1", "x")], "url string, text string")
+    calls = {
+        "encode_table": lambda: encode_table(df, key="url", n_chunks=n_chunks),
+        "encode_table_salted": lambda: encode_table_salted(df, n_chunks=n_chunks),
+        "encode_resumable": lambda: encode_resumable(
+            EncodedStore(spark, str(tmp_path / "store")), df, key="url", n_chunks=n_chunks
+        ),
+    }
+    sc = spark.sparkContext
+    group = f"bad_n_chunks_{entry}_{n_chunks}"
+    sc.setJobGroup(group, "n_chunks check")
+    try:
+        with pytest.raises(ValueError, match="n_chunks"):
+            calls[entry]()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup(group) == []

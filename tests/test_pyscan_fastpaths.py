@@ -257,46 +257,99 @@ def test_group_by_size_row_group_splits(tmp_path):
     assert len(_group_by_size([one], 128 << 20, 4)) == 1
 
 
-def test_encode_shuffle_sized_to_cores(spark, tmp_path):
-    """Both encode_table topologies run ONE exchange pinned to
+def _data_plan(plan: str) -> str:
+    """An executed plan's text without its broadcast and cached subtrees:
+    the salt plan, the pending-chunk set and cached inputs run as their
+    own stages and move no encoded rows."""
+    out, cut = [], None
+    for line in plan.splitlines():
+        depth = len(line) - len(line.lstrip(" :+-"))
+        if cut is not None and depth > cut:
+            continue
+        cut = None
+        out.append(line)
+        if "BroadcastQueryStage" in line or "InMemoryRelation" in line:
+            cut = depth
+    return "\n".join(out)
+
+
+def test_encode_shuffle_sized_to_cores(spark, tmp_path, monkeypatch):
+    """Every batch hash-chunk encode runs ONE data exchange pinned to
     n = min(n_chunks, defaultParallelism) partitions (not coalesced by
-    AQE), and the anti-collision keys spread the chunks evenly over it."""
+    AQE) that places chunk c in partition c mod n."""
     import re
 
     from varint_simd_spark.operators import encode_table
+    from varint_simd_spark.plans.partitioning import encode_table_salted
+    from varint_simd_spark.sources.checkpoint import EncodedStore, encode_resumable
+    from varint_simd_spark.sources.web_pages import generate_web_pages
 
     li = spark.read.parquet(f"{SF_DIR}/lineitem.parquet")
     li.repartition(6).write.option("maxRecordsPerFile", 1000).parquet(
         str(tmp_path / "li")
     )
+    wp = generate_web_pages(spark, 1000, seed=7).cache()
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+    lis = spark.read.parquet(str(tmp_path / "li"))
+
+    def resumable(n_chunks):
+        # the encode frame as encode_resumable hands it to the commit
+        got = []
+        monkeypatch.setattr(
+            EncodedStore, "commit", lambda self, enc, **kw: got.append(enc)
+        )
+        store = EncodedStore(spark, str(tmp_path / f"store{n_chunks}"))
+        encode_resumable(store, wp, key="url", n_chunks=n_chunks)
+        return got[0]
+
     cases = [
-        (spark.read.parquet(f"{SF_DIR}/documents.parquet"), "doc_id", "__chunk"),
-        (spark.read.parquet(str(tmp_path / "li")), "l_orderkey", "__gkey"),
+        (lambda n: encode_table(docs, key="doc_id", n_chunks=n), "__chunk"),
+        (lambda n: encode_table(lis, key="l_orderkey", n_chunks=n), "__gkey"),
+        (lambda n: encode_table_salted(wp, n_chunks=n), "__chunk"),
+        (resumable, "__chunk"),
     ]
     par = spark.sparkContext.defaultParallelism
-    for src, key, gkey in cases:
+    for build, gkey in cases:
         for n_chunks in (8, 3):
             n = min(n_chunks, par)
-            q = encode_table(src, key=key, n_chunks=n_chunks).select(
+            q = build(n_chunks).select(
                 "chunk_id", F.spark_partition_id().alias("pid")
             )
             rows = q.collect()
-            plan = q._jdf.queryExecution().executedPlan().executedPlan().toString()
+            plan = _data_plan(
+                q._jdf.queryExecution().executedPlan().executedPlan().toString()
+            )
             exchanges = re.findall(r"Exchange (.*), \[plan_id", plan)
             assert len(exchanges) == 1, plan
             assert re.fullmatch(
-                rf"hashpartitioning\({gkey}#\d+L, {n}\), REPARTITION_BY_NUM",
+                rf"shufflepartitionidpassthrough\(direct_shuffle_partition_id"
+                rf"\({gkey}#\d+\), {n}\), REPARTITION_BY_NUM",
                 exchanges[0],
             ), plan
             assert "AQEShuffleRead" not in plan
-            per_part: dict[int, set] = {}
-            for r in rows:
-                per_part.setdefault(r["pid"], set()).add(r["chunk_id"])
-            assert {c for s in per_part.values() for c in s} == set(range(n_chunks))
-            assert {len(s) for s in per_part.values()} <= {
-                n_chunks // n, -(-n_chunks // n)
-            }
-            assert len(per_part) == n
+            assert {r["chunk_id"] for r in rows} == set(range(n_chunks))
+            assert all(r["pid"] == r["chunk_id"] % n for r in rows)
+            assert len({r["pid"] for r in rows}) == n
+    wp.unpersist()
+
+
+def test_encode_plan_flat_in_n_chunks(spark):
+    """The row-shuffle plan holds no per-chunk literal: at n_chunks=10_000
+    it is the n_chunks=32 plan with the number swapped."""
+    import re
+
+    from varint_simd_spark.operators import encode_table
+
+    df = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+
+    def plan(n_chunks):
+        qe = encode_table(df, key="doc_id", n_chunks=n_chunks)._jdf.queryExecution()
+        return re.sub(r"#\d+", "#", qe.optimizedPlan().toString())
+
+    small, big = plan(32), plan(10_000)
+    assert "element_at" not in big and "array(" not in big
+    assert "10000" in big
+    assert big.replace("10000", "32") == small
 
 
 def test_agg_decode_one_dir_store_parallel(spark, tmp_path):

@@ -6,9 +6,10 @@ topologies feed it:
 
 * hash-chunk (:func:`encode_table`): chunk id ``pmod(xxhash64(key),
   n_chunks)``, deterministic in data only, so resume/verify work
-  identically at any parallelism.  One shuffle: raw rows through a
-  ``groupBy`` for string-heavy inputs, compressed fragments re-encoded per
-  chunk for integer-dominated bare parquet scans
+  identically at any parallelism.  One shuffle, which places chunk ``c``
+  in reduce partition ``c mod n`` (:func:`_chunk_exchange`): raw rows for
+  string-heavy inputs, compressed fragments re-encoded per chunk for
+  integer-dominated bare parquet scans
   (:func:`_encode_table_fragment_merge`);
 * per-split (:func:`encode_table_per_split`): each scan partition packs
   and encodes its own chunks — zero exchanges, layout-deterministic ids;
@@ -409,16 +410,13 @@ def make_encode_chunk_fn(
     codecs: dict[str, str],
     sort_key: str | None,
     stats_group_by: str | None = None,
-    chunk_id_map: dict[int, int] | None = None,
 ):
     """Build the applyInArrow chunk encoder (closure shipped to executors).
-    ``chunk_id_map``: inverse of the anti-collision grouping-key remap —
-    maps the shuffled magic key back to the logical chunk id."""
+    A group's ``__chunk`` value is its logical chunk id, emitted as
+    ``chunk_id``."""
 
     def encode_chunk(table: pa.Table) -> pa.Table:
         chunk_id = int(table["__chunk"][0].as_py())
-        if chunk_id_map is not None:
-            chunk_id = chunk_id_map[chunk_id]
         if sort_key is not None:
             table = table.take(pc.sort_indices(table[sort_key]))
         return _encode_columns_to_rows(
@@ -428,62 +426,40 @@ def make_encode_chunk_fn(
     return encode_chunk
 
 
-def _murmur3_long(value: int, seed: int = 42) -> int:
-    """Spark's Murmur3_x86_32.hashLong (the hash behind HashPartitioning
-    of a single LongType grouping key) — driver-side, for planning the
-    anti-collision remap."""
-    M = 0xFFFFFFFF
-
-    def rotl(x, r):
-        return ((x << r) | (x >> (32 - r))) & M
-
-    def mix_k1(k1):
-        k1 = (k1 * 0xCC9E2D51) & M
-        k1 = rotl(k1, 15)
-        return (k1 * 0x1B873593) & M
-
-    def mix_h1(h1, k1):
-        h1 ^= k1
-        h1 = rotl(h1, 13)
-        return (h1 * 5 + 0xE6546B64) & M
-
-    v = value & 0xFFFFFFFFFFFFFFFF
-    h1 = mix_h1(seed & M, mix_k1(v & M))
-    h1 = mix_h1(h1, mix_k1((v >> 32) & M))
-    h1 ^= 8
-    h1 ^= h1 >> 16
-    h1 = (h1 * 0x85EBCA6B) & M
-    h1 ^= h1 >> 13
-    h1 = (h1 * 0xC2B2AE35) & M
-    h1 ^= h1 >> 16
-    return h1 - (1 << 32) if h1 >= (1 << 31) else h1
+def _check_n_chunks(n_chunks) -> None:
+    """Chunk ids are IntegerType partition ids, so ``n_chunks`` must be an
+    int in [1, 2**31 - 1]; checked on the driver, before any job."""
+    if (
+        isinstance(n_chunks, bool)
+        or not isinstance(n_chunks, int)
+        or not 1 <= n_chunks < 2**31
+    ):
+        raise ValueError(
+            f"n_chunks must be an int in [1, 2**31 - 1], got {n_chunks!r}"
+        )
 
 
-def _chunk_key_remap(n_chunks: int, n_partitions: int) -> list[int]:
-    """Magic long grouping keys, one per logical chunk id, chosen so
-    Spark's hash partitioning spreads the chunks EVENLY over the shuffle
-    partitions (chunk i lands in partition i mod n_partitions).
+def _chunk_exchange(frame: DataFrame, n_chunks: int, fn, key: str = "__chunk") -> DataFrame:
+    """The one exchange of every batch hash-chunk encode: the rows of
+    chunk ``c`` (the IntegerType ``key`` column, the logical chunk id) go
+    to reduce partition ``c mod n``, ``n = min(n_chunks,
+    defaultParallelism)``, and ``fn`` encodes each chunk's group there.
 
-    Hashing n_chunks raw ids into an equal number of partitions is the
-    balls-in-bins anti-pattern of guide §2.5: ~1/e of the reduce
-    partitions come up empty and the fullest holds 3-4 chunks, so the
-    encode stage runs at a fraction of the cores and its wall time is the
-    straggler's.  The remap is planning-time only — the emitted chunk_id
-    is mapped back to the logical id, so outputs are unchanged."""
-    magics: list[int] = []
-    v = 0
-    for i in range(n_chunks):
-        target = i % n_partitions
-        while True:
-            p = _murmur3_long(v) % n_partitions
-            if p < 0:
-                p += n_partitions
-            if p == target:
-                magics.append(v)
-                v += 1
-                break
-            v += 1
-    return magics
+    Placement is computed, not hashed: every partition holds floor or
+    ceil(n_chunks / n) chunks, so the stage runs one wave on all cores
+    (raw ids hashed into n partitions would leave about 1/e of them empty
+    and pile chunks on the straggler).  ``n`` is pinned: AQE sizes
+    partitions by bytes, but this stage is CPU-bound with a fixed per-task
+    cost, and it never coalesces a REPARTITION_BY_NUM exchange.  ``key``
+    must be the IntegerType grouping column itself; a cast or any other
+    expression makes Spark plan a second hash exchange for the
+    ``groupBy``."""
+    n = max(1, min(n_chunks, frame.sparkSession.sparkContext.defaultParallelism))
+    return (
+        frame.repartitionById(n, key)
+        .groupBy(key)
+        .applyInArrow(fn, schema=ENCODED_SCHEMA)
+    )
 
 
 def _check_stats_group_by(stats_group_by: str | None, columns: list[str]) -> None:
@@ -511,13 +487,6 @@ def _encode_args(
         raise ValueError(f"codecs for unknown columns: {sorted(unknown)}")
     _check_stats_group_by(stats_group_by, columns)
     return columns, codecs
-
-
-def _chunk_magics(spark, n_chunks: int) -> tuple[int, list[int]]:
-    """The encode shuffle's partition count ``n = min(n_chunks,
-    defaultParallelism)`` and :func:`_chunk_key_remap` sized to it."""
-    n = max(1, min(n_chunks, spark.sparkContext.defaultParallelism))
-    return n, _chunk_key_remap(n_chunks, n)
 
 
 def _spark_xxhash64(karr: pa.Array) -> np.ndarray:
@@ -549,7 +518,7 @@ def _spark_xxhash64(karr: pa.Array) -> np.ndarray:
 
 FRAG_SCHEMA = T.StructType(
     ENCODED_SCHEMA.fields
-    + [T.StructField("__gkey", T.LongType()), T.StructField("__frag", T.LongType())]
+    + [T.StructField("__gkey", T.IntegerType()), T.StructField("__frag", T.LongType())]
 )
 
 
@@ -621,7 +590,8 @@ def _encode_table_fragment_merge(
        (:func:`_encode_fragment_rows`), so fragments ship compressed
        (clustered integer keys pack hard under for_bitpack);
     2. ONE shuffle of the fragments (a few KB-MB rows, no transpose),
-       grouped on anti-collision magic keys (guide §2.5);
+       grouped on ``__gkey``, the int logical chunk id: chunk ``c`` goes
+       to reduce partition ``c mod n`` (:func:`_chunk_exchange`);
     3. per chunk: decode fragments, concatenate, key-sort, and re-encode
        the whole chunk with the standard machinery — the emitted rows
        satisfy the identical contract (chunk ids, codec auto-choice,
@@ -631,7 +601,6 @@ def _encode_table_fragment_merge(
     transpose+shuffle — i.e. integer-dominated tables; the caller gates
     on the parquet footers' BYTE_ARRAY byte fraction."""
     spark = df.sparkSession
-    n_part, magics = _chunk_magics(spark, n_chunks)
     frag_columns = list(columns) + ([key] if key not in columns else [])
 
     from ..kernels.xxh64 import pmod as _pmod
@@ -658,7 +627,7 @@ def _encode_table_fragment_merge(
             enc = _encode_fragment_rows(frag, frag_columns, logical)
             k = enc.num_rows
             enc = enc.append_column(
-                "__gkey", pa.array(np.full(k, magics[logical], np.int64))
+                "__gkey", pa.array(np.full(k, logical, np.int32))
             )
             enc = enc.append_column(
                 "__frag",
@@ -689,11 +658,7 @@ def _encode_table_fragment_merge(
             tbl, columns, codecs, logical, stats_group_by=stats_group_by
         )
 
-    return (
-        frags.repartition(n_part, "__gkey")
-        .groupBy("__gkey")
-        .applyInArrow(merge_fn, schema=ENCODED_SCHEMA)
-    )
+    return _chunk_exchange(frags, n_chunks, merge_fn, "__gkey")
 
 
 def encode_table(
@@ -709,6 +674,8 @@ def encode_table(
 
     ``key``: chunk-assignment column (url at production scale) — chunk id is
     ``pmod(xxhash64(key), n_chunks)``, deterministic in data only.
+    ``n_chunks``: an int in [1, 2**31 - 1]; chunk ``c`` is encoded in
+    reduce partition ``c mod min(n_chunks, defaultParallelism)``.
     ``codecs``: per-column codec name or "auto" (default: auto for all).
     ``sort_within_chunk``: sort chunk rows by ``key`` before encoding —
     deterministic value order (resume/verify) and better run/delta locality.
@@ -716,6 +683,7 @@ def encode_table(
     per-chunk per-group partials ride the stats JSON — enables
     ``decode_aggregate(group_by=...)`` to run O(chunks) from metadata.
     """
+    _check_n_chunks(n_chunks)
     columns, codecs = _encode_args(df, columns, codecs, stats_group_by)
     # fragment-merge fast path: integer-dominated bare parquet scans skip
     # the raw-row shuffle AND the JVM row->Arrow transpose (see
@@ -746,35 +714,15 @@ def encode_table(
                 df, scan, key, columns, codecs, n_chunks,
                 sort_within_chunk, stats_group_by,
             )
-    logical = F.pmod(F.xxhash64(F.col(key)), F.lit(n_chunks))
-    # the one exchange is sized to the cores: n = min(n_chunks,
-    # defaultParallelism) partitions, pinned with repartition(n) — AQE
-    # sizes partitions by bytes, but this stage is CPU-bound with a fixed
-    # per-task cost, and it never coalesces a REPARTITION_BY_NUM exchange.
-    # Anti-collision grouping key: group on a magic long per
-    # chunk whose hash partition is (logical id mod n) instead of the raw
-    # chunk id, so each partition holds floor or ceil(n_chunks / n) chunks
-    # — raw ids hashed into n partitions would idle some cores and pile
-    # chunks on the slowest task.  The encoder maps the magic back to the
-    # logical id, so output rows are unchanged.
-    n_part, magics = _chunk_magics(df.sparkSession, n_chunks)
-    chunk = F.element_at(
-        F.array(*[F.lit(m).cast("long") for m in magics]), (logical + 1).cast("int")
-    ).alias("__chunk")
+    chunk = F.pmod(F.xxhash64(F.col(key)), F.lit(n_chunks)).cast("int").alias("__chunk")
     fn = make_encode_chunk_fn(
-        columns, codecs, key if sort_within_chunk else None, stats_group_by,
-        chunk_id_map={m: i for i, m in enumerate(magics)},
+        columns, codecs, key if sort_within_chunk else None, stats_group_by
     )
     # the sort key must ride along even when not an encoded column, else the
     # chunk sort would KeyError at executor time; it is never encoded (the
     # encode loop iterates `columns` only)
     select_cols = list(columns) + ([key] if sort_within_chunk and key not in columns else [])
-    return (
-        df.select(*select_cols, chunk)
-        .repartition(n_part, "__chunk")
-        .groupBy("__chunk")
-        .applyInArrow(fn, schema=ENCODED_SCHEMA)
-    )
+    return _chunk_exchange(df.select(*select_cols, chunk), n_chunks, fn)
 
 
 def encode_table_per_split(

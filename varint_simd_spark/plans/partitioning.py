@@ -13,9 +13,9 @@ hosts a straggler/oom risk at 100 TB; so:
    n_salts(host))`` — hot hosts split across ~count/target chunks, cold
    hosts keep locality.
 
-AQE (enabled in the session factory) additionally splits any residual
-post-shuffle skew; this planner bounds *chunk payload* skew, which AQE
-cannot see (it balances shuffle bytes, not decoded chunk sizes).
+The encode exchange moves whole chunks (chunk ``c`` to reduce partition
+``c mod n``, as in ``encode_table``), so neither it nor AQE splits a hot
+chunk; this planner bounds *chunk payload* skew before the exchange.
 """
 
 from __future__ import annotations
@@ -57,8 +57,8 @@ def salted_chunk_column(
     """Attach the salt plan (broadcast join) and return df with a
     ``__chunk`` column.
 
-    chunk = pmod(xxhash64(host, salt), n_chunks); salt = 0 for cold hosts,
-    pmod(xxhash64(url), n_salts) for hot ones.
+    chunk = pmod(xxhash64(host, salt), n_chunks) as an int; salt = 0 for
+    cold hosts, pmod(xxhash64(url), n_salts) for hot ones.
     """
     plan = salt_plan if salt_plan is not None else plan_salts(df, url_col, target_rows_per_chunk)
     joined = df.join(
@@ -70,7 +70,7 @@ def salted_chunk_column(
         F.col("__n_salts").isNotNull(),
         F.pmod(F.xxhash64(F.col(url_col)), F.col("__n_salts")),
     ).otherwise(F.lit(0))
-    chunk = F.pmod(F.xxhash64(host_of(url_col), salt), F.lit(n_chunks))
+    chunk = F.pmod(F.xxhash64(host_of(url_col), salt), F.lit(n_chunks)).cast("int")
     return joined.withColumn("__chunk", chunk).drop("__host", "__host_rows", "__n_salts")
 
 
@@ -83,17 +83,14 @@ def encode_table_salted(
     columns: list[str] | None = None,
 ):
     """encode_table with host-locality + hot-host salting (the production
-    path for the web_pages table)."""
-    from ..operators.encode import ENCODED_SCHEMA, make_encode_chunk_fn
+    path for the web_pages table); chunks are placed as in encode_table."""
+    from ..operators.encode import _check_n_chunks, _chunk_exchange, make_encode_chunk_fn
 
+    _check_n_chunks(n_chunks)
     columns = columns or df.columns
     df2 = salted_chunk_column(df, n_chunks, url_col, target_rows_per_chunk)
     fn = make_encode_chunk_fn(columns, codecs or {}, url_col)
-    return (
-        df2.select(*columns, "__chunk")
-        .groupBy("__chunk")
-        .applyInArrow(fn, schema=ENCODED_SCHEMA)
-    )
+    return _chunk_exchange(df2.select(*columns, "__chunk"), n_chunks, fn)
 
 
 def skew_report(df: DataFrame, url_col: str = "url", top_k: int = 20) -> DataFrame:

@@ -367,7 +367,11 @@ def encode_resumable(
     driver-side id list in the plan, so the path holds at millions of
     chunks (an ``isin`` literal of the pending ids would not).  Only the
     commit's expected-chunk bookkeeping collects ids, and only while the
-    pending set is small enough to enumerate."""
+    pending set is small enough to enumerate.  Chunks are placed as in
+    ``encode_table``."""
+    from ..operators.encode import _check_n_chunks, _chunk_exchange, make_encode_chunk_fn
+
+    _check_n_chunks(n_chunks)
     spark = df.sparkSession
     universe = spark.range(n_chunks).select(F.col("id").alias("chunk_id"))
     # persist: one manifest scan + anti-join feeds the count, the
@@ -391,21 +395,19 @@ def encode_resumable(
 
             df2 = salted_chunk_column(df, n_chunks, key, target_rows_per_chunk)
         else:
-            df2 = df.withColumn("__chunk", F.pmod(F.xxhash64(F.col(key)), F.lit(n_chunks)))
-
-        from ..operators.encode import ENCODED_SCHEMA, make_encode_chunk_fn
+            df2 = df.withColumn(
+                "__chunk", F.pmod(F.xxhash64(F.col(key)), F.lit(n_chunks)).cast("int")
+            )
 
         columns = df.columns
         fn = make_encode_chunk_fn(columns, codecs or {}, key)
-        enc = (
-            df2.select(*columns, "__chunk")
-            .join(
-                F.broadcast(pending_df.select(F.col("chunk_id").alias("__chunk"))),
-                "__chunk",
-                "left_semi",
-            )
-            .groupBy("__chunk")
-            .applyInArrow(fn, schema=ENCODED_SCHEMA)
+        pending_ids = pending_df.select(F.col("chunk_id").cast("int").alias("__chunk"))
+        enc = _chunk_exchange(
+            df2.select(*columns, "__chunk").join(
+                F.broadcast(pending_ids), "__chunk", "left_semi"
+            ),
+            n_chunks,
+            fn,
         )
         snapshot_id = store.commit(enc, expected_chunks=pending)
         return snapshot_id, int(n_pending)

@@ -136,6 +136,7 @@ def encode_stream(
             F.array(*[F.lit(cid) for cid in slot_ids]),
         )
         df2 = batch_df.withColumn("__chunk", F.element_at(id_map, slot.cast("int")))
+        # hash groupBy, not _chunk_exchange: these ids are per-batch hashes, not < n_chunks
         enc = (
             df2.select(*columns, "__chunk")
             .filter(F.col("__chunk").isin(pending))
