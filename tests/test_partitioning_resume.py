@@ -266,6 +266,12 @@ def test_corrupt_manifest_raises_not_empty(web_pages, spark, tmp_path):
     with pytest.raises(Exception):
         store.committed_chunks().count()
 
+    # a resume over it raises too, before it re-encodes anything
+    data = {f: f.stat().st_mtime_ns for f in pathlib.Path(store.enc_path).rglob("*")}
+    with pytest.raises(Exception):
+        encode_resumable(store, web_pages, key="url", n_chunks=2)
+    assert {f: f.stat().st_mtime_ns for f in pathlib.Path(store.enc_path).rglob("*")} == data
+
 
 def test_ingest_layout_guard(web_pages, spark, tmp_path):
     """ingest_to_store locks the layout-determining params to the store:
@@ -387,6 +393,105 @@ def test_commit_is_one_job_without_exchange_or_cache(web_pages, spark, tmp_path)
     assert sc._jsc.getPersistentRDDs().size() == n_cached
     assert _manifest_rows(store, snap) == _spark_lineage(
         spark, spark.read.parquet(store.enc_path))
+
+
+def _group_jobs(spark, group, fn):
+    """``fn()``, its Spark job count and the physical plans it ran."""
+    sc = spark.sparkContext
+    since = int(_sql_status(spark).executionsCount())
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sql = _sql_status(spark)
+    n_new = int(sql.executionsCount()) - since
+    execs = sql.executionsList(since, n_new) if n_new else None
+    plans = [execs.apply(i).physicalPlanDescription() for i in range(n_new)]
+    return out, len(sc.statusTracker().getJobIdsForGroup(group)), plans
+
+
+def test_resume_reads_commit_state_on_the_driver(web_pages, spark, tmp_path):
+    """The pending chunk set is a driver-side list: a first run plans no
+    sort-merge join and caches nothing, and a no-op resume runs at most two
+    small jobs (the manifest's semi-join against the planned ids)."""
+    inp = str(tmp_path / "pending_in")
+    web_pages.write.mode("overwrite").parquet(inp)
+    df = spark.read.parquet(inp)
+    store = EncodedStore(spark, str(tmp_path / "pending_store"))
+    n_cached = spark.sparkContext._jsc.getPersistentRDDs().size()
+
+    (snap, n), _, plans = _group_jobs(
+        spark, "resume_first", lambda: encode_resumable(store, df, key="url", n_chunks=8))
+    assert snap is not None and n == 8
+    assert plans and not any("SortMergeJoin" in p or "InMemoryRelation" in p for p in plans)
+
+    out, n_jobs, _ = _group_jobs(
+        spark, "resume_noop", lambda: encode_resumable(store, df, key="url", n_chunks=8))
+    assert out == (None, 0) and n_jobs <= 2
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == n_cached
+
+    assert store.pending(range(10)) == [8, 9]
+    missing = EncodedStore(spark, str(tmp_path / "no_manifest"))
+    assert _group_jobs(spark, "pending_missing", lambda: missing.pending([3, 1]))[:2] == (
+        [3, 1], 0)
+
+
+def test_resume_converges_past_100k_chunks(spark, tmp_path):
+    """Every planned chunk gets a manifest row however many there are, so
+    a second run over a 3-row input is a no-op even at 100 001 chunks."""
+    tiny = generate_web_pages(spark, 100, seed=42).limit(3)
+    store = EncodedStore(spark, str(tmp_path / "wide"))
+    assert encode_resumable(store, tiny, key="url", n_chunks=100_001)[1] == 100_001
+    assert encode_resumable(store, tiny, key="url", n_chunks=100_001) == (None, 0)
+    assert decode_table(store.read_encoded()).count() == 3
+
+
+def test_stream_lock_rejects_remote_root(spark, tmp_path, monkeypatch):
+    """The layout lock is a local file: on a remote store root the stream
+    fails fast instead of writing a lock that guards nothing, and on a
+    ``file:`` root the lock lands in the store root itself."""
+    from varint_simd_spark.sources.checkpoint import _lock_layout
+    from varint_simd_spark.streaming.incremental import encode_stream
+
+    monkeypatch.chdir(tmp_path)
+    store = EncodedStore(spark, "s3a://bucket/store")
+    with pytest.raises(NotImplementedError, match="local store root"):
+        encode_stream(spark, str(tmp_path / "in"), store,
+                      generate_web_pages(spark, 10).schema, key="url", n_chunks=4,
+                      checkpoint_dir=str(tmp_path / "ckpt"))
+    assert list(tmp_path.iterdir()) == []
+
+    _lock_layout(EncodedStore(spark, f"file://{tmp_path}/local"), "stream", {"n_chunks": 4})
+    assert [p.name for p in tmp_path.iterdir()] == ["local"]
+    assert [p.name for p in (tmp_path / "local").iterdir()] == ["_stream_conf.json"]
+
+
+@pytest.mark.parametrize("entry", ["encode_table_salted", "encode_resumable", "encode_stream"])
+def test_unknown_codec_column_rejected_on_driver(spark, tmp_path, entry):
+    """Every encode entry point rejects ``codecs`` for a column it does not
+    encode with a ValueError, before any Spark job runs."""
+    from varint_simd_spark.streaming.incremental import encode_stream
+
+    df = spark.createDataFrame([("https://a.example.com/p/1", "x")], "url string, text string")
+    codecs = {"txet": "fsst"}
+    calls = {
+        "encode_table_salted": lambda: encode_table_salted(df, n_chunks=4, codecs=codecs),
+        "encode_resumable": lambda: encode_resumable(
+            EncodedStore(spark, str(tmp_path / "store")), df, key="url", n_chunks=4,
+            codecs=codecs),
+        "encode_stream": lambda: encode_stream(
+            spark, str(tmp_path / "in"), EncodedStore(spark, str(tmp_path / "store")),
+            df.schema, key="url", n_chunks=4, codecs=codecs,
+            checkpoint_dir=str(tmp_path / "ckpt")),
+    }
+
+    def call():
+        with pytest.raises(ValueError, match="codecs for unknown columns"):
+            calls[entry]()
+
+    assert _group_jobs(spark, f"bad_codecs_{entry}", call)[1] == 0
+    assert not (tmp_path / "store").exists()
 
 
 @pytest.mark.parametrize("n_chunks", [0, -3, 2**31])

@@ -259,8 +259,9 @@ def test_group_by_size_row_group_splits(tmp_path):
 
 def _data_plan(plan: str) -> str:
     """An executed plan's text without its broadcast and cached subtrees:
-    the salt plan, the pending-chunk set and cached inputs run as their
-    own stages and move no encoded rows."""
+    the salt plan, the pending chunks (a broadcast LocalRelation of driver
+    ids) and cached inputs run as their own stages and move no encoded
+    rows."""
     out, cut = [], None
     for line in plan.splitlines():
         depth = len(line) - len(line.lstrip(" :+-"))
@@ -274,15 +275,18 @@ def _data_plan(plan: str) -> str:
 
 
 def test_encode_shuffle_sized_to_cores(spark, tmp_path, monkeypatch):
-    """Every batch hash-chunk encode runs ONE data exchange pinned to
-    n = min(n_chunks, defaultParallelism) partitions (not coalesced by
-    AQE) that places chunk c in partition c mod n."""
+    """Every batch hash-chunk encode, and a stream's batch encode, runs
+    ONE data exchange pinned to n = min(n_chunks, defaultParallelism)
+    partitions (not coalesced by AQE) that places chunk (or stream slot) c
+    in partition c mod n."""
     import re
 
     from varint_simd_spark.operators import encode_table
+    from varint_simd_spark.operators.encode import make_encode_chunk_fn
     from varint_simd_spark.plans.partitioning import encode_table_salted
     from varint_simd_spark.sources.checkpoint import EncodedStore, encode_resumable
     from varint_simd_spark.sources.web_pages import generate_web_pages
+    from varint_simd_spark.streaming.incremental import _encode_batch, _stream_chunk_id
 
     li = spark.read.parquet(f"{SF_DIR}/lineitem.parquet")
     li.repartition(6).write.option("maxRecordsPerFile", 1000).parquet(
@@ -302,20 +306,31 @@ def test_encode_shuffle_sized_to_cores(spark, tmp_path, monkeypatch):
         encode_resumable(store, wp, key="url", n_chunks=n_chunks)
         return got[0]
 
+    def stream_batch(n_chunks):
+        # one micro-batch's encode frame, chunk ids mapped back to slots
+        store = EncodedStore(spark, str(tmp_path / f"stream{n_chunks}"))
+        fn = make_encode_chunk_fn(wp.columns, {}, "url")
+        enc, _ = _encode_batch(store, wp, 0, n_chunks, "url", fn)
+        slot = {_stream_chunk_id(0, n_chunks, i): i for i in range(n_chunks)}
+        return enc, slot.__getitem__
+
+    def same_ids(build):
+        return lambda n: (build(n), int)
+
     cases = [
-        (lambda n: encode_table(docs, key="doc_id", n_chunks=n), "__chunk"),
-        (lambda n: encode_table(lis, key="l_orderkey", n_chunks=n), "__gkey"),
-        (lambda n: encode_table_salted(wp, n_chunks=n), "__chunk"),
-        (resumable, "__chunk"),
+        (same_ids(lambda n: encode_table(docs, key="doc_id", n_chunks=n)), "__chunk"),
+        (same_ids(lambda n: encode_table(lis, key="l_orderkey", n_chunks=n)), "__gkey"),
+        (same_ids(lambda n: encode_table_salted(wp, n_chunks=n)), "__chunk"),
+        (same_ids(resumable), "__chunk"),
+        (stream_batch, "__chunk"),
     ]
     par = spark.sparkContext.defaultParallelism
     for build, gkey in cases:
         for n_chunks in (8, 3):
             n = min(n_chunks, par)
-            q = build(n_chunks).select(
-                "chunk_id", F.spark_partition_id().alias("pid")
-            )
-            rows = q.collect()
+            enc, slot_of = build(n_chunks)
+            q = enc.select("chunk_id", F.spark_partition_id().alias("pid"))
+            rows = [(slot_of(r["chunk_id"]), r["pid"]) for r in q.collect()]
             plan = _data_plan(
                 q._jdf.queryExecution().executedPlan().executedPlan().toString()
             )
@@ -327,9 +342,9 @@ def test_encode_shuffle_sized_to_cores(spark, tmp_path, monkeypatch):
                 exchanges[0],
             ), plan
             assert "AQEShuffleRead" not in plan
-            assert {r["chunk_id"] for r in rows} == set(range(n_chunks))
-            assert all(r["pid"] == r["chunk_id"] % n for r in rows)
-            assert len({r["pid"] for r in rows}) == n
+            assert {c for c, _ in rows} == set(range(n_chunks))
+            assert all(pid == c % n for c, pid in rows)
+            assert len({pid for _, pid in rows}) == n
     wp.unpersist()
 
 

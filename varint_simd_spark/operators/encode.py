@@ -5,12 +5,17 @@ row-contract implementation :func:`_encode_columns_to_rows`.  Three encode
 topologies feed it:
 
 * hash-chunk (:func:`encode_table`): chunk id ``pmod(xxhash64(key),
-  n_chunks)``, deterministic in data only, so resume/verify work
-  identically at any parallelism.  One shuffle, which places chunk ``c``
-  in reduce partition ``c mod n`` (:func:`_chunk_exchange`): raw rows for
-  string-heavy inputs, compressed fragments re-encoded per chunk for
-  integer-dominated bare parquet scans
-  (:func:`_encode_table_fragment_merge`);
+  n_chunks)``, so chunk membership is deterministic in data only and
+  resume/verify work identically at any parallelism.  One shuffle, which
+  places chunk ``c`` in reduce partition ``c mod n``
+  (:func:`_chunk_exchange`): raw rows for string-heavy inputs, compressed
+  fragments re-encoded per chunk for integer-dominated bare parquet scans
+  (:func:`_encode_table_fragment_merge`).  The order of equal-key rows
+  inside a chunk, and so the payload bytes, follows the topology: on the
+  seed-1 benchmark lineitem input (``n_chunks=8``) the sorted encoded
+  rows hash to sha256 715351b5… through the fragment merge and 52faacc9…
+  through the row shuffle, each stable from run to run, both decoding to
+  the same rows;
 * per-split (:func:`encode_table_per_split`): each scan partition packs
   and encodes its own chunks — zero exchanges, layout-deterministic ids;
 * bucketed (:func:`encode_table_bucketed`): per-split fragments tagged
@@ -439,11 +444,15 @@ def _check_n_chunks(n_chunks) -> None:
         )
 
 
-def _chunk_exchange(frame: DataFrame, n_chunks: int, fn, key: str = "__chunk") -> DataFrame:
+def _chunk_exchange(
+    frame: DataFrame, n_chunks: int, fn, key: str = "__chunk", only: list[int] | None = None
+) -> DataFrame:
     """The one exchange of every batch hash-chunk encode: the rows of
     chunk ``c`` (the IntegerType ``key`` column, the logical chunk id) go
     to reduce partition ``c mod n``, ``n = min(n_chunks,
     defaultParallelism)``, and ``fn`` encodes each chunk's group there.
+    ``only``: keep just these chunks (a store's pending ones), through a
+    broadcast semi-join on a LocalRelation of them.
 
     Placement is computed, not hashed: every partition holds floor or
     ceil(n_chunks / n) chunks, so the stage runs one wave on all cores
@@ -454,6 +463,10 @@ def _chunk_exchange(frame: DataFrame, n_chunks: int, fn, key: str = "__chunk") -
     must be the IntegerType grouping column itself; a cast or any other
     expression makes Spark plan a second hash exchange for the
     ``groupBy``."""
+    if only is not None:
+        ids = T.StructType([T.StructField(key, T.IntegerType())])
+        keep = _local_frame(frame.sparkSession, [(c,) for c in only], ids)
+        frame = frame.join(F.broadcast(keep), key, "left_semi")
     n = max(1, min(n_chunks, frame.sparkSession.sparkContext.defaultParallelism))
     return (
         frame.repartitionById(n, key)
@@ -462,30 +475,27 @@ def _chunk_exchange(frame: DataFrame, n_chunks: int, fn, key: str = "__chunk") -
     )
 
 
-def _check_stats_group_by(stats_group_by: str | None, columns: list[str]) -> None:
+def _encode_args(
+    names: list[str],
+    columns: list[str] | None,
+    codecs: dict[str, str] | None,
+    stats_group_by: str | None,
+) -> tuple[list[str], dict[str, str]]:
+    """Argument check shared by the encode entry points, before any job:
+    defaults ``columns`` to every input column (``names``), rejects codecs
+    for columns that are not encoded and a ``stats_group_by`` outside
+    ``columns``."""
+    columns = columns or names
+    codecs = codecs or {}
+    unknown = set(codecs) - set(columns)
+    if unknown:
+        raise ValueError(f"codecs for unknown columns: {sorted(unknown)}")
     if stats_group_by is not None and stats_group_by not in columns:
         raise ValueError(
             f"stats_group_by column {stats_group_by!r} must be one of the "
             f"encoded columns (grouped aggregation needs it decodable for "
             f"the fallback path)"
         )
-
-
-def _encode_args(
-    df: DataFrame,
-    columns: list[str] | None,
-    codecs: dict[str, str] | None,
-    stats_group_by: str | None,
-) -> tuple[list[str], dict[str, str]]:
-    """Argument check shared by the encode entry points, before any job:
-    defaults ``columns`` to every column, rejects codecs for columns that
-    are not encoded and a ``stats_group_by`` outside ``columns``."""
-    columns = columns or df.columns
-    codecs = codecs or {}
-    unknown = set(codecs) - set(columns)
-    if unknown:
-        raise ValueError(f"codecs for unknown columns: {sorted(unknown)}")
-    _check_stats_group_by(stats_group_by, columns)
     return columns, codecs
 
 
@@ -673,7 +683,10 @@ def encode_table(
     """Encode ``df`` into the encoded-chunk DataFrame (FIXTURES.md §4).
 
     ``key``: chunk-assignment column (url at production scale) — chunk id is
-    ``pmod(xxhash64(key), n_chunks)``, deterministic in data only.
+    ``pmod(xxhash64(key), n_chunks)``, so chunk membership is deterministic
+    in data only.  The order of equal-key rows within a chunk, and so the
+    payload bytes, follows the topology (fragment merge or row shuffle;
+    see the module docstring); either decodes to the same rows.
     ``n_chunks``: an int in [1, 2**31 - 1]; chunk ``c`` is encoded in
     reduce partition ``c mod min(n_chunks, defaultParallelism)``.
     ``codecs``: per-column codec name or "auto" (default: auto for all).
@@ -684,7 +697,7 @@ def encode_table(
     ``decode_aggregate(group_by=...)`` to run O(chunks) from metadata.
     """
     _check_n_chunks(n_chunks)
-    columns, codecs = _encode_args(df, columns, codecs, stats_group_by)
+    columns, codecs = _encode_args(df.columns, columns, codecs, stats_group_by)
     # fragment-merge fast path: integer-dominated bare parquet scans skip
     # the raw-row shuffle AND the JVM row->Arrow transpose (see
     # _encode_table_fragment_merge).  String-heavy tables stay on the
@@ -757,7 +770,7 @@ def encode_table_per_split(
 
     from pyspark import TaskContext
 
-    columns, codecs = _encode_args(df, columns, codecs, stats_group_by)
+    columns, codecs = _encode_args(df.columns, columns, codecs, stats_group_by)
     select_cols = list(columns) + ([key] if key not in columns else [])
 
     def fn(batches):
@@ -835,7 +848,8 @@ def encode_table_bucketed(
     lookups prune to one bucket via PartitionFilters and zone maps prune
     fragments within it.  Like :func:`encode_table_per_split`, chunk ids
     are layout-deterministic (not value-pure): lock the layout for resume
-    (see ``_check_ingest_conf``) or re-cluster via ``compact_store``.
+    (see ``sources.checkpoint._lock_layout``) or re-cluster via
+    ``compact_store``.
 
     Sizing: fragment count is (scan partitions x n_buckets) — size
     ``n_buckets`` so a bucket holds at least tens of MB (e.g.
@@ -843,7 +857,7 @@ def encode_table_bucketed(
     ONLY (fragments ride as rows; a two-level
     ``partitionBy("bucket", "chunk_id")`` creates P x B directories,
     measured 10x slower at small scale from filesystem metadata alone)."""
-    columns, codecs = _encode_args(df, columns, codecs, stats_group_by)
+    columns, codecs = _encode_args(df.columns, columns, codecs, stats_group_by)
     select_cols = list(columns) + ([key] if key not in columns else [])
     bucket_col = F.pmod(F.xxhash64(F.col(key)), F.lit(n_buckets)).alias("__bucket")
 

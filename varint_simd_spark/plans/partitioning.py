@@ -84,12 +84,17 @@ def encode_table_salted(
 ):
     """encode_table with host-locality + hot-host salting (the production
     path for the web_pages table); chunks are placed as in encode_table."""
-    from ..operators.encode import _check_n_chunks, _chunk_exchange, make_encode_chunk_fn
+    from ..operators.encode import (
+        _check_n_chunks,
+        _chunk_exchange,
+        _encode_args,
+        make_encode_chunk_fn,
+    )
 
     _check_n_chunks(n_chunks)
-    columns = columns or df.columns
+    columns, codecs = _encode_args(df.columns, columns, codecs, None)
     df2 = salted_chunk_column(df, n_chunks, url_col, target_rows_per_chunk)
-    fn = make_encode_chunk_fn(columns, codecs or {}, url_col)
+    fn = make_encode_chunk_fn(columns, codecs, url_col)
     return _chunk_exchange(df2.select(*columns, "__chunk"), n_chunks, fn)
 
 

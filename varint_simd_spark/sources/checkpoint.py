@@ -18,9 +18,12 @@ the parquet fallback behind the same interface:
   the manifest record under a ``_`` name and renames it into place.  No
   cached copy of the payload, no second pass over it; the driver holds
   O(this run) lineage rows, never O(store);
-* resume = left-anti join of planned chunk ids against the manifest: only
-  missing/failed chunks are re-encoded (idempotent — chunk membership is a
-  pure function of the data, see operators/encode.py).
+* resume = :meth:`EncodedStore.pending`, the planned chunk ids without a
+  manifest row, collected on the driver: only missing/failed chunks are
+  re-encoded (idempotent — chunk membership is a pure function of the
+  data, see operators/encode.py);
+* a writer whose chunk ids depend on parameters outside the data locks
+  them to the store root on first use (:func:`_lock_layout`).
 
 To run on a real cluster with Iceberg, pass ``iceberg_table=`` and the
 store uses ``writeTo(...).append()`` under the same API (config documented
@@ -29,6 +32,8 @@ in ICEBERG_CONF below; requires the spark-iceberg runtime jar).
 
 from __future__ import annotations
 
+import json
+import os
 import time
 import uuid
 
@@ -36,6 +41,18 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from ..operators.encode import (
+    _check_n_chunks,
+    _chunk_exchange,
+    _encode_args,
+    _local_frame,
+    encode_table_per_split,
+    make_encode_chunk_fn,
+)
+from ..operators.pyscan import parquet_scan_info
+from ..plans.partitioning import salted_chunk_column
 
 # Config a production deployment would add for the Iceberg path (public
 # Iceberg quickstart settings; unusable here without the runtime jar).
@@ -68,6 +85,7 @@ _MANIFEST_ARROW = pa.schema(
         ("committed_at", pa.float64()),
     ]
 )
+_CHUNK_IDS = T.StructType([T.StructField("chunk_id", T.LongType())])
 
 
 def _observe_lineage(enc: DataFrame, obs: Observation) -> DataFrame:
@@ -146,6 +164,29 @@ class EncodedStore:
         if not fs.exists(path):
             return self.spark.createDataFrame([], "chunk_id long")
         return self.manifest().select("chunk_id").distinct()
+
+    def pending(self, ids) -> list[int]:
+        """The chunk ids of ``ids`` without a manifest row, in ``ids`` order.
+
+        Commit state is small metadata that the driver reads directly: the
+        manifest's ``chunk_id`` is semi-joined against a broadcast Arrow
+        LocalRelation of ``ids`` and the matches are collected into a set
+        (O(len(ids)) on the driver, like a commit's lineage).  A missing
+        manifest path runs no job; a corrupt one raises, as in
+        :meth:`committed_chunks`."""
+        ids = [int(c) for c in ids]
+        fs, path = self._hadoop_path(self.manifest_path)
+        if not ids or not fs.exists(path):
+            return ids
+        planned = _local_frame(self.spark, [(c,) for c in ids], _CHUNK_IDS)
+        done = {
+            r[0]
+            for r in self.spark.read.schema(_CHUNK_IDS)
+            .parquet(self.manifest_path)
+            .join(F.broadcast(planned), "chunk_id", "left_semi")
+            .collect()
+        }
+        return [c for c in ids if c not in done]
 
     def manifest(self) -> DataFrame:
         return self.spark.read.parquet(self.manifest_path)
@@ -267,56 +308,38 @@ class EncodedStore:
         return enc.join(F.broadcast(chunks), on="chunk_id", how="left_semi")
 
 
-def _check_ingest_conf(store: EncodedStore, df: DataFrame, layout: dict) -> None:
-    """Lock the layout-determining ingest params (and the scan-split knobs
-    plus the input file list) to the store.  Per-split chunk ids hash
-    (partitionId, ordinal, first_key, n_rows), so a recovery re-run with a
-    different parallelism, maxPartitionBytes, split packing or input set
-    would re-key every chunk and silently duplicate all rows; fail fast
-    instead.  Both the python-side scan and Spark's ``maxSplitBytes`` pack
-    splits by ``defaultParallelism``; ``split_packing`` names the packer
-    (a lock written before the balanced python-side packer has none)."""
-    import hashlib
-    import json
-    import os
-
-    from ..operators.pyscan import parquet_scan_info
-
-    layout = dict(layout)
-    for k in ("spark.sql.files.maxPartitionBytes", "spark.sql.files.openCostInBytes"):
-        layout[k] = store.spark.conf.get(k)  # both have built-in defaults
-    layout["defaultParallelism"] = store.spark.sparkContext.defaultParallelism
-    layout["split_packing"] = "balanced" if parquet_scan_info(df) is not None else "spark"
-    files = sorted(df.inputFiles())
-    layout["input_files_sha"] = hashlib.sha256("\n".join(files).encode()).hexdigest()
-    layout["n_input_files"] = len(files)
-
+def _lock_layout(store: EncodedStore, name: str, layout: dict) -> None:
+    """Lock ``layout``, what a writer's chunk ids depend on besides the
+    data, to the store as ``<root>/_<name>_conf.json``: the first run
+    writes it (a temp file ``os.replace``d into place), and a later run
+    whose layout differs fails fast instead of re-keying a crashed run's
+    chunks and duplicating their rows.  The lock uses local-filesystem
+    calls, which on a remote root (``s3a://``, ``hdfs://``) would write a
+    dead local file, so such roots raise."""
     if "://" in store.root and not store.root.startswith("file:"):
-        # the layout lock is read/written with local-filesystem calls; on a
-        # remote store root (s3://, hdfs://) those would silently write a
-        # dead local file and never guard recovery re-runs.  A remote
-        # deployment should route this sidecar through the Hadoop
-        # FileSystem API; fail fast until it does.
         raise NotImplementedError(
-            f"ingest layout lock requires a local store root, got {store.root!r}"
+            f"{name} layout lock requires a local store root, got {store.root!r}"
         )
-    os.makedirs(store.root, exist_ok=True)
-    conf_path = f"{store.root}/_ingest_conf.json"
-    if os.path.exists(conf_path):
-        with open(conf_path) as f:
+    root = store.root.removeprefix("file:")
+    path = os.path.join(root, f"_{name}_conf.json")
+    if os.path.exists(path):
+        with open(path) as f:
             stored = json.load(f)
         diff = {k: (stored.get(k), v) for k, v in layout.items() if stored.get(k) != v}
         if diff:
             raise ValueError(
-                "ingest layout differs from this store's locked layout "
-                f"({diff}); per-split chunk ids are a function of the scan "
-                "layout, so re-ingesting with a different layout would "
-                "re-key every chunk and duplicate rows.  Use a fresh store "
-                "root, or re-run with the original layout to recover."
+                f"{name} layout differs from this store's locked layout "
+                f"({diff}); chunk ids are a function of this layout, so a "
+                "re-run with a different one would re-key every chunk and "
+                "duplicate rows.  Use a fresh store root, or re-run with the "
+                "original layout to recover."
             )
-    else:
-        with open(conf_path, "w") as f:
-            json.dump(layout, f)
+        return
+    os.makedirs(root, exist_ok=True)
+    tmp = os.path.join(root, f"_{name}_conf.{uuid.uuid4().hex}.tmp")
+    with open(tmp, "w") as f:
+        json.dump(layout, f)
+    os.replace(tmp, path)
 
 
 def ingest_to_store(
@@ -329,20 +352,30 @@ def ingest_to_store(
     """One-shot ingest: shuffle-free per-split encode straight into the
     store (zero exchanges — the 100 TB ingest configuration).
 
-    Crash safety: chunk ids are deterministic for a fixed input layout —
-    which ``_check_ingest_conf`` locks to the store (params + scan-split
-    knobs + input file list), failing fast on mismatch — so a re-run after
-    a crash overwrites its own partial chunk files (dynamic partition
-    overwrite) and commits once, no duplicates.  Unlike
-    :func:`encode_resumable` there is no chunk-level skip list (ids are
-    not known before the encode runs); for incremental arrival use the
+    Crash safety: per-split chunk ids hash (partitionId, ordinal,
+    first_key, n_rows), so they are deterministic for a fixed input
+    layout, which is locked to the store: the params, the scan-split knobs
+    (both the python-side scan and Spark's ``maxSplitBytes`` pack splits
+    by ``defaultParallelism``; ``split_packing`` names the packer, and a
+    lock written before the balanced packer has none) and the input file
+    list.  A re-run with another layout fails fast instead of re-keying
+    every chunk; a re-run after a crash overwrites its own partial chunk
+    files (dynamic partition overwrite) and commits once, no duplicates.
+    Unlike :func:`encode_resumable` there is no chunk-level skip list (ids
+    are not known before the encode runs); for incremental arrival use the
     streaming path, and re-cluster with ``compact_store`` when the
     url-hash layout is needed."""
-    from ..operators.encode import encode_table_per_split
+    import hashlib
 
-    _check_ingest_conf(
-        store, df, {"key": key, "target_chunk_bytes": target_chunk_bytes}
-    )
+    layout = {"key": key, "target_chunk_bytes": target_chunk_bytes}
+    for k in ("spark.sql.files.maxPartitionBytes", "spark.sql.files.openCostInBytes"):
+        layout[k] = store.spark.conf.get(k)  # both have built-in defaults
+    layout["defaultParallelism"] = store.spark.sparkContext.defaultParallelism
+    layout["split_packing"] = "balanced" if parquet_scan_info(df) is not None else "spark"
+    files = sorted(df.inputFiles())
+    layout["input_files_sha"] = hashlib.sha256("\n".join(files).encode()).hexdigest()
+    layout["n_input_files"] = len(files)
+    _lock_layout(store, "ingest", layout)
     enc = encode_table_per_split(
         df, key=key, codecs=codecs, target_chunk_bytes=target_chunk_bytes
     )
@@ -361,55 +394,23 @@ def encode_resumable(
     """Encode only the chunks not yet committed; returns (snapshot_id or
     None if nothing to do, number of chunks encoded this run).
 
-    The planned chunk universe is 0..n_chunks-1; the pending set is the
-    DataFrame anti-join of that range against the manifest, and the
-    big-side row filter is a BROADCAST SEMI-JOIN against it — no
-    driver-side id list in the plan, so the path holds at millions of
-    chunks (an ``isin`` literal of the pending ids would not).  Only the
-    commit's expected-chunk bookkeeping collects ids, and only while the
-    pending set is small enough to enumerate.  Chunks are placed as in
-    ``encode_table``."""
-    from ..operators.encode import _check_n_chunks, _chunk_exchange, make_encode_chunk_fn
-
+    The planned chunks are 0..n_chunks-1, placed as in ``encode_table``.
+    :meth:`EncodedStore.pending` returns the ones without a manifest row
+    to the driver, which holds O(pending) ids, as the commit's lineage
+    already does.  The encode keeps only their rows (``_chunk_exchange``
+    with ``only``), and each gets one manifest row, a zero row if it is
+    empty, so a resume converges."""
     _check_n_chunks(n_chunks)
-    spark = df.sparkSession
-    universe = spark.range(n_chunks).select(F.col("id").alias("chunk_id"))
-    # persist: one manifest scan + anti-join feeds the count, the
-    # bookkeeping collect, AND the semi-join below (also pins one
-    # consistent pending snapshot against concurrent committers)
-    pending_df = universe.join(store.committed_chunks(), "chunk_id", "left_anti").persist()
-    try:
-        n_pending = pending_df.count()
-        if n_pending == 0:
-            return None, 0
-        # expected-chunks manifest bookkeeping (zero-row entries for empty
-        # chunks): a driver list is metadata, not a plan element — enumerate
-        # it only while small; past that, empty-chunk re-planning is the
-        # lesser cost and the semi-join below stays fully distributed
-        pending = (
-            [r["chunk_id"] for r in pending_df.collect()] if n_pending <= 100_000 else None
+    columns, codecs = _encode_args(df.columns, None, codecs, None)
+    pending = store.pending(range(n_chunks))
+    if not pending:
+        return None, 0
+    if salted:
+        df2 = salted_chunk_column(df, n_chunks, key, target_rows_per_chunk)
+    else:
+        df2 = df.withColumn(
+            "__chunk", F.pmod(F.xxhash64(F.col(key)), F.lit(n_chunks)).cast("int")
         )
-
-        if salted:
-            from ..plans.partitioning import salted_chunk_column
-
-            df2 = salted_chunk_column(df, n_chunks, key, target_rows_per_chunk)
-        else:
-            df2 = df.withColumn(
-                "__chunk", F.pmod(F.xxhash64(F.col(key)), F.lit(n_chunks)).cast("int")
-            )
-
-        columns = df.columns
-        fn = make_encode_chunk_fn(columns, codecs or {}, key)
-        pending_ids = pending_df.select(F.col("chunk_id").cast("int").alias("__chunk"))
-        enc = _chunk_exchange(
-            df2.select(*columns, "__chunk").join(
-                F.broadcast(pending_ids), "__chunk", "left_semi"
-            ),
-            n_chunks,
-            fn,
-        )
-        snapshot_id = store.commit(enc, expected_chunks=pending)
-        return snapshot_id, int(n_pending)
-    finally:
-        pending_df.unpersist()
+    fn = make_encode_chunk_fn(columns, codecs, key)
+    enc = _chunk_exchange(df2.select(*columns, "__chunk"), n_chunks, fn, only=pending)
+    return store.commit(enc, expected_chunks=pending), len(pending)
