@@ -80,6 +80,22 @@ def test_salted_roundtrip(web_pages, spark):
     assert (out["url"] == src["url"]).all()
 
 
+def test_salted_columns_without_url(spark):
+    """``columns`` without the url: the salted encode still sorts each
+    chunk by url (carried along, never encoded), so the store holds the
+    ``text`` column only, at col_idx 0."""
+    wp = generate_web_pages(spark, 200)
+    enc = encode_table_salted(wp, n_chunks=2, columns=["text"])
+    assert {(r["column"], r["col_idx"]) for r in enc.select("column", "col_idx").collect()} == {
+        ("text", 0)
+    }
+    out = decode_table(enc).drop("__chunk")
+    assert out.columns == ["text"]
+    assert sorted(r["text"] for r in out.collect()) == sorted(
+        r["text"] for r in wp.select("text").collect()
+    )
+
+
 def test_resume_idempotent(web_pages, spark, tmp_path):
     store = EncodedStore(spark, str(tmp_path / "store"))
 

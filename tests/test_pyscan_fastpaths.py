@@ -405,6 +405,40 @@ def test_agg_decode_one_dir_store_parallel(spark, tmp_path):
     assert tasks["1"] == min(sc.defaultParallelism, n_files)
 
 
+def test_agg_decode_one_job_no_exchange(spark, tmp_path):
+    """On a ``partitionBy("chunk_id")`` store the ungrouped decode tier is
+    one job of one stage, with no Exchange in its executed plan, on both
+    scans; its answer is a local relation that collects with no job."""
+    from varint_simd_spark.operators import encode_table
+    from varint_simd_spark.operators.encode import (
+        _agg_decode_partials,
+        decode_aggregate,
+    )
+
+    df = spark.read.parquet(f"{SF_DIR}/lineitem.parquet")
+    store = str(tmp_path / "store")
+    encode_table(df, key="l_orderkey", n_chunks=8).write.partitionBy("chunk_id").parquet(store)
+    st = spark.read.parquet(store)
+    sc = spark.sparkContext
+    got = {}
+    for flag in ("0", "1"):
+        os.environ["VSS_PYSCAN"] = flag
+        group = f"agg_decode_one_job_{flag}"
+        sc.setJobGroup(group, "decode-tier aggregate")
+        try:
+            plan = _agg_decode_partials(st)._jdf.queryExecution().executedPlan().toString()
+            got[flag] = _rows(decode_aggregate(st, use_stats=False))
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            os.environ["VSS_PYSCAN"] = "1"
+        assert "Exchange" not in plan, plan
+        tr = sc.statusTracker()
+        jobs = tr.getJobIdsForGroup(group)
+        assert len(jobs) == 1, (flag, jobs)
+        assert len(tr.getJobInfo(jobs[0]).stageIds) == 1, flag
+    assert got["0"] == got["1"] and len(got["1"]) == len(df.columns)
+
+
 def test_null_int_partition_falls_back_to_jvm_scan(spark, tmp_path):
     """A ``partitionBy`` table with a null int partition value has a
     ``part=__HIVE_DEFAULT_PARTITION__`` directory: the python-side scan

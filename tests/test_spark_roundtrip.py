@@ -5,6 +5,7 @@ encoded size must be <= the reference encoder's output."""
 from __future__ import annotations
 
 import itertools
+import os
 
 import numpy as np
 import pandas as pd
@@ -694,9 +695,9 @@ def test_decode_aggregate_grouped_timestamp_group(spark):
 
 
 def test_small_results_collect_without_a_job(spark):
-    """The driver-built answers of the stats aggregates (plain and grouped)
-    and of verify_roundtrip are local relations: collecting them runs no
-    Spark job, and they equal the distributed answers."""
+    """The driver-built answers of the aggregates (stats, decode and
+    grouped stats) and of verify_roundtrip are local relations: collecting
+    them runs no Spark job, and they equal the distributed answers."""
     from varint_simd_spark.operators.encode import decode_aggregate
     from varint_simd_spark.operators.verify import verify_roundtrip
 
@@ -705,6 +706,7 @@ def test_small_results_collect_without_a_job(spark):
     cols = ["warc_ts", "text"]
     results = {
         "stats": decode_aggregate(enc),
+        "decode": decode_aggregate(enc, use_stats=False),
         "grouped": decode_aggregate(enc, columns=cols, group_by="lang"),
         "verify": verify_roundtrip(wp, decode_table(enc).drop("__chunk"), key="url"),
     }
@@ -717,9 +719,120 @@ def test_small_results_collect_without_a_job(spark):
         finally:
             sc.setLocalProperty("spark.jobGroup.id", None)
         assert sc.statusTracker().getJobIdsForGroup(f"local_{name}") == [], name
-    assert got["stats"] == [
-        tuple(r) for r in decode_aggregate(enc, use_stats=False).collect()]
+    assert got["stats"] == got["decode"]
     assert got["grouped"] == [tuple(r) for r in decode_aggregate(
         enc, columns=cols, group_by="lang", use_stats=False).collect()]
     assert [r[0] for r in got["verify"]] == sorted(c for c in wp.columns if c != "url")
     assert all(r[1] == r[2] == 3000 and r[3] for r in got["verify"])
+
+
+def test_decode_aggregate_exact_at_int64_extremes(spark, tmp_path):
+    """Values near +-2**63 spread over several tasks: the decode tier's
+    per-task and driver folds are exact Python-int sums beyond the int64
+    range and equal plain Spark's decimal(38,0) sum and min/max, with
+    nulls, an all-null integer chunk, f64 and string columns."""
+    from pyspark.sql import functions as F
+
+    from varint_simd_spark.operators.encode import (
+        _agg_decode_partials,
+        decode_aggregate,
+    )
+
+    n_chunks = 4
+    top, bottom = 2**63 - 1, -(2**63)
+    k = F.col("k")
+    df = spark.range(400).withColumnRenamed("id", "k").select(
+        k,
+        (F.lit(top) - k).alias("hi"),
+        (F.lit(bottom) + k * 3).alias("lo"),
+        # null in every row of chunk 0 and every 7th row elsewhere
+        F.when(
+            (F.pmod(F.xxhash64(k), F.lit(n_chunks)) != 0) & (k % 7 != 0),
+            F.lit(top) - k * 5,
+        ).alias("hole"),
+        (k / 3).alias("f"),
+        F.when(k % 5 != 0, F.concat(F.lit("s"), k.cast("string"))).alias("s"),
+    )
+    store = str(tmp_path / "extremes")
+    encode_table(
+        df, key="k", n_chunks=n_chunks, codecs={"lo": "rle_varint"}
+    ).write.partitionBy("chunk_id").parquet(store)
+    st = spark.read.parquet(store)
+    # the all-null chunk of "hole" is really there
+    hole_stats = [
+        r["stats"] for r in st.filter(F.col("column") == "hole").collect()
+    ]
+    assert sum('"min"' not in x for x in hole_stats) == 1, hole_stats
+
+    int_cols = ["k", "hi", "lo", "hole"]
+    exp = df.select(
+        *[F.sum(F.col(c).cast("decimal(38,0)")).alias(f"{c}_sum") for c in int_cols],
+        *[F.min(c).alias(f"{c}_min") for c in int_cols],
+        *[F.max(c).alias(f"{c}_max") for c in int_cols],
+        *[F.count(F.when(F.col(c).isNull(), 1)).alias(f"{c}_nn") for c in df.columns],
+        F.sum(F.octet_length("s")).alias("s_bytes"),
+    ).collect()[0]
+    assert exp["hi_sum"] > 2**63 and exp["lo_sum"] < -(2**63)
+    assert exp["hole_sum"] > 2**63
+    want = []
+    for c in sorted(df.columns):
+        if c in int_cols:
+            nums = tuple(str(exp[f"{c}_{a}"]) for a in ("sum", "min", "max"))
+        else:
+            nums = (None, None, None)
+        want.append(
+            (c, 400, exp[f"{c}_nn"], *nums, exp["s_bytes"] if c == "s" else None)
+        )
+    for flag in ("0", "1"):
+        os.environ["VSS_PYSCAN"] = flag
+        try:
+            n_partials = _agg_decode_partials(st).count()
+            got = [tuple(r) for r in decode_aggregate(st, use_stats=False).collect()]
+        finally:
+            os.environ["VSS_PYSCAN"] = "1"
+        assert n_partials > len(df.columns), flag  # folded over several tasks
+        assert got == want, flag
+
+
+def test_decode_aggregate_mixed_tier_sorted(spark, tmp_path):
+    """A store where one column has no stats: the stats tier answers the
+    others, the decode tier that column, merged on the driver — equal to
+    ``use_stats=False`` row for row and sorted by column."""
+    from pyspark.sql import functions as F
+
+    from varint_simd_spark.operators.encode import decode_aggregate
+
+    wp = generate_web_pages(spark, 1500, seed=3)
+    store = str(tmp_path / "mixed")
+    encode_table(wp, key="url", n_chunks=4).write.partitionBy("chunk_id").parquet(store)
+    st = spark.read.parquet(store).withColumn(
+        "stats",
+        F.when(F.col("column") == "warc_ts", F.lit(None)).otherwise(F.col("stats")),
+    )
+    got = [tuple(r) for r in decode_aggregate(st).collect()]
+    assert got == [tuple(r) for r in decode_aggregate(st, use_stats=False).collect()]
+    assert [r[0] for r in got] == sorted(wp.columns)
+    ts = next(r for r in got if r[0] == "warc_ts")
+    assert ts[1] == 1500 and ts[3] is not None
+
+
+def test_column_meta_sorted_on_driver(spark, tmp_path):
+    """column_meta runs at most two jobs (the distinct's shuffle and its
+    result; no range-sampling sort) and returns the rows a Spark
+    ``orderBy("col_idx")`` gives."""
+    from varint_simd_spark.operators import column_meta
+
+    store = str(tmp_path / "meta")
+    encode_table(generate_web_pages(spark, 1000, seed=9), key="url", n_chunks=4) \
+        .write.partitionBy("chunk_id").parquet(store)
+    st = spark.read.parquet(store)
+    sc = spark.sparkContext
+    sc.setJobGroup("column_meta", "column_meta")
+    try:
+        got = column_meta(st)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup("column_meta")) <= 2
+    want = st.select("col_idx", "column", "dtype").distinct().orderBy("col_idx").collect()
+    assert got == want and len(got) == len(generate_web_pages(spark, 10).columns)
+

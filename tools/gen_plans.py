@@ -26,6 +26,7 @@ def main():
         encode_table_bucketed,
     )
     from varint_simd_spark.operators.encode import (
+        _agg_decode_partials,
         decode_aggregate,
         encode_table_per_split,
     )
@@ -86,7 +87,8 @@ def main():
         decode_table_colocated(enc, meta=meta, columns=["url", "text"],
                                where=[("lang", "==", "de")], check_layout=False)
         .agg(F.sum(F.length("text"))))
-    cap("decode_web_pages_agg_pushdown", decode_aggregate(enc, use_stats=False))
+    # the ungrouped decode tier's one stage (its answer is a local relation)
+    cap("decode_web_pages_agg_pushdown", _agg_decode_partials(enc))
     # grouped decode-path aggregate (the use_stats=False grouped tier)
     cap("decode_agg_grouped_decode_path",
         decode_aggregate(enc, columns=["url", "text"], group_by="lang",

@@ -39,6 +39,7 @@ materialization fits an executor core's memory (~32-64 MB raw per chunk).
 from __future__ import annotations
 
 import json
+import operator
 import zlib
 from typing import NamedTuple
 
@@ -947,11 +948,12 @@ def encode_table_bucketed(
 
 
 def column_meta(enc: DataFrame) -> list:
-    """(col_idx, column, dtype) rows describing an encoded table — one tiny
-    planning job; pass to decode_table to avoid re-running it."""
-    return (
-        enc.select("col_idx", "column", "dtype").distinct().orderBy("col_idx").collect()
-    )
+    """(col_idx, column, dtype) rows describing an encoded table, sorted by
+    (col_idx, column, dtype) — one tiny planning query; pass to decode_table
+    to avoid re-running it.  The rows are sorted on the driver: a Spark
+    orderBy would add a range-sampling job and a second exchange."""
+    rows = enc.select("col_idx", "column", "dtype").distinct().collect()
+    return sorted(rows, key=lambda r: (r["col_idx"], r["column"], r["dtype"]))
 
 
 class _EncRow(NamedTuple):
@@ -1352,14 +1354,17 @@ _GAGG_SCHEMA = T.StructType(
 )
 
 
+def _rows_to_arrow(rows, schema: T.StructType) -> pa.Table:
+    return pa.Table.from_pylist(
+        [dict(zip(schema.names, r)) for r in rows], schema=to_arrow_schema(schema)
+    )
+
+
 def _local_frame(spark, rows: list[tuple], schema: T.StructType) -> DataFrame:
     """Driver-side result rows as a DataFrame over a LocalRelation.  Built
     from Arrow, its ``collect()`` runs no Spark job; built from a list of
     rows, it would be a Python RDD that runs a Python task per action."""
-    table = pa.Table.from_pylist(
-        [dict(zip(schema.names, r)) for r in rows], schema=to_arrow_schema(schema)
-    )
-    return spark.createDataFrame(table, schema=schema)
+    return spark.createDataFrame(_rows_to_arrow(rows, schema), schema=schema)
 
 
 def _stats_aggregate(enc: DataFrame) -> DataFrame:
@@ -1559,8 +1564,8 @@ def _agg_row_analytic(tag: str, codec: str, payload, params: dict, nv: int):
 
 
 def _combine_partials(partials: DataFrame, *keys: str) -> DataFrame:
-    """One native groupBy combining decode-path partials exactly (decimal
-    sums, long min/max)."""
+    """One native groupBy combining the grouped decode tier's partials
+    exactly (decimal sums, long min/max); its group count is unbounded."""
     return partials.groupBy(*keys).agg(
         F.sum("n_rows").alias("n_rows"),
         F.sum("n_nulls").alias("n_nulls"),
@@ -1571,20 +1576,43 @@ def _combine_partials(partials: DataFrame, *keys: str) -> DataFrame:
     )
 
 
-def _agg_decode_path(enc: DataFrame) -> DataFrame:
-    """Decode-path aggregation: per-(chunk, column) partials are computed
-    INSIDE the decode UDF, so no decoded rows ever cross the Python->JVM
-    boundary — the UDF output is one tiny row per encoded chunk row.
-    Chunks whose (dtype, codec) admits it are aggregated straight from the
-    payload structure (:func:`_agg_row_analytic`) without materializing
-    the decoded column at all; the rest decode and reuse the encode-side
-    exact statistics (:func:`_zone_map_dict`).  Partials need no chunk
-    colocation, so the python-side scan packs files by size (one wave of
-    tasks), not by chunk directory."""
+# how _fold_agg_rows merges n_rows, n_nulls, sum, min, max and sum_bytes
+_AGG_FOLD = (operator.add, operator.add, operator.add, min, max, operator.add)
 
-    def fn(batches):
+
+def _fold_agg_rows(rows) -> list[tuple]:
+    """Exact fold of ``_AGG_SCHEMA`` rows per column with SQL semantics:
+    nulls are skipped and an all-null aggregate stays null.  Numbers come
+    as ints or decimal strings; sums are Python ints, so no width limit.
+    Returns one row per column, sorted by column, with sum/min/max as
+    strings.  The ungrouped decode tier folds its chunk partials per task
+    and the task rows on the driver with it."""
+    acc: dict[str, list] = {}
+    for column, *vals in rows:
+        cur = acc.setdefault(column, [None] * len(_AGG_FOLD))
+        for i, (op, a, b) in enumerate(zip(_AGG_FOLD, cur, vals)):
+            if b is not None:
+                cur[i] = int(b) if a is None else op(a, int(b))
+    return [
+        (c, n, nn, *(None if v is None else str(v) for v in (s, lo, hi)), nb)
+        for c, (n, nn, s, lo, hi, nb) in sorted(acc.items())
+    ]
+
+
+def _agg_decode_partials(enc: DataFrame) -> DataFrame:
+    """The ungrouped decode tier's one Spark stage (lazy): each task folds
+    the partials of every chunk row it reads and emits one
+    ``_AGG_SCHEMA`` row per column, so no decoded rows and no per-chunk
+    rows cross the Python->JVM boundary.  Chunks whose (dtype, codec)
+    admits it are aggregated straight from the payload structure
+    (:func:`_agg_row_analytic`) without materializing the decoded column
+    at all; the rest decode and reuse the encode-side exact statistics
+    (:func:`_zone_map_dict`).  Partials need no chunk colocation, so the
+    python-side scan packs files by size (one wave of tasks), not by
+    chunk directory."""
+
+    def chunk_partials(batches):
         for batch in batches:
-            out = {k.name: [] for k in _AGG_SCHEMA.fields}
             for r in _iter_enc_rows(batch):
                 got = _agg_row_analytic(r.dtype, r.codec, r.payload, r.params, r.n_values)
                 if got is None:
@@ -1594,28 +1622,33 @@ def _agg_decode_path(enc: DataFrame) -> DataFrame:
                         decode_column_arrow(r.dtype, r.codec, r.payload, r.params, r.n_values),
                         r.dtype,
                     )
-                    lo, hi = st.get("min"), st.get("max")
                     got = (
-                        st["n_nulls"], st["sum"],
-                        None if lo is None else str(lo),
-                        None if hi is None else str(hi),
-                        None,
+                        st["n_nulls"], st["sum"], st.get("min"), st.get("max"), None
                     )
-                for k, v in zip(out, (r.column, r.n_values) + tuple(got)):
-                    out[k].append(v)
-            yield from pa.table(out, schema=to_arrow_schema(_AGG_SCHEMA)).to_batches()
+                yield (r.column, r.n_values) + tuple(got)
+
+    def fn(batches):
+        yield from _rows_to_arrow(
+            _fold_agg_rows(chunk_partials(batches)), _AGG_SCHEMA
+        ).to_batches()
 
     scan = parquet_scan_info(enc)
     if scan is not None:
-        partials = pyscan_map_in_arrow(
+        return pyscan_map_in_arrow(
             enc.sparkSession, scan, fn, _AGG_SCHEMA,
             columns=["chunk_id", "column", "dtype", "codec", "payload",
                      "params", "n_values", "crc32"],
             group="split",
         )
-    else:
-        partials = enc.mapInArrow(fn, schema=_AGG_SCHEMA)
-    return _combine_partials(partials, "column")
+    return enc.mapInArrow(fn, schema=_AGG_SCHEMA)
+
+
+def _agg_decode_path(enc: DataFrame) -> list[tuple]:
+    """The ungrouped decode tier's answer rows, sorted by column: one job
+    collects :func:`_agg_decode_partials`'s O(tasks x columns) rows and
+    the driver folds them."""
+    t = _agg_decode_partials(enc).toArrow()
+    return _fold_agg_rows(zip(*(t.column(n).to_pylist() for n in _AGG_SCHEMA.names)))
 
 
 def _degroup_null_key(df: DataFrame) -> DataFrame:
@@ -1698,8 +1731,16 @@ def decode_aggregate(
     costs O(chunk count), not O(data).  The job doubles as the
     availability check: columns whose chunks lack the needed stats (older
     stores) are detected from the SAME job's ``__ok`` flag and re-answered
-    through the decode path — no separate pre-check scan.  The stats path
-    therefore runs its (single, tiny) metadata job eagerly.
+    through the decode path — no separate pre-check scan.
+
+    Decode path (``use_stats=False``, and the fallback above): one Python
+    stage whose tasks each fold every chunk they read into one exact
+    partial row per column; the driver collects those rows and folds them.
+
+    Both ungrouped tiers run their one job eagerly (plus the decode job
+    for a fallback) and return a local relation: collecting it runs no
+    job.  The driver holds O(tasks x columns) partial rows.  Sums are
+    exact Python ints, with no ``decimal(38,0)`` limit.
 
     ``group_by``: GROUP BY a declared group column.  When the table was
     encoded with ``stats_group_by=<same column>``, the grouped fast path
@@ -1707,7 +1748,8 @@ def decode_aggregate(
     pruned, O(chunks x groups)); otherwise — or for columns/chunks whose
     grouped stats are absent — one applyInArrow per chunk computes exact
     per-group partials from the payloads (no decoded rows cross the
-    Python->JVM boundary).  Grouped results carry ``group`` (string; SQL
+    Python->JVM boundary), combined by a Spark groupBy, since the group
+    count is unbounded.  Grouped results carry ``group`` (string; SQL
     NULL for null group values) plus per-group exact min/max for
     integer-family columns.
 
@@ -1773,22 +1815,18 @@ def decode_aggregate(
         return good_df
 
     if not use_stats:
-        return _agg_decode_path(enc).orderBy("column")
+        return _local_frame(enc.sparkSession, _agg_decode_path(enc), _AGG_SCHEMA)
 
     rows = _stats_aggregate(enc).collect()  # the ONE metadata job
     bad = sorted(r["column"] for r in rows if r["__ok"] != 1)
+    out_rows = [tuple(r)[:-1] for r in rows if r["__ok"] == 1]
+    if bad:
+        out_rows += _agg_decode_path(enc.filter(F.col("column").isin(bad)))
     # sort driver-side: a Spark orderBy on the tiny local result would
     # spin up a range-partitioning sample job + shuffle (measured ~0.9 s
     # of pure scheduling for 13 rows)
-    good_rows = sorted(
-        (tuple(r)[:-1] for r in rows if r["__ok"] == 1), key=lambda t: t[0]
-    )
-    good_df = _local_frame(enc.sparkSession, good_rows, _AGG_SCHEMA)
-    if bad:
-        good_df = good_df.unionByName(
-            _agg_decode_path(enc.filter(F.col("column").isin(bad)))
-        ).orderBy("column")
-    return good_df
+    out_rows.sort(key=lambda t: t[0])
+    return _local_frame(enc.sparkSession, out_rows, _AGG_SCHEMA)
 
 
 def prune_chunks_by_range(

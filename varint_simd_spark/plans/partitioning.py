@@ -95,7 +95,9 @@ def encode_table_salted(
     columns, codecs = _encode_args(df.columns, columns, codecs, None)
     df2 = salted_chunk_column(df, n_chunks, url_col, target_rows_per_chunk)
     fn = make_encode_chunk_fn(columns, codecs, url_col)
-    return _chunk_exchange(df2.select(*columns, "__chunk"), n_chunks, fn)
+    # the chunk sort key rides along as in encode_table; it is never encoded
+    select_cols = list(columns) + ([url_col] if url_col not in columns else [])
+    return _chunk_exchange(df2.select(*select_cols, "__chunk"), n_chunks, fn)
 
 
 def skew_report(df: DataFrame, url_col: str = "url", top_k: int = 20) -> DataFrame:
