@@ -5,6 +5,7 @@ paths, and the numpy XXH64 kernel must match Spark's xxhash64 bit for bit
 
 from __future__ import annotations
 
+import itertools
 import os
 import random
 
@@ -406,37 +407,52 @@ def test_agg_decode_one_dir_store_parallel(spark, tmp_path):
 
 
 def test_agg_decode_one_job_no_exchange(spark, tmp_path):
-    """On a ``partitionBy("chunk_id")`` store the ungrouped decode tier is
-    one job of one stage, with no Exchange in its executed plan, on both
-    scans; its answer is a local relation that collects with no job."""
+    """On a ``partitionBy("chunk_id")`` store the ungrouped decode tier
+    and both stats tiers are each one job of one stage, with no Exchange
+    in the stage's executed plan, on both scans; their answers are local
+    relations that collect with no job."""
     from varint_simd_spark.operators import encode_table
     from varint_simd_spark.operators.encode import (
         _agg_decode_partials,
+        _agg_stats_partials,
         decode_aggregate,
     )
 
     df = spark.read.parquet(f"{SF_DIR}/lineitem.parquet")
     store = str(tmp_path / "store")
-    encode_table(df, key="l_orderkey", n_chunks=8).write.partitionBy("chunk_id").parquet(store)
+    encode_table(df, key="l_orderkey", n_chunks=8, stats_group_by="l_returnflag") \
+        .write.partitionBy("chunk_id").parquet(store)
     st = spark.read.parquet(store)
+    tiers = {
+        "decode": (_agg_decode_partials, dict(use_stats=False)),
+        "stats": (_agg_stats_partials, {}),
+        "grouped_stats": (
+            lambda enc: _agg_stats_partials(enc, "l_returnflag"),
+            dict(group_by="l_returnflag"),
+        ),
+    }
     sc = spark.sparkContext
     got = {}
-    for flag in ("0", "1"):
+    for flag, (tier, (stage, kwargs)) in itertools.product(("0", "1"), tiers.items()):
         os.environ["VSS_PYSCAN"] = flag
-        group = f"agg_decode_one_job_{flag}"
-        sc.setJobGroup(group, "decode-tier aggregate")
+        group = f"agg_one_job_{tier}_{flag}"
+        sc.setJobGroup(group, f"{tier} aggregate")
         try:
-            plan = _agg_decode_partials(st)._jdf.queryExecution().executedPlan().toString()
-            got[flag] = _rows(decode_aggregate(st, use_stats=False))
+            plan = stage(st)._jdf.queryExecution().executedPlan().toString()
+            got[tier, flag] = _rows(decode_aggregate(st, **kwargs))
         finally:
             sc.setLocalProperty("spark.jobGroup.id", None)
             os.environ["VSS_PYSCAN"] = "1"
-        assert "Exchange" not in plan, plan
+        assert "Exchange" not in plan, (tier, flag, plan)
         tr = sc.statusTracker()
         jobs = tr.getJobIdsForGroup(group)
-        assert len(jobs) == 1, (flag, jobs)
-        assert len(tr.getJobInfo(jobs[0]).stageIds) == 1, flag
-    assert got["0"] == got["1"] and len(got["1"]) == len(df.columns)
+        assert len(jobs) == 1, (tier, flag, jobs)
+        assert len(tr.getJobInfo(jobs[0]).stageIds) == 1, (tier, flag)
+    for tier in tiers:
+        assert got[tier, "0"] == got[tier, "1"], tier
+    assert got["stats", "1"] == got["decode", "1"]
+    assert len(got["decode", "1"]) == len(df.columns)
+    assert len(got["grouped_stats", "1"]) > len(df.columns)
 
 
 def test_null_int_partition_falls_back_to_jvm_scan(spark, tmp_path):

@@ -24,6 +24,31 @@ def web_pages(spark):
     return df
 
 
+def _stats_stage_reads(spark, monkeypatch, store, group_by=None):
+    """What the stats tiers' one stage reads of ``store``: the JVM scan's
+    ReadSchema and the column lists requested from the python-side scan."""
+    import re
+
+    from varint_simd_spark.operators import encode as E
+
+    requested = []
+    real = E.pyscan_map_in_arrow
+
+    def spy(*args, **kwargs):
+        requested.append(kwargs["columns"])
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(E, "pyscan_map_in_arrow", spy)
+    E._agg_stats_partials(spark.read.parquet(store), group_by)
+    os.environ["VSS_PYSCAN"] = "0"
+    try:
+        stage = E._agg_stats_partials(spark.read.parquet(store), group_by)
+        plan = stage._jdf.queryExecution().executedPlan().toString()
+    finally:
+        os.environ["VSS_PYSCAN"] = "1"
+    return re.search(r"ReadSchema: .*", plan).group(0), requested
+
+
 def test_web_pages_deterministic(spark):
     a = generate_web_pages(spark, 500, seed=42).orderBy("url").collect()
     b = generate_web_pages(spark, 500, seed=42).orderBy("url").collect()
@@ -421,14 +446,14 @@ def test_decode_aggregate_pushdown_exact(spark):
     assert agg["warc_ts"]["n_nulls"] == 0
 
 
-def test_decode_aggregate_stats_path_matches_decode_and_prunes_payload(spark, tmp_path):
+def test_decode_aggregate_stats_path_matches_decode_and_prunes_payload(
+    spark, tmp_path, monkeypatch
+):
     """The metadata fast path (per-chunk exact-sum/n_nulls stats written at
     encode) must return exactly what the payload-decode path returns —
-    including nullable ts and all-null columns — while its parquet scan
-    never reads the payload column (footer-statistics aggregation:
-    O(chunk count) at any data size)."""
-    import re
-
+    including nullable ts, f64 (fractional zone maps) and all-null columns
+    — while its stage never reads the payload column on either scan
+    (footer-statistics aggregation: O(chunk count) at any data size)."""
     from pyspark.sql import functions as F
 
     from varint_simd_spark.operators.encode import decode_aggregate
@@ -447,33 +472,24 @@ def test_decode_aggregate_stats_path_matches_decode_and_prunes_payload(spark, tm
 
     store = str(tmp_path / "aggstore")
     enc.write.partitionBy("chunk_id").parquet(store)
-    # the stats path's single metadata job must scan WITHOUT the payload
-    # column (footer-statistics aggregation); the job now also carries the
-    # per-column availability flag, so assert on that job's plan
-    from varint_simd_spark.operators.encode import _stats_aggregate
-
-    stats_job = _stats_aggregate(spark.read.parquet(store))
-    plan = stats_job._jdf.queryExecution().executedPlan().toString()
-    rs = re.search(r"ReadSchema: .*", plan).group(0)
+    # the stats tier's one stage (which also carries the per-column
+    # availability flag) must read WITHOUT the payload column
+    rs, requested = _stats_stage_reads(spark, monkeypatch, store)
     assert "payload" not in rs, rs
+    assert len(requested) == 1 and "payload" not in requested[0], requested
     agg = decode_aggregate(spark.read.parquet(store))
     assert [tuple(r) for r in agg.orderBy("column").collect()] == fast
 
 
-def test_decode_aggregate_grouped_stats_matches_decode_and_sql(spark, tmp_path):
+def test_decode_aggregate_grouped_stats_matches_decode_and_sql(spark, tmp_path, monkeypatch):
     """Grouped aggregate pushdown: per-chunk per-group partials written at
     encode answer GROUP BY from metadata alone; the grouped stats path,
     the grouped decode path, and a plain Spark groupBy must all agree —
     including null groups, nullable value columns, and an
     int64-overflowing sum domain (epoch micros)."""
-    import re
-
     from pyspark.sql import functions as F
 
-    from varint_simd_spark.operators.encode import (
-        _grouped_stats_aggregate,
-        decode_aggregate,
-    )
+    from varint_simd_spark.operators.encode import decode_aggregate
 
     wp = generate_web_pages(spark, 20_000, seed=7).select(
         "url",
@@ -520,13 +536,12 @@ def test_decode_aggregate_grouped_stats_matches_decode_and_sql(spark, tmp_path):
         assert r[3] == e["nn"] and r[4] == str(e["s"])
         assert r[5] == str(e["mn"]) and r[6] == str(e["mx"])
 
-    # the grouped metadata job must never read the payload column
+    # the grouped stats tier's stage must never read the payload column
     store = str(tmp_path / "gaggstore")
     enc.write.partitionBy("chunk_id").parquet(store)
-    job = _grouped_stats_aggregate(spark.read.parquet(store), "lang")
-    plan = job._jdf.queryExecution().executedPlan().toString()
-    rs = re.search(r"ReadSchema: .*", plan).group(0)
+    rs, requested = _stats_stage_reads(spark, monkeypatch, store, "lang")
     assert "payload" not in rs, rs
+    assert len(requested) == 1 and "payload" not in requested[0], requested
 
 
 def test_decode_aggregate_grouped_falls_back_without_stats(spark):
@@ -548,6 +563,34 @@ def test_decode_aggregate_grouped_falls_back_without_stats(spark):
     for g, e in exp.items():
         r = got[(g, "text")]
         assert r["n_rows"] == e["n"] and r["sum_bytes"] == e["b"]
+
+
+def test_decode_aggregate_grouped_cap_falls_back(spark, monkeypatch):
+    """When the grouped stats tier's task rows exceed
+    MAX_COLLECTED_GROUP_ROWS, the grouped decode tier answers instead:
+    the same rows as ``use_stats=False``."""
+    from varint_simd_spark.operators import encode as E
+
+    wp = generate_web_pages(spark, 3000, seed=17)
+    enc = encode_table(wp, key="url", n_chunks=4, stats_group_by="lang")
+    cols = ["warc_ts", "text"]
+    want = [tuple(r) for r in E.decode_aggregate(
+        enc, columns=cols, group_by="lang", use_stats=False).collect()]
+    assert [tuple(r) for r in E.decode_aggregate(
+        enc, columns=cols, group_by="lang").collect()] == want
+    calls = []
+    real = E._agg_decode_path_grouped
+
+    def spy(enc, group_by, out_columns):
+        calls.append(list(out_columns))
+        return real(enc, group_by, out_columns)
+
+    monkeypatch.setattr(E, "_agg_decode_path_grouped", spy)
+    monkeypatch.setattr(E, "MAX_COLLECTED_GROUP_ROWS", 1)
+    got = [tuple(r) for r in E.decode_aggregate(
+        enc, columns=cols, group_by="lang").collect()]
+    assert calls == [cols], calls
+    assert got == want and len(want) > 2
 
 
 def test_verify_roundtrip_detects_mismatch(spark):
@@ -631,8 +674,9 @@ def test_filtered_decode_matches_native_filter_with_nulls(spark):
 def test_decode_aggregate_grouped_adversarial_keys(spark):
     """Grouped stats ride a JSON map keyed by group VALUES — quotes,
     backslashes, unicode, tabs, empty strings, JSON-lookalikes, and null
-    groups must all survive the encode-side json.dumps -> Spark from_json
-    round trip and agree with the decode path and a plain groupBy."""
+    groups must all survive the encode-side json.dumps -> stats-stage
+    json.loads round trip (and the NUL escape of null and NUL-prefixed
+    keys) and agree with the decode path and a plain groupBy."""
     from pyspark.sql import functions as F
 
     from varint_simd_spark.operators.encode import decode_aggregate
@@ -727,10 +771,11 @@ def test_small_results_collect_without_a_job(spark):
 
 
 def test_decode_aggregate_exact_at_int64_extremes(spark, tmp_path):
-    """Values near +-2**63 spread over several tasks: the decode tier's
-    per-task and driver folds are exact Python-int sums beyond the int64
-    range and equal plain Spark's decimal(38,0) sum and min/max, with
-    nulls, an all-null integer chunk, f64 and string columns."""
+    """Values near +-2**63 spread over several tasks: the per-task and
+    driver folds of the decode tier and of the stats tier are exact
+    Python-int sums beyond the int64 range and equal plain Spark's
+    decimal(38,0) sum and min/max, with nulls, an all-null integer chunk,
+    f64 and string columns."""
     from pyspark.sql import functions as F
 
     from varint_simd_spark.operators.encode import (
@@ -788,10 +833,12 @@ def test_decode_aggregate_exact_at_int64_extremes(spark, tmp_path):
         try:
             n_partials = _agg_decode_partials(st).count()
             got = [tuple(r) for r in decode_aggregate(st, use_stats=False).collect()]
+            got_stats = [tuple(r) for r in decode_aggregate(st).collect()]
         finally:
             os.environ["VSS_PYSCAN"] = "1"
         assert n_partials > len(df.columns), flag  # folded over several tasks
         assert got == want, flag
+        assert got_stats == want, flag
 
 
 def test_decode_aggregate_mixed_tier_sorted(spark, tmp_path):
@@ -814,6 +861,28 @@ def test_decode_aggregate_mixed_tier_sorted(spark, tmp_path):
     assert [r[0] for r in got] == sorted(wp.columns)
     ts = next(r for r in got if r[0] == "warc_ts")
     assert ts[1] == 1500 and ts[3] is not None
+
+
+def test_decode_aggregate_store_without_stats_field(spark, tmp_path):
+    """A store whose schema predates the stats field: the ungrouped and
+    the grouped stats tiers answer every column through the decode tier,
+    equal to ``use_stats=False``."""
+    from varint_simd_spark.operators.encode import decode_aggregate
+
+    wp = generate_web_pages(spark, 1500, seed=5)
+    store = str(tmp_path / "nostats")
+    encode_table(wp, key="url", n_chunks=4).drop("stats") \
+        .write.partitionBy("chunk_id").parquet(store)
+    st = spark.read.parquet(store)
+    assert "stats" not in st.columns
+    got = [tuple(r) for r in decode_aggregate(st).collect()]
+    assert got == [tuple(r) for r in decode_aggregate(st, use_stats=False).collect()]
+    assert [r[0] for r in got] == sorted(wp.columns)
+    cols = ["text", "warc_ts"]
+    got = [tuple(r) for r in decode_aggregate(st, columns=cols, group_by="lang").collect()]
+    assert got == [tuple(r) for r in decode_aggregate(
+        st, columns=cols, group_by="lang", use_stats=False).collect()]
+    assert {r[1] for r in got} == set(cols)
 
 
 def test_column_meta_sorted_on_driver(spark, tmp_path):

@@ -1,9 +1,12 @@
 """Capture .explain('formatted') for every bench query shape into
 <outdir>/<query>_<suffix>.txt (e.g. plans/r07/<query>_after.txt).  Run from
 the repo whose code should produce the plans:
-`python tools/gen_plans.py <suffix> <outdir>`."""
+`python tools/gen_plans.py <suffix> <outdir>`.  Spark's expression ids
+(``#N``) and ``plan_id=N`` are masked, so two checkouts' dumps of the same
+plan are equal even when earlier steps built a different number of plans."""
 
 import os
+import re
 import shutil
 import sys
 import tempfile
@@ -27,6 +30,7 @@ def main():
     )
     from varint_simd_spark.operators.encode import (
         _agg_decode_partials,
+        _agg_stats_partials,
         decode_aggregate,
         encode_table_per_split,
     )
@@ -48,8 +52,10 @@ def main():
 
     def cap(name, df):
         p = os.path.join(outdir, f"{name}_{suffix}.txt")
+        plan = df._jdf.queryExecution().explainString(jmode)
+        plan = re.sub(r"plan_id=\d+", "plan_id=N", re.sub(r"#\d+", "#N", plan))
         with open(p, "w") as f:
-            f.write(df._jdf.queryExecution().explainString(jmode))
+            f.write(plan)
         print("wrote", p)
 
     cap("encode_web_pages", encode_table(wp, key="url", n_chunks=64))
@@ -89,6 +95,9 @@ def main():
         .agg(F.sum(F.length("text"))))
     # the ungrouped decode tier's one stage (its answer is a local relation)
     cap("decode_web_pages_agg_pushdown", _agg_decode_partials(enc))
+    # the stats tiers' one stage, ungrouped and grouped (metadata only)
+    cap("decode_web_pages_agg_stats", _agg_stats_partials(enc))
+    cap("decode_web_pages_agg_grouped_stats", _agg_stats_partials(enc, "lang"))
     # grouped decode-path aggregate (the use_stats=False grouped tier)
     cap("decode_agg_grouped_decode_path",
         decode_aggregate(enc, columns=["url", "text"], group_by="lang",

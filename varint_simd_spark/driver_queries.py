@@ -360,9 +360,10 @@ def q_decode_aggregate_by_lang_documents(spark, sf_dir):
     """GROUPED aggregate pushdown: the table is encoded with
     ``stats_group_by="lang"`` so every chunk row carries exact per-group
     partials in its stats JSON — ``decode_aggregate(group_by="lang")``
-    answers the training-pipeline staple "rows/nulls/sum by lang" as ONE
-    native JVM job over metadata (payload pruned from the scan,
-    O(chunks x groups) at any data size)."""
+    answers the training-pipeline staple "rows/nulls/sum by lang" from
+    metadata alone: one Python stage reads the stats columns (never the
+    payload) and folds the per-group partials per task, and the driver
+    folds the task rows — O(chunks x groups) at any data size."""
     from .operators.encode import decode_aggregate
 
     df = _read(spark, sf_dir, "documents")

@@ -30,6 +30,10 @@ into a RecordBatch (projection plus the three-tier ``where``).
 through ``mapInArrow`` with no exchange.  The fragment merge and the
 decode-path aggregates read through the same reader.
 
+Aggregates have one exact fold, :func:`_fold_agg_rows`: the decode tier
+and both stats tiers of :func:`decode_aggregate` turn each chunk row into
+one partial row, fold them per task and fold the task rows on the driver.
+
 Arrow end to end: Spark ships record batches over Arrow IPC, the codec
 layer reads the Arrow buffers directly, and every kernel is whole-column
 numpy — no per-row Python.  Size ``n_chunks`` so a chunk's Arrow
@@ -223,9 +227,13 @@ MAX_STAT_GROUPS = 64
 # (converted back to a real SQL NULL group by decode_aggregate)
 NULL_GROUP_KEY = "\u0000"
 
-# driver-side bound on the grouped-stats fast path: at most this many
-# (column, group) combination rows are ever collected; beyond it the
-# grouped aggregate falls back to the distributed decode path
+# bound on the grouped stats tier: when the task-folded partial rows the
+# driver collects number more than this, the grouped aggregate falls back
+# to the distributed decode tier.  The collected rows are at least the
+# combined (group, column) rows, so the fallback can only start earlier
+# than a bound on those would.  Each task emits at most this many + 1
+# rows, so the driver holds at most (tasks) x (this + 1) rows; a Spark
+# limit() on the collect would bound it to this + 1 but add a stage.
 MAX_COLLECTED_GROUP_ROWS = 65536
 
 
@@ -1353,6 +1361,11 @@ _GAGG_SCHEMA = T.StructType(
     ]
 )
 
+# one partial row of every aggregate tier: the answer row keyed by
+# (group, column), group null when ungrouped, plus ``ok``, 0 when a
+# chunk's stats lack what the answer needs
+_PART_SCHEMA = T.StructType(_GAGG_SCHEMA.fields + [T.StructField("ok", T.LongType())])
+
 
 def _rows_to_arrow(rows, schema: T.StructType) -> pa.Table:
     return pa.Table.from_pylist(
@@ -1365,108 +1378,6 @@ def _local_frame(spark, rows: list[tuple], schema: T.StructType) -> DataFrame:
     from Arrow, its ``collect()`` runs no Spark job; built from a list of
     rows, it would be a Python RDD that runs a Python task per action."""
     return spark.createDataFrame(_rows_to_arrow(rows, schema), schema=schema)
-
-
-def _stats_aggregate(enc: DataFrame) -> DataFrame:
-    """The single metadata job of the stats fast path: per-column exact
-    aggregates from the per-chunk stats JSON, plus a ``__ok`` flag (1 iff
-    EVERY chunk row of the column carries the stats the dtype needs) so
-    the caller can fall back per column without a separate pre-check scan.
-    The payload column never appears — Catalyst prunes it from the
-    encoded-store parquet scan.  The stats JSON is parsed ONCE per row
-    (from_json struct; min/max stay strings because f64 zone values are
-    fractional — the long cast below is input-guarded by dtype)."""
-    st = F.from_json(
-        "stats", "n_nulls BIGINT, sum STRING, min STRING, max STRING"
-    )
-    meta_cols = enc.select(
-        "column", "dtype", "n_values", "raw_bytes", st.alias("__st")
-    )
-    nn = F.col("__st.n_nulls")
-    sm = F.col("__st.sum")
-    needs_sum = ~F.col("dtype").isin("str", "bin", "f64")
-    ok = (nn.isNotNull() & (~needs_sum | sm.isNotNull())).cast("int")
-    return (
-        meta_cols.groupBy("column")
-        .agg(
-            F.sum("n_values").alias("n_rows"),
-            F.sum(nn).alias("n_nulls"),
-            F.when(
-                F.max("dtype").isin("str", "bin", "f64"), F.lit(None)
-            )
-            .otherwise(
-                F.sum(sm.cast("decimal(38,0)")).cast("string")
-            )
-            .alias("sum_exact"),
-            # guard the INPUT, not just the output: f64 stats hold
-            # fractional min/max and an unconditional ANSI cast to
-            # long would error even under a when() on the result
-            F.min(
-                F.when(
-                    ~F.col("dtype").isin("str", "bin", "f64"),
-                    F.col("__st.min"),
-                ).cast("long")
-            )
-            .cast("string")
-            .alias("min_exact"),
-            F.max(
-                F.when(
-                    ~F.col("dtype").isin("str", "bin", "f64"),
-                    F.col("__st.max"),
-                ).cast("long")
-            )
-            .cast("string")
-            .alias("max_exact"),
-            F.when(
-                F.max("dtype").isin("str", "bin"), F.sum("raw_bytes")
-            ).alias("sum_bytes"),
-            F.min(ok).alias("__ok"),
-        )
-        .select(
-            "column", "n_rows", "n_nulls", "sum_exact",
-            "min_exact", "max_exact", "sum_bytes", "__ok",
-        )
-    )
-
-
-# Spark-side schema of the per-chunk grouped partials written at encode
-# time (stats.by) — from_json returns null for rows lacking them
-_BY_JSON_SCHEMA = (
-    "col STRING, groups MAP<STRING, "
-    "STRUCT<n: BIGINT, nn: BIGINT, sum: STRING, min: BIGINT, max: BIGINT, bytes: BIGINT>>"
-)
-
-
-def _grouped_stats_aggregate(enc: DataFrame, group_by: str) -> DataFrame:
-    """The single metadata job of the GROUPED stats fast path: explode the
-    per-chunk per-group partials and combine them per (column, group).
-    ``__ok`` is 1 iff every chunk row of the column carries grouped stats
-    declared for this ``group_by`` column (explode_outer keeps rows
-    without them, flagged 0, so the flag rides the same job).  One
-    from_json parse per row: the parsed struct is materialized as its own
-    projection first — referencing ``by`` from both the flag and the
-    explode generator would JSON-parse every row twice (subexpression
-    elimination does not span the Project/Generate operator boundary)."""
-    parsed = enc.select(
-        "column",
-        F.from_json("stats", f"by STRUCT<{_BY_JSON_SCHEMA}>")["by"].alias("__by"),
-    )
-    by = F.col("__by")
-    ok = (by.isNotNull() & (by["col"] == F.lit(group_by))).cast("int")
-    ex = parsed.select(
-        "column",
-        ok.alias("__ok"),
-        F.explode_outer(by["groups"]).alias("__g", "__gv"),
-    )
-    return ex.groupBy("column", "__g").agg(
-        F.sum("__gv.n").alias("n_rows"),
-        F.sum("__gv.nn").alias("n_nulls"),
-        F.sum(F.col("__gv.sum").cast("decimal(38,0)")).cast("string").alias("sum_exact"),
-        F.min("__gv.min").cast("string").alias("min_exact"),
-        F.max("__gv.max").cast("string").alias("max_exact"),
-        F.sum("__gv.bytes").alias("sum_bytes"),
-        F.min("__ok").alias("__ok"),
-    )
 
 
 def _agg_row_analytic(tag: str, codec: str, payload, params: dict, nv: int):
@@ -1576,40 +1487,66 @@ def _combine_partials(partials: DataFrame, *keys: str) -> DataFrame:
     )
 
 
-# how _fold_agg_rows merges n_rows, n_nulls, sum, min, max and sum_bytes
-_AGG_FOLD = (operator.add, operator.add, operator.add, min, max, operator.add)
+# how _fold_agg_rows merges n_rows, n_nulls, sum, min, max, sum_bytes and ok
+_AGG_FOLD = (operator.add, operator.add, operator.add, min, max, operator.add, min)
 
 
 def _fold_agg_rows(rows) -> list[tuple]:
-    """Exact fold of ``_AGG_SCHEMA`` rows per column with SQL semantics:
-    nulls are skipped and an all-null aggregate stays null.  Numbers come
-    as ints or decimal strings; sums are Python ints, so no width limit.
-    Returns one row per column, sorted by column, with sum/min/max as
-    strings.  The ungrouped decode tier folds its chunk partials per task
-    and the task rows on the driver with it."""
-    acc: dict[str, list] = {}
-    for column, *vals in rows:
-        cur = acc.setdefault(column, [None] * len(_AGG_FOLD))
+    """The one exact fold of every aggregate tier: ``_PART_SCHEMA`` rows
+    per (group, column) with SQL semantics: nulls are skipped and an
+    all-null aggregate stays null.  Numbers come as ints or decimal
+    strings; sums are Python ints, so no width limit.  Returns one row
+    per key, sorted by key, with sum/min/max as strings.  Each task of
+    the decode tier and of both stats tiers folds its chunk partials
+    with it, and the driver folds the task rows with it."""
+    acc: dict[tuple, list] = {}
+    for group, column, *vals in rows:
+        cur = acc.setdefault((group, column), [None] * len(_AGG_FOLD))
         for i, (op, a, b) in enumerate(zip(_AGG_FOLD, cur, vals)):
             if b is not None:
                 cur[i] = int(b) if a is None else op(a, int(b))
     return [
-        (c, n, nn, *(None if v is None else str(v) for v in (s, lo, hi)), nb)
-        for c, (n, nn, s, lo, hi, nb) in sorted(acc.items())
+        (g, c, n, nn, *(None if v is None else str(v) for v in (s, lo, hi)), nb, ok)
+        for (g, c), (n, nn, s, lo, hi, nb, ok) in sorted(acc.items())
     ]
 
 
+def _fold_stage(enc: DataFrame, columns: list[str], chunk_partials, cap=None) -> DataFrame:
+    """One Python stage over ``columns`` of ``enc`` (lazy): each task
+    folds the partial rows ``chunk_partials`` makes of the batches it
+    reads and emits the folded rows (at most ``cap + 1`` of them), so no
+    per-chunk rows cross the Python->JVM boundary.  Partials need no
+    chunk colocation, so the python-side scan packs files by size (one
+    wave of tasks), not by chunk directory.  Columns the store lacks are
+    not requested."""
+    columns = [c for c in columns if c in enc.columns]
+
+    def fn(batches):
+        rows = _fold_agg_rows(chunk_partials(batches))
+        if cap is not None:
+            rows = rows[: cap + 1]
+        yield from _rows_to_arrow(rows, _PART_SCHEMA).to_batches()
+
+    scan = parquet_scan_info(enc)
+    if scan is not None:
+        return pyscan_map_in_arrow(
+            enc.sparkSession, scan, fn, _PART_SCHEMA, columns=columns, group="split"
+        )
+    return enc.select(*columns).mapInArrow(fn, schema=_PART_SCHEMA)
+
+
+def _collect_partials(stage: DataFrame) -> list[tuple]:
+    """Run a :func:`_fold_stage` (one job) and return its rows."""
+    t = stage.toArrow()
+    return list(zip(*(t.column(n).to_pylist() for n in _PART_SCHEMA.names)))
+
+
 def _agg_decode_partials(enc: DataFrame) -> DataFrame:
-    """The ungrouped decode tier's one Spark stage (lazy): each task folds
-    the partials of every chunk row it reads and emits one
-    ``_AGG_SCHEMA`` row per column, so no decoded rows and no per-chunk
-    rows cross the Python->JVM boundary.  Chunks whose (dtype, codec)
-    admits it are aggregated straight from the payload structure
-    (:func:`_agg_row_analytic`) without materializing the decoded column
-    at all; the rest decode and reuse the encode-side exact statistics
-    (:func:`_zone_map_dict`).  Partials need no chunk colocation, so the
-    python-side scan packs files by size (one wave of tasks), not by
-    chunk directory."""
+    """The ungrouped decode tier's one Spark stage (lazy), over the
+    payload.  Chunks whose (dtype, codec) admits it are aggregated
+    straight from the payload structure (:func:`_agg_row_analytic`)
+    without materializing the decoded column at all; the rest decode and
+    reuse the encode-side exact statistics (:func:`_zone_map_dict`)."""
 
     def chunk_partials(batches):
         for batch in batches:
@@ -1625,30 +1562,64 @@ def _agg_decode_partials(enc: DataFrame) -> DataFrame:
                     got = (
                         st["n_nulls"], st["sum"], st.get("min"), st.get("max"), None
                     )
-                yield (r.column, r.n_values) + tuple(got)
+                yield (None, r.column, r.n_values, *got, 1)
 
-    def fn(batches):
-        yield from _rows_to_arrow(
-            _fold_agg_rows(chunk_partials(batches)), _AGG_SCHEMA
-        ).to_batches()
-
-    scan = parquet_scan_info(enc)
-    if scan is not None:
-        return pyscan_map_in_arrow(
-            enc.sparkSession, scan, fn, _AGG_SCHEMA,
-            columns=["chunk_id", "column", "dtype", "codec", "payload",
-                     "params", "n_values", "crc32"],
-            group="split",
-        )
-    return enc.mapInArrow(fn, schema=_AGG_SCHEMA)
+    return _fold_stage(
+        enc,
+        ["chunk_id", "column", "dtype", "codec", "payload", "params", "n_values", "crc32"],
+        chunk_partials,
+    )
 
 
 def _agg_decode_path(enc: DataFrame) -> list[tuple]:
-    """The ungrouped decode tier's answer rows, sorted by column: one job
-    collects :func:`_agg_decode_partials`'s O(tasks x columns) rows and
-    the driver folds them."""
-    t = _agg_decode_partials(enc).toArrow()
-    return _fold_agg_rows(zip(*(t.column(n).to_pylist() for n in _AGG_SCHEMA.names)))
+    """The ungrouped decode tier's ``_AGG_SCHEMA`` answer rows, sorted by
+    column: one job collects :func:`_agg_decode_partials`'s O(tasks x
+    columns) rows and the driver folds them."""
+    return [r[1:-1] for r in _fold_agg_rows(_collect_partials(_agg_decode_partials(enc)))]
+
+
+_STATS_COLUMNS = ["column", "dtype", "n_values", "raw_bytes", "stats"]
+
+
+def _agg_stats_partials(enc: DataFrame, group_by: str | None = None, cap=None) -> DataFrame:
+    """The stats tiers' one Spark stage (lazy): it reads only the
+    metadata columns, never the payload, and turns each chunk row's
+    stats into the decode tier's partial row: per column, or per
+    (group, column) from ``stats.by`` when ``group_by`` is given.  ``ok``
+    is 0 for a chunk row whose stats lack what its answer needs (no
+    ``n_nulls``, no integer ``sum``, no ``stats.by`` for ``group_by``),
+    so the caller can send that column to the decode tier.  f64 zone maps
+    hold fractional min/max; they never reach the integer fold."""
+
+    def chunk_partials(batches):
+        for batch in batches:
+            for column, dtype, nv, raw, s in zip(
+                *(batch.column(n).to_pylist() for n in _STATS_COLUMNS)
+            ):
+                st = (json.loads(s) if s else None) or {}
+                if group_by is not None:
+                    by = st.get("by") or {}
+                    if by.get("col") != group_by:
+                        yield (NULL_GROUP_KEY, column, *[None] * 6, 0)
+                        continue
+                    for g, p in by["groups"].items():
+                        yield (
+                            g, column, p["n"], p["nn"], p.get("sum"),
+                            p.get("min"), p.get("max"), p.get("bytes"), 1,
+                        )
+                    continue
+                nn = st.get("n_nulls")
+                if dtype in STR_TAGS or dtype == "f64":
+                    nb = raw if dtype in STR_TAGS else None
+                    yield (None, column, nv, nn, None, None, None, nb, int(nn is not None))
+                else:
+                    sm = st.get("sum")
+                    yield (
+                        None, column, nv, nn, sm, st.get("min"), st.get("max"), None,
+                        int(nn is not None and sm is not None),
+                    )
+
+    return _fold_stage(enc, _STATS_COLUMNS, chunk_partials, cap)
 
 
 def _degroup_null_key(df: DataFrame) -> DataFrame:
@@ -1722,36 +1693,42 @@ def decode_aggregate(
 ) -> DataFrame:
     """Aggregate pushdown through the codec layer.
 
-    Fast path (``use_stats``): every chunk row carries exact per-chunk
-    statistics written at encode time (n_nulls; exact integer sum as an
-    arbitrary-precision string; byte totals via raw_bytes), so the whole
-    aggregate is ONE native JVM job over the metadata columns — the
-    payload column is pruned from the parquet scan and no codec runs at
-    all.  This is the footer-statistics pattern: at 100 TB the aggregate
-    costs O(chunk count), not O(data).  The job doubles as the
-    availability check: columns whose chunks lack the needed stats (older
-    stores) are detected from the SAME job's ``__ok`` flag and re-answered
-    through the decode path — no separate pre-check scan.
-
-    Decode path (``use_stats=False``, and the fallback above): one Python
-    stage whose tasks each fold every chunk they read into one exact
-    partial row per column; the driver collects those rows and folds them.
-
-    Both ungrouped tiers run their one job eagerly (plus the decode job
-    for a fallback) and return a local relation: collecting it runs no
-    job.  The driver holds O(tasks x columns) partial rows.  Sums are
+    Every tier answers through one exact fold, :func:`_fold_agg_rows`:
+    one Python stage whose tasks each fold the partial rows of the chunks
+    they read, then the driver folds the collected task rows.  Sums are
     exact Python ints, with no ``decimal(38,0)`` limit.
 
+    Stats tier (``use_stats``): every chunk row carries exact per-chunk
+    statistics written at encode time (n_nulls; exact integer sum as an
+    arbitrary-precision string; byte totals via raw_bytes), so the stage
+    (:func:`_agg_stats_partials`) reads only the metadata columns — the
+    payload is never read and no codec runs.  This is the
+    footer-statistics pattern: at 100 TB the aggregate costs O(chunk
+    count), not O(data).  The stage doubles as the availability check:
+    columns whose chunks lack the needed stats (older stores) are flagged
+    by the same stage's ``ok`` and re-answered by the decode tier — no
+    separate pre-check scan.  A store with no ``stats`` field at all
+    takes the decode tier for every column.
+
+    Decode tier (``use_stats=False``, and the fallback above): the stage
+    (:func:`_agg_decode_partials`) computes each chunk's partial row from
+    its payload.
+
+    The ungrouped tiers and the grouped stats tier run their one job
+    eagerly (plus the decode job for a fallback) and return a local
+    relation: collecting it runs no job.  The driver holds O(tasks x
+    columns) partial rows, O(tasks x groups x columns) when grouped.
+
     ``group_by``: GROUP BY a declared group column.  When the table was
-    encoded with ``stats_group_by=<same column>``, the grouped fast path
-    answers from the per-chunk per-group partials in metadata (payload
-    pruned, O(chunks x groups)); otherwise — or for columns/chunks whose
-    grouped stats are absent — one applyInArrow per chunk computes exact
-    per-group partials from the payloads (no decoded rows cross the
-    Python->JVM boundary), combined by a Spark groupBy, since the group
-    count is unbounded.  Grouped results carry ``group`` (string; SQL
-    NULL for null group values) plus per-group exact min/max for
-    integer-family columns.
+    encoded with ``stats_group_by=<same column>``, the grouped stats tier
+    answers from the per-chunk per-group partials in ``stats.by``;
+    otherwise — or for columns whose grouped stats are absent, or when
+    the task rows exceed ``MAX_COLLECTED_GROUP_ROWS`` — one applyInArrow
+    per chunk computes exact per-group partials from the payloads (no
+    decoded rows cross the Python->JVM boundary), combined by a Spark
+    groupBy, since the group count is unbounded.  Grouped results carry
+    ``group`` (string; SQL NULL for null group values) plus per-group
+    exact min/max for integer-family columns.
 
     Returns one row per column (or per (group, column)): ``n_rows`` (incl.
     nulls), ``n_nulls``, ``sum_exact`` (exact integer sum as a string —
@@ -1759,48 +1736,35 @@ def decode_aggregate(
     drift; null for float/string), ``sum_bytes`` (total utf8/binary bytes,
     strings only).
 
-    Needs no chunk colocation in the ungrouped paths; the grouped decode
-    path groups by chunk_id itself."""
+    Needs no chunk colocation except in the grouped decode tier, which
+    groups by chunk_id itself."""
     if columns is not None:
         keep = set(columns) | ({group_by} if group_by is not None else set())
         enc = enc.filter(F.col("column").isin(sorted(keep)))
+    # a store from before the stats field: every column takes the decode tier
+    use_stats = use_stats and "stats" in enc.columns
 
     if group_by is not None:
-        out_columns = columns
-        if out_columns is None:
-            out_columns = [r["column"] for r in column_meta(enc)]
+
+        def decode_grouped(out_columns):
+            if out_columns is None:
+                out_columns = [r["column"] for r in column_meta(enc)]
+            return _agg_decode_path_grouped(enc, group_by, out_columns)
+
         if not use_stats:
-            return _agg_decode_path_grouped(enc, group_by, out_columns).orderBy(
-                "group", "column"
-            )
-        # MAX_STAT_GROUPS bounds cardinality per CHUNK only; a sort-key-
-        # correlated group column can stay under the per-chunk cap while
-        # global groups grow with chunk count — cap what the driver ever
-        # materializes and fall back to the distributed decode path beyond
-        # it (limit() bounds the collect itself, not just the check)
-        max_rows = MAX_COLLECTED_GROUP_ROWS
-        rows = (
-            _grouped_stats_aggregate(
-                enc.filter(F.col("column").isin(out_columns)), group_by
-            )
-            .limit(max_rows + 1)
-            .collect()
-        )
-        if len(rows) > max_rows:
-            return _agg_decode_path_grouped(enc, group_by, out_columns).orderBy(
-                "group", "column"
-            )
-        bad = sorted({r["column"] for r in rows if r["__ok"] != 1})
+            return decode_grouped(columns).orderBy("group", "column")
+        cap = MAX_COLLECTED_GROUP_ROWS
+        sub = enc if columns is None else enc.filter(F.col("column").isin(columns))
+        parts = _collect_partials(_agg_stats_partials(sub, group_by, cap))
+        if len(parts) > cap:
+            return decode_grouped(columns).orderBy("group", "column")
+        rows = _fold_agg_rows(parts)
+        bad = sorted({r[1] for r in rows if r[-1] != 1})
         good_rows = sorted(
             (
-                (
-                    _unescape_group_key(r["__g"]),
-                    r["column"], r["n_rows"], r["n_nulls"],
-                    r["sum_exact"], r["min_exact"], r["max_exact"],
-                    r["sum_bytes"],
-                )
-                for r in rows
-                if r["column"] not in bad
+                (_unescape_group_key(g), c, *vals)
+                for g, c, *vals, _ok in rows
+                if c not in bad
             ),
             # SQL-style NULLS FIRST ordering, computed driver-side: a Spark
             # orderBy on the tiny local result would spin up a full
@@ -1810,22 +1774,20 @@ def decode_aggregate(
         )
         good_df = _local_frame(enc.sparkSession, good_rows, _GAGG_SCHEMA)
         if bad:
-            fb = _agg_decode_path_grouped(enc, group_by, bad)
-            good_df = good_df.unionByName(fb).orderBy("group", "column")
+            good_df = good_df.unionByName(decode_grouped(bad)).orderBy("group", "column")
         return good_df
 
     if not use_stats:
         return _local_frame(enc.sparkSession, _agg_decode_path(enc), _AGG_SCHEMA)
 
-    rows = _stats_aggregate(enc).collect()  # the ONE metadata job
-    bad = sorted(r["column"] for r in rows if r["__ok"] != 1)
-    out_rows = [tuple(r)[:-1] for r in rows if r["__ok"] == 1]
+    rows = _fold_agg_rows(_collect_partials(_agg_stats_partials(enc)))
+    bad = [r[1] for r in rows if r[-1] != 1]
+    out_rows = [r[1:-1] for r in rows if r[-1] == 1]
     if bad:
         out_rows += _agg_decode_path(enc.filter(F.col("column").isin(bad)))
-    # sort driver-side: a Spark orderBy on the tiny local result would
-    # spin up a range-partitioning sample job + shuffle (measured ~0.9 s
-    # of pure scheduling for 13 rows)
-    out_rows.sort(key=lambda t: t[0])
+        # sort driver-side: a Spark orderBy on the tiny local result would
+        # spin up a range-partitioning sample job + shuffle
+        out_rows.sort(key=lambda t: t[0])
     return _local_frame(enc.sparkSession, out_rows, _AGG_SCHEMA)
 
 
