@@ -566,9 +566,13 @@ def test_decode_aggregate_grouped_falls_back_without_stats(spark):
 
 
 def test_decode_aggregate_grouped_cap_falls_back(spark, monkeypatch):
-    """When the grouped stats tier's task rows exceed
-    MAX_COLLECTED_GROUP_ROWS, the grouped decode tier answers instead:
-    the same rows as ``use_stats=False``."""
+    """MAX_COLLECTED_GROUP_ROWS bounds the grouped stats tier's answer,
+    not the task rows the driver collects: at a cap between the two the
+    stats tier still answers; below the answer's row count the grouped
+    decode tier answers instead.  Either way: the same rows as
+    ``use_stats=False``."""
+    from pyspark.sql import functions as F
+
     from varint_simd_spark.operators import encode as E
 
     wp = generate_web_pages(spark, 3000, seed=17)
@@ -576,8 +580,10 @@ def test_decode_aggregate_grouped_cap_falls_back(spark, monkeypatch):
     cols = ["warc_ts", "text"]
     want = [tuple(r) for r in E.decode_aggregate(
         enc, columns=cols, group_by="lang", use_stats=False).collect()]
-    assert [tuple(r) for r in E.decode_aggregate(
-        enc, columns=cols, group_by="lang").collect()] == want
+    sub = enc.filter(F.col("column").isin(cols))
+    n_task_rows = len(list(E._collect_partials(E._agg_stats_partials(sub, "lang"))))
+    # lang does not follow the url sort, so every task sees most groups
+    assert n_task_rows > len(want) > 2
     calls = []
     real = E._agg_decode_path_grouped
 
@@ -586,11 +592,14 @@ def test_decode_aggregate_grouped_cap_falls_back(spark, monkeypatch):
         return real(enc, group_by, out_columns)
 
     monkeypatch.setattr(E, "_agg_decode_path_grouped", spy)
-    monkeypatch.setattr(E, "MAX_COLLECTED_GROUP_ROWS", 1)
-    got = [tuple(r) for r in E.decode_aggregate(
-        enc, columns=cols, group_by="lang").collect()]
-    assert calls == [cols], calls
-    assert got == want and len(want) > 2
+    for cap, fallback in [(65536, False), (len(want), False),
+                          (len(want) - 1, True), (1, True)]:
+        calls.clear()
+        monkeypatch.setattr(E, "MAX_COLLECTED_GROUP_ROWS", cap)
+        got = [tuple(r) for r in E.decode_aggregate(
+            enc, columns=cols, group_by="lang").collect()]
+        assert calls == ([cols] if fallback else []), (cap, calls)
+        assert got == want, cap
 
 
 def test_verify_roundtrip_detects_mismatch(spark):

@@ -95,9 +95,16 @@ def main():
         .agg(F.sum(F.length("text"))))
     # the ungrouped decode tier's one stage (its answer is a local relation)
     cap("decode_web_pages_agg_pushdown", _agg_decode_partials(enc))
-    # the stats tiers' one stage, ungrouped and grouped (metadata only)
+    # the stats tiers' one stage, ungrouped and grouped, on the JVM scan:
+    # its ReadSchema shows that the payload is never read
+    pyscan = os.environ.get("VSS_PYSCAN")
+    os.environ["VSS_PYSCAN"] = "0"
     cap("decode_web_pages_agg_stats", _agg_stats_partials(enc))
     cap("decode_web_pages_agg_grouped_stats", _agg_stats_partials(enc, "lang"))
+    if pyscan is None:
+        del os.environ["VSS_PYSCAN"]
+    else:
+        os.environ["VSS_PYSCAN"] = pyscan
     # grouped decode-path aggregate (the use_stats=False grouped tier)
     cap("decode_agg_grouped_decode_path",
         decode_aggregate(enc, columns=["url", "text"], group_by="lang",

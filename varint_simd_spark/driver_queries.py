@@ -363,7 +363,8 @@ def q_decode_aggregate_by_lang_documents(spark, sf_dir):
     answers the training-pipeline staple "rows/nulls/sum by lang" from
     metadata alone: one Python stage reads the stats columns (never the
     payload) and folds the per-group partials per task, and the driver
-    folds the task rows — O(chunks x groups) at any data size."""
+    folds the task rows: O(tasks x groups x columns) rows, whatever the
+    row count."""
     from .operators.encode import decode_aggregate
 
     df = _read(spark, sf_dir, "documents")

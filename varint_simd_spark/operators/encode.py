@@ -227,13 +227,19 @@ MAX_STAT_GROUPS = 64
 # (converted back to a real SQL NULL group by decode_aggregate)
 NULL_GROUP_KEY = "\u0000"
 
-# bound on the grouped stats tier: when the task-folded partial rows the
-# driver collects number more than this, the grouped aggregate falls back
-# to the distributed decode tier.  The collected rows are at least the
-# combined (group, column) rows, so the fallback can only start earlier
-# than a bound on those would.  Each task emits at most this many + 1
-# rows, so the driver holds at most (tasks) x (this + 1) rows; a Spark
-# limit() on the collect would bound it to this + 1 but add a stage.
+# bound on the grouped stats tier: when the answer has more (group,
+# column) rows than this, the grouped aggregate falls back to the
+# distributed decode tier.  The driver decides on the folded answer, not
+# on the task rows it collects: with groups spread over every task, each
+# task emits the whole answer's keys.  A task whose own fold has more
+# rows than this proves the answer does too; it emits only this many + 1
+# of them.  So the driver collects at most tasks x (this + 1) rows, and
+# never more than the stats.by entries the stage reads (at most
+# MAX_STAT_GROUPS per chunk column).  A collected row is ~70 bytes of
+# Arrow (web_pages, 8 columns), so a task sends at most ~4.5 MB; the
+# driver folds the rows one Arrow batch at a time.  A Spark limit()
+# would bound the collect to this + 1 rows, but it would count task
+# rows, and it adds a stage.
 MAX_COLLECTED_GROUP_ROWS = 65536
 
 
@@ -1535,10 +1541,11 @@ def _fold_stage(enc: DataFrame, columns: list[str], chunk_partials, cap=None) ->
     return enc.select(*columns).mapInArrow(fn, schema=_PART_SCHEMA)
 
 
-def _collect_partials(stage: DataFrame) -> list[tuple]:
-    """Run a :func:`_fold_stage` (one job) and return its rows."""
-    t = stage.toArrow()
-    return list(zip(*(t.column(n).to_pylist() for n in _PART_SCHEMA.names)))
+def _collect_partials(stage: DataFrame):
+    """Run a :func:`_fold_stage` (one job) and yield its rows, one Arrow
+    batch at a time, so only the folded rows outlive their batch."""
+    for b in stage.toArrow().to_batches():
+        yield from zip(*(b.column(n).to_pylist() for n in _PART_SCHEMA.names))
 
 
 def _agg_decode_partials(enc: DataFrame) -> DataFrame:
@@ -1716,17 +1723,18 @@ def decode_aggregate(
 
     The ungrouped tiers and the grouped stats tier run their one job
     eagerly (plus the decode job for a fallback) and return a local
-    relation: collecting it runs no job.  The driver holds O(tasks x
-    columns) partial rows, O(tasks x groups x columns) when grouped.
+    relation: collecting it runs no job.  The driver collects O(tasks x
+    columns) partial rows; when grouped, O(tasks x groups x columns), at
+    most tasks x (``MAX_COLLECTED_GROUP_ROWS`` + 1).
 
     ``group_by``: GROUP BY a declared group column.  When the table was
     encoded with ``stats_group_by=<same column>``, the grouped stats tier
     answers from the per-chunk per-group partials in ``stats.by``;
     otherwise — or for columns whose grouped stats are absent, or when
-    the task rows exceed ``MAX_COLLECTED_GROUP_ROWS`` — one applyInArrow
-    per chunk computes exact per-group partials from the payloads (no
-    decoded rows cross the Python->JVM boundary), combined by a Spark
-    groupBy, since the group count is unbounded.  Grouped results carry
+    the answer has more than ``MAX_COLLECTED_GROUP_ROWS`` rows — one
+    applyInArrow per chunk computes exact per-group partials from the
+    payloads (no decoded rows cross the Python->JVM boundary), combined
+    by a Spark groupBy, since the group count is unbounded.  Grouped results carry
     ``group`` (string; SQL NULL for null group values) plus per-group
     exact min/max for integer-family columns.
 
@@ -1755,10 +1763,9 @@ def decode_aggregate(
             return decode_grouped(columns).orderBy("group", "column")
         cap = MAX_COLLECTED_GROUP_ROWS
         sub = enc if columns is None else enc.filter(F.col("column").isin(columns))
-        parts = _collect_partials(_agg_stats_partials(sub, group_by, cap))
-        if len(parts) > cap:
+        rows = _fold_agg_rows(_collect_partials(_agg_stats_partials(sub, group_by, cap)))
+        if len(rows) > cap:
             return decode_grouped(columns).orderBy("group", "column")
-        rows = _fold_agg_rows(parts)
         bad = sorted({r[1] for r in rows if r[-1] != 1})
         good_rows = sorted(
             (
