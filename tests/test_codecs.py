@@ -38,6 +38,15 @@ def test_int_codec_roundtrip(codec, fixture):
     payload, params = impl.encode(v)
     out = impl.decode(payload, params, len(v))
     np.testing.assert_array_equal(out, v)
+    if codec == "rle_varint":
+        # the runs the analytic aggregate reads: non-empty, repeating to
+        # the column, so their sum, min and max are the column's
+        run_vals, run_lens = impl.runs(payload, params)
+        assert (run_lens > 0).all()
+        np.testing.assert_array_equal(np.repeat(run_vals, run_lens), v)
+        assert sum(int(a) * int(b) for a, b in zip(run_vals, run_lens)) == sum(map(int, v))
+        if v.size:
+            assert (run_vals.min(), run_vals.max()) == (v.min(), v.max())
 
 
 STR_FIXTURES = {
@@ -219,12 +228,12 @@ def _mk_bo(values):
     return list_to_bo(values)
 
 
-@pytest.mark.parametrize("codec", ["raw_str", "dict_str", "rle_str", "fsst"])
-def test_str_decode_selected_matches_full(codec):
-    """decode_bo_selected(idx) must equal decode_bo()[idx] for every string
-    codec — the contract behind the filter-pushdown decode's tier 2b."""
-    from varint_simd_spark.codecs.strings import STR_CODECS, bo_to_list
-
+def _selected_fixtures(codec):
+    """Value lists for the unified string readers: a 300-value column
+    shaped for ``codec``, n=0, all-empty and mixed-empty values, and the
+    column plus a few 0xFF runs.  0xFF stays rare, so FSST's table leaves
+    it out and encodes it as escape+literal pairs: runs of 2, 4 and 6
+    0xFF codes, whose escape/literal alternation decode must follow."""
     rng = np.random.default_rng(5)
     vals = []
     for i in range(300):
@@ -234,12 +243,68 @@ def test_str_decode_selected_matches_full(codec):
             vals.append(b"dict%d" % (i % 7))
         else:
             vals.append(bytes(rng.integers(97, 123, rng.integers(0, 40), dtype=np.uint8)))
+    ff = vals + [b"\xff", b"a\xff\xffb", b"\xff\xff\xff", b"xy\xff"]
+    return [vals, [], [b""] * 5, [b"", b"a", b"", b"bb", b""], ff]
+
+
+@pytest.mark.parametrize("codec", ["raw_str", "dict_str", "rle_str", "fsst"])
+def test_str_decode_selected_matches_full(codec):
+    """decode_bo(idx) must equal decode_bo()[idx], and value_bytes the
+    decoded byte total, for every string codec — the contracts behind the
+    filter-pushdown decode's tier 2b and the analytic aggregate."""
+    from varint_simd_spark.codecs.strings import STR_CODECS, bo_to_list
+
     impl = STR_CODECS[codec]
-    payload, params = impl.encode_bo(_mk_bo(vals))
-    full = bo_to_list(impl.decode_bo(payload, params, len(vals)))
-    for idx in ([], [0], [299], [0, 1, 2], list(range(0, 300, 7)), list(range(300))):
-        got = bo_to_list(impl.decode_bo_selected(payload, params, len(vals), np.array(idx, dtype=np.int64)))
-        assert got == [full[i] for i in idx], (codec, idx[:5])
+    for vals in _selected_fixtures(codec):
+        n = len(vals)
+        payload, params = impl.encode_bo(_mk_bo(vals))
+        full = bo_to_list(impl.decode_bo(payload, params, n))
+        assert full == vals, codec
+        assert impl.value_bytes(payload, params, n) == sum(map(len, vals)), codec
+        for idx in ([], [0], [n - 1], [0, 1, 2], list(range(0, n, 7)), list(range(n))) if n else ([],):
+            got = bo_to_list(impl.decode_bo(payload, params, n, np.array(idx, dtype=np.int64)))
+            assert got == [full[i] for i in idx], (codec, n, idx[:5])
+
+
+@pytest.mark.parametrize("codec", ["raw_str", "dict_str", "rle_str", "fsst", "rle_varint"])
+def test_column_idx_decode_and_analytic_partials_with_nulls(codec):
+    """Through the null bitmap: decode_column_arrow(idx) equals the full
+    decode taken at idx, and the analytic aggregate partial equals the
+    decoded column's null count and byte total (strings) or exact
+    sum/min/max (rle_varint without nulls)."""
+    from varint_simd_spark.codecs.base import decode_column_arrow, encode_column_arrow
+    from varint_simd_spark.operators.encode import _agg_row_analytic
+
+    if codec == "rle_varint":
+        arrs = [
+            pa.array(INT_FIXTURES["runs"]),
+            pa.array(INT_FIXTURES["extremes"]),
+            pa.array([3, 3, None, 4, 4], type=pa.int64()),
+            pa.array([], type=pa.int64()),
+        ]
+    else:
+        ff = _selected_fixtures("fsst")[-1]
+        ff = [None if i % 5 == 0 else v for i, v in enumerate(ff)]
+        arrs = [pa.array(ff, type=pa.binary()), pa.array([None, "", "x", None], type=pa.string())]
+    for arr in arrs:
+        n = len(arr)
+        tag, payload, params = encode_column_arrow(arr, codec)
+        full = decode_column_arrow(tag, codec, payload, params, n)
+        assert full.to_pylist() == arr.to_pylist()
+        for idx in ([], [0], list(range(0, n, 3)), list(range(n))) if n else ([],):
+            idx = np.array(idx, dtype=np.int64)
+            got = decode_column_arrow(tag, codec, payload, params, n, idx)
+            assert got.to_pylist() == full.take(pa.array(idx)).to_pylist(), (codec, idx[:5])
+        got = _agg_row_analytic(tag, codec, payload, params, n)
+        if codec != "rle_varint":
+            nbytes = sum(len(v) for v in arr.to_pylist() if v is not None)
+            assert got == (arr.null_count, None, None, None, nbytes)
+        elif arr.null_count:
+            assert got is None  # null slots sit inside runs: decode instead
+        else:
+            vals = arr.to_pylist()
+            exp = (str(sum(vals)), *((str(min(vals)), str(max(vals))) if vals else (None, None)))
+            assert got == (0, *exp, None)
 
 
 def test_decode_column_arrow_selected_nulls_and_ints():
@@ -523,3 +588,43 @@ def test_symbol_table_matches_reference_loop(case):
         (one[key & 0xFF].astype(np.uint16) << 8) | 1,
     )
     np.testing.assert_array_equal(t.lut21, lut21)
+
+
+# --------------------------------------------------------------------------
+# integer codecs: pinned output bytes
+
+
+def _int_pin_columns():
+    """Seeded int64 Arrow columns for the integer wire-format pin: nulls,
+    sorted timestamps with jitter, small negatives, runs, the int64
+    extremes, a single value and an empty column."""
+    r = np.random.default_rng(20240612)
+    n = 3000
+    vals = r.integers(-(10**9), 10**9, n)
+    nulls = r.random(n) < 0.1
+    return [
+        pa.array([None if z else int(v) for v, z in zip(vals, nulls)], type=pa.int64()),
+        pa.array(np.cumsum(r.integers(900_000, 1_100_000, n)) + 1_700_000_000_000_000, type=pa.int64()),
+        pa.array(r.integers(-300, 300, n), type=pa.int64()),
+        pa.array(np.repeat(r.integers(-5, 50, 200), r.integers(1, 30, 200)), type=pa.int64()),
+        pa.array([0, -1, 1, 2**63 - 1, -(2**63), None, 300, -300], type=pa.int64()),
+        pa.array([42], type=pa.int64()),
+        pa.array([], type=pa.int64()),
+    ]
+
+
+def test_int_payload_digest_pinned():
+    """Every integer codec's output bytes are pinned, null bitmap section
+    included: a rewrite of the bit-pack, RLE or varint paths must keep
+    payloads and params byte-identical on these seeded columns."""
+    import hashlib
+
+    h = hashlib.sha256()
+    for arr in _int_pin_columns():
+        for codec in INT_CODECS:
+            tag, payload, params = encode_column_arrow(arr, codec)
+            assert decode_column_arrow(tag, codec, payload, params, len(arr)).equals(arr)
+            h.update(codec.encode())
+            h.update(payload)
+            h.update(repr(sorted(params.items())).encode())
+    assert h.hexdigest() == "705185ddd04f1a3b633cbac2e654416d808a94d23892ba0da737cf91ad732c96"

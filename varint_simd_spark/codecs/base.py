@@ -14,6 +14,12 @@ objects.  Type tags carried in the encoded-chunk rows (FIXTURES.md §4):
 
 Null handling (engine extension; the reference has no nulls): a validity
 bitmap section is prepended when nulls exist; null slots encode as 0/empty.
+:func:`split_nulls` is the one reader of that section: the decoders here
+and the aggregate partials that skip decoding both use it.
+
+:func:`decode_column_arrow` decodes a whole chunk column, or only the rows
+``idx`` selects (the filter-pushdown decode).  Each codec parses its own
+payload in one place; nothing outside ``codecs/`` reads payload sections.
 """
 
 from __future__ import annotations
@@ -130,55 +136,43 @@ def encode_column_arrow(arr: pa.Array, codec: str, cache: dict | None = None) ->
     return tag, payload, params
 
 
-def decode_column_arrow(tag: str, codec: str, payload: bytes, params: dict, n: int) -> pa.Array:
-    null_mask = None
-    if params.get("nulls") == "1":
-        bitmap_b, payload = unpack_sections(payload)
-        null_mask = np.unpackbits(np.frombuffer(bitmap_b, dtype=np.uint8))[:n].astype(bool)
+def split_nulls(payload, params: dict, n: int) -> tuple[np.ndarray | None, bytes]:
+    """The validity-bitmap section of a chunk payload -> (null mask (bool
+    [n]) or None when the chunk has no nulls, the codec's own payload)."""
+    if params.get("nulls") != "1":
+        return None, payload
+    bitmap_b, payload = unpack_sections(payload)
+    return np.unpackbits(np.frombuffer(bitmap_b, dtype=np.uint8))[:n].astype(bool), payload
 
+
+def decode_column_arrow(
+    tag: str, codec: str, payload: bytes, params: dict, n: int, idx: np.ndarray | None = None
+) -> pa.Array:
+    """Decode one column chunk; with ``idx`` (ascending), only
+    ``column[idx]``.  String codecs locate the selected values through
+    their per-value length streams, so decode cost tracks the SELECTED
+    bytes, which is what makes filter-pushdown decode cheap at low
+    selectivity.  Integer codecs decode whole-column (their vectorized
+    kernels are already cheap and delta/FOR need the prefix anyway) and
+    subset the result."""
+    null_mask, payload = split_nulls(payload, params, n)
     if tag in STR_TAGS:
-        bo = STR_CODECS[codec].decode_bo(payload, params, n)
+        bo = STR_CODECS[codec].decode_bo(payload, params, n, idx)
         out = bo_to_arrow(bo, binary=(tag == "bin"), small=True)
     else:
         v = INT_CODECS[codec].decode(payload, params, n)
-        out = int64_to_arrow(v, tag)
+        out = int64_to_arrow(v if idx is None else v[idx], tag)
 
     if null_mask is not None:
-        out = pc.if_else(pa.array(null_mask), pa.nulls(n, type=out.type), out)
+        if idx is not None:
+            null_mask = null_mask[idx]
+        out = pc.if_else(pa.array(null_mask), pa.nulls(len(out), type=out.type), out)
     return out
 
 
 def decode_column_arrow_selected(
     tag: str, codec: str, payload: bytes, params: dict, n: int, idx: np.ndarray
 ) -> pa.Array:
-    """Row-selected decode: returns ``column[idx]`` (idx ascending).
-
-    String codecs expose random access through their per-value length
-    streams (``decode_bo_selected``) — decode cost tracks the SELECTED
-    bytes, which is what makes filter-pushdown decode cheap at low
-    selectivity.  Integer codecs decode whole-column (their vectorized
-    kernels are already cheap and delta/FOR need the prefix anyway) and
-    subset the result."""
-    null_mask = None
-    if params.get("nulls") == "1":
-        bitmap_b, payload = unpack_sections(payload)
-        null_mask = np.unpackbits(np.frombuffer(bitmap_b, dtype=np.uint8))[:n].astype(bool)[idx]
-
-    if tag in STR_TAGS:
-        sc = STR_CODECS[codec]
-        if hasattr(sc, "decode_bo_selected"):
-            bo = sc.decode_bo_selected(payload, params, n, idx)
-        else:
-            blob, offs = sc.decode_bo(payload, params, n)
-            from .strings import _gather_values
-
-            bo = _gather_values(blob, offs, idx)
-        out = bo_to_arrow(bo, binary=(tag == "bin"), small=True)
-    else:
-        v = INT_CODECS[codec].decode(payload, params, n)[idx]
-        out = int64_to_arrow(v, tag)
-
-    if null_mask is not None:
-        out = pc.if_else(pa.array(null_mask), pa.nulls(len(idx), type=out.type), out)
-    return out
-
+    """``decode_column_arrow(..., idx)`` under the row-selected decode's
+    former name, which the perfbench codec layer still imports."""
+    return decode_column_arrow(tag, codec, payload, params, n, idx)

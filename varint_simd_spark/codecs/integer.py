@@ -85,6 +85,33 @@ class VarintZigZag:
         return unzigzag(varint.decode(payload, count=n, width=64))
 
 
+def _bitpack(u: np.ndarray) -> tuple[bytes, int]:
+    """uint64 values -> (the low ``bits`` bits of each, packed MSB first;
+    ``bits``), ``bits`` being the narrowest width >= 1 that holds them."""
+    bits = max(1, int(u.max()).bit_length()) if u.size else 1
+    be = u.astype(">u8").view(np.uint8).reshape(-1, 8)
+    return np.packbits(np.unpackbits(be, axis=1)[:, 64 - bits :]).tobytes(), bits
+
+
+def _bitunpack(payload, bits: int, n: int) -> np.ndarray:
+    """Inverse of :func:`_bitpack` -> uint64[n].  Goes through an (n, 64)
+    uint8 bit matrix."""
+    raw = np.unpackbits(np.frombuffer(payload, dtype=np.uint8))[: n * bits]
+    full = np.zeros((n, 64), dtype=np.uint8)
+    full[:, 64 - bits :] = raw.reshape(n, bits)
+    return np.packbits(full, axis=1).view(">u8").ravel().astype(np.uint64)
+
+
+def _undelta(first: int, deltas: np.ndarray) -> np.ndarray:
+    """-> int64[len(deltas) + 1]: ``first`` then its running sums."""
+    out = np.empty(deltas.size + 1, dtype=np.int64)
+    out[0] = first
+    # wrapping cumsum matches the encoder's wrapping diff
+    np.cumsum(deltas.view(np.uint64), out=out[1:].view(np.uint64))
+    out[1:] += out[0]
+    return out
+
+
 class DeltaZigZagVarint:
     """Delta (first-order) + ZigZag + varint: ideal for near-sorted
     timestamp/offset columns; negative back-jumps cost little via zigzag."""
@@ -103,12 +130,7 @@ class DeltaZigZagVarint:
         if n == 0:
             return np.zeros(0, dtype=np.int64)
         deltas = unzigzag(varint.decode(payload, count=n - 1, width=64))
-        out = np.empty(n, dtype=np.int64)
-        out[0] = int(params["first"])
-        # wrapping cumsum matches the encoder's wrapping diff
-        np.cumsum(deltas.view(np.uint64), out=out[1:].view(np.uint64))
-        out[1:] += out[0]
-        return out
+        return _undelta(int(params["first"]), deltas)
 
 
 class DeltaZigZagBitpack:
@@ -123,29 +145,14 @@ class DeltaZigZagBitpack:
         v = _to_i64(arr)
         if v.size == 0:
             return b"", {"first": "0", "bits": "0"}
-        zz = zigzag(np.diff(v))
-        hi = int(zz.max()) if zz.size else 0
-        bits = max(1, hi.bit_length())
-        be = zz.astype(">u8").view(np.uint8).reshape(-1, 8)
-        packed = np.packbits(np.unpackbits(be, axis=1)[:, 64 - bits :])
-        return packed.tobytes(), {"first": str(int(v[0])), "bits": str(bits)}
+        packed, bits = _bitpack(zigzag(np.diff(v)))
+        return packed, {"first": str(int(v[0])), "bits": str(bits)}
 
     def decode(self, payload: bytes, params: dict, n: int) -> np.ndarray:
         if n == 0:
             return np.zeros(0, dtype=np.int64)
-        out = np.empty(n, dtype=np.int64)
-        out[0] = int(params["first"])
-        if n == 1:
-            return out
-        bits = int(params["bits"])
-        raw = np.unpackbits(np.frombuffer(payload, dtype=np.uint8))[: (n - 1) * bits]
-        full = np.zeros((n - 1, 64), dtype=np.uint8)
-        full[:, 64 - bits :] = raw.reshape(n - 1, bits)
-        zz = np.packbits(full, axis=1).view(">u8").ravel().astype(np.uint64)
-        deltas = unzigzag(zz)
-        np.cumsum(deltas.view(np.uint64), out=out[1:].view(np.uint64))
-        out[1:] += out[0]
-        return out
+        zz = _bitunpack(payload, int(params["bits"]), n - 1)
+        return _undelta(int(params["first"]), unzigzag(zz))
 
 
 class ForBitpack:
@@ -159,25 +166,14 @@ class ForBitpack:
         if v.size == 0:
             return b"", {"base": "0", "bits": "0"}
         base = int(v.min())
-        resid = (v - base).view(np.uint64)  # wrapping sub; range fits u64
-        hi = int(resid.max())
-        bits = max(1, hi.bit_length())
-        be = resid.astype(">u8").view(np.uint8).reshape(-1, 8)
-        allbits = np.unpackbits(be, axis=1)  # (n, 64), MSB first
-        packed = np.packbits(allbits[:, 64 - bits :])
-        return packed.tobytes(), {"base": str(base), "bits": str(bits)}
+        packed, bits = _bitpack((v - base).view(np.uint64))  # wrapping sub; range fits u64
+        return packed, {"base": str(base), "bits": str(bits)}
 
     def decode(self, payload: bytes, params: dict, n: int) -> np.ndarray:
         if n == 0:
             return np.zeros(0, dtype=np.int64)
-        bits = int(params["bits"])
-        base = int(params["base"])
-        raw = np.unpackbits(np.frombuffer(payload, dtype=np.uint8))[: n * bits]
-        mat = raw.reshape(n, bits)
-        full = np.zeros((n, 64), dtype=np.uint8)
-        full[:, 64 - bits :] = mat
-        resid = np.packbits(full, axis=1).view(">u8").ravel().astype(np.uint64)
-        return (resid.view(np.int64) + base).astype(np.int64)
+        resid = _bitunpack(payload, int(params["bits"]), n)
+        return (resid.view(np.int64) + int(params["base"])).astype(np.int64)
 
 
 class RleVarint:
@@ -197,14 +193,15 @@ class RleVarint:
         lens_pay, _ = varint.encode(run_lens.astype(np.uint64))
         return pack_sections([vals_pay, lens_pay]), {"runs": str(len(run_vals))}
 
-    def decode(self, payload: bytes, params: dict, n: int) -> np.ndarray:
+    def runs(self, payload: bytes, params: dict) -> tuple[np.ndarray, np.ndarray]:
+        """-> (run values int64, run lengths int64); every run is non-empty."""
         runs = int(params["runs"])
-        if runs == 0:
-            return np.zeros(0, dtype=np.int64)
         vals_pay, lens_pay = unpack_sections(payload)
         run_vals = unzigzag(varint.decode(vals_pay, count=runs, width=64))
-        run_lens = varint.decode(lens_pay, count=runs, width=64).astype(np.int64)
-        return np.repeat(run_vals, run_lens)
+        return run_vals, varint.decode(lens_pay, count=runs, width=64).astype(np.int64)
+
+    def decode(self, payload: bytes, params: dict, n: int) -> np.ndarray:
+        return np.repeat(*self.runs(payload, params))
 
 
 class Raw64:

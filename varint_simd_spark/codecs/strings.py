@@ -105,6 +105,22 @@ def _dict_encode_bo(bo: BO) -> tuple[np.ndarray, BO]:
 # --------------------------------------------------------------------------
 
 
+def _lens(pay, count: int) -> np.ndarray:
+    """A varint stream of ``count`` lengths/indices as int64."""
+    return varint.decode(pay, count=count, width=64).astype(np.int64)
+
+
+def _offsets(lens: np.ndarray) -> np.ndarray:
+    return np.concatenate([[0], np.cumsum(lens)]).astype(np.int64)
+
+
+# Every string codec reads its payload through one parser and answers
+# three questions from it: ``decode_bo(payload, params, n)`` (all values),
+# ``decode_bo(..., idx)`` (``values[idx]``, idx ascending, at a cost that
+# tracks the selected bytes) and ``value_bytes`` (the decoded byte total,
+# without building the values).
+
+
 class RawStr:
     """varint length stream + concatenated bytes (offset-column framing)."""
 
@@ -115,17 +131,13 @@ class RawStr:
         lens_pay, _ = varint.encode(np.diff(offs).astype(np.uint64))
         return pack_sections([lens_pay, blob.tobytes()]), {}
 
-    def decode_bo(self, payload: bytes, params: dict, n: int) -> BO:
+    def decode_bo(self, payload: bytes, params: dict, n: int, idx: np.ndarray | None = None) -> BO:
         lens_pay, blob = unpack_sections(payload)
-        lens = varint.decode(lens_pay, count=n, width=64).astype(np.int64) if n else np.zeros(0, np.int64)
-        offs = np.concatenate([[0], np.cumsum(lens)]).astype(np.int64)
-        return np.frombuffer(blob, dtype=np.uint8), offs
+        blob, offs = np.frombuffer(blob, dtype=np.uint8), _offsets(_lens(lens_pay, n))
+        return (blob, offs) if idx is None else _gather_values(blob, offs, idx)
 
-    def decode_bo_selected(self, payload: bytes, params: dict, n: int, idx: np.ndarray) -> BO:
-        """values[idx] only: the varint length stream locates each value;
-        only the selected values' bytes are copied out of the payload."""
-        blob, offs = self.decode_bo(payload, params, n)
-        return _gather_values(blob, offs, idx)
+    def value_bytes(self, payload: bytes, params: dict, n: int) -> int:
+        return len(unpack_sections(payload)[1])
 
 
 class DictStr:
@@ -145,29 +157,21 @@ class DictStr:
             {"dict_n": str(len(doffs) - 1)},
         )
 
-    def decode_bo(self, payload: bytes, params: dict, n: int) -> BO:
-        dn = int(params["dict_n"])
-        dlens_pay, dblob_b, idx_pay = unpack_sections(payload)
-        dlens = varint.decode(dlens_pay, count=dn, width=64).astype(np.int64) if dn else np.zeros(0, np.int64)
-        doffs = np.concatenate([[0], np.cumsum(dlens)]).astype(np.int64)
-        dblob = np.frombuffer(dblob_b, dtype=np.uint8)
-        if n == 0:
-            return np.zeros(0, np.uint8), np.zeros(1, np.int64)
-        codes = varint.decode(idx_pay, count=n, width=64).astype(np.int64)
-        return _gather_values(dblob, doffs, codes)
+    def _parse(self, payload, params: dict, n: int):
+        """-> (dictionary bytes, dictionary value lengths, row codes)."""
+        dlens_pay, dblob, idx_pay = unpack_sections(payload)
+        dlens = _lens(dlens_pay, int(params["dict_n"]))
+        return np.frombuffer(dblob, dtype=np.uint8), dlens, _lens(idx_pay, n)
 
-    def decode_bo_selected(self, payload: bytes, params: dict, n: int, idx: np.ndarray) -> BO:
-        """values[idx] only: decode the (cheap) index stream whole, gather
-        dictionary values for the selected rows alone."""
-        dn = int(params["dict_n"])
-        dlens_pay, dblob_b, idx_pay = unpack_sections(payload)
-        dlens = varint.decode(dlens_pay, count=dn, width=64).astype(np.int64) if dn else np.zeros(0, np.int64)
-        doffs = np.concatenate([[0], np.cumsum(dlens)]).astype(np.int64)
-        dblob = np.frombuffer(dblob_b, dtype=np.uint8)
-        if len(idx) == 0 or n == 0:
-            return np.zeros(0, np.uint8), np.zeros(1, np.int64)
-        codes = varint.decode(idx_pay, count=n, width=64).astype(np.int64)
-        return _gather_values(dblob, doffs, codes[idx])
+    def decode_bo(self, payload: bytes, params: dict, n: int, idx: np.ndarray | None = None) -> BO:
+        """The index stream decodes whole; dictionary values are gathered
+        for the selected rows alone."""
+        dblob, dlens, codes = self._parse(payload, params, n)
+        return _gather_values(dblob, _offsets(dlens), codes if idx is None else codes[idx])
+
+    def value_bytes(self, payload: bytes, params: dict, n: int) -> int:
+        _, dlens, codes = self._parse(payload, params, n)
+        return int(dlens[codes].sum())
 
 
 class RleStr:
@@ -192,32 +196,25 @@ class RleStr:
             {"runs": str(len(starts))},
         )
 
-    def decode_bo(self, payload: bytes, params: dict, n: int) -> BO:
+    def _parse(self, payload, params: dict):
+        """-> (run values' bytes, run value lengths, run lengths)."""
         runs = int(params["runs"])
-        if runs == 0:
-            return np.zeros(0, np.uint8), np.zeros(1, np.int64)
-        rlens_pay, rblob_b, rl_pay = unpack_sections(payload)
-        rlens = varint.decode(rlens_pay, count=runs, width=64).astype(np.int64)
-        roffs = np.concatenate([[0], np.cumsum(rlens)]).astype(np.int64)
-        rblob = np.frombuffer(rblob_b, dtype=np.uint8)
-        run_lens = varint.decode(rl_pay, count=runs, width=64).astype(np.int64)
-        idx = np.repeat(np.arange(runs, dtype=np.int64), run_lens)
-        return _gather_values(rblob, roffs, idx)
+        rlens_pay, rblob, rl_pay = unpack_sections(payload)
+        return np.frombuffer(rblob, dtype=np.uint8), _lens(rlens_pay, runs), _lens(rl_pay, runs)
 
-    def decode_bo_selected(self, payload: bytes, params: dict, n: int, idx: np.ndarray) -> BO:
-        """values[idx] only: map each selected row to its run via a
-        searchsorted over the run-length prefix sums."""
-        runs = int(params["runs"])
-        if runs == 0 or len(idx) == 0:
-            return np.zeros(0, np.uint8), np.zeros(1, np.int64)
-        rlens_pay, rblob_b, rl_pay = unpack_sections(payload)
-        rlens = varint.decode(rlens_pay, count=runs, width=64).astype(np.int64)
-        roffs = np.concatenate([[0], np.cumsum(rlens)]).astype(np.int64)
-        rblob = np.frombuffer(rblob_b, dtype=np.uint8)
-        run_lens = varint.decode(rl_pay, count=runs, width=64).astype(np.int64)
-        run_ends = np.cumsum(run_lens)
-        run_of_row = np.searchsorted(run_ends, np.asarray(idx), side="right")
-        return _gather_values(rblob, roffs, run_of_row)
+    def decode_bo(self, payload: bytes, params: dict, n: int, idx: np.ndarray | None = None) -> BO:
+        """A selected row finds its run by a searchsorted over the
+        run-length prefix sums."""
+        rblob, rlens, run_lens = self._parse(payload, params)
+        if idx is None:
+            run_of_row = np.repeat(np.arange(run_lens.size, dtype=np.int64), run_lens)
+        else:
+            run_of_row = np.searchsorted(np.cumsum(run_lens), np.asarray(idx), side="right")
+        return _gather_values(rblob, _offsets(rlens), run_of_row)
+
+    def value_bytes(self, payload: bytes, params: dict, n: int) -> int:
+        _, rlens, run_lens = self._parse(payload, params)
+        return int(rlens @ run_lens)
 
 
 _HBITS = 12  # 4096 hash slots for the len>=3 symbol map (255 symbols max)
@@ -469,7 +466,9 @@ class FsstStr:
 
     # ---- training (iterative gain-maximization over a sample) -----------
 
-    def _train(self, blob: np.ndarray, offs: np.ndarray) -> _SymbolTable:
+    def train(self, blob: np.ndarray, offs: np.ndarray) -> _SymbolTable:
+        """A symbol table for the values ``(blob, offs)``; ``encode_bo``
+        takes one through ``cache`` to share it across fragments."""
         if blob.size <= self.SAMPLE_BYTES:
             sblob, soffs = blob, offs
         else:
@@ -536,7 +535,7 @@ class FsstStr:
         table = cache.get("fsst_table")
         if table is None:
             fn = cache.get("fsst_table_fn")
-            table = fn() if fn is not None else self._train(blob, offs)
+            table = fn() if fn is not None else self.train(blob, offs)
         nsym = table.n
         sym_lens = table.lens[:nsym]
         bytes8 = (
@@ -564,9 +563,9 @@ class FsstStr:
             {"nsym": str(nsym)},
         )
 
-    def _parse_payload(self, payload: bytes, params: dict, n: int):
+    def _parse(self, payload: bytes, params: dict, n: int):
         """Wire-format header parse -> (sym_len, sym_bytes, comp_lens,
-        codes_all), shared by full and row-selected decode."""
+        codes_all)."""
         if "nsym" not in params:
             # the pre-true-FSST wire format (params 'pairs'/'singles'/
             # 'rounds', big-endian digram tables) is not decodable by this
@@ -588,35 +587,22 @@ class FsstStr:
             rows = np.repeat(np.arange(nsym), sl)
             cols = np.arange(sb.size) - np.repeat(so[:-1], sl)
             sym_bytes[rows, cols] = sb
-        comp_lens = (
-            varint.decode(clens_pay, count=n, width=64).astype(np.int64)
-            if n
-            else np.zeros(0, np.int64)
-        )
         codes_all = np.frombuffer(codes_b, dtype=np.uint8)
-        return sym_len, sym_bytes, comp_lens, codes_all
+        return sym_len, sym_bytes, _lens(clens_pay, n), codes_all
 
-    def decode_bo_selected(self, payload: bytes, params: dict, n: int, idx: np.ndarray) -> BO:
-        """Random-access decode of ``values[idx]`` only: the per-value
-        compressed lengths locate each selected value's code stream, so
-        decode cost is proportional to the SELECTED bytes, not the chunk —
-        the engine's filter-pushdown decode reads 10x less at 10%
-        selectivity."""
-        sym_len, sym_bytes, comp_lens, codes_all = self._parse_payload(payload, params, n)
-        if len(idx) == 0:
-            return np.zeros(0, np.uint8), np.zeros(1, np.int64)
-        comp_offs = np.concatenate([[0], np.cumsum(comp_lens)]).astype(np.int64)
-        sub_codes, sub_offs = _gather_values(codes_all, comp_offs, idx)
-        return self._decode_block(sub_codes, np.diff(sub_offs), sym_len, sym_bytes)
-
-    def decode_bo(self, payload: bytes, params: dict, n: int) -> BO:
-        sym_len, sym_bytes, comp_lens, codes_all = self._parse_payload(payload, params, n)
-        if n == 0:
-            return np.zeros(0, np.uint8), np.zeros(1, np.int64)
+    def decode_bo(self, payload: bytes, params: dict, n: int, idx: np.ndarray | None = None) -> BO:
+        """With ``idx``, the per-value compressed lengths locate each
+        selected value's code stream, so decode cost is proportional to
+        the SELECTED bytes, not the chunk — the engine's filter-pushdown
+        decode reads 10x less at 10% selectivity."""
+        sym_len, sym_bytes, comp_lens, codes_all = self._parse(payload, params, n)
+        if idx is not None:
+            sub_codes, sub_offs = _gather_values(codes_all, _offsets(comp_lens), idx)
+            return self._decode_block(sub_codes, np.diff(sub_offs), sym_len, sym_bytes)
         if codes_all.size > self.TILE_BYTES and n >= 2:
             # cache-blocked decode: tile at value boundaries (escape pairs
             # never cross values — a value's code stream is self-contained)
-            comp_offs_all = np.concatenate([[0], np.cumsum(comp_lens)])
+            comp_offs_all = _offsets(comp_lens)
             cuts = [0]
             while cuts[-1] < n:
                 nxt = int(np.searchsorted(comp_offs_all, comp_offs_all[cuts[-1]] + self.TILE_BYTES))
@@ -633,6 +619,11 @@ class FsstStr:
             return np.concatenate(blobs), np.concatenate([[0], *offs_parts]).astype(np.int64)
         return self._decode_block(codes_all, comp_lens, sym_len, sym_bytes)
 
+    def value_bytes(self, payload: bytes, params: dict, n: int) -> int:
+        """Per-token output lengths summed; no output gather."""
+        sym_len, _, _, codes_all = self._parse(payload, params, n)
+        return int(_token_lens(codes_all, sym_len)[0].sum())
+
     def _decode_block(self, codes, comp_lens, sym_len, sym_bytes) -> BO:
         """One repeat+gather pass: out[k] = sym_flat[code_of_token(k)*8 +
         offset_within_token(k)].  Replaces the per-length scatter loop
@@ -640,24 +631,7 @@ class FsstStr:
         single np.take over the flattened symbol table runs ~5x faster."""
         nb = codes.size
         off_t = np.int32 if nb * 8 < (1 << 31) else np.int64
-        ep_all = np.flatnonzero(codes == _ESCAPE)
-        lens8 = np.take(sym_len, codes, mode="clip")
-
-        if ep_all.size:
-            # runs of consecutive 0xFF bytes alternate escape/literal: codes
-            # are 0..254, so a 0xFF byte is an escape marker unless it is the
-            # literal consumed by the preceding escape (parity within run,
-            # computed over escape positions only)
-            run_start = np.empty(ep_all.size, dtype=bool)
-            run_start[0] = True
-            np.greater(np.diff(ep_all), 1, out=run_start[1:])
-            first_of = ep_all[np.flatnonzero(run_start)][np.cumsum(run_start) - 1]
-            true_esc_pos = ep_all[((ep_all - first_of) & 1) == 0]
-            lit_pos = true_esc_pos + 1
-            lit_pos = lit_pos[lit_pos < nb]
-            lens8[true_esc_pos] = 1  # escape emits exactly the literal byte
-            lens8[lit_pos] = 0  # the literal slot emits nothing itself
-
+        lens8, esc = _token_lens(codes, sym_len)
         out_offs = np.empty(nb + 1, dtype=off_t)
         out_offs[0] = 0
         np.cumsum(lens8, dtype=off_t, out=out_offs[1:])
@@ -673,14 +647,33 @@ class FsstStr:
         rows = np.repeat(d, lens8)
         rows += np.arange(total, dtype=off_t)
         out = np.take(sym_bytes.reshape(-1), rows, mode="clip")
-
-        if ep_all.size:
+        if esc.size:
             # escape tokens gathered row 255 (zeros); overwrite with literals
-            tev = true_esc_pos[true_esc_pos + 1 < nb]
+            tev = esc[esc + 1 < nb]
             out[base[tev]] = codes[tev + 1]
+        return out, out_offs[_offsets(comp_lens)].astype(np.int64)
 
-        comp_offs = np.concatenate([[0], np.cumsum(comp_lens)])
-        return out, out_offs[comp_offs].astype(np.int64)
+
+def _token_lens(codes: np.ndarray, sym_len: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """FSST's escape-parity rule: -> (decoded bytes per code byte (uint8),
+    positions of the true escape codes).  Codes are 0..254, so a 0xFF byte
+    is an escape unless it is the literal consumed by the escape right
+    before it: a run of 0xFF bytes alternates escape/literal (parity within
+    the run, computed over escape positions only).  An escape emits exactly
+    its literal byte; the literal's own slot emits nothing."""
+    lens8 = np.take(sym_len, codes, mode="clip")
+    ep = np.flatnonzero(codes == _ESCAPE)
+    if ep.size == 0:
+        return lens8, ep
+    run_start = np.empty(ep.size, dtype=bool)
+    run_start[0] = True
+    np.greater(np.diff(ep), 1, out=run_start[1:])
+    first_of = ep[np.flatnonzero(run_start)][np.cumsum(run_start) - 1]
+    esc = ep[((ep - first_of) & 1) == 0]
+    lit = esc + 1
+    lens8[esc] = 1
+    lens8[lit[lit < codes.size]] = 0
+    return lens8, esc
 
 
 # list[bytes] adapter so kernel-level tests and small callers stay simple

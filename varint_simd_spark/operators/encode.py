@@ -55,13 +55,14 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
 
+from ..codecs import INT_CODECS, STR_CODECS
 from ..codecs.base import (
     STR_TAGS,
     arrow_tag,
     arrow_to_int64,
     decode_column_arrow,
-    decode_column_arrow_selected,
     encode_column_arrow,
+    split_nulls,
     tag_to_arrow,
 )
 from ..codecs.choose import choose_codec_arrow
@@ -897,14 +898,12 @@ def encode_table_bucketed(
         # Training is LAZY (memoizing thunk, fired on the first fragment
         # whose auto-chosen codec is fsst) so columns that end up
         # dict/rle/raw never pay it.
-        from ..codecs.strings import STR_CODECS
-
         def _lazy_fsst_table(blob, offs):
             memo = {}
 
             def get():
                 if "t" not in memo:
-                    memo["t"] = STR_CODECS["fsst"]._train(blob, offs)
+                    memo["t"] = STR_CODECS["fsst"].train(blob, offs)
                 return memo["t"]
 
             return get
@@ -1197,7 +1196,7 @@ class _ChunkDecoder:
             if sel is not None and c not in decoded:
                 r = rows[c]
                 out.append(
-                    decode_column_arrow_selected(
+                    decode_column_arrow(
                         self.tags[c], r.codec, r.payload, r.params, n, sel
                     ).cast(self.arrow_schema.field(c).type)
                 )
@@ -1394,89 +1393,28 @@ def _agg_row_analytic(tag: str, codec: str, payload, params: dict, nv: int):
     this (tag, codec) combination needs the full decode.
 
     Soundness per case (all against the decode-path semantics):
-    * n_nulls: popcount of the validity bitmap section (== null_count of
-      the decoded array by construction).
-    * strings: sum_bytes is the total decoded byte count; null slots
-      encode as empty values, so they contribute 0 to both paths.
-      raw_str: the blob section length.  dict_str: dictionary value
-      lengths gathered by index — the index stream decodes, the bytes
-      never copy.  rle_str: run-value lengths dot run lengths.  fsst:
-      per-token symbol lengths summed (escape pairs contribute exactly
-      their literal byte) — no output gather.
+    * n_nulls: the set bits of the validity bitmap (:func:`split_nulls`),
+      which the decode turns into exactly that many nulls.
+    * strings, every codec: sum_bytes is the codec's ``value_bytes``, the
+      byte total its ``decode_bo`` would return.  Null slots encode as
+      empty values, so they add 0 on both paths.
     * f64: only n_nulls is reported (float sums are order-dependent).
     * rle_varint (null-free only): sum = Σ value·run_len in exact Python
       ints, min/max over the run values (every run is non-empty).  With
       nulls the excluded slots sit inside runs — fall back to decode.
     * other integer codecs: decoding IS the aggregate cost — fall back."""
-    from ..codecs.container import unpack_sections
-
-    n_nulls = 0
-    if params.get("nulls") == "1":
-        bitmap_b, payload = unpack_sections(payload)
-        bits = np.unpackbits(np.frombuffer(bitmap_b, dtype=np.uint8))[:nv]
-        n_nulls = int(bits.sum())
-
+    null_mask, payload = split_nulls(payload, params, nv)
+    n_nulls = 0 if null_mask is None else int(null_mask.sum())
     if tag in STR_TAGS:
-        if codec == "raw_str":
-            _lens_pay, blob = unpack_sections(payload)
-            return n_nulls, None, None, None, len(blob)
-        if codec == "dict_str":
-            dn = int(params["dict_n"])
-            dlens_pay, _dblob, idx_pay = unpack_sections(payload)
-            if nv == 0:
-                return n_nulls, None, None, None, 0
-            dlens = varint.decode(dlens_pay, count=dn, width=64).astype(np.int64)
-            codes = varint.decode(idx_pay, count=nv, width=64).astype(np.int64)
-            return n_nulls, None, None, None, int(dlens[codes].sum())
-        if codec == "rle_str":
-            runs = int(params["runs"])
-            if runs == 0:
-                return n_nulls, None, None, None, 0
-            rlens_pay, _rblob, rl_pay = unpack_sections(payload)
-            rlens = varint.decode(rlens_pay, count=runs, width=64).astype(np.int64)
-            run_lens = varint.decode(rl_pay, count=runs, width=64).astype(np.int64)
-            return n_nulls, None, None, None, int(rlens @ run_lens)
-        if codec == "fsst":
-            from ..codecs.strings import STR_CODECS
-
-            f = STR_CODECS["fsst"]
-            sym_len, _sym_bytes, _comp_lens, codes = f._parse_payload(
-                payload, params, nv
-            )
-            lens8 = np.take(sym_len, codes, mode="clip").astype(np.int64)
-            ep = np.flatnonzero(codes == 255)
-            if ep.size:
-                run_start = np.empty(ep.size, dtype=bool)
-                run_start[0] = True
-                np.greater(np.diff(ep), 1, out=run_start[1:])
-                first_of = ep[np.flatnonzero(run_start)][np.cumsum(run_start) - 1]
-                true_esc = ep[((ep - first_of) & 1) == 0]
-                lit = true_esc + 1
-                lit = lit[lit < codes.size]
-                lens8[true_esc] = 1
-                lens8[lit] = 0
-            return n_nulls, None, None, None, int(lens8.sum())
-        return None
-
+        return n_nulls, None, None, None, STR_CODECS[codec].value_bytes(payload, params, nv)
     if tag == "f64":
         return n_nulls, None, None, None, None
     if codec == "rle_varint" and n_nulls == 0:
-        runs = int(params["runs"])
-        if runs == 0:
+        run_vals, run_lens = INT_CODECS[codec].runs(payload, params)
+        if run_vals.size == 0:
             return n_nulls, "0", None, None, None
-        from ..kernels.zigzag import unzigzag
-
-        vals_pay, lens_pay = unpack_sections(payload)
-        run_vals = unzigzag(varint.decode(vals_pay, count=runs, width=64))
-        run_lens = varint.decode(lens_pay, count=runs, width=64).astype(np.int64)
         total = int((run_vals.astype(object) * run_lens.astype(object)).sum())
-        return (
-            n_nulls,
-            str(total),
-            str(int(run_vals.min())),
-            str(int(run_vals.max())),
-            None,
-        )
+        return n_nulls, str(total), str(int(run_vals.min())), str(int(run_vals.max())), None
     return None
 
 
