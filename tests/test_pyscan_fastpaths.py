@@ -283,7 +283,6 @@ def test_encode_shuffle_sized_to_cores(spark, tmp_path, monkeypatch):
     import re
 
     from varint_simd_spark.operators import encode_table
-    from varint_simd_spark.operators.encode import make_encode_chunk_fn
     from varint_simd_spark.plans.partitioning import encode_table_salted
     from varint_simd_spark.sources.checkpoint import EncodedStore, encode_resumable
     from varint_simd_spark.sources.web_pages import generate_web_pages
@@ -310,8 +309,7 @@ def test_encode_shuffle_sized_to_cores(spark, tmp_path, monkeypatch):
     def stream_batch(n_chunks):
         # one micro-batch's encode frame, chunk ids mapped back to slots
         store = EncodedStore(spark, str(tmp_path / f"stream{n_chunks}"))
-        fn = make_encode_chunk_fn(wp.columns, {}, "url")
-        enc, _ = _encode_batch(store, wp, 0, n_chunks, "url", fn)
+        enc, _ = _encode_batch(store, wp, 0, n_chunks, "url", wp.columns, {})
         slot = {_stream_chunk_id(0, n_chunks, i): i for i in range(n_chunks)}
         return enc, slot.__getitem__
 
@@ -528,3 +526,210 @@ def test_pyscan_null_fills_schema_evolved_files(spark, tmp_path):
         os.environ["VSS_PYSCAN"] = "1"
     b = _rows(decode_aggregate(st, use_stats=False))
     assert a == b and a
+
+
+def _enc_digest(enc) -> str:
+    """sha256 of an encode's rows, every field, sorted by (chunk_id, col_idx)."""
+    import hashlib
+
+    h = hashlib.sha256()
+    for r in sorted(enc.collect(), key=lambda r: (r["chunk_id"], r["col_idx"])):
+        h.update(repr(tuple(r)).encode())
+    return h.hexdigest()
+
+
+# sha256 (first 16 hex digits) of each writer's encoded rows on the fixed
+# inputs of test_writer_bytes_pinned
+_WRITER_DIGESTS = {
+    "row_shuffle_parquet": "a9179ecaef12a4b4",
+    "fragment_merge": "f8db8f602d9aceb0",
+    "row_shuffle_memory": "641f4f49241a2492",
+    "per_split": "7bada07ee1bd8819",
+    "bucketed": "a4c4e39a1b5b151d",
+    "salted": "1b363758851242ce",
+    "salted_text_only": "8db213046d4115d5",
+    "resumable": "a814cce9d1c3ce00",
+    "resumable_salted": "1b363758851242ce",
+    "stream_batch": "2ee65d6085d469ce",
+}
+
+
+def test_writer_bytes_pinned(spark, tmp_path, monkeypatch):
+    """Every writer's encoded rows are pinned by digest on small fixed
+    inputs with unique keys, so equal-key order cannot vary: the row
+    shuffle (parquet input with grouped stats, and an in-memory frame), the
+    fragment merge, per-split, bucketed, salted (all columns and one),
+    encode_resumable plain and salted, and one stream micro-batch."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from varint_simd_spark.operators import encode_table
+    from varint_simd_spark.operators.encode import encode_table_bucketed, encode_table_per_split
+    from varint_simd_spark.plans.partitioning import encode_table_salted
+    from varint_simd_spark.sources.checkpoint import EncodedStore, encode_resumable
+    from varint_simd_spark.sources.web_pages import generate_web_pages
+    from varint_simd_spark.streaming.incremental import _encode_batch
+
+    web = generate_web_pages(spark, 1500, seed=5).cache()
+    pages = web.toArrow().sort_by("url")
+    for i in range(4):
+        (tmp_path / "web").mkdir(exist_ok=True)
+        pq.write_table(pages.slice(i * 375, 375), tmp_path / "web" / f"f{i}.parquet")
+    web_pq = spark.read.parquet(str(tmp_path / "web"))
+
+    # integer-dominated, lineitem-shaped, 8 files: takes the fragment merge
+    rng = np.random.default_rng(13)
+    n = 16_000
+    key = rng.permutation(n).astype(np.int64) * 7 + 3
+    li = pa.table({
+        "l_key": key,
+        "l_orderkey": (key // 28).astype(np.int64),
+        "l_partkey": rng.integers(0, 20_000, n).astype(np.int64),
+        "l_quantity": rng.integers(1, 51, n).astype(np.int32),
+        "l_extendedprice": np.round(rng.uniform(900, 105_000, n), 2),
+        "l_shipdate": pa.array(rng.integers(8000, 10_500, n).astype(np.int32), pa.date32()),
+        "l_returnflag": pa.array(rng.choice(["A", "N", "R"], n)),
+    })
+    (tmp_path / "li").mkdir()
+    for i in range(8):
+        pq.write_table(li.slice(i * 2000, 2000), tmp_path / "li" / f"f{i}.parquet")
+    li_pq = spark.read.parquet(str(tmp_path / "li"))
+    fragment = encode_table(li_pq, key="l_key", n_chunks=4)
+    assert "__gkey" in fragment._jdf.queryExecution().analyzed().toString()
+
+    def resumable(**kw):
+        got = []
+        monkeypatch.setattr(EncodedStore, "commit", lambda self, enc, **_: got.append(enc))
+        encode_resumable(
+            EncodedStore(spark, str(tmp_path / f"store{len(kw)}")), web, n_chunks=4, **kw
+        )
+        monkeypatch.undo()
+        return got[0]
+
+    store = EncodedStore(spark, str(tmp_path / "stream"))
+    stream_batch, _ = _encode_batch(store, web, 3, 4, "url", web.columns, {}, "lang")
+
+    encodes = {
+        "row_shuffle_parquet": encode_table(web_pq, key="url", n_chunks=4, stats_group_by="lang"),
+        "fragment_merge": fragment,
+        "row_shuffle_memory": encode_table(web, key="url", n_chunks=3),
+        "per_split": encode_table_per_split(web_pq, key="url", target_chunk_bytes=64 << 10),
+        "bucketed": encode_table_bucketed(web_pq, key="url", n_buckets=3),
+        "salted": encode_table_salted(web, n_chunks=4, target_rows_per_chunk=100),
+        "salted_text_only": encode_table_salted(web, n_chunks=4, columns=["text"]),
+        "resumable": resumable(),
+        "resumable_salted": resumable(salted=True, target_rows_per_chunk=100),
+        "stream_batch": stream_batch,
+    }
+    got = {name: _enc_digest(enc)[:16] for name, enc in encodes.items()}
+    web.unpersist()
+    assert got == _WRITER_DIGESTS
+
+
+def test_colocated_decode_emits_a_duplicated_chunk_once(spark, tmp_path, monkeypatch):
+    """A chunk whose files sit in two directories of a store partitioned
+    by another column decodes once on both scans, as in decode_table: the
+    python-side scan reads one task per directory only when each chunk id
+    is a partition value held by one directory, and the colocated loop
+    emits a chunk at most once per task, which covers two copies that one
+    JVM scan task reads.  A chunk-partitioned store keeps the python-side
+    per-directory scan."""
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from varint_simd_spark.operators import decode_table, decode_table_colocated, encode_table
+    from varint_simd_spark.operators import encode as E
+
+    rng = np.random.default_rng(3)
+    n = 9000
+    # ~1 KB of incompressible bytes a row: every directory below holds
+    # over the python-side scan's 4 MB per-directory floor
+    blobs = rng.integers(0, 256, n * 1024, dtype=np.uint8).tobytes()
+    src = spark.createDataFrame(
+        [(i, blobs[i * 1024:(i + 1) * 1024]) for i in range(n)], "k long, blob binary"
+    )
+    enc = encode_table(src, key="k", n_chunks=2, codecs={"blob": "raw_str"}).toArrow()
+    chunk = {c: enc.filter(pc.equal(enc["chunk_id"], c)) for c in (0, 1)}
+    layouts = {
+        # chunk 0 copied into a second part= directory
+        "dup": [("part=0", chunk[0]), ("part=1", chunk[1]), ("part=2", chunk[0])],
+        "chunked": [(f"chunk_id={c}", chunk[c].drop_columns("chunk_id")) for c in (0, 1)],
+    }
+    for name, files in layouts.items():
+        for d, t in files:
+            (tmp_path / name / d).mkdir(parents=True)
+            pq.write_table(t, tmp_path / name / d / "c.parquet")
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.select("k", F.xxhash64("blob")).collect())
+
+    groups = []
+    real = E.pyscan_map_in_arrow
+
+    def spy(*args, **kwargs):
+        groups.append(kwargs["group"])
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(E, "pyscan_map_in_arrow", spy)
+    st = spark.read.parquet(str(tmp_path / "dup"))
+    want = rows(decode_table(st))
+    assert len(want) == n
+    for flag in ("0", "1"):
+        os.environ["VSS_PYSCAN"] = flag
+        try:
+            assert rows(decode_table_colocated(st)) == want, flag
+        finally:
+            os.environ["VSS_PYSCAN"] = "1"
+    assert groups == []
+    # one JVM scan task reads both copies: the probe sees no split chunk
+    spark.conf.set("spark.sql.files.minPartitionNum", "1")
+    try:
+        assert st.rdd.getNumPartitions() == 1
+        assert rows(decode_table_colocated(st)) == want
+    finally:
+        spark.conf.unset("spark.sql.files.minPartitionNum")
+
+    chunked = spark.read.parquet(str(tmp_path / "chunked"))
+    assert rows(decode_table_colocated(chunked)) == want
+    assert groups == ["dir"]
+
+
+def test_aggregate_with_columns_reads_through_python_scan(spark, tmp_path, monkeypatch):
+    """decode_aggregate(columns=...) on a chunk store: the stats tiers and
+    the ungrouped decode tier pass the column list to the python-side scan
+    as its row filter, and answer the JVM scan's rows."""
+    from varint_simd_spark.operators import encode_table
+    from varint_simd_spark.operators import pyscan as P
+    from varint_simd_spark.operators.encode import decode_aggregate
+    from varint_simd_spark.sources.web_pages import generate_web_pages
+
+    store = str(tmp_path / "store")
+    encode_table(
+        generate_web_pages(spark, 2000, seed=9), key="url", n_chunks=4, stats_group_by="lang"
+    ).write.partitionBy("chunk_id").parquet(store)
+    st = spark.read.parquet(store)
+    cols = ["warc_ts", "text"]
+    tiers = {
+        "stats": {},
+        "decode": {"use_stats": False},
+        "grouped_stats": {"group_by": "lang"},
+    }
+    filters = []
+    real = P.pyscan_map_in_arrow
+
+    def spy(*args, **kwargs):
+        filters.append(kwargs["column_filter"])
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(P, "pyscan_map_in_arrow", spy)
+    for tier, kw in tiers.items():
+        os.environ["VSS_PYSCAN"] = "0"
+        try:
+            jvm = _rows(decode_aggregate(st, columns=cols, **kw))
+        finally:
+            os.environ["VSS_PYSCAN"] = "1"
+        assert filters == [], tier
+        got = _rows(decode_aggregate(st, columns=cols, **kw))
+        assert got == jvm and {r[1 if "group_by" in kw else 0] for r in got} == set(cols), tier
+        assert [sorted(f) for f in filters] == [sorted(cols)], tier
+        filters.clear()

@@ -30,15 +30,16 @@ def _stats_stage_reads(spark, monkeypatch, store, group_by=None):
     import re
 
     from varint_simd_spark.operators import encode as E
+    from varint_simd_spark.operators import pyscan as P
 
     requested = []
-    real = E.pyscan_map_in_arrow
+    real = P.pyscan_map_in_arrow
 
     def spy(*args, **kwargs):
         requested.append(kwargs["columns"])
         return real(*args, **kwargs)
 
-    monkeypatch.setattr(E, "pyscan_map_in_arrow", spy)
+    monkeypatch.setattr(P, "pyscan_map_in_arrow", spy)
     E._agg_stats_partials(spark.read.parquet(store), group_by)
     os.environ["VSS_PYSCAN"] = "0"
     try:

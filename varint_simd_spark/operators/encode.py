@@ -1,14 +1,19 @@
 """encode_table / decode_table — the engine's main Spark operators.
 
-Every encode writes one encoded row per (chunk, column), built by the one
-row-contract implementation :func:`_encode_columns_to_rows`.  Three encode
-topologies feed it:
+Every encode writes one encoded row per (chunk, column), assembled by one
+function, :func:`_encoded_rows`: :func:`_encode_columns_to_rows` (codec
+choice, sizes, zone maps, grouped partials) feeds it for stored rows, and
+:func:`_encode_fragment_rows` (fixed cheap codecs, no stats) for the
+fragment merge's intermediate rows.  Every chunk's rows are sorted by the
+key before they are encoded.  Three encode topologies:
 
 * hash-chunk (:func:`encode_table`): chunk id ``pmod(xxhash64(key),
   n_chunks)``, so chunk membership is deterministic in data only and
   resume/verify work identically at any parallelism.  One shuffle, which
   places chunk ``c`` in reduce partition ``c mod n``
-  (:func:`_chunk_exchange`): raw rows for string-heavy inputs, compressed
+  (:func:`_chunk_exchange`): raw rows for string-heavy inputs, through
+  :func:`_hash_chunk_encode`, the one plan that the salted, resumable
+  and streaming writers share with their own chunk column; compressed
   fragments re-encoded per chunk for integer-dominated bare parquet scans
   (:func:`_encode_table_fragment_merge`).  The order of equal-key rows
   inside a chunk, and so the payload bytes, follows the topology: on the
@@ -17,7 +22,9 @@ topologies feed it:
   through the row shuffle, each stable from run to run, both decoding to
   the same rows;
 * per-split (:func:`encode_table_per_split`): each scan partition packs
-  and encodes its own chunks — zero exchanges, layout-deterministic ids;
+  and encodes its own chunks — zero exchanges, layout-deterministic ids
+  (:func:`_chunk_id63`, the 63-bit id rule of every writer whose ids are
+  not small ints);
 * bucketed (:func:`encode_table_bucketed`): per-split fragments tagged
   with a ``pmod(xxhash64(key), n_buckets)`` bucket, so the caller's
   ``repartition("bucket")`` moves compressed bytes only.
@@ -69,7 +76,7 @@ from ..codecs.choose import choose_codec_arrow
 from ..codecs.strings import arrow_to_bo
 from ..kernels import varint
 from ..kernels.zigzag import zigzag
-from .pyscan import parquet_scan_info, pyscan_map_in_arrow
+from .pyscan import map_in_arrow_split, parquet_scan_info, pyscan_map_in_arrow
 
 ENCODED_SCHEMA = T.StructType(
     [
@@ -362,6 +369,26 @@ def _group_partials(arr: pa.Array, tag: str, codes: np.ndarray, n_groups: int) -
     ]
 
 
+def _encoded_rows(chunk_id: int, encoded) -> pa.Table:
+    """The one assembly of the encoded-row contract: a row per ``(column,
+    dtype, codec, params, payload, n_values, raw_bytes, ref_bytes, reason,
+    stats)`` of ``encoded``, numbered in order as ``col_idx``, with
+    ``enc_bytes`` and ``crc32`` taken from the payload and ``stats`` (a
+    dict, or None) as JSON."""
+    rows = [
+        (
+            chunk_id, idx, col, tag, codec, json.dumps(params), payload, n, raw_b,
+            ref_b, len(payload), zlib.crc32(payload), reason,
+            None if st is None else json.dumps(st),
+        )
+        for idx, (col, tag, codec, params, payload, n, raw_b, ref_b, reason, st)
+        in enumerate(encoded)
+    ]
+    return pa.Table.from_pylist(
+        [dict(zip(_ENC_ARROW.names, r)) for r in rows], schema=_ENC_ARROW
+    )
+
+
 def _encode_columns_to_rows(
     table: pa.Table,
     columns: list[str],
@@ -371,8 +398,9 @@ def _encode_columns_to_rows(
     stats_group_by: str | None = None,
 ) -> pa.Table:
     """Encode ``columns`` of one (already chunk-assigned, already sorted)
-    Arrow table into encoded-chunk rows — the single implementation of the
-    encoded-row contract, shared by every encode topology.
+    Arrow table into the encoded rows every topology stores: codec
+    auto-choice, reference/raw sizes, zone maps and grouped partials,
+    assembled by :func:`_encoded_rows`.
 
     ``shared_cache``: per-column codec artifacts reused across MANY calls
     (e.g. one FSST table per (scan partition, column) in the bucketed
@@ -384,11 +412,11 @@ def _encode_columns_to_rows(
     :func:`decode_aggregate` can answer GROUP BY queries from metadata
     alone.  Omitted when a chunk exceeds MAX_STAT_GROUPS distinct groups
     (the grouped decode path remains the sound fallback)."""
-    cols: dict[str, list] = {k.name: [] for k in _ENC_ARROW}
     grp = None
     if stats_group_by is not None:
         grp = _group_codes(table[stats_group_by].combine_chunks())
-    for idx, col in enumerate(columns):
+
+    def encode(col):
         arr = table[col].combine_chunks()
         want = codecs.get(col, "auto")
         cache = dict((shared_cache or {}).get(col) or {})
@@ -409,42 +437,18 @@ def _encode_columns_to_rows(
                 "col": stats_group_by,
                 "groups": {k: p for k, p in zip(keys, parts) if p is not None},
             }
-        cols["chunk_id"].append(chunk_id)
-        cols["col_idx"].append(idx)
-        cols["column"].append(col)
-        cols["dtype"].append(tag)
-        cols["codec"].append(codec)
-        cols["params"].append(json.dumps(params))
-        cols["payload"].append(payload)
-        cols["n_values"].append(len(arr))
-        cols["raw_bytes"].append(raw_b)
-        cols["ref_bytes"].append(ref_b)
-        cols["enc_bytes"].append(len(payload))
-        cols["crc32"].append(zlib.crc32(payload))
-        cols["reason"].append(reason)
-        cols["stats"].append(json.dumps(st))
-    return pa.table(cols, schema=_ENC_ARROW)
+        return col, tag, codec, params, payload, len(arr), raw_b, ref_b, reason, st
+
+    return _encoded_rows(chunk_id, map(encode, columns))
 
 
-def make_encode_chunk_fn(
-    columns: list[str],
-    codecs: dict[str, str],
-    sort_key: str | None,
-    stats_group_by: str | None = None,
-):
-    """Build the applyInArrow chunk encoder (closure shipped to executors).
-    A group's ``__chunk`` value is its logical chunk id, emitted as
-    ``chunk_id``."""
+def _chunk_id63(*parts) -> int:
+    """The 63-bit non-negative chunk id of the writers whose ids are not
+    small ints: the top 63 bits of ``blake2b(repr(parts))``."""
+    import hashlib
 
-    def encode_chunk(table: pa.Table) -> pa.Table:
-        chunk_id = int(table["__chunk"][0].as_py())
-        if sort_key is not None:
-            table = table.take(pc.sort_indices(table[sort_key]))
-        return _encode_columns_to_rows(
-            table, columns, codecs, chunk_id, stats_group_by=stats_group_by
-        )
-
-    return encode_chunk
+    h = hashlib.blake2b(repr(parts).encode(), digest_size=8)
+    return int.from_bytes(h.digest(), "big") >> 1
 
 
 def _check_n_chunks(n_chunks) -> None:
@@ -515,6 +519,41 @@ def _encode_args(
     return columns, codecs
 
 
+def _hash_chunk_encode(
+    df: DataFrame,
+    key: str,
+    n_chunks: int,
+    columns: list[str],
+    codecs: dict[str, str],
+    chunk=None,
+    stats_group_by: str | None = None,
+    only: list[int] | None = None,
+) -> DataFrame:
+    """The one plan of every hash-chunk encode over raw rows
+    (:func:`encode_table`'s row shuffle, ``encode_table_salted``,
+    ``encode_resumable``, ``encode_stream``'s micro-batches); the writers
+    differ only in ``chunk``, the IntegerType Column that names each row's
+    chunk, by default ``pmod(xxhash64(key), n_chunks)``.
+
+    The rows of ``columns`` and ``chunk`` go through :func:`_chunk_exchange`
+    (``only``: just these chunks); each chunk is sorted by ``key`` and
+    encoded by :func:`_encode_columns_to_rows`.  ``key`` rides along when
+    it is not in ``columns`` and is never encoded."""
+    if chunk is None:
+        chunk = F.pmod(F.xxhash64(F.col(key)), F.lit(n_chunks)).cast("int")
+    select_cols = list(columns) + ([key] if key not in columns else [])
+
+    def encode_chunk(table: pa.Table) -> pa.Table:
+        chunk_id = int(table["__chunk"][0].as_py())
+        table = table.take(pc.sort_indices(table[key]))
+        return _encode_columns_to_rows(
+            table, columns, codecs, chunk_id, stats_group_by=stats_group_by
+        )
+
+    frame = df.select(*select_cols, chunk.alias("__chunk"))
+    return _chunk_exchange(frame, n_chunks, encode_chunk, only=only)
+
+
 def _spark_xxhash64(karr: pa.Array) -> np.ndarray:
     """Spark's ``xxhash64`` of a key column, from the bit-exact numpy XXH64
     kernels (kernels/xxh64.py): integers hash as 8-byte longs,
@@ -558,29 +597,17 @@ def _encode_fragment_rows(
     re-encodes the whole chunk with the full machinery, so only payload
     + params + crc matter here).  ~5x cheaper than the auto-choice
     encoder, which is pure overhead for rows that live one shuffle."""
-    cols: dict[str, list] = {k.name: [] for k in _ENC_ARROW}
-    for idx, col in enumerate(columns):
+
+    def encode(col):
         arr = table[col].combine_chunks()
         tag = arrow_tag(arr.type)
         codec = "raw_str" if tag in STR_TAGS else (
             "raw64" if tag == "f64" else "for_bitpack"
         )
         tag, payload, params = encode_column_arrow(arr, codec)
-        cols["chunk_id"].append(chunk_id)
-        cols["col_idx"].append(idx)
-        cols["column"].append(col)
-        cols["dtype"].append(tag)
-        cols["codec"].append(codec)
-        cols["params"].append(json.dumps(params))
-        cols["payload"].append(payload)
-        cols["n_values"].append(len(arr))
-        cols["raw_bytes"].append(0)
-        cols["ref_bytes"].append(0)
-        cols["enc_bytes"].append(len(payload))
-        cols["crc32"].append(zlib.crc32(payload))
-        cols["reason"].append("fragment")
-        cols["stats"].append(None)
-    return pa.table(cols, schema=_ENC_ARROW)
+        return col, tag, codec, params, payload, len(arr), 0, 0, "fragment", None
+
+    return _encoded_rows(chunk_id, map(encode, columns))
 
 
 def _frag_id(pid, ordinal, n_chunks: int):
@@ -597,7 +624,6 @@ def _encode_table_fragment_merge(
     columns: list[str],
     codecs: dict[str, str],
     n_chunks: int,
-    sort_within_chunk: bool,
     stats_group_by: str | None,
 ) -> DataFrame:
     """Hash-chunk encode that never shuffles raw rows (guide §8: decide
@@ -663,7 +689,7 @@ def _encode_table_fragment_merge(
 
     frags = pyscan_map_in_arrow(
         spark, scan, frag_fn, FRAG_SCHEMA,
-        columns=frag_columns, group="split", canonical_ts=True,
+        columns=frag_columns, group="split",
     )
 
     def merge_fn(table: pa.Table) -> pa.Table:
@@ -678,8 +704,7 @@ def _encode_table_fragment_merge(
             arr = decode_column_arrow(r.dtype, r.codec, r.payload, r.params, r.n_values)
             parts.setdefault(r.column, []).append(arr.cast(tag_to_arrow(r.dtype)))
         tbl = pa.table({c: pa.concat_arrays(parts[c]) for c in frag_columns})
-        if sort_within_chunk:
-            tbl = tbl.take(pc.sort_indices(tbl[key]))
+        tbl = tbl.take(pc.sort_indices(tbl[key]))
         return _encode_columns_to_rows(
             tbl, columns, codecs, logical, stats_group_by=stats_group_by
         )
@@ -693,21 +718,20 @@ def encode_table(
     columns: list[str] | None = None,
     codecs: dict[str, str] | None = None,
     n_chunks: int = 32,
-    sort_within_chunk: bool = True,
     stats_group_by: str | None = None,
 ) -> DataFrame:
     """Encode ``df`` into the encoded-chunk DataFrame (FIXTURES.md §4).
 
     ``key``: chunk-assignment column (url at production scale) — chunk id is
     ``pmod(xxhash64(key), n_chunks)``, so chunk membership is deterministic
-    in data only.  The order of equal-key rows within a chunk, and so the
-    payload bytes, follows the topology (fragment merge or row shuffle;
-    see the module docstring); either decodes to the same rows.
+    in data only.  Every chunk's rows are sorted by ``key`` before encoding
+    (run/delta locality, and one value order for resume and verify); the
+    order of equal-key rows within a chunk, and so the payload bytes,
+    follows the topology (fragment merge or row shuffle; see the module
+    docstring); either decodes to the same rows.
     ``n_chunks``: an int in [1, 2**31 - 1]; chunk ``c`` is encoded in
     reduce partition ``c mod min(n_chunks, defaultParallelism)``.
     ``codecs``: per-column codec name or "auto" (default: auto for all).
-    ``sort_within_chunk``: sort chunk rows by ``key`` before encoding —
-    deterministic value order (resume/verify) and better run/delta locality.
     ``stats_group_by``: declared low-cardinality group column whose exact
     per-chunk per-group partials ride the stats JSON — enables
     ``decode_aggregate(group_by=...)`` to run O(chunks) from metadata.
@@ -740,18 +764,11 @@ def encode_table(
             and byte_array_fraction(scan[0]) < 0.25
         ):
             return _encode_table_fragment_merge(
-                df, scan, key, columns, codecs, n_chunks,
-                sort_within_chunk, stats_group_by,
+                df, scan, key, columns, codecs, n_chunks, stats_group_by
             )
-    chunk = F.pmod(F.xxhash64(F.col(key)), F.lit(n_chunks)).cast("int").alias("__chunk")
-    fn = make_encode_chunk_fn(
-        columns, codecs, key if sort_within_chunk else None, stats_group_by
+    return _hash_chunk_encode(
+        df, key, n_chunks, columns, codecs, stats_group_by=stats_group_by
     )
-    # the sort key must ride along even when not an encoded column, else the
-    # chunk sort would KeyError at executor time; it is never encoded (the
-    # encode loop iterates `columns` only)
-    select_cols = list(columns) + ([key] if sort_within_chunk and key not in columns else [])
-    return _chunk_exchange(df.select(*select_cols, chunk), n_chunks, fn)
 
 
 def encode_table_per_split(
@@ -777,13 +794,11 @@ def encode_table_per_split(
     * no global clustering by key — rows are key-sorted *within* each
       chunk, so run/delta locality still holds locally.
 
-    chunk_id = low 63 bits of blake2b(partition id || ordinal-in-partition
-    || first key || n_rows) — deterministic for a fixed layout; the
+    chunk_id = :func:`_chunk_id63` of (partition id, ordinal in partition,
+    first key, n_rows) — deterministic for a fixed layout; the
     partition id makes ids unique ACROSS scan partitions (ordinal alone
     resets per task, and (first_key, n_rows) recur for duplicate-keyed
     data with uniform Arrow batch sizes)."""
-    import hashlib
-
     from pyspark import TaskContext
 
     columns, codecs = _encode_args(df.columns, columns, codecs, stats_group_by)
@@ -801,13 +816,8 @@ def encode_table_per_split(
             table = pa.Table.from_batches(buf)
             buf, buf_bytes = [], 0
             table = table.take(pc.sort_indices(table[key]))
-            first_key = table[key][0].as_py()
-            h = hashlib.blake2b(
-                repr((pid, ordinal, first_key, table.num_rows)).encode(),
-                digest_size=8,
-            )
+            chunk_id = _chunk_id63(pid, ordinal, table[key][0].as_py(), table.num_rows)
             ordinal += 1
-            chunk_id = int.from_bytes(h.digest(), "big") >> 1  # 63-bit, non-negative
             return _encode_columns_to_rows(
                 table, columns, codecs, chunk_id, stats_group_by=stats_group_by
             ).to_batches()
@@ -820,16 +830,9 @@ def encode_table_per_split(
         if buf:
             yield from flush()
 
-    # python-side scan fast path (pyscan.py): when the input is a bare
-    # parquet scan, read the files with pyarrow inside the task instead of
+    # a bare parquet input is read with pyarrow inside the task instead of
     # paying the JVM row->Arrow transpose (measured ~4.7 s per 4.9 GB scan)
-    scan = parquet_scan_info(df)
-    if scan is not None:
-        return pyscan_map_in_arrow(
-            df.sparkSession, scan, fn, ENCODED_SCHEMA,
-            columns=select_cols, group="split", canonical_ts=True,
-        )
-    return df.select(*select_cols).mapInArrow(fn, schema=ENCODED_SCHEMA)
+    return map_in_arrow_split(df, fn, ENCODED_SCHEMA, select_cols)
 
 
 BUCKETED_SCHEMA = T.StructType(ENCODED_SCHEMA.fields + [T.StructField("bucket", T.LongType())])
@@ -854,7 +857,8 @@ def encode_table_bucketed(
     1. per scan partition (ZERO exchanges): sort rows by (bucket, key)
        where ``bucket = pmod(xxhash64(key), n_buckets)``, slice at bucket
        boundaries, and encode each slice as its own chunk (unique
-       blake2b chunk_id, ``bucket`` column carried through);
+       :func:`_chunk_id63` of (partition id, bucket, first key, n_rows),
+       ``bucket`` column carried through);
     2. the caller clusters with ``.repartition("bucket")`` +
        ``write.partitionBy("bucket", ...)`` — the only exchange ships
        encoded fragments at the compressed ratio (~0.3x), entirely
@@ -878,8 +882,6 @@ def encode_table_bucketed(
     bucket_col = F.pmod(F.xxhash64(F.col(key)), F.lit(n_buckets)).alias("__bucket")
 
     def fn(batches):
-        import hashlib
-
         from pyspark import TaskContext
 
         ctx = TaskContext.get()
@@ -920,11 +922,7 @@ def encode_table_bucketed(
         for a, b in zip(starts[:-1], starts[1:]):
             frag = table.slice(a, b - a).drop_columns("__bucket")
             bucket = int(bv[a])
-            h = hashlib.blake2b(
-                repr((pid, bucket, frag[key][0].as_py(), frag.num_rows)).encode(),
-                digest_size=8,
-            )
-            chunk_id = int.from_bytes(h.digest(), "big") >> 1
+            chunk_id = _chunk_id63(pid, bucket, frag[key][0].as_py(), frag.num_rows)
             enc = _encode_columns_to_rows(
                 frag, columns, codecs, chunk_id,
                 shared_cache=shared, stats_group_by=stats_group_by,
@@ -955,7 +953,7 @@ def encode_table_bucketed(
 
         return pyscan_map_in_arrow(
             df.sparkSession, scan, fn_with_bucket, BUCKETED_SCHEMA,
-            columns=select_cols, group="split", canonical_ts=True,
+            columns=select_cols, group="split",
         )
     return df.select(*select_cols, bucket_col).mapInArrow(fn, schema=BUCKETED_SCHEMA)
 
@@ -1258,12 +1256,20 @@ def decode_table_colocated(
     pure ``mapInArrow`` over the scan: zero exchanges.  This is the 100 TB
     read path: decode throughput scales with scan parallelism only.
 
-    ``check_layout``: probe colocation first (a cheap job reading only the
-    chunk_id column — payloads are column-pruned away) and fall back to the
-    shuffled :func:`decode_table` when any chunk is split across scan
-    partitions (e.g. tiny ``maxPartitionBytes``), instead of erroring
-    mid-job.  The executor-side hard error remains as the last-resort
-    guard against silent data loss when the check is skipped.
+    ``check_layout``: prove or probe colocation first.  The python-side
+    scan reads one task per directory, which is proven colocated only
+    when ``chunk_id`` is a partition column and each chunk id's files sit
+    in one directory (``pyscan._dir_per_chunk``, from the file paths); any
+    other store reads through the JVM scan, after a probe (a cheap job
+    reading only the chunk_id column — payloads are column-pruned away)
+    that falls back to the shuffled :func:`decode_table` when any chunk
+    spans scan partitions (e.g. tiny ``maxPartitionBytes``, or a chunk
+    copied into two directories), instead of erroring mid-job.  With
+    ``check_layout=False`` every directory is trusted to hold whole
+    chunks.  Each task emits a chunk id at most once, so two copies of a
+    chunk that one task reads decode once, as in :func:`decode_table`.
+    The executor-side hard error remains as the last-resort guard against
+    silent data loss when the check is skipped.
 
     ``columns`` / ``where``: projection and filter pushdown, exactly as in
     :func:`decode_table` (same :class:`_ChunkDecoder`)."""
@@ -1271,7 +1277,8 @@ def decode_table_colocated(
     # executed inside the Python task (pyarrow reader, one task per
     # partition directory), skipping both the JVM row->Arrow transpose and
     # — because a directory can never split across tasks — the colocation
-    # probe.  Measured gates (bench_logs A/B, 10M + sf0.1):
+    # probe; with check_layout, only where each chunk has one directory.
+    # Measured gates (bench_logs A/B, 10M + sf0.1):
     # * column-subset reads stay on the JVM scan — Spark's parquet reader
     #   skips non-matching payload PAGES via the column index, which a
     #   whole-file pyarrow read cannot (pruned decode 1.3x slower there);
@@ -1284,12 +1291,14 @@ def decode_table_colocated(
     #   single task — JVM scan.
     scan = parquet_scan_info(enc) if columns is None else None
     if scan is not None:
-        from .pyscan import _group_by_dir, _total_bytes
+        from .pyscan import _dir_per_chunk, _group_by_dir, _total_bytes
 
         groups = _group_by_dir(scan[0])
-        if len(groups) < min(4, len(scan[0])) or _total_bytes(scan[0]) < (
-            4 << 20
-        ) * len(groups):
+        if (
+            len(groups) < min(4, len(scan[0]))
+            or _total_bytes(scan[0]) < (4 << 20) * len(groups)
+            or (check_layout and not _dir_per_chunk(scan))
+        ):
             scan = None
     if check_layout and scan is None:
         split = (
@@ -1314,11 +1323,15 @@ def decode_table_colocated(
 
     def fn(batches):
         pending: dict[int, dict] = {}
+        done: set[int] = set()
         for batch in batches:
             for r in dec.rows(batch):
+                if r.chunk_id in done:
+                    continue  # a second copy of a chunk this task emitted
                 rows = pending.setdefault(r.chunk_id, {})
                 rows[r.column] = r
                 if len(rows) == len(dec.columns):
+                    done.add(r.chunk_id)
                     got = dec.decode(pending.pop(r.chunk_id))
                     if got is not None:
                         yield got
@@ -1455,14 +1468,17 @@ def _fold_agg_rows(rows) -> list[tuple]:
     ]
 
 
-def _fold_stage(enc: DataFrame, columns: list[str], chunk_partials, cap=None) -> DataFrame:
+def _fold_stage(
+    enc: DataFrame, columns: list[str], chunk_partials, cap=None, only=None
+) -> DataFrame:
     """One Python stage over ``columns`` of ``enc`` (lazy): each task
     folds the partial rows ``chunk_partials`` makes of the batches it
     reads and emits the folded rows (at most ``cap + 1`` of them), so no
     per-chunk rows cross the Python->JVM boundary.  Partials need no
     chunk colocation, so the python-side scan packs files by size (one
     wave of tasks), not by chunk directory.  Columns the store lacks are
-    not requested."""
+    not requested.  ``only``: read just the rows of these encoded
+    columns."""
     columns = [c for c in columns if c in enc.columns]
 
     def fn(batches):
@@ -1471,12 +1487,7 @@ def _fold_stage(enc: DataFrame, columns: list[str], chunk_partials, cap=None) ->
             rows = rows[: cap + 1]
         yield from _rows_to_arrow(rows, _PART_SCHEMA).to_batches()
 
-    scan = parquet_scan_info(enc)
-    if scan is not None:
-        return pyscan_map_in_arrow(
-            enc.sparkSession, scan, fn, _PART_SCHEMA, columns=columns, group="split"
-        )
-    return enc.select(*columns).mapInArrow(fn, schema=_PART_SCHEMA)
+    return map_in_arrow_split(enc, fn, _PART_SCHEMA, columns, column_filter=only)
 
 
 def _collect_partials(stage: DataFrame):
@@ -1486,7 +1497,7 @@ def _collect_partials(stage: DataFrame):
         yield from zip(*(b.column(n).to_pylist() for n in _PART_SCHEMA.names))
 
 
-def _agg_decode_partials(enc: DataFrame) -> DataFrame:
+def _agg_decode_partials(enc: DataFrame, only: list[str] | None = None) -> DataFrame:
     """The ungrouped decode tier's one Spark stage (lazy), over the
     payload.  Chunks whose (dtype, codec) admits it are aggregated
     straight from the payload structure (:func:`_agg_row_analytic`)
@@ -1513,20 +1524,24 @@ def _agg_decode_partials(enc: DataFrame) -> DataFrame:
         enc,
         ["chunk_id", "column", "dtype", "codec", "payload", "params", "n_values", "crc32"],
         chunk_partials,
+        only=only,
     )
 
 
-def _agg_decode_path(enc: DataFrame) -> list[tuple]:
+def _agg_decode_path(enc: DataFrame, only: list[str] | None = None) -> list[tuple]:
     """The ungrouped decode tier's ``_AGG_SCHEMA`` answer rows, sorted by
     column: one job collects :func:`_agg_decode_partials`'s O(tasks x
     columns) rows and the driver folds them."""
-    return [r[1:-1] for r in _fold_agg_rows(_collect_partials(_agg_decode_partials(enc)))]
+    partials = _agg_decode_partials(enc, only)
+    return [r[1:-1] for r in _fold_agg_rows(_collect_partials(partials))]
 
 
 _STATS_COLUMNS = ["column", "dtype", "n_values", "raw_bytes", "stats"]
 
 
-def _agg_stats_partials(enc: DataFrame, group_by: str | None = None, cap=None) -> DataFrame:
+def _agg_stats_partials(
+    enc: DataFrame, group_by: str | None = None, cap=None, only: list[str] | None = None
+) -> DataFrame:
     """The stats tiers' one Spark stage (lazy): it reads only the
     metadata columns, never the payload, and turns each chunk row's
     stats into the decode tier's partial row: per column, or per
@@ -1564,7 +1579,7 @@ def _agg_stats_partials(enc: DataFrame, group_by: str | None = None, cap=None) -
                         int(nn is not None and sm is not None),
                     )
 
-    return _fold_stage(enc, _STATS_COLUMNS, chunk_partials, cap)
+    return _fold_stage(enc, _STATS_COLUMNS, chunk_partials, cap, only)
 
 
 def _degroup_null_key(df: DataFrame) -> DataFrame:
@@ -1682,11 +1697,11 @@ def decode_aggregate(
     drift; null for float/string), ``sum_bytes`` (total utf8/binary bytes,
     strings only).
 
+    ``columns`` reach each stage as its row filter on ``column``, so a
+    bare store scan keeps the python-side scan.
+
     Needs no chunk colocation except in the grouped decode tier, which
     groups by chunk_id itself."""
-    if columns is not None:
-        keep = set(columns) | ({group_by} if group_by is not None else set())
-        enc = enc.filter(F.col("column").isin(sorted(keep)))
     # a store from before the stats field: every column takes the decode tier
     use_stats = use_stats and "stats" in enc.columns
 
@@ -1700,8 +1715,8 @@ def decode_aggregate(
         if not use_stats:
             return decode_grouped(columns).orderBy("group", "column")
         cap = MAX_COLLECTED_GROUP_ROWS
-        sub = enc if columns is None else enc.filter(F.col("column").isin(columns))
-        rows = _fold_agg_rows(_collect_partials(_agg_stats_partials(sub, group_by, cap)))
+        stage = _agg_stats_partials(enc, group_by, cap, columns)
+        rows = _fold_agg_rows(_collect_partials(stage))
         if len(rows) > cap:
             return decode_grouped(columns).orderBy("group", "column")
         bad = sorted({r[1] for r in rows if r[-1] != 1})
@@ -1723,13 +1738,13 @@ def decode_aggregate(
         return good_df
 
     if not use_stats:
-        return _local_frame(enc.sparkSession, _agg_decode_path(enc), _AGG_SCHEMA)
+        return _local_frame(enc.sparkSession, _agg_decode_path(enc, columns), _AGG_SCHEMA)
 
-    rows = _fold_agg_rows(_collect_partials(_agg_stats_partials(enc)))
+    rows = _fold_agg_rows(_collect_partials(_agg_stats_partials(enc, only=columns)))
     bad = [r[1] for r in rows if r[-1] != 1]
     out_rows = [r[1:-1] for r in rows if r[-1] == 1]
     if bad:
-        out_rows += _agg_decode_path(enc.filter(F.col("column").isin(bad)))
+        out_rows += _agg_decode_path(enc, bad)
         # sort driver-side: a Spark orderBy on the tiny local result would
         # spin up a range-partitioning sample job + shuffle
         out_rows.sort(key=lambda t: t[0])

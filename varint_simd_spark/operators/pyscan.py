@@ -26,9 +26,15 @@ globally with ``VSS_PYSCAN=0``.
 
 Layout note for decoders: the colocated decode groups files per parent
 directory (one task reads a whole ``chunk_id=…``/``bucket=…`` directory),
-so chunk colocation is guaranteed *structurally* — strictly stronger than
-the colocation probe the JVM path needs.  Encoders and the decode-path
-aggregate need no colocation and pack files by size instead.
+so chunk colocation is guaranteed *structurally* when each chunk id's
+files sit in one directory (:func:`_dir_per_chunk`) — strictly stronger
+than the colocation probe the JVM path needs.  Stages that need no
+colocation (the encoders, the aggregate partials) pack files by size
+instead; :func:`map_in_arrow_split` is their one choice between this scan
+and the JVM's.
+
+Timestamps read as tz-naive microseconds, the codec layer's domain
+(encoded stores hold no timestamp columns).
 """
 
 from __future__ import annotations
@@ -41,7 +47,7 @@ import numpy as np
 import pyarrow as pa
 from pyspark.sql.pandas.types import to_arrow_schema
 
-__all__ = ["parquet_scan_info", "pyscan_map_in_arrow"]
+__all__ = ["map_in_arrow_split", "parquet_scan_info", "pyscan_map_in_arrow"]
 
 # integer partition-column types we know how to re-attach from dir names
 _PART_TYPES = {"long", "integer", "short", "byte"}
@@ -137,6 +143,19 @@ def _group_by_dir(paths: list[str]) -> list[list]:
     return [groups[d] for d in sorted(groups)]
 
 
+def _dir_per_chunk(scan) -> bool:
+    """True when ``chunk_id`` is a partition column of ``scan`` and each
+    chunk id's files sit in one directory: a task per directory then reads
+    every row of its chunks, and no other task reads any of them."""
+    paths, part_cols, _ = scan
+    names = [name for name, _ in part_cols]
+    if "chunk_id" not in names:
+        return False
+    i = names.index("chunk_id")
+    pairs = {(_part_values(p, part_cols)[i], os.path.dirname(p)) for p in paths}
+    return len(pairs) == len({chunk for chunk, _ in pairs})
+
+
 def _group_by_size(
     paths: list[str], max_partition_bytes: int, parallelism: int
 ) -> list[list]:
@@ -225,7 +244,6 @@ def _read_tables(
     part_cols: list[tuple[str, str]],
     schema: pa.Schema,
     column_filter: list[str] | None,
-    canonical_ts: bool,
 ):
     """Yield one Arrow table per file: parquet read (pruned to ``columns``
     present in the file), partition columns re-attached from the path, a
@@ -266,19 +284,11 @@ def _read_tables(
                 t["column"], value_set=pa.array(column_filter, pa.string())
             )
             t = t.filter(mask)
-        if canonical_ts:
-            new_cols = []
-            changed = False
-            for name in t.column_names:
-                col = t[name]
-                if pa.types.is_timestamp(col.type):
-                    col = col.cast(pa.timestamp("us"))
-                    changed = True
-                new_cols.append(col)
-            if changed:
-                t = pa.table(
-                    dict(zip(t.column_names, new_cols))
-                )
+        if any(pa.types.is_timestamp(c.type) for c in t.columns):
+            t = pa.table({
+                name: c.cast(pa.timestamp("us")) if pa.types.is_timestamp(c.type) else c
+                for name, c in zip(t.column_names, t.columns)
+            })
         yield t
 
 
@@ -290,7 +300,6 @@ def pyscan_map_in_arrow(
     columns: list[str] | None = None,
     column_filter: list[str] | None = None,
     group: str = "dir",
-    canonical_ts: bool = False,
 ):
     """Equivalent of ``df.mapInArrow(fn, out_schema)`` where the scan runs
     in the Python task: the Spark job maps over the file list, each task
@@ -323,7 +332,7 @@ def pyscan_map_in_arrow(
 
         def gen():
             for t in _read_tables(
-                groups[pid], columns, part_cols, schema, cf, canonical_ts
+                groups[pid], columns, part_cols, schema, cf
             ):
                 yield from t.to_batches()
 
@@ -334,3 +343,22 @@ def pyscan_map_in_arrow(
     # picks its file group by partition id from the closure
     carrier = spark.range(len(groups), numPartitions=len(groups))
     return carrier.mapInArrow(task_fn, schema=out_schema)
+
+
+def map_in_arrow_split(df, fn, out_schema, columns: list[str], column_filter=None):
+    """``df.select(*columns).mapInArrow(fn, out_schema)`` for a stage that
+    needs no chunk colocation: when ``df`` is a bare parquet scan, the
+    scan runs in the Python task with files packed by size
+    (``group="split"``), else the JVM scan feeds ``fn``.
+    ``column_filter``: keep only the rows whose ``column`` field (an
+    encoded store's column name) is in it — the python-side scan's row
+    filter, or a Spark filter pushed down to the JVM scan."""
+    scan = parquet_scan_info(df)
+    if scan is not None:
+        return pyscan_map_in_arrow(
+            df.sparkSession, scan, fn, out_schema,
+            columns=columns, column_filter=column_filter, group="split",
+        )
+    if column_filter is not None:
+        df = df.filter(df["column"].isin(list(column_filter)))
+    return df.select(*columns).mapInArrow(fn, schema=out_schema)

@@ -83,21 +83,15 @@ def encode_table_salted(
     columns: list[str] | None = None,
 ):
     """encode_table with host-locality + hot-host salting (the production
-    path for the web_pages table); chunks are placed as in encode_table."""
-    from ..operators.encode import (
-        _check_n_chunks,
-        _chunk_exchange,
-        _encode_args,
-        make_encode_chunk_fn,
-    )
+    path for the web_pages table): encode_table's plan with the salted
+    chunk column; chunks are sorted by ``url_col`` and placed as in
+    encode_table, and ``url_col`` is never encoded unless in ``columns``."""
+    from ..operators.encode import _check_n_chunks, _encode_args, _hash_chunk_encode
 
     _check_n_chunks(n_chunks)
     columns, codecs = _encode_args(df.columns, columns, codecs, None)
     df2 = salted_chunk_column(df, n_chunks, url_col, target_rows_per_chunk)
-    fn = make_encode_chunk_fn(columns, codecs, url_col)
-    # the chunk sort key rides along as in encode_table; it is never encoded
-    select_cols = list(columns) + ([url_col] if url_col not in columns else [])
-    return _chunk_exchange(df2.select(*select_cols, "__chunk"), n_chunks, fn)
+    return _hash_chunk_encode(df2, url_col, n_chunks, columns, codecs, chunk=F.col("__chunk"))
 
 
 def skew_report(df: DataFrame, url_col: str = "url", top_k: int = 20) -> DataFrame:

@@ -45,11 +45,10 @@ from pyspark.sql import types as T
 
 from ..operators.encode import (
     _check_n_chunks,
-    _chunk_exchange,
     _encode_args,
+    _hash_chunk_encode,
     _local_frame,
     encode_table_per_split,
-    make_encode_chunk_fn,
 )
 from ..operators.pyscan import parquet_scan_info
 from ..plans.partitioning import salted_chunk_column
@@ -397,7 +396,7 @@ def encode_resumable(
     The planned chunks are 0..n_chunks-1, placed as in ``encode_table``.
     :meth:`EncodedStore.pending` returns the ones without a manifest row
     to the driver, which holds O(pending) ids, as the commit's lineage
-    already does.  The encode keeps only their rows (``_chunk_exchange``
+    already does.  The encode keeps only their rows (``_hash_chunk_encode``
     with ``only``), and each gets one manifest row, a zero row if it is
     empty, so a resume converges."""
     _check_n_chunks(n_chunks)
@@ -405,12 +404,9 @@ def encode_resumable(
     pending = store.pending(range(n_chunks))
     if not pending:
         return None, 0
+    chunk = None
     if salted:
-        df2 = salted_chunk_column(df, n_chunks, key, target_rows_per_chunk)
-    else:
-        df2 = df.withColumn(
-            "__chunk", F.pmod(F.xxhash64(F.col(key)), F.lit(n_chunks)).cast("int")
-        )
-    fn = make_encode_chunk_fn(columns, codecs, key)
-    enc = _chunk_exchange(df2.select(*columns, "__chunk"), n_chunks, fn, only=pending)
+        df = salted_chunk_column(df, n_chunks, key, target_rows_per_chunk)
+        chunk = F.col("__chunk")
+    enc = _hash_chunk_encode(df, key, n_chunks, columns, codecs, chunk=chunk, only=pending)
     return store.commit(enc, expected_chunks=pending), len(pending)

@@ -46,11 +46,11 @@ from pyspark.sql.types import StructType
 
 from ..operators.encode import (
     _check_n_chunks,
-    _chunk_exchange,
+    _chunk_id63,
     _encode_args,
+    _hash_chunk_encode,
     decode_table,
     encode_table,
-    make_encode_chunk_fn,
 )
 from ..sources.checkpoint import EncodedStore, _lock_layout
 
@@ -60,21 +60,18 @@ def _stream_chunk_id(batch_id: int, n_chunks: int, slot: int) -> int:
     never collide with the batch path's small-integer ids or another
     batch's ids (the old ``batch_id*n_chunks + slot`` range scheme broke as
     soon as a store mixed writers or n_chunks changed)."""
-    import hashlib
-
-    h = hashlib.blake2b(
-        repr(("stream", int(batch_id), int(n_chunks), int(slot))).encode(),
-        digest_size=8,
-    )
-    return int.from_bytes(h.digest(), "big") >> 1
+    return _chunk_id63("stream", int(batch_id), int(n_chunks), int(slot))
 
 
-def _encode_batch(store: EncodedStore, batch_df, batch_id: int, n_chunks: int, key: str, fn):
+def _encode_batch(
+    store: EncodedStore, batch_df, batch_id: int, n_chunks: int, key: str,
+    columns: list[str], codecs: dict[str, str], stats_group_by: str | None = None,
+):
     """The encode of one micro-batch and the chunk ids it commits, or
     None when every chunk of the batch is committed (a replay).
 
     Rows go to slot ``pmod(xxhash64(key), n_chunks)`` and are placed and
-    encoded by ``_chunk_exchange`` on the int slot, like every batch
+    encoded by ``_hash_chunk_encode`` on the int slot, like every batch
     hash-chunk encode; only then is each slot's ``chunk_id`` mapped to its
     hashed :func:`_stream_chunk_id`."""
     slot_ids = [_stream_chunk_id(int(batch_id), n_chunks, i) for i in range(n_chunks)]
@@ -82,9 +79,8 @@ def _encode_batch(store: EncodedStore, batch_df, batch_id: int, n_chunks: int, k
     if not pending:
         return None
     todo = set(pending)
-    slot = F.pmod(F.xxhash64(F.col(key)), F.lit(n_chunks)).cast("int")
-    enc = _chunk_exchange(
-        batch_df.withColumn("__chunk", slot), n_chunks, fn,
+    enc = _hash_chunk_encode(
+        batch_df, key, n_chunks, columns, codecs, stats_group_by=stats_group_by,
         only=[i for i, cid in enumerate(slot_ids) if cid in todo],
     )
     ids = F.array(*[F.lit(cid) for cid in slot_ids])
@@ -116,12 +112,13 @@ def encode_stream(
     # the first micro-batch
     columns, codecs = _encode_args(schema.fieldNames(), None, codecs, stats_group_by)
     _lock_layout(store, "stream", {"n_chunks": n_chunks})
-    fn = make_encode_chunk_fn(columns, codecs, key, stats_group_by)
 
     def process_batch(batch_df, batch_id: int):
         if batch_df.isEmpty():
             return
-        planned = _encode_batch(store, batch_df, batch_id, n_chunks, key, fn)
+        planned = _encode_batch(
+            store, batch_df, batch_id, n_chunks, key, columns, codecs, stats_group_by
+        )
         if planned is not None:
             store.commit(*planned)  # (encode, its expected chunk ids)
 
