@@ -628,3 +628,133 @@ def test_int_payload_digest_pinned():
             h.update(payload)
             h.update(repr(sorted(params.items())).encode())
     assert h.hexdigest() == "705185ddd04f1a3b633cbac2e654416d808a94d23892ba0da737cf91ad732c96"
+
+
+# --------------------------------------------------------------------------
+# per-chunk statistics: pinned JSON and the exact-statistics kernel
+
+
+def _stats_pin_chunks():
+    """Seeded chunks of every stored tag for the statistics pin: a mixed
+    chunk with nulls (f64 NaN and -0.0 among them, one group whose int64
+    values are all null, a null group and a NUL-prefixed group key), one
+    with int64 values near both ends and f64 +-inf, one whose value
+    columns are all null (dates stay null-free: the codec chooser cannot
+    fill a null date), and one whose f64 values are only NaN and -0.0."""
+    r = np.random.default_rng(20261020)
+    n = 240
+
+    def mask(vals, p):
+        return [None if z else v for v, z in zip(vals, r.random(len(vals)) < p)]
+
+    g = mask(list(r.choice(["a", "b", "\x00x", "d"], n)), 0.1)
+    i64 = [None if k == "d" else int(v) for k, v in zip(g, r.integers(-(10**12), 10**12, n))]
+    f64 = [float(v) for v in np.round(r.normal(0, 1e3, n), 3)]
+    f64[:4] = [float("nan"), -0.0, 0.0, float("nan")]
+    t = pa.table({
+        "g": pa.array(g, pa.string()),
+        "i64": pa.array(mask(i64, 0.1), pa.int64()),
+        "i32": pa.array(mask([int(v) for v in r.integers(-2**31, 2**31, n)], 0.1), pa.int32()),
+        "i16": pa.array([int(v) for v in r.integers(-2**15, 2**15, n)], pa.int16()),
+        "i8": pa.array(mask([int(v) for v in r.integers(-128, 128, n)], 0.2), pa.int8()),
+        "f64": pa.array(mask(f64, 0.1), pa.float64()),
+        "ts": pa.array(
+            mask([int(v) for v in 1_700_000_000_000_000 + np.cumsum(r.integers(0, 10**9, n))], 0.1),
+            pa.timestamp("us", tz="UTC"),
+        ),
+        "day": pa.array([int(v) for v in r.integers(-3000, 20000, n)], pa.date32()),
+        "flag": pa.array(mask([bool(v) for v in r.integers(0, 2, n)], 0.1), pa.bool_()),
+        "s": pa.array(mask([f"v{int(v)}" * int(v % 5) for v in r.integers(0, 1000, n)], 0.1), pa.string()),
+        "b": pa.array(
+            mask([bytes(r.integers(0, 256, int(k)).astype(np.uint8)) for k in r.integers(0, 9, n)], 0.1),
+            pa.binary(),
+        ),
+    })
+    ext = t.slice(0, 40).to_pydict()
+    ext["i64"] = [
+        None if i % 7 == 0 else (2**63 - 1 - i if i % 2 else -(2**63) + i) for i in range(40)
+    ]
+    ext["f64"] = [float("inf"), float("-inf")] + ext["f64"][2:]
+    all_null = pa.table(
+        {
+            c: t[c].slice(0, 30) if c in ("g", "day") else pa.nulls(30, t.schema.field(c).type)
+            for c in t.column_names
+        },
+        schema=t.schema,
+    )
+    nan_only = t.slice(40, 20).set_column(5, "f64", pa.array([float("nan"), -0.0] * 10))
+    return [t, pa.table(ext, schema=t.schema), all_null, nan_only]
+
+
+def test_chunk_stats_json_pinned():
+    """The stats JSON every encoded row carries, with and without grouped
+    partials, is pinned on chunks that reach each convention: int64 sums
+    past the int64 range, all-null chunks (sum "0") and all-null groups
+    (no sum), f64 min/max only when finite (NaN skipped, -0.0 kept) and
+    strings with only n_nulls, or per-group byte totals."""
+    import hashlib
+
+    from varint_simd_spark.operators.encode import _encode_columns_to_rows
+
+    h = hashlib.sha256()
+    for cid, t in enumerate(_stats_pin_chunks()):
+        for by in (None, "g"):
+            rows = _encode_columns_to_rows(t, t.column_names, {}, cid, stats_group_by=by)
+            for c, s in zip(rows["column"].to_pylist(), rows["stats"].to_pylist()):
+                h.update(f"{cid}|{by}|{c}|{s}\n".encode())
+    assert h.hexdigest() == "fc50a9c6b9c4ae3f277b8ce08083029f0b488026cbe0e644e14f0f31f9e5685e"
+
+
+_STATS_TAGS = {
+    "i64": (pa.int64(), st.integers(-(2**63), 2**63 - 1)),
+    "i32": (pa.int32(), st.integers(-(2**31), 2**31 - 1)),
+    "i16": (pa.int16(), st.integers(-(2**15), 2**15 - 1)),
+    "i8": (pa.int8(), st.integers(-128, 127)),
+    "ts_us": (pa.timestamp("us"), st.integers(-(2**62), 2**62)),
+    "date_d": (pa.date32(), st.integers(-(2**31), 2**31 - 1)),
+    "bool": (pa.bool_(), st.booleans()),
+    "f64": (pa.float64(), st.floats()),
+    "str": (pa.string(), st.text(max_size=6)),
+    "bin": (pa.binary(), st.binary(max_size=6)),
+}
+
+
+@st.composite
+def _stats_cases(draw):
+    tag = draw(st.sampled_from(sorted(_STATS_TAGS)))
+    typ, vals = _STATS_TAGS[tag]
+    values = draw(st.lists(st.none() | vals, max_size=40))
+    n = len(values)
+    n_groups = draw(st.integers(1, 8))
+    codes = draw(st.none() | st.lists(st.integers(0, n_groups - 1), min_size=n, max_size=n))
+    weights = draw(st.none() | st.lists(st.integers(1, 2**20), min_size=n, max_size=n))
+    return tag, pa.array(values, typ), values, n_groups, codes, weights
+
+
+@settings(max_examples=400, derandomize=True, database=None, deadline=None)
+@given(_stats_cases())
+def test_property_exact_stats_matches_bigint_oracle(case):
+    """The exact-statistics kernel against Python big ints, per group:
+    weighted row and null counts, and over the non-null rows the integer
+    sum/min/max (int64 extremes and run-length weights push sums past
+    int64) or the byte total of strings."""
+    from varint_simd_spark.operators.encode import _exact_stats
+
+    tag, arr, values, n_groups, codes, weights = case
+    if codes is None:
+        got = _exact_stats(arr, tag, weights=weights)
+        codes, n_groups = [0] * len(values), 1
+    else:
+        got = _exact_stats(arr, tag, np.array(codes, np.int64), n_groups, weights)
+    weights = weights or [1] * len(values)
+    for g in range(n_groups):
+        rows = [(v, w) for v, c, w in zip(values, codes, weights) if c == g]
+        full = [(v, w) for v, w in rows if v is not None]
+        n, nz = sum(w for _, w in rows), sum(w for _, w in full)
+        s = lo = hi = nb = None
+        if tag in ("str", "bin"):
+            nb = sum(len(v.encode() if tag == "str" else v) * w for v, w in full)
+        elif tag != "f64" and full:
+            s = sum(int(v) * w for v, w in full)
+            lo, hi = min(int(v) for v, _ in full), max(int(v) for v, _ in full)
+        assert got.row(g) == (n, n - nz, s, lo, hi, nb), (tag, g)

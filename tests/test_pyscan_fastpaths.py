@@ -258,6 +258,45 @@ def test_group_by_size_row_group_splits(tmp_path):
     assert len(_group_by_size([one], 128 << 20, 4)) == 1
 
 
+def test_split_packing_reads_unit_suffixed_max_partition_bytes(spark, tmp_path):
+    """The python-side scan's split packing takes
+    spark.sql.files.maxPartitionBytes as Spark parses it: "1m" makes every
+    task read about 1 MiB, and with the conf unset the packing is the
+    128 MiB default's."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from varint_simd_spark.operators.pyscan import (
+        _group_by_size,
+        _group_by_split,
+        parquet_scan_info,
+        pyscan_map_in_arrow,
+    )
+
+    # 16 MB of incompressible longs in 160 row groups of 100 KB
+    x = np.random.default_rng(1).integers(0, 2**62, 2_000_000, dtype=np.int64)
+    pq.write_table(pa.table({"x": x}), tmp_path / "x.parquet", row_group_size=12_500,
+                   compression="none")
+    df = spark.read.parquet(str(tmp_path))
+    scan = parquet_scan_info(df)
+    paths, par = scan[0], spark.sparkContext.defaultParallelism
+
+    def rows(batches):
+        yield pa.RecordBatch.from_pydict({"n": [sum(b.num_rows for b in batches)]})
+
+    assert _group_by_split(spark, paths) == _group_by_size(paths, 128 << 20, par)
+    spark.conf.set("spark.sql.files.maxPartitionBytes", "1m")
+    try:
+        assert _group_by_split(spark, paths) == _group_by_size(paths, 1 << 20, par)
+        out = pyscan_map_in_arrow(spark, scan, rows, "n long", columns=["x"], group="split")
+        per_task = [r["n"] for r in out.collect()]
+    finally:
+        spark.conf.unset("spark.sql.files.maxPartitionBytes")
+    assert sum(per_task) == len(x)
+    # at most 1 MiB of longs per task, give or take one row group
+    assert max(per_task) <= (1 << 20) // 8 + 12_500, per_task
+
+
 def _data_plan(plan: str) -> str:
     """An executed plan's text without its broadcast and cached subtrees:
     the salt plan, the pending chunks (a broadcast LocalRelation of driver
@@ -626,6 +665,19 @@ def test_writer_bytes_pinned(spark, tmp_path, monkeypatch):
     assert got == _WRITER_DIGESTS
 
 
+def _kilobyte_rows_encoded(spark, n: int):
+    """Rows ``(k, blob)`` with ~1 KB of incompressible bytes a row, hash
+    encoded into two chunks with ``blob`` stored raw: at n=9000 each chunk
+    holds over the python-side scan's 4 MB per-directory floor."""
+    from varint_simd_spark.operators import encode_table
+
+    blobs = np.random.default_rng(3).integers(0, 256, n * 1024, dtype=np.uint8).tobytes()
+    src = spark.createDataFrame(
+        [(i, blobs[i * 1024:(i + 1) * 1024]) for i in range(n)], "k long, blob binary"
+    )
+    return encode_table(src, key="k", n_chunks=2, codecs={"blob": "raw_str"})
+
+
 def test_colocated_decode_emits_a_duplicated_chunk_once(spark, tmp_path, monkeypatch):
     """A chunk whose files sit in two directories of a store partitioned
     by another column decodes once on both scans, as in decode_table: the
@@ -637,18 +689,11 @@ def test_colocated_decode_emits_a_duplicated_chunk_once(spark, tmp_path, monkeyp
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
-    from varint_simd_spark.operators import decode_table, decode_table_colocated, encode_table
+    from varint_simd_spark.operators import decode_table, decode_table_colocated
     from varint_simd_spark.operators import encode as E
 
-    rng = np.random.default_rng(3)
     n = 9000
-    # ~1 KB of incompressible bytes a row: every directory below holds
-    # over the python-side scan's 4 MB per-directory floor
-    blobs = rng.integers(0, 256, n * 1024, dtype=np.uint8).tobytes()
-    src = spark.createDataFrame(
-        [(i, blobs[i * 1024:(i + 1) * 1024]) for i in range(n)], "k long, blob binary"
-    )
-    enc = encode_table(src, key="k", n_chunks=2, codecs={"blob": "raw_str"}).toArrow()
+    enc = _kilobyte_rows_encoded(spark, n).toArrow()
     chunk = {c: enc.filter(pc.equal(enc["chunk_id"], c)) for c in (0, 1)}
     layouts = {
         # chunk 0 copied into a second part= directory
@@ -733,3 +778,58 @@ def test_aggregate_with_columns_reads_through_python_scan(spark, tmp_path, monke
         assert got == jvm and {r[1 if "group_by" in kw else 0] for r in got} == set(cols), tier
         assert [sorted(f) for f in filters] == [sorted(cols)], tier
         filters.clear()
+
+
+def test_on_disk_corruption_reaches_the_payload_crc(spark, tmp_path, monkeypatch):
+    """A payload byte flipped on disk in a chunk-partitioned store fails
+    every payload-reading path with the engine's own CRC error: colocated
+    decode on the python-side per-directory scan and on the JVM scan,
+    decode_table, both decode-tier aggregates and a point lookup.  The
+    file is rewritten without its Hadoop .crc sidecar, so no JVM checksum
+    catches it first."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from varint_simd_spark.operators import decode_table, decode_table_colocated
+    from varint_simd_spark.operators import encode as E
+
+    store = tmp_path / "store"
+    _kilobyte_rows_encoded(spark, 9000).write.partitionBy("chunk_id").parquet(str(store))
+    path = next(iter(sorted((store / "chunk_id=1").glob("*.parquet"))))
+    t = pq.read_table(path)
+    i = t["column"].to_pylist().index("blob")
+    payloads = t["payload"].to_pylist()
+    payload = bytearray(payloads[i])
+    payload[len(payload) // 2] ^= 0xFF
+    payloads[i] = bytes(payload)
+    t = t.set_column(t.schema.get_field_index("payload"), "payload", pa.array(payloads, pa.binary()))
+    pq.write_table(t, path)
+    (path.parent / f".{path.name}.crc").unlink()
+    # a key of chunk 1, the corrupted one: chunk id is pmod(xxhash64(k), 2)
+    key = spark.range(64).filter(F.pmod(F.xxhash64("id"), F.lit(2)) == 1).first()["id"]
+    st = spark.read.parquet(str(store))
+
+    groups = []
+    real = E.pyscan_map_in_arrow
+
+    def spy(*args, **kwargs):
+        groups.append(kwargs["group"])
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(E, "pyscan_map_in_arrow", spy)
+
+    def corrupt(run):
+        with pytest.raises(Exception, match="payload corruption"):
+            run()
+
+    for flag in ("0", "1"):
+        os.environ["VSS_PYSCAN"] = flag
+        try:
+            corrupt(lambda: decode_table_colocated(st).count())
+        finally:
+            os.environ["VSS_PYSCAN"] = "1"
+    assert groups == ["dir"]
+    corrupt(lambda: decode_table(st).count())
+    corrupt(lambda: E.decode_aggregate(st, use_stats=False).collect())
+    corrupt(lambda: E.decode_aggregate(st, use_stats=False, group_by="k").collect())
+    corrupt(lambda: E.lookup_by_key(st, "k", key).collect())

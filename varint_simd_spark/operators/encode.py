@@ -40,6 +40,9 @@ decode-path aggregates read through the same reader.
 Aggregates have one exact fold, :func:`_fold_agg_rows`: the decode tier
 and both stats tiers of :func:`decode_aggregate` turn each chunk row into
 one partial row, fold them per task and fold the task rows on the driver.
+Every per-chunk statistic, stored (zone maps, grouped stats) or computed
+at read time (the decode tiers' partials), comes from one exact kernel,
+:func:`_exact_stats`.
 
 Arrow end to end: Spark ships record batches over Arrow IPC, the codec
 layer reads the Arrow buffers directly, and every kernel is whole-column
@@ -50,6 +53,7 @@ materialization fits an executor core's memory (~32-64 MB raw per chunk).
 from __future__ import annotations
 
 import json
+import math
 import operator
 import zlib
 from typing import NamedTuple
@@ -168,60 +172,136 @@ def _to_int64_keep_nulls(arr: pa.Array, tag: str) -> pa.Array:
     return arr.cast(pa.int64())
 
 
-def _exact_int_sum(v: pa.Array, lo: int, hi: int) -> int:
-    """Exact sum of an int64 arrow array (nulls skipped).  Arrow sums in an
-    int64 accumulator, which WRAPS for realistic inputs (e.g. epoch-micros
-    chunks); fast path shifts by the chunk min so the vectorized sum runs
-    over the small in-chunk range, Python-int arithmetic restores it."""
-    n_nonnull = len(v) - v.null_count
-    if n_nonnull == 0:
-        return 0
-    if (hi - lo) * max(n_nonnull, 1) < (1 << 62):
-        shifted = pc.subtract(v, pa.scalar(lo, pa.int64()))
-        return int(pc.sum(shifted, min_count=0).as_py() or 0) + lo * n_nonnull
-    vv = v.drop_null().to_numpy(zero_copy_only=False)
-    return int(vv.astype(object).sum()) if vv.size else 0
+class _Stats(NamedTuple):
+    """Exact statistics of one column per group code (:func:`_exact_stats`)."""
+
+    n: np.ndarray  # rows (weighted)
+    nn: np.ndarray  # null rows (weighted)
+    sum: list | None  # exact Python-int sums over non-null rows; integer family only
+    min: np.ndarray | None  # int64 min / max over non-null rows; integer family only
+    max: np.ndarray | None
+    nbytes: np.ndarray | None  # utf8/binary byte totals; strings only
+
+    def row(self, g: int = 0) -> tuple:
+        """Group ``g`` as Python ints ``(n, nn, sum, min, max, bytes)``:
+        sum/min/max only for an integer group with a non-null row, bytes
+        only for strings, else None."""
+        n, nn = int(self.n[g]), int(self.nn[g])
+        s = lo = hi = None
+        if self.sum is not None and n > nn:
+            s, lo, hi = self.sum[g], int(self.min[g]), int(self.max[g])
+        return n, nn, s, lo, hi, None if self.nbytes is None else int(self.nbytes[g])
+
+
+def _segments(ufunc, x: np.ndarray, counts: np.ndarray) -> np.ndarray:
+    """``ufunc`` reduced over the consecutive runs of ``x`` whose lengths
+    are ``counts``; an empty run gives 0."""
+    if len(counts) == 1:  # one group: a plain reduce, without reduceat's setup
+        return np.array([ufunc.reduce(x) if x.size else 0], x.dtype)
+    out = np.zeros(len(counts), x.dtype)
+    has = counts > 0
+    if has.any():
+        out[has] = ufunc.reduceat(x, (np.cumsum(counts) - counts)[has])
+    return out
+
+
+def _exact_stats(arr: pa.Array, tag: str, codes=None, n_groups: int = 1, weights=None) -> _Stats:
+    """The one exact-statistics kernel behind zone maps, grouped stats and
+    the decode tiers' partials: per group code (``codes``, int64 in
+    ``[0, n_groups)``; None is one group of every row) the row and null
+    counts, and over the non-null rows the exact integer sum, min and max
+    (integer family, in the int64 domain of :func:`_to_int64_keep_nulls`)
+    or the utf8/binary byte total (strings).  f64 gets counts only: float
+    addition is order-dependent.  ``weights``: per-row repeat counts (a
+    run-length column's run lengths), applied to counts, sums and bytes.
+
+    Rows are put in group order by a stable argsort of ``codes`` and every
+    statistic is an int64 ``reduceat`` over the groups' runs (never
+    ``np.bincount`` weights, which are float64 and inexact above 2**53).
+    Sums are shifted by the column minimum so the int64 accumulator
+    cannot wrap (e.g. epoch-micros chunks) and the minimum is added back
+    in Python ints; when even the shifted sum could wrap, the sum runs
+    over Python ints.  A group without a non-null row has no sum, min or
+    max (:meth:`_Stats.row`); the stored conventions are the formatters'
+    (:func:`_zone_map_dict` ungrouped, :func:`_group_stats_dict` grouped)."""
+    valid = pc.is_valid(arr).to_numpy(zero_copy_only=False) if arr.null_count else None
+    if codes is None:
+        order, rows = None, np.array([len(arr)], np.int64)
+        vals = rows - arr.null_count
+    else:
+        # the narrowest unsigned codes take numpy's O(n) radix sort
+        order = np.argsort(codes.astype(np.min_scalar_type(n_groups)), kind="stable")
+        rows = np.bincount(codes, minlength=n_groups)
+        vals = rows if valid is None else np.bincount(codes[valid], minlength=n_groups)
+    # positions of the non-null rows in group order (None: all, as they are)
+    if valid is None:
+        nonnull = order
+    else:
+        nonnull = valid if order is None else order[valid[order]]
+
+    def take(x, idx):
+        return x if idx is None else x[idx]
+
+    w = None
+    if weights is None:
+        n, nz = rows, vals
+    else:
+        w = np.asarray(weights, np.int64)
+        n = _segments(np.add, take(w, order), rows)
+        w = take(w, nonnull)
+        nz = _segments(np.add, w, vals)
+    if tag in STR_TAGS:
+        lens = pc.binary_length(arr)
+        if valid is not None:
+            lens = pc.fill_null(lens, 0)
+        x = take(lens.to_numpy(zero_copy_only=False), nonnull).astype(np.int64)
+        return _Stats(n, n - nz, None, None, None, _segments(np.add, x if w is None else x * w, vals))
+    if tag == "f64":
+        return _Stats(n, n - nz, None, None, None, None)
+    v = _to_int64_keep_nulls(arr, tag)
+    x = take((v if valid is None else pc.fill_null(v, 0)).to_numpy(zero_copy_only=False), nonnull)
+    lo, hi = _segments(np.minimum, x, vals), _segments(np.maximum, x, vals)
+    if not x.size:
+        return _Stats(n, n - nz, [0] * len(n), lo, hi, None)
+    base, top = int(lo[vals > 0].min()), int(hi[vals > 0].max())
+    if (top - base) * max(int(nz.sum()), 1) < (1 << 62):
+        d = x - base
+        acc = _segments(np.add, d if w is None else d * w, vals)
+        sums = [int(a) + base * int(z) for a, z in zip(acc, nz)]
+    else:
+        xo = x.astype(object)
+        sums = [int(a) for a in _segments(np.add, xo if w is None else xo * w.astype(object), vals)]
+    return _Stats(n, n - nz, sums, lo, hi, None)
 
 
 def _zone_map_dict(arr: pa.Array, tag: str) -> dict:
-    """Per-chunk statistics.  min/max (the zone map, int64/double
-    domain — exact Spark-side comparisons) for integer-family columns;
-    plus an exact integer ``sum`` (string — arbitrary precision) and
-    ``n_nulls`` so aggregates can be answered from metadata alone
-    (:func:`decode_aggregate`).  Strings/binary carry only n_nulls (their
-    byte totals ride the raw_bytes column); f64 carries no sum (float
-    addition is order-dependent).  Absent keys are always sound: pruning
-    skips nothing, aggregation falls back to payload decode."""
-    st: dict = {"n_nulls": int(arr.null_count)}
+    """Per-chunk statistics, formatted from :func:`_exact_stats`:
+    ``n_nulls`` always; for integer-family columns the zone map min/max
+    (int64 domain — exact Spark-side comparisons) and the exact integer
+    ``sum`` (a string — arbitrary precision), so aggregates can be
+    answered from metadata alone (:func:`decode_aggregate`).  An all-null
+    integer chunk has sum ``"0"`` and no min/max (the decode tier reports
+    "0" for empty domains too).  Strings/binary carry only n_nulls (their
+    byte totals ride the raw_bytes column).  f64 carries no sum (float
+    addition is order-dependent) and min/max only when both are finite,
+    exactly as Arrow's ``min_max`` gives them (NaN skipped, -0.0 kept).
+    Absent keys are always sound: pruning skips nothing, aggregation falls
+    back to payload decode."""
+    n, nn, s, lo, hi, _ = _exact_stats(arr, tag).row()
+    st: dict = {"n_nulls": nn}
     if tag in STR_TAGS:
         return st
-    if arr.null_count == len(arr):
-        if tag != "f64":
-            st["sum"] = "0"  # SQL SUM over only-nulls is NULL, but the
-            # decode path reports "0" for empty domains — keep them equal
-        return st
-    mm = pc.min_max(arr)
-    lo, hi = mm["min"], mm["max"]
-    if tag == "ts_us":
-        lo = lo.cast(pa.timestamp("us")).value
-        hi = hi.cast(pa.timestamp("us")).value
-    elif tag == "date_d":
-        lo = lo.cast(pa.int32()).as_py()
-        hi = hi.cast(pa.int32()).as_py()
-    elif tag == "bool":
-        lo, hi = int(lo.as_py()), int(hi.as_py())
-    else:
-        lo, hi = lo.as_py(), hi.as_py()
-        if tag == "f64":
-            import math
-
+    if tag == "f64":
+        if nn < n:
+            mm = pc.min_max(arr)
+            lo, hi = mm["min"].as_py(), mm["max"].as_py()
             # NaN/inf are not valid strict JSON and poison ordering
-            if not (math.isfinite(lo) and math.isfinite(hi)):
-                return st
-    st["min"], st["max"] = lo, hi
-    if tag != "f64":
-        v = _to_int64_keep_nulls(arr, tag)
-        st["sum"] = str(_exact_int_sum(v, lo, hi))
+            if math.isfinite(lo) and math.isfinite(hi):
+                st["min"], st["max"] = lo, hi
+        return st
+    if s is not None:
+        st["min"], st["max"] = lo, hi
+    st["sum"] = str(s or 0)
     return st
 
 
@@ -293,80 +373,29 @@ def _unescape_group_key(k: str | None) -> str | None:
     return k
 
 
-def _group_partials(arr: pa.Array, tag: str, codes: np.ndarray, n_groups: int) -> list[dict | None]:
-    """Per-group exact partials of one column: entry g is
-    ``{"n", "nn"[, "sum", "min", "max"][, "bytes"]}`` (None for groups
-    absent from the chunk).  ``sum`` is the exact integer sum (arbitrary precision, same
-    shift-by-min guard as :func:`_exact_int_sum`); ``bytes`` is total
-    utf8/binary bytes for string columns; f64 carries n/nn only (float
-    addition is order-dependent)."""
-    n_g = np.bincount(codes, minlength=n_groups)
-    if arr.null_count:
-        nulls = pc.is_null(arr).to_numpy(zero_copy_only=False)
-        nn_g = np.bincount(codes[nulls], minlength=n_groups)
-    else:
-        nn_g = np.zeros(n_groups, np.int64)
+def _group_stats_dict(arr: pa.Array, tag: str, codes: np.ndarray, keys: list[str]) -> dict:
+    """``stats.by["groups"]``, formatted from :func:`_exact_stats`: for
+    each group key present in the chunk ``{"n", "nn"}``, plus the exact
+    ``sum`` (a string) and ``min``/``max`` for an integer group with a
+    non-null row, or the utf8/binary ``bytes`` total for strings.  f64
+    groups carry n/nn only (float addition is order-dependent); an
+    all-null group has no sum, so its SQL SUM stays NULL."""
+    stats = _exact_stats(arr, tag, codes, len(keys))
+    out = {}
+    for g, key in enumerate(keys):
+        n, nn, s, lo, hi, nb = stats.row(g)
+        if n:
+            p = {"n": n, "nn": nn}
+            if s is not None:
+                p.update(sum=str(s), min=lo, max=hi)
+            if nb is not None:
+                p["bytes"] = nb
+            out[key] = p
+    return out
 
-    def base(g):
-        return {"n": int(n_g[g]), "nn": int(nn_g[g])}
 
-    if tag in STR_TAGS:
-        a = pc.fill_null(arr, "" if tag == "str" else b"")
-        lens = pc.binary_length(a).to_numpy(zero_copy_only=False).astype(np.int64)
-        acc = np.zeros(n_groups, np.int64)
-        np.add.at(acc, codes, lens)
-        return [
-            {**base(g), "bytes": int(acc[g])} if n_g[g] else None
-            for g in range(n_groups)
-        ]
-    if tag == "f64":
-        return [base(g) if n_g[g] else None for g in range(n_groups)]
-    v = _to_int64_keep_nulls(arr, tag)
-    if arr.null_count == len(arr):
-        # SQL SUM over only-nulls is NULL (unlike the ungrouped chunk
-        # stats, whose "0" convention predates grouping and is pinned by
-        # the ungrouped oracle) — omit the key so the decimal SUM of the
-        # final combine stays NULL for fully-null groups
-        return [base(g) if n_g[g] else None for g in range(n_groups)]
-    mm = pc.min_max(v)
-    lo, hi = mm["min"].as_py(), mm["max"].as_py()
-    filled = pc.fill_null(v, pa.scalar(lo, pa.int64())).to_numpy(zero_copy_only=False)
-    nz = n_g - nn_g
-    if (hi - lo) * max(len(filled), 1) < (1 << 62):
-        # nulls were filled with lo, so their shifted contribution is 0 and
-        # sum_g = acc_g + lo * n_nonnull_g restores the unshifted domain
-        # with Python-int arithmetic (no int64 wrap for epoch-micros etc.)
-        acc = np.zeros(n_groups, np.int64)
-        np.add.at(acc, codes, filled - lo)
-        sums = [int(acc[g]) + lo * int(nz[g]) for g in range(n_groups)]
-    else:
-        acc = np.zeros(n_groups, object)
-        np.add.at(acc, codes, filled.astype(object))
-        sums = [int(acc[g]) - lo * int(nn_g[g]) for g in range(n_groups)]
-    # per-group exact min/max over NON-NULL rows only (filling nulls with
-    # lo would corrupt group minima, so the scatter runs on the compacted
-    # non-null subset); sentinel-initialized slots of all-null groups are
-    # never emitted (nz[g] == 0 -> no min/max/sum keys, SQL NULL)
-    if arr.null_count:
-        nn_mask = ~pc.is_null(arr).to_numpy(zero_copy_only=False)
-        codes_nn, v_nn = codes[nn_mask], filled[nn_mask]
-    else:
-        codes_nn, v_nn = codes, filled
-    mn = np.full(n_groups, hi, np.int64)
-    mx = np.full(n_groups, lo, np.int64)
-    np.minimum.at(mn, codes_nn, v_nn)
-    np.maximum.at(mx, codes_nn, v_nn)
-    return [
-        # a group whose values are all NULL sums to SQL NULL, not 0
-        (
-            {**base(g), "sum": str(sums[g]), "min": int(mn[g]), "max": int(mx[g])}
-            if nz[g]
-            else base(g)
-        )
-        if n_g[g]
-        else None
-        for g in range(n_groups)
-    ]
+def _str_or_none(v) -> str | None:
+    return None if v is None else str(v)
 
 
 def _encoded_rows(chunk_id: int, encoded) -> pa.Table:
@@ -431,12 +460,7 @@ def _encode_columns_to_rows(
         )
         st = _zone_map_dict(arr, tag)
         if grp is not None:
-            codes, keys = grp
-            parts = _group_partials(arr, tag, codes, len(keys))
-            st["by"] = {
-                "col": stats_group_by,
-                "groups": {k: p for k, p in zip(keys, parts) if p is not None},
-            }
+            st["by"] = {"col": stats_group_by, "groups": _group_stats_dict(arr, tag, *grp)}
         return col, tag, codec, params, payload, len(arr), raw_b, ref_b, reason, st
 
     return _encoded_rows(chunk_id, map(encode, columns))
@@ -745,16 +769,10 @@ def encode_table(
     # than the transpose saves.
     scan = parquet_scan_info(df)
     if scan is not None:
-        from .pyscan import _group_by_size, byte_array_fraction
+        from .pyscan import _group_by_split, byte_array_fraction
 
         key_type = dict(df.dtypes).get(key)
-        try:
-            mpb = int(df.sparkSession.conf.get("spark.sql.files.maxPartitionBytes"))
-        except Exception:
-            mpb = 128 << 20
-        n_groups = len(_group_by_size(
-            scan[0], mpb, df.sparkSession.sparkContext.defaultParallelism
-        ))
+        n_groups = len(_group_by_split(df.sparkSession, scan[0]))
         # measured gate: the two-stage topology wins only when stage 1 can
         # actually parallelize (sf1.0 lineitem, 6 row groups: 3.3s vs 5.5s;
         # sf0.1, ONE row group: 3.6s vs 1.8s — a serial stage 1 loses)
@@ -1283,10 +1301,10 @@ def decode_table_colocated(
     #   skips non-matching payload PAGES via the column index, which a
     #   whole-file pyarrow read cannot (pruned decode 1.3x slower there);
     # * small stores stay on the JVM scan — per-Python-task overhead beat
-    #   the transpose saving below ~4 MB per directory group (measured
-    #   while every Python task re-read its zip directories, about 0.2 s;
-    #   the local-master worker daemon, _worker_daemon.py, removed that
-    #   cost, and the threshold has not been re-measured since);
+    #   the transpose saving below ~4 MB per directory group; re-measured
+    #   with the local-master worker daemon (_worker_daemon.py), local[4]:
+    #   the JVM scan still won on benchmark-sized stores (lineitem 186 vs
+    #   280 ms, web 217 vs 289 ms); pyscan won at 4.6 MB/dir and above;
     # * a store whose files all share one directory would serialize into a
     #   single task — JVM scan.
     scan = parquet_scan_info(enc) if columns is None else None
@@ -1424,10 +1442,8 @@ def _agg_row_analytic(tag: str, codec: str, payload, params: dict, nv: int):
         return n_nulls, None, None, None, None
     if codec == "rle_varint" and n_nulls == 0:
         run_vals, run_lens = INT_CODECS[codec].runs(payload, params)
-        if run_vals.size == 0:
-            return n_nulls, "0", None, None, None
-        total = int((run_vals.astype(object) * run_lens.astype(object)).sum())
-        return n_nulls, str(total), str(int(run_vals.min())), str(int(run_vals.max())), None
+        _, _, s, lo, hi, _ = _exact_stats(pa.array(run_vals), "i64", weights=run_lens).row()
+        return n_nulls, str(s or 0), _str_or_none(lo), _str_or_none(hi), None
     return None
 
 
@@ -1502,7 +1518,8 @@ def _agg_decode_partials(enc: DataFrame, only: list[str] | None = None) -> DataF
     payload.  Chunks whose (dtype, codec) admits it are aggregated
     straight from the payload structure (:func:`_agg_row_analytic`)
     without materializing the decoded column at all; the rest decode and
-    reuse the encode-side exact statistics (:func:`_zone_map_dict`)."""
+    take the encode side's exact statistics kernel (:func:`_exact_stats`)
+    with its ungrouped conventions (an all-null chunk sums to 0)."""
 
     def chunk_partials(batches):
         for batch in batches:
@@ -1511,13 +1528,9 @@ def _agg_decode_partials(enc: DataFrame, only: list[str] | None = None) -> DataF
                 if got is None:
                     # only integer-family chunks get here (every string
                     # codec and f64 has an analytic answer)
-                    st = _zone_map_dict(
-                        decode_column_arrow(r.dtype, r.codec, r.payload, r.params, r.n_values),
-                        r.dtype,
-                    )
-                    got = (
-                        st["n_nulls"], st["sum"], st.get("min"), st.get("max"), None
-                    )
+                    arr = decode_column_arrow(r.dtype, r.codec, r.payload, r.params, r.n_values)
+                    _, nn, s, lo, hi, _ = _exact_stats(arr, r.dtype).row()
+                    got = (nn, s or 0, lo, hi, None)
                 yield (None, r.column, r.n_values, *got, 1)
 
     return _fold_stage(
@@ -1599,7 +1612,7 @@ def _agg_decode_path_grouped(
 ) -> DataFrame:
     """Grouped decode-path aggregation: one applyInArrow per chunk decodes
     the group column plus the selected columns and emits exact per-group
-    partials (same arbitrary-precision sum guard as the encode-side
+    partials (:func:`_exact_stats`, the kernel of the encode-side grouped
     stats), combined by one native groupBy.  Handles any group
     cardinality — it is both the ``use_stats=False`` path and the
     fallback for chunks whose grouped stats are absent.  Returns exactly
@@ -1616,7 +1629,7 @@ def _agg_decode_path_grouped(
         g = by_col[group_by]
         garr = decode_column_arrow(g.dtype, g.codec, g.payload, g.params, g.n_values)
         codes, keys = _group_codes(garr, max_groups=None)
-        out = {k.name: [] for k in _GAGG_SCHEMA.fields}
+        rows = []
         for col in out_columns:
             r = by_col.get(col)
             if r is None:
@@ -1626,18 +1639,12 @@ def _agg_decode_path_grouped(
                 if col == group_by
                 else decode_column_arrow(r.dtype, r.codec, r.payload, r.params, r.n_values)
             )
-            for key, p in zip(keys, _group_partials(arr, r.dtype, codes, len(keys))):
-                if p is None:
-                    continue
-                out["group"].append(key)
-                out["column"].append(col)
-                out["n_rows"].append(p["n"])
-                out["n_nulls"].append(p["nn"])
-                out["sum_exact"].append(p.get("sum"))
-                out["min_exact"].append(None if p.get("min") is None else str(p["min"]))
-                out["max_exact"].append(None if p.get("max") is None else str(p["max"]))
-                out["sum_bytes"].append(p.get("bytes"))
-        return pa.table(out, schema=to_arrow_schema(_GAGG_SCHEMA))
+            stats = _exact_stats(arr, r.dtype, codes, len(keys))
+            for g, key in enumerate(keys):
+                n, nn, s, lo, hi, nb = stats.row(g)
+                if n:
+                    rows.append((key, col, n, nn, *map(_str_or_none, (s, lo, hi)), nb))
+        return _rows_to_arrow(rows, _GAGG_SCHEMA)
 
     partials = sub.groupBy("chunk_id").applyInArrow(agg_chunk, schema=_GAGG_SCHEMA)
     return _degroup_null_key(

@@ -52,8 +52,6 @@ __all__ = ["map_in_arrow_split", "parquet_scan_info", "pyscan_map_in_arrow"]
 # integer partition-column types we know how to re-attach from dir names
 _PART_TYPES = {"long", "integer", "short", "byte"}
 
-_OPEN_COST = 4 << 20  # mirrors spark.sql.files.openCostInBytes
-
 
 def _enabled() -> bool:
     return os.environ.get("VSS_PYSCAN", "1") != "0"
@@ -156,8 +154,20 @@ def _dir_per_chunk(scan) -> bool:
     return len(pairs) == len({chunk for chunk, _ in pairs})
 
 
+def _group_by_split(spark, paths: list[str]) -> list[list]:
+    """:func:`_group_by_size` under the session's default parallelism and
+    its ``spark.sql.files.maxPartitionBytes`` and ``openCostInBytes`` as
+    Spark parses them, so unit suffixes (``"64m"``, the default
+    ``"134217728b"``) count."""
+    conf = spark._jsparkSession.sessionState().conf()
+    return _group_by_size(
+        paths, conf.filesMaxPartitionBytes(), spark.sparkContext.defaultParallelism,
+        conf.filesOpenCostInBytes(),
+    )
+
+
 def _group_by_size(
-    paths: list[str], max_partition_bytes: int, parallelism: int
+    paths: list[str], max_partition_bytes: int, parallelism: int, open_cost: int = 4 << 20
 ) -> list[list]:
     """Contiguous balanced packing into ``k * parallelism`` groups, with
     ``k = ceil(total / (parallelism * max_partition_bytes))``: the
@@ -166,9 +176,9 @@ def _group_by_size(
     ``max_partition_bytes``.  The packing was tuned while each Python
     task also paid about 0.2 s re-reading zip directories, a cost the
     worker daemon (``varint_simd_spark._worker_daemon``) has since
-    removed on local masters.  Sizes count ``_OPEN_COST`` per file.
+    removed on local masters.  Sizes count ``open_cost`` per file.
 
-    A file larger than 1.5x the group size (at least ``_OPEN_COST``, as in
+    A file larger than 1.5x the group size (at least ``open_cost``, as in
     Spark's ``maxSplitBytes``) is split at ROW-GROUP granularity
     (``[path, [rg, ...]]`` units) — a single-file table must not
     serialize into one task.  Each unit joins the group its
@@ -177,13 +187,13 @@ def _group_by_size(
     sizes = []
     for p in paths:
         try:
-            sizes.append(os.path.getsize(p) + _OPEN_COST)
+            sizes.append(os.path.getsize(p) + open_cost)
         except OSError:
             sizes.append(max_partition_bytes)
     total = sum(sizes)
     par = max(parallelism, 1)
     n_groups = par * max(1, -(-total // (par * max_partition_bytes)))
-    target = max(_OPEN_COST, total / n_groups)
+    target = max(open_cost, total / n_groups)
     units: list[tuple] = []  # (path, rg_list_or_None, size)
     for p, sz in zip(paths, sizes):
         if sz > target * 1.5:
@@ -196,7 +206,7 @@ def _group_by_size(
                         md.row_group(rg).column(ci).total_compressed_size
                         for ci in range(md.num_columns)
                     )
-                    units.append((p, [rg], rg_sz + _OPEN_COST // md.num_row_groups))
+                    units.append((p, [rg], rg_sz + open_cost // md.num_row_groups))
                 continue
             except Exception:
                 pass
@@ -313,11 +323,7 @@ def pyscan_map_in_arrow(
     if group == "dir":
         groups = _group_by_dir(paths)
     else:
-        try:
-            target = int(spark.conf.get("spark.sql.files.maxPartitionBytes"))
-        except Exception:
-            target = 128 << 20
-        groups = _group_by_size(paths, target, spark.sparkContext.defaultParallelism)
+        groups = _group_by_split(spark, paths)
     cf = sorted(column_filter) if column_filter is not None else None
 
     def task_fn(batches):
